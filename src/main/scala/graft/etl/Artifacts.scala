@@ -81,11 +81,14 @@ object Artifacts {
     * discipline).
     *
     * `singleFile = true` (reference-parity mode) emits one file via
-    * repartition(1), not coalesce(1): coalesce propagates the
-    * 1-partition constraint up through every narrow stage, serializing
-    * the whole render onto one core; the shuffle keeps the upstream
-    * projection parallel and only the final write is one task. A
-    * round-robin repartition carries NO ordering contract, so
+    * repartition(1), not coalesce(1). `df` here is a live plan, often
+    * several stages deep: coalesce(1) would propagate the 1-partition
+    * constraint up through every narrow stage and serialize the whole
+    * computation onto one core, while the shuffle keeps the upstream
+    * work parallel and only the final write is one task. coalesce(1)
+    * is right only over an already materialized cache, where the one
+    * task just reads cached blocks: see [[writeConsolidated]].
+    * A round-robin repartition carries NO ordering contract, so
     * order-significant artifacts (referral_targets is a ranked
     * deliverable; confidence_summary has a fixed bucket order) must
     * pass `sortCols` — the rows are re-sorted INSIDE the single
@@ -99,8 +102,11 @@ object Artifacts {
       sortCols: Seq[org.apache.spark.sql.Column] = Nil,
       singleFile: Boolean = true): Unit = {
     val placed = if (singleFile) df.repartition(1) else df
-    val sorted = if (sortCols.nonEmpty) placed.sortWithinPartitions(sortCols: _*) else placed
-    sorted.write
+    save(if (sortCols.nonEmpty) placed.sortWithinPartitions(sortCols: _*) else placed, path)
+  }
+
+  private def save(df: DataFrame, path: String): Unit =
+    df.write
       .option("header", "true")
       .option("quoteAll", "true")
       // RFC-4180 doubled quotes ("" not \") — Spark's backslash-escape
@@ -108,15 +114,32 @@ object Artifacts {
       .option("escape", "\"")
       .mode("overwrite")
       .csv(path)
-  }
 
-  /** The consolidate stage's three artifacts (combine_contacts.py:1562-1568). */
+  /** The consolidate stage's three artifacts
+    * (combine_contacts.py:1562-1568); returns the contact row count.
+    *
+    * One aggregate, `count(*)` and `count(DISTINCT contact_id)`, runs
+    * before any write: it decides the duplicate-id abort (the ids are
+    * named by [[assertUniqueIds]], called only when the counts differ)
+    * and provides the returned count. It also fills `merged`'s cache
+    * (the `Scratch.scoped` table [[Pipeline.dedupeAndMerge]] returns)
+    * at full parallelism, so each parity-mode artifact is then one
+    * coalesce(1) job that renders from cached blocks — no shuffle, one
+    * job per artifact. Over an uncached `merged` the coalesce would
+    * pull the whole upstream plan into one task (see [[writeCsv]]).
+    * Scale mode writes through [[writeCsv]]. */
   def writeConsolidated(merged: Dataset[MergedContact], lineage: Dataset[Lineage],
-      outDir: String, singleFile: Boolean = true): Unit = {
+      outDir: String, singleFile: Boolean = true): Long = {
     val contacts = consolidatedContacts(merged)
-    assertUniqueIds(contacts)
-    writeCsv(contacts, s"$outDir/consolidated_contacts", singleFile = singleFile)
-    writeCsv(consolidatedLineage(lineage), s"$outDir/consolidated_lineage", singleFile = singleFile)
-    writeCsv(flattenedContacts(merged), s"$outDir/flattened_contacts", singleFile = singleFile)
+    val counts = contacts.agg(count(lit(1)), countDistinct(col("contact_id"))).head()
+    val (rows, ids) = (counts.getLong(0), counts.getLong(1))
+    if (rows != ids) assertUniqueIds(contacts)
+    def write(df: DataFrame, name: String): Unit =
+      if (singleFile) save(df.coalesce(1), s"$outDir/$name")
+      else writeCsv(df, s"$outDir/$name", singleFile = false)
+    write(contacts, "consolidated_contacts")
+    write(consolidatedLineage(lineage), "consolidated_lineage")
+    write(flattenedContacts(merged), "flattened_contacts")
+    rows
   }
 }

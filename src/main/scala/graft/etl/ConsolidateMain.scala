@@ -26,18 +26,19 @@ object ConsolidateMain {
       outDir = Some(outDir)), yamlText)
     // localCheckpoint: the parsed sources feed normalize AND the raw
     // side of the merge join — materialize the (expensive) multi-format
-    // parse once instead of re-running it per consumer.
+    // parse once instead of re-running it per consumer. Lazy: the first
+    // job that reads it is dedupeAndMerge's eager checkpoint of the
+    // normalized rows, which then fills both in one job, not two.
     val raw = Sources.loadAll(spark,
       resolved.inputs("linkedin_csv").getOrElse(""),
       resolved.inputs("gmail_csv").getOrElse(""),
-      resolved.inputs("mac_vcf").getOrElse("")).localCheckpoint(true)
+      resolved.inputs("mac_vcf").getOrElse("")).localCheckpoint(eager = false)
     val normalized = Pipeline.normalize(raw, resolved.normalization)
     val (merged, lineage) = Pipeline.dedupeAndMerge(normalized, raw, resolved.dedupe)
-    try {
+    try
       Artifacts.writeConsolidated(merged, lineage, resolved.outputsDir,
         singleFile = resolved.outputSingleFile)
-      merged.count()
-    } finally
+    finally
       // dedupeAndMerge scope-persists intermediates (the pair table on
       // non-native corpora, the merged dataset shared by both sinks);
       // release them here so a long-lived session driving many stage

@@ -23,7 +23,7 @@ import org.apache.spark.storage.StorageLevel
   *               take the quotient graph) until the remainder fits
   *               the bounded driver union-find, with star alternation
   *               as the shrink-resistant fallback
-  *   merge       groupByKey(component).mapGroups — ONE shuffle; cluster
+  *   merge       groupBy(component).mapGroups — ONE shuffle; cluster
   *               sizes are bounded by duplicate multiplicity, so the
   *               per-group fold is O(dups) not O(n)
   *
@@ -874,16 +874,26 @@ object Pipeline {
       .select(col("comp"), col("norm"), col("raw"))
       .as[(Long, Contact, Contact)]
 
-    val merged = withComp.groupByKey(_._1).mapGroups { (_, it) =>
-      val members = it.toSeq.sortBy(_._2.row_id).map(t => (t._2, t._3))
-      ContactLogic.mergeCluster(members)
-    }
+    // Grouped by the comp COLUMN, not a key function: groupByKey(_._1)
+    // would deserialize every member row just to read its key.
+    val merged = withComp.groupBy(col("comp")).as[Long, (Long, Contact, Contact)]
+      .mapGroups { (_, it) =>
+        val members = it.toSeq.sortBy(_._2.row_id).map(t => (t._2, t._3))
+        ContactLogic.mergeCluster(members)
+      }
     // Scoped: shared by the contacts and lineage sinks of ONE pipeline
     // run, released by the harness afterwards (not session-pinned).
-    val mergedPersisted = graft.Scratch.scoped(merged)
-    val out = mergedPersisted.map(_._1)
-    val lineage = mergedPersisted.flatMap(_._2)
-    (out, lineage)
+    splitMerged(graft.Scratch.scoped(merged))
+  }
+
+  /** Contacts and lineage of a cached `(MergedContact, Seq[Lineage])`
+    * table, by column projection: a typed `map(_._1)`/`flatMap(_._2)`
+    * would deserialize and re-serialize every 24-field contact. */
+  private def splitMerged(t: Dataset[(MergedContact, Seq[Lineage])])
+      : (Dataset[MergedContact], Dataset[Lineage]) = {
+    import t.sparkSession.implicits._
+    (t.select(col("_1.*")).as[MergedContact],
+      t.select(explode(col("_2")).as("l")).select(col("l.*")).as[Lineage])
   }
 
   /** Merged contacts WITHOUT lineage: the merged record derives
@@ -918,8 +928,7 @@ object Pipeline {
       val members = it.map(_._1).toSeq.sortBy(_.row_id).map(c => (c, c))
       ContactLogic.mergeCluster(members)
     }
-    val t = graft.Scratch.scoped(tupled)
-    (t.map(_._1), t.flatMap(_._2))
+    splitMerged(graft.Scratch.scoped(tupled))
   }
 
   /** Shared dedupe front half: normalize-side checkpoint, accepted
@@ -939,36 +948,44 @@ object Pipeline {
       .as[(Long, Long)]
     normPersisted.joinWith(comps, normPersisted("row_id") === comps("id"))
       .map(t => (t._1, t._2._2))
-      .groupByKey(_._2)
+      .groupBy(col("_2")).as[Long, (Contact, Long)]
   }
 
   /** Flattened projection (combine_contacts.py:1457-1514): first
     * email/phone with a non-empty, non-"invalid" label per {home, work,
     * other} bucket, first labeled address rendered as "street, city,
-    * ST, zip, country". */
+    * ST, zip, country". A bucket label is itself valid, so the first
+    * valid entry of a bucket is the first entry carrying its label:
+    * `array_position` over the label array finds it. Plain column
+    * expressions with no lambda (higher-order functions are not
+    * codegen'd), so the whole projection is one generated stage with no
+    * per-row object round trip. */
   def flatten(merged: Dataset[MergedContact]): DataFrame = {
-    import merged.sparkSession.implicits._
-    merged.map { m =>
-      val validEmails = m.contact.emails.filter(e => e.label.nonEmpty && e.label != "invalid")
-      val validPhones = m.contact.phones.filter(p => p.label.nonEmpty && p.label != "invalid")
-      val validAddrs = m.contact.addresses.filter(_.label.nonEmpty)
-      def firstEmail(label: String): String =
-        validEmails.find(_.label == label).map(_.value).getOrElse("")
-      def firstPhone(label: String): String =
-        validPhones.find(_.label == label)
-          .map(p => graft.functions.Phones.withExtension(p.value, p.extension)).getOrElse("")
-      def firstAddr(label: String): String =
-        validAddrs.find(_.label == label).map(a =>
-          Seq(a.street, a.city, a.state, a.postal_code, a.country)
-            .filter(_.nonEmpty).mkString(", ")).getOrElse("")
-      (m.contact_id, m.contact.full_name, m.contact.company,
-        m.contact.department, m.contact.title, m.contact.linkedin_url,
-        firstEmail("home"), firstEmail("work"), firstEmail("other"),
-        firstPhone("home"), firstPhone("work"), firstPhone("other"),
-        firstAddr("home"), firstAddr("work"), firstAddr("other"))
-    }.toDF("contact_id", "full_name", "company", "department", "title", "linkedin_url",
-      "home_email", "work_email", "other_email",
-      "home_phone", "work_phone", "other_phone",
-      "home_address", "work_address", "other_address")
+    // The bucket's first entry, or null when it has none.
+    def first(entries: String, label: String): Column =
+      get(col(s"contact.$entries"),
+        (array_position(col(s"contact.$entries.label"), label) - 1).cast("int"))
+    // String.trim semantics: strip every char <= U+0020, not just ' '.
+    val javaWhitespace = (0 to 0x20).map(_.toChar).mkString
+    def email(l: String) =
+      coalesce(first("emails", l).getField("value"), lit("")).as(s"${l}_email")
+    def phone(l: String) = {
+      val p = first("phones", l)
+      val ext = trim(coalesce(p.getField("extension"), lit("")), javaWhitespace)
+      coalesce(when(ext =!= "", concat(p.getField("value"), lit("x"), ext))
+        .otherwise(p.getField("value")), lit("")).as(s"${l}_phone")
+    }
+    // concat_ws skips nulls: only the non-empty parts are joined.
+    def addr(l: String) = {
+      val a = first("addresses", l)
+      concat_ws(", ", Seq("street", "city", "state", "postal_code", "country")
+        .map(f => when(a.getField(f) =!= "", a.getField(f))): _*).as(s"${l}_address")
+    }
+    val buckets = Seq("home", "work", "other")
+    merged.select(
+      Seq(col("contact_id"), col("contact.full_name").as("full_name"),
+        col("contact.company").as("company"), col("contact.department").as("department"),
+        col("contact.title").as("title"), col("contact.linkedin_url").as("linkedin_url")) ++
+        buckets.map(email) ++ buckets.map(phone) ++ buckets.map(addr): _*)
   }
 }

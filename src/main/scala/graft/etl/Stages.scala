@@ -27,14 +27,49 @@ object Stages {
   }
 
   /** All-string artifact read matching the reference's
-    * `dtype=str, keep_default_na=False` (QUOTE_ALL, RFC-4180 quotes). */
+    * `dtype=str, keep_default_na=False` (QUOTE_ALL, RFC-4180 quotes).
+    * The schema comes from the artifact's header record, parsed on the
+    * driver, so the read runs no Spark header-inference job. */
   def readArtifactCsv(spark: SparkSession, path: String): DataFrame = {
+    val schema = StructType(artifactHeader(spark, path).map(StructField(_, StringType)))
     val df = spark.read
+      .schema(schema)
       .option("header", "true")
       .option("escape", "\"")
       .option("multiLine", "true")
       .csv(path)
     df.na.fill("")
+  }
+
+  /** Column names in the header record of a `<name>.csv` file or of
+    * the first non-empty data file of a part-file directory, through
+    * the path's Hadoop file system; an artifact with no header record
+    * has no columns. */
+  private def artifactHeader(spark: SparkSession, path: String): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) Some(p)
+      else fs.listStatus(p).toSeq
+        .filter(f => f.isFile && f.getLen > 0 &&
+          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+        .map(_.getPath).sortBy(_.getName).headOption
+    file.flatMap { f =>
+      // Where univocity's defaults differ from Spark's multi-line read
+      // (its '"' quote and escape already match).
+      val settings = new com.univocity.parsers.csv.CsvParserSettings()
+      settings.getFormat.setComment('\u0000')
+      settings.setIgnoreLeadingWhitespaces(false)
+      settings.setIgnoreTrailingWhitespaces(false)
+      settings.setLineSeparatorDetectionEnabled(true)
+      val parser = new com.univocity.parsers.csv.CsvParser(settings)
+      val in = fs.open(f)
+      try {
+        parser.beginParsing(in, "UTF-8")
+        Option(parser.parseNext())
+      } finally { parser.stopParsing(); in.close() }
+    }.getOrElse(Array.empty[String]).toSeq
   }
 
   // ---- channel-string / JSON parsers (validate_quality.py:21-88) ----
@@ -318,10 +353,16 @@ object ValidateMain {
     val contacts = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "consolidated_contacts"))
     val flattened = Stages.readArtifactCsv(spark, Stages.artifactPath(dir, "flattened_contacts"))
     val (report, scored) = Stages.validate(contacts, flattened, resolved.quality)
-    Artifacts.writeCsv(report, s"$dir/validation_report",
-      singleFile = resolved.outputSingleFile)
-    Artifacts.writeCsv(scored, s"$dir/contact_quality_scored",
-      singleFile = resolved.outputSingleFile)
+    // scored joins the contacts to report's metrics. Scoped, report is
+    // computed once: the first write fills the cache and the second
+    // reads it back instead of re-reading and re-parsing both artifacts.
+    graft.Scratch.scoped(report)
+    try {
+      Artifacts.writeCsv(report, s"$dir/validation_report",
+        singleFile = resolved.outputSingleFile)
+      Artifacts.writeCsv(scored, s"$dir/contact_quality_scored",
+        singleFile = resolved.outputSingleFile)
+    } finally graft.Scratch.releaseAll()
   }
 
   def main(args: Array[String]): Unit = {

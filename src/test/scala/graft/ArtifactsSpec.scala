@@ -47,6 +47,31 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("same-id"))
   }
 
+  test("writeConsolidated aborts on a duplicate contact_id before writing any artifact") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-artifacts-dup").toString
+    val dup = Seq(merged("dup-b"), merged("id-1"), merged("dup-b"), merged("dup-a"),
+      merged("dup-a")).toDS().repartition(2)
+    val e = intercept[IllegalStateException] {
+      Artifacts.writeConsolidated(dup, Seq.empty[Lineage].toDS(), out)
+    }
+    assert(e.getMessage.contains("dup-a, dup-b"))
+    assert(new java.io.File(out).list().isEmpty)
+  }
+
+  test("writeConsolidated returns the number of contact rows it wrote") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-artifacts-count").toString
+    val ms = (1 to 5).map(i => merged(s"id-$i")).toDS().repartition(3)
+    val n = Artifacts.writeConsolidated(ms, Seq.empty[Lineage].toDS(), out)
+    assert(n == 5)
+    for (a <- Seq("consolidated_contacts", "flattened_contacts")) {
+      val files = new java.io.File(out, a).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(files.length == 1, s"$a is not one file")
+      assert(Stages.readArtifactCsv(spark, s"$out/$a").count() == n)
+    }
+  }
+
   test("writeConsolidated emits quote-all CSV that round-trips") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-artifacts").toString

@@ -407,4 +407,61 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(row.getAs[String]("home_phone") == "+16175550100x22")
     assert(row.getAs[String]("home_address") == "1 Elm St, Boston, MA, 02108, US")
   }
+
+  test("column flatten equals the typed Scala projection on generated contacts") {
+    import spark.implicits._
+    // The typed projection flatten replaced, kept here as the oracle.
+    def oracle(m: MergedContact): Seq[String] = {
+      val validEmails = m.contact.emails.filter(e => e.label.nonEmpty && e.label != "invalid")
+      val validPhones = m.contact.phones.filter(p => p.label.nonEmpty && p.label != "invalid")
+      val validAddrs = m.contact.addresses.filter(_.label.nonEmpty)
+      def firstEmail(label: String): String =
+        validEmails.find(_.label == label).map(_.value).getOrElse("")
+      def firstPhone(label: String): String =
+        validPhones.find(_.label == label)
+          .map(p => graft.functions.Phones.withExtension(p.value, p.extension)).getOrElse("")
+      def firstAddr(label: String): String =
+        validAddrs.find(_.label == label).map(a =>
+          Seq(a.street, a.city, a.state, a.postal_code, a.country)
+            .filter(_.nonEmpty).mkString(", ")).getOrElse("")
+      Seq(m.contact_id, m.contact.full_name, m.contact.company,
+        m.contact.department, m.contact.title, m.contact.linkedin_url,
+        firstEmail("home"), firstEmail("work"), firstEmail("other"),
+        firstPhone("home"), firstPhone("work"), firstPhone("other"),
+        firstAddr("home"), firstAddr("work"), firstAddr("other"))
+    }
+    val rnd = new scala.util.Random(7)
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.length))
+    def label = pick("", "invalid", "home", "work", "other", "mobile", "Home")
+    def part = pick("", "", "1 Elm St", "Boston", " MA ", "02108", "US")
+    def n(k: Int) = rnd.nextInt(k + 1)
+    val contacts = (0 until 400).map { i =>
+      MergedContact(
+        contact_id = s"id-$i",
+        contact = Contact.blank(i).copy(
+          full_name = pick("", "Ann Yu", "Bo Li"), company = pick("", "Acme"),
+          department = pick("", "R&D"), title = pick("", "CTO"),
+          linkedin_url = pick("", "https://linkedin.com/in/x"),
+          emails = Seq.fill(n(4))(EmailEntry(s"e${rnd.nextInt(9)}@x.com", label)),
+          phones = Seq.fill(n(4))(PhoneEntry(s"+1617555010${rnd.nextInt(9)}", label,
+            pick("", " ", "\t", " \n", "22", " 7 ", "\t9"))),
+          addresses = Seq.fill(n(3))(
+            AddressEntry("", "", part, part, part, part, part, label))),
+        addresses_json = "[]", source_count = 1, source_row_count = 1,
+        invalid_emails = Nil, non_standard_phones = Nil)
+    }
+    val flat = Pipeline.flatten(contacts.toDS())
+    assert(flat.columns.toSeq == Seq("contact_id", "full_name", "company", "department",
+      "title", "linkedin_url", "home_email", "work_email", "other_email",
+      "home_phone", "work_phone", "other_phone",
+      "home_address", "work_address", "other_address"))
+    val got = flat.collect().map(r => r.toSeq.map(_.asInstanceOf[String])).sortBy(_.head)
+    val want = contacts.map(oracle).sortBy(_.head)
+    assert(got.toSeq == want)
+    // The generator reached every branch the oracle distinguishes.
+    assert(want.exists(r => r.slice(9, 12).exists(_.contains("x"))))
+    assert(want.exists(r => r.slice(9, 12).exists(p => p.nonEmpty && !p.contains("x"))))
+    assert(want.exists(r => r.slice(12, 15).exists(_.nonEmpty)))
+    assert(want.exists(r => r.slice(6, 15).forall(_.isEmpty)))
+  }
 }

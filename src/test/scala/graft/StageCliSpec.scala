@@ -49,6 +49,30 @@ class StageCliSpec extends AnyFunSuite {
     "confidence_report", "confidence_summary",
     "tagged_contacts", "referral_targets")
 
+  test("readArtifactCsv's header schema reads like header inference, " +
+      "for a reference <name>.csv and for a part-file directory") {
+    def inferred(path: String) = spark.read
+      .option("header", "true").option("escape", "\"").option("multiLine", "true")
+      .csv(path).na.fill("")
+    def same(path: String): Unit = {
+      val (got, want) = (Stages.readArtifactCsv(spark, path), inferred(path))
+      assert(got.schema == want.schema, path)
+      assert(got.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001")) ==
+        want.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0001")), path)
+      assert(got.count() > 0, path)
+    }
+    for (a <- Seq("consolidated_contacts", "consolidated_lineage", "flattened_contacts",
+        "validation_report")) {
+      val plain = res(s"golden_$a.csv")
+      same(plain)
+      // The same rows as an engine part-file directory.
+      val parts = Files.createTempDirectory(s"graft-read-$a").toString
+      Artifacts.writeCsv(inferred(plain).repartition(2), s"$parts/$a", singleFile = false)
+      assert(csvFiles(parts, a).length > 1)
+      same(Stages.artifactPath(parts, a))
+    }
+  }
+
   test("outputs.single_file=false drives a part-file run of all four stages " +
       "that matches the single-file run", SlowReplay) {
     val partDir = Files.createTempDirectory("graft-cli-parts").toString
