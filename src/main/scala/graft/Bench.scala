@@ -60,8 +60,11 @@ object Bench {
     spark.range(1000).selectExpr("sum(id) s").groupBy("s").count().count()
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmDir.isDirectory && warmDir.getPath != sfDir)
-      benched.foreach { case (_, fn) =>
-        try fn(spark, warmDir.getPath).count() catch { case _: Throwable => () }
+      benched.foreach { case (name, fn) =>
+        try fn(spark, warmDir.getPath).count() catch {
+          case e: Throwable => System.err.println(
+            s"[bench] WARN warmup($name) failed: ${e.getClass.getName}: ${e.getMessage}")
+        }
         Scratch.releaseAll()
       }
     // Min-of-2 timed passes (standard bench practice): a single sample
@@ -71,7 +74,9 @@ object Bench {
     // session-scoped stage memos are evicted between passes so pass 2
     // re-pays exactly what pass 1 did (otherwise the stage query that
     // funds the shared dedupe+merge would report a near-zero min).
-    def timedPass(): Map[String, Double] = benched.map { case (name, fn) =>
+    // A pass returns each query's seconds, or None if its body threw:
+    // a failure is never recorded as a (fast) timing.
+    def timedPass(): Map[String, Option[Double]] = benched.map { case (name, fn) =>
       // One-time layout setup (bucketed tables etc.) runs untimed: a
       // deployment pays it once and amortizes it over every subsequent
       // query, so timing it per-run would misrepresent the device.
@@ -91,11 +96,16 @@ object Bench {
       // readable. Thread-local; cleared after the body.
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true } catch {
+        case e: Throwable => System.err.println(
+          s"[bench] ERROR $name failed: ${e.getClass.getName}: " +
+            s"${e.getMessage} — left out of the timings")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
       Scratch.releaseAll() // drop per-query cached intermediates
-      name -> dt
+      name -> Option.when(ok)(dt)
     }
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -117,7 +127,13 @@ object Bench {
     Scratch.releaseAll()
     val pass2 = timedPass()
     val load1 = loadAvg()
-    val results = pass1.map { case (name, v1) => name -> math.min(v1, pass2(name)) }
+    // A query that failed in either pass has no timing: it is left out
+    // of `queries` and `total` and listed under "failed".
+    val results = pass1.toSeq.flatMap { case (name, v1) =>
+      for (a <- v1; b <- pass2(name)) yield name -> math.min(a, b)
+    }.toMap
+    val failed = benched.keys.filterNot(results.contains).toSeq.sorted
+    def names(ns: Seq[String]) = ns.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Full-fidelity copy (complete query names, full float precision,
     // both raw passes, the run's load averages) goes to a file: the
@@ -126,8 +142,10 @@ object Bench {
     // record.
     def full(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def timed(pass: Map[String, Option[Double]]) =
+      full(pass.collect { case (k, Some(v)) => k -> v })
     val qs = full(results)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"pass1":${full(pass1)},"pass2":${full(pass2)},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"failed":${names(failed)},"pass1":${timed(pass1)},"pass2":${timed(pass2)},"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case _: Throwable => () }
     // The stdout line the driver parses is kept compact enough to fit
@@ -139,7 +157,7 @@ object Bench {
     val shortQs = results.map { case (k, v) => s"\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     spark.stop()
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load0)},${fmt(load1)}],"mem_gb":[$mem0,${memAvailGb()}],"queries":$shortQs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"min_of_2","load":[${fmt(load0)},${fmt(load1)}],"mem_gb":[$mem0,${memAvailGb()}],"queries":$shortQs,"failed":${names(failed.map(_.takeWhile(_ != '_')))},"sf":"$sfDir"}""")
     System.out.flush()
   }
 }

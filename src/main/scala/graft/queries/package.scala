@@ -196,7 +196,7 @@ package object queries {
       val path = localScratch(s, tag, dir)
       if (!new java.io.File(path, "_SUCCESS").exists())
         build.write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      graft.Tables.parquet(s, path)
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * nothing corpus-sized shuffles beyond the standing-state build)
   * and the prepared q105/q119/q120 merge bodies. Prints
   * exchange/broadcast node counts of the AQE-resolved executed plans
-  * at sf0.01, the ExplainR14 device.
+  * at sf0.01.
   *
   * Usage: sbt "Test/runMain graft.ExplainR15"
   */

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    bucket exceeds it and the probe set is empty on any layout).
   *
   * 2. Plan audit of the round's new operators (q130/q131/q132 +
-  *    the store-backed q124), the ExplainR14/R15 device: exchange and
+  *    the store-backed q124), the ExplainR15 device: exchange and
   *    broadcast node counts of the AQE-resolved executed plans.
   *
   * Usage: sbt "Test/runMain graft.ExplainR16 [sfDir]"

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *        the pruned run skipping most of the store's rows.
   *
   * 2. Plan audit of the round's new/changed operators (q133's gated
-  *    dedup branches), the ExplainR14/R15/R16 device.
+  *    dedup branches), the ExplainR15/R16 device.
   *
   * Usage: sbt "Test/runMain graft.ExplainR17 [sfDir]"
   */

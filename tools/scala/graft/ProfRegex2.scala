@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Second regex probe: the REAL dedup corpus, thread-count scaling,
   * regex vs JIT char-filter kernel. Quantifies the contention/bandwidth
-  * penalty of java.util.regex inside 32-way codegen that ProfRegex's
-  * 4-thread run underestimates.
+  * penalty of java.util.regex inside 32-way codegen that a 4-thread
+  * run underestimates.
   *
   * Usage: sbt "Test/runMain graft.ProfRegex2 /tmp/dedup2m 200000"
   */
