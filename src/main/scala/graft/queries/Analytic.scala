@@ -1132,10 +1132,6 @@ object Analytic {
   // standing sessions into one — the interval analog of q105's
   // component bridge merge.
 
-  /** 30-minute session gap in epoch micros (q67/q122's constant; kept
-    * local because StreamingOps' is stream-private). */
-  private[graft] val SessGapUs = 30L * 60 * 1000000
-
   /** Full gap-split session table over an event relation: one row per
     * (user, session) with event count and bounds — q122's oracle CTE
     * as a batch operator, INCLUDING open tails (this is a stored

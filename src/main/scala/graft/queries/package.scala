@@ -246,6 +246,10 @@ package object queries {
   /** Width in days of the per-user request-instant spread. */
   val PrivacyRangeDays = 8
 
+  /** The 30-minute session gap in epoch micros, shared by the stream
+    * and batch session operators and their oracles. */
+  val SessGapUs: Long = 30L * 60 * 1000000
+
   /** Spark column: the requested user's erase instant T (µs), as a
     * function of `user_id` — the batch-side twin of the streamed
     * fixture relation. */

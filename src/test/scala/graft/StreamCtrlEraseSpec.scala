@@ -58,7 +58,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.funnelStepCtrl _)
+        StreamingOps.FunnelHandler("q130", StreamingOps.Retire.Never, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelOutE], id: Long) =>
@@ -154,7 +154,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.funnelStepCtrl _)
+        StreamingOps.FunnelHandler("q130", StreamingOps.Retire.Never, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .format("noop")
@@ -215,7 +215,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       in.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-          StreamingOps.funnelStepCtrl _)
+          StreamingOps.FunnelHandler("q130", StreamingOps.Retire.Never, StreamingOps.Erase.Control))
         .writeStream.outputMode(OutputMode.Update())
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelOutE], id: Long) =>
@@ -302,7 +302,8 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.funnelStepCtrlRetiring(60 * MinUs))
+        StreamingOps.FunnelHandler("q138",
+          StreamingOps.Retire.Idle(60 * MinUs, onComplete = false), StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelOutE], id: Long) =>
@@ -357,7 +358,8 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.funnelStepCtrlRetiring(60 * MinUs))
+        StreamingOps.FunnelHandler("q138",
+          StreamingOps.Retire.Idle(60 * MinUs, onComplete = false), StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelOutE], id: Long) =>
@@ -429,7 +431,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.sessionizeCtrl _)
+        StreamingOps.SessionHandler("q134", StreamingOps.Retire.Flush, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessionOutE], id: Long) =>
@@ -549,7 +551,8 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       in.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-          StreamingOps.sessionizeCtrl _)
+          StreamingOps.SessionHandler("q134",
+            StreamingOps.Retire.Flush, StreamingOps.Erase.Control))
         .writeStream.outputMode(OutputMode.Update())
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessionOutE], id: Long) =>
@@ -644,7 +647,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.sessionizeCtrl _)
+        StreamingOps.SessionHandler("q134", StreamingOps.Retire.Flush, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .format("noop")
@@ -666,9 +669,9 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq
       val e = queries.t(spark, dir, "events")
       val gapUs = 30L * 60 * 1000000
-      val reqT = lit(StreamingOps.Q130BaseUs) +
+      val reqT = lit(queries.PrivacyBaseUs) +
         (queries.h60(concat(lit("reqday:"), col("user_id")))
-          % StreamingOps.Q130RangeDays) * lit(86400000000L)
+          % queries.PrivacyRangeDays) * lit(86400000000L)
       val x = e.where(
           !(queries.h60(concat(lit("erase:"), col("user_id"))) % 10 === 0) ||
             unix_micros(col("ts")) >= reqT)
@@ -706,9 +709,9 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       // In-engine oracle twin: q113's cascade with each erased user's
       // events filtered by their OWN request instant.
       val e = queries.t(spark, dir, "events")
-      val reqT = lit(StreamingOps.Q130BaseUs) +
+      val reqT = lit(queries.PrivacyBaseUs) +
         (queries.h60(concat(lit("reqday:"), col("user_id")))
-          % StreamingOps.Q130RangeDays) * lit(86400000000L)
+          % queries.PrivacyRangeDays) * lit(86400000000L)
       val filtered = e.where(
         !(queries.h60(concat(lit("erase:"), col("user_id"))) % 10 === 0) ||
           unix_micros(col("ts")) >= reqT)

@@ -99,7 +99,9 @@ class StreamEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.funnelStepErasing(eraseUs))
+        StreamingOps.FunnelHandler("q127",
+          StreamingOps.Retire.Idle(StreamingOps.FunnelIdleHorizonUs, onComplete = true),
+          StreamingOps.Erase.AtInstant(eraseUs)))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelOutE], id: Long) =>
@@ -169,7 +171,8 @@ class StreamEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.sessionizeErasing(eraseUs))
+        StreamingOps.SessionHandler("q129",
+          StreamingOps.Retire.Flush, StreamingOps.Erase.AtInstant(eraseUs)))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessionOutE], id: Long) =>

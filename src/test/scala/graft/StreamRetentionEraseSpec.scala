@@ -95,7 +95,8 @@ class StreamRetentionEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.retentionStepErasing(eraseUs))
+        StreamingOps.RetentionHandler("q132",
+          StreamingOps.Retire.Never, StreamingOps.Erase.AtInstant(eraseUs)))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[RetOutE], id: Long) =>
@@ -162,7 +163,8 @@ class StreamRetentionEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.retentionStepCtrl _)
+        StreamingOps.RetentionHandler("q139",
+          StreamingOps.Retire.Never, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[RetOutE], id: Long) =>
@@ -249,7 +251,8 @@ class StreamRetentionEraseSpec extends AnyFunSuite {
       in.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-          StreamingOps.retentionStepCtrl _)
+          StreamingOps.RetentionHandler("q139",
+            StreamingOps.Retire.Never, StreamingOps.Erase.Control))
         .writeStream.outputMode(OutputMode.Update())
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[RetOutE], id: Long) =>
@@ -322,7 +325,8 @@ class StreamRetentionEraseSpec extends AnyFunSuite {
       in.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-          StreamingOps.retentionStepCtrl _)
+          StreamingOps.RetentionHandler("q139",
+            StreamingOps.Retire.Never, StreamingOps.Erase.Control))
         .writeStream.outputMode(OutputMode.Update())
         .option("checkpointLocation", chk)
         .format("noop")
@@ -362,7 +366,8 @@ class StreamRetentionEraseSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.retentionStepCtrl _)
+        StreamingOps.RetentionHandler("q139",
+          StreamingOps.Retire.Never, StreamingOps.Erase.Control))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .format("noop")

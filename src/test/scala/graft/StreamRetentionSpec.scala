@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.StreamingOps
-import graft.queries.StreamingOps.{RetOut, SessionEvent}
+import graft.queries.StreamingOps.{RetOutE, SessionEvent}
 
 /** q128's streaming-retention semantics on crafted MULTI-batch
   * replays (the sf replay is one data batch; these are where the
@@ -59,16 +59,16 @@ class StreamRetentionSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.retentionStep)
+        StreamingOps.RetentionHandler("q128", StreamingOps.Retire.Never, StreamingOps.Erase.Never))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[RetOut], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[RetOutE], id: Long) =>
         batch.toDF().write.mode("overwrite").parquet(s"$dataDir/b$id"); ()
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val rows = spark.read.option("recursiveFileLookup", "true")
-      .schema(implicitly[org.apache.spark.sql.Encoder[RetOut]].schema)
+      .schema(implicitly[org.apache.spark.sql.Encoder[RetOutE]].schema)
       .parquet(dataDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
     assert(rows.sorted == Seq(
@@ -107,7 +107,7 @@ class StreamRetentionSpec extends AnyFunSuite {
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.retentionStep)
+        StreamingOps.RetentionHandler("q128", StreamingOps.Retire.Never, StreamingOps.Erase.Never))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .format("noop")

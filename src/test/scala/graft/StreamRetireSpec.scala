@@ -97,14 +97,16 @@ class StreamRetireSpec extends AnyFunSuite {
     writeSourceFile(Seq(fev(3, 65, "click")), inputDir, "f1.parquet", base + 2000)
     writeSourceFile(Seq(fev(3, 130, "purchase"), fev(1, 200, "view")),
       inputDir, "f2.parquet", base + 4000)
-    val stateRows = runRetiring[FunnelEventWm, StreamingOps.FunnelOut](
+    val stateRows = runRetiring[FunnelEventWm, StreamingOps.FunnelOutE](
       inputDir.toString, dataDir,
       ds => ds.groupByKey(_.user_id).flatMapGroupsWithState(
         OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.funnelStepRetiring))
+        StreamingOps.FunnelHandler("q121",
+          StreamingOps.Retire.Idle(StreamingOps.FunnelIdleHorizonUs, onComplete = true),
+          StreamingOps.Erase.Never)))
     val raw = spark.read.option("recursiveFileLookup", "true")
-      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.FunnelOut]].schema)
+      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.FunnelOutE]].schema)
       .parquet(dataDir)
     val rows = raw.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
     // Emission log: u1 completes (3) then restarts at step 1; u2 stops
@@ -142,14 +144,14 @@ class StreamRetireSpec extends AnyFunSuite {
       inputDir, "f0.parquet", base)
     writeSourceFile(Seq(sev(2, 100)), inputDir, "f1.parquet", base + 2000)
     writeSourceFile(Seq(sev(3, 200)), inputDir, "f2.parquet", base + 4000)
-    val stateRows = runRetiring[SessionEventWm, StreamingOps.SessionOut](
+    val stateRows = runRetiring[SessionEventWm, StreamingOps.SessionOutE](
       inputDir.toString, dataDir,
       ds => ds.groupByKey(_.user_id).flatMapGroupsWithState(
         OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.sessionizeFlushing))
+        StreamingOps.SessionHandler("q122", StreamingOps.Retire.Flush, StreamingOps.Erase.Never)))
     val rows = spark.read.option("recursiveFileLookup", "true")
-      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOut]].schema)
+      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOutE]].schema)
       .parquet(dataDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(rows == Set(
@@ -182,14 +184,14 @@ class StreamRetireSpec extends AnyFunSuite {
     writeSourceFile(Seq(sevMs(4, bMs), sevMs(5, bMs - 1)),
       inputDir, "f0.parquet", base)
     writeSourceFile(Seq(sevMs(9, wMs)), inputDir, "f1.parquet", base + 2000)
-    val stateRows = runRetiring[SessionEventWm, StreamingOps.SessionOut](
+    val stateRows = runRetiring[SessionEventWm, StreamingOps.SessionOutE](
       inputDir.toString, dataDir,
       ds => ds.groupByKey(_.user_id).flatMapGroupsWithState(
         OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        StreamingOps.sessionizeFlushing))
+        StreamingOps.SessionHandler("q122", StreamingOps.Retire.Flush, StreamingOps.Erase.Never)))
     val rows = spark.read.option("recursiveFileLookup", "true")
-      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOut]].schema)
+      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOutE]].schema)
       .parquet(dataDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(rows == Set((5L, 1L, (bMs - 1) * 1000, (bMs - 1) * 1000)),

@@ -135,11 +135,11 @@ class StreamingSpec extends AnyFunSuite {
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        StreamingOps.sessionize)
+        StreamingOps.SessionHandler("q67", StreamingOps.Retire.Never, StreamingOps.Erase.Never))
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chkDir)
       .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[StreamingOps.SessionOut], id: Long) =>
+        (batch: org.apache.spark.sql.Dataset[StreamingOps.SessionOutE], id: Long) =>
           batch.toDF().write.mode("overwrite").parquet(s"$dataDir/b$id"); ()
       }
       .trigger(trigger).start()
@@ -149,9 +149,9 @@ class StreamingSpec extends AnyFunSuite {
     import graft.queries.StreamingOps
     import spark.implicits._
     spark.read.option("recursiveFileLookup", "true")
-      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOut]].schema)
+      .schema(implicitly[org.apache.spark.sql.Encoder[StreamingOps.SessionOutE]].schema)
       .parquet(dataDir)
-      .as[StreamingOps.SessionOut].collect()
+      .as[StreamingOps.SessionOutE].collect()
       .map(s => (s.user_id, s.n_events, s.start_us, s.end_us)).toSet
   }
 

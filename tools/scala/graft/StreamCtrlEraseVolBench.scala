@@ -76,11 +76,13 @@ object StreamCtrlEraseVolBench {
         .add("req_us", org.apache.spark.sql.types.LongType))
       .option("maxFilesPerTrigger", 1)
       .parquet(reqDir)
-    val out = queries.StreamingOps.ctrlUnion(spark, events, requests)
+    val out = queries.StreamingOps.streamRows[queries.StreamingOps.CtrlEvent](events, Some(requests),
+      queries.StreamingOps.EventView.Funnel, watermark = false)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        queries.StreamingOps.funnelStepCtrl _)
+        queries.StreamingOps.FunnelHandler("q130",
+          queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.Control))
     val q = out.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOutE], id: Long) =>
@@ -165,11 +167,13 @@ object StreamCtrlEraseVolBench {
       .schema(reqSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(reqDirOrd)
-    val sout = queries.StreamingOps.ctrlSessUnion(spark, sevents, srequests)
+    val sout = queries.StreamingOps.streamRows[queries.StreamingOps.CtrlSessEvent](sevents, Some(srequests),
+      queries.StreamingOps.EventView.Untyped, watermark = true)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        queries.StreamingOps.sessionizeCtrl _)
+        queries.StreamingOps.SessionHandler("q134",
+          queries.StreamingOps.Retire.Flush, queries.StreamingOps.Erase.Control))
     val sq = sout.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", sChk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.SessionOutE], id: Long) =>
@@ -190,7 +194,7 @@ object StreamCtrlEraseVolBench {
       s"every request row must tombstone exactly once: $sTombs != $nReq")
     val sCur = queries.StreamingOps.sessionsCurrentByRequests(
       sRaw, spark.read.parquet(reqDir))
-    val gapUs = 30L * 60 * 1000000
+    val gapUs = queries.SessGapUs
     val x = filtered.select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts_us"))
@@ -229,11 +233,13 @@ object StreamCtrlEraseVolBench {
       .option("maxFilesPerTrigger", 8).parquet(parts)
     val rrequests = spark.readStream.schema(reqSchema)
       .option("maxFilesPerTrigger", 1).parquet(reqDir)
-    val rout = queries.StreamingOps.ctrlUnionWm(spark, revents, rrequests)
+    val rout = queries.StreamingOps.streamRows[queries.StreamingOps.CtrlEventWm](revents, Some(rrequests),
+      queries.StreamingOps.EventView.Funnel, watermark = true)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        queries.StreamingOps.funnelStepCtrlRetiring())
+        queries.StreamingOps.FunnelHandler("q138",
+          queries.StreamingOps.Retire.Idle(queries.StreamingOps.FunnelIdleHorizonUs, onComplete = false), queries.StreamingOps.Erase.Control))
     val rq = rout.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", rChk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOutE], id: Long) =>

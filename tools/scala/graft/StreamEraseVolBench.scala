@@ -56,7 +56,9 @@ object StreamEraseVolBench {
       val out = events.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update(),
           org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-          queries.StreamingOps.funnelStepErasing(eraseUs, horizonUs, retireOnComplete))
+          queries.StreamingOps.FunnelHandler("q127",
+            queries.StreamingOps.Retire.Idle(horizonUs, retireOnComplete),
+            queries.StreamingOps.Erase.AtInstant(eraseUs)))
       val q = out.writeStream.outputMode(OutputMode.Update())
         .option("checkpointLocation", chk)
         .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOutE], id: Long) =>
@@ -136,7 +138,8 @@ object StreamEraseVolBench {
     val sout = sevents.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        queries.StreamingOps.sessionizeErasing(eraseUs))
+        queries.StreamingOps.SessionHandler("q129",
+          queries.StreamingOps.Retire.Flush, queries.StreamingOps.Erase.AtInstant(eraseUs)))
     val sq = sout.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", sChk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.SessionOutE], id: Long) =>
@@ -157,7 +160,7 @@ object StreamEraseVolBench {
       f"final=${sStateRows.last}%,d")
     require(sTombs > 0 && sFlagged > 0, "session erasure branches unfired at volume")
     val cur = queries.StreamingOps.sessionsCurrent(sRaw)
-    val gapUs = 30L * 60 * 1000000
+    val gapUs = queries.SessGapUs
     val x = e.where(
         !(queries.h60(concat(lit("erase:"), col("user_id"))) % 10 === 0) ||
           unix_micros(col("ts")) >= eraseUs)

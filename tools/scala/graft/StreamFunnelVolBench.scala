@@ -7,14 +7,14 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * through REAL micro-batches (the 64 time-ordered `events_gen` part
   * files, 8 files per trigger → 8 batches whose event time advances
   * like a live feed), per-user funnel state via the registered
-  * `funnelStep`, final relation asserted equal to q113's batch
+  * `FunnelHandler`, final relation asserted equal to q113's batch
   * cascade over the same files — the q96==q98 proof, funnel edition.
   * Also reports the emission log's size: reached_step transitions
   * only, so state-change traffic is bounded by 3 × users, not by
   * events.
   *
   * A RETIRING phase (q121) then replays the same batches through
-  * funnelStepRetiring + EventTimeTimeout and reports per-batch state
+  * the q121 handler (Retire.Idle) and reports per-batch state
   * rows — the state-decline evidence the NoTimeout twin cannot give —
   * plus honest reached-step agreement counts vs the batch relation.
   *
@@ -48,7 +48,7 @@ object StreamFunnelVolBench {
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"))
       // Per-batch event-time range, read back from query progress
       // below: stream == batch holds only under time-ordered arrival
-      // across micro-batches (funnelStep's documented contract), so a
+      // across micro-batches (the funnel cascade's documented contract), so a
       // mis-ordered replay must fail LOUDLY here instead of producing
       // a plausible-but-wrong relation (r11 ADVICE).
       .observe("tsrange", min(col("ts_us")).as("minTs"), max(col("ts_us")).as("maxTs"))
@@ -56,10 +56,11 @@ object StreamFunnelVolBench {
     val out = events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        queries.StreamingOps.funnelStep)
+        queries.StreamingOps.FunnelHandler("q115",
+          queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.Never))
     val q = out.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOut], id: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOutE], id: Long) =>
         val n = b.count()
         batches.incrementAndGet()
         println(f"SFVBATCH  batch=$id%2d emissions=$n%,d")
@@ -121,7 +122,7 @@ object StreamFunnelVolBench {
     println(f"SFVVERIFY stream == q113 batch relation, all ${stream.size}%,d users")
 
     // ---- retiring phase (q121): the same replay through
-    // funnelStepRetiring + EventTimeTimeout. The claim under test is
+    // the q121 handler (Retire.Idle). The claim under test is
     // STATE DECLINE — q115's NoTimeout state is one row per lifetime
     // user (240k, forever); the retiring variant holds only
     // incomplete funnels touched within the horizon. Agreement with
@@ -142,11 +143,13 @@ object StreamFunnelVolBench {
     val out2 = events2.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        queries.StreamingOps.funnelStepRetiring)
+        queries.StreamingOps.FunnelHandler("q121",
+          queries.StreamingOps.Retire.Idle(queries.StreamingOps.FunnelIdleHorizonUs, onComplete = true),
+          queries.StreamingOps.Erase.Never))
     val (data2, chk2) = (s"$scratch/data_retire", s"$scratch/chk_retire")
     val q2 = out2.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk2)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOut], id: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.FunnelOutE], id: Long) =>
         b.toDF().write.mode("append").parquet(data2); ()
       }
       .trigger(Trigger.AvailableNow()).start()

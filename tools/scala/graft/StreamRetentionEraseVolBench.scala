@@ -48,7 +48,8 @@ object StreamRetentionEraseVolBench {
     val out = events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
-        queries.StreamingOps.retentionStepErasing(eraseUs))
+        queries.StreamingOps.RetentionHandler("q132",
+          queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.AtInstant(eraseUs)))
     val q = out.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.RetOutE], id: Long) =>
@@ -155,11 +156,13 @@ object StreamRetentionEraseVolBench {
         .add("user_id", org.apache.spark.sql.types.LongType)
         .add("req_us", org.apache.spark.sql.types.LongType))
       .option("maxFilesPerTrigger", 1).parquet(reqDir)
-    val cout = queries.StreamingOps.ctrlRetUnion(spark, cevents, crequests)
+    val cout = queries.StreamingOps.streamRows[queries.StreamingOps.CtrlEvent](cevents, Some(crequests),
+      queries.StreamingOps.EventView.Activity, watermark = false)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        queries.StreamingOps.retentionStepCtrl _)
+        queries.StreamingOps.RetentionHandler("q139",
+          queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.Control))
     val cq = cout.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", cChk)
       .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.RetOutE], id: Long) =>

@@ -39,10 +39,11 @@ object StreamRetentionVolBench {
     val out = events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-        queries.StreamingOps.retentionStep)
+        queries.StreamingOps.RetentionHandler("q128",
+          queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.Never))
     val q = out.writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", chk)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.RetOut], id: Long) =>
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[queries.StreamingOps.RetOutE], id: Long) =>
         println(f"SRVBATCH  batch=$id%2d emissions=${b.count()}%,d")
         b.toDF().write.mode("append").parquet(data); ()
       }
@@ -54,7 +55,7 @@ object StreamRetentionVolBench {
     val wallS = (System.nanoTime() - t1) / 1e9
 
     val raw = spark.read.schema(org.apache.spark.sql.Encoders
-      .product[queries.StreamingOps.RetOut].schema).parquet(data)
+      .product[queries.StreamingOps.RetOutE].schema).parquet(data)
     val emitted = raw.count()
     val e = Tables.load(spark, dir, "events")
     val userDays = e.select(col("user_id"), to_date(col("ts")).as("day"))

@@ -166,7 +166,8 @@ object StreamVolBench {
           .as[queries.StreamingOps.SessionEvent]
         val sessions = events.groupByKey(_.user_id)
           .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-            queries.StreamingOps.sessionize)
+            queries.StreamingOps.SessionHandler("q67",
+              queries.StreamingOps.Retire.Never, queries.StreamingOps.Erase.Never))
         val wall = sinkBatches(sessions, OutputMode.Update(), "append")
         val s = spark.read.parquet(s"$out/data")
           .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
