@@ -38,10 +38,13 @@ object Scratch {
     *
     * Deliberately OPT-IN per call site rather than session-wide: for
     * caches whose bytes are small but whose downstream work is
-    * CPU-dense (the minhash signature/verify family — q53/q64/q72),
-    * byte-based coalescing serializes real compute (measured: q53
-    * 1.9 → 4.4 s with the conf session-wide, the round-6 regression
-    * shape), so those keep the plain [[scoped]]/[[fenced]] forms.
+    * CPU-dense (q53's gram tables, q64/q72's pair stages), byte-based
+    * coalescing serializes real compute (measured: q53 1.9 → 4.4 s
+    * with the conf session-wide, the round-6 regression shape), so
+    * those keep the plain [[scoped]]/[[fenced]] forms. The shared
+    * minhash and simhash signature caches (`sigBanded`,
+    * `ngramMinhashPairs`, `simhash64Pairs`) do use this form: sized,
+    * q51/q73/q88/q94 ran 5× fewer tasks at flat-to-better walls.
     * The conf is captured at persist() time (CacheManager snapshots
     * the session config when the cache entry is created), so the
     * temporary set-and-restore binds only this relation. */

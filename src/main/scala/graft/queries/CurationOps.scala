@@ -96,7 +96,7 @@ object CurationOps {
     // materialization boundary that stops Catalyst's projection
     // collapse from inlining the split() into every interpreted
     // transform-lambda element access (O(tokens²) per doc — measured
-    // 925 s vs 51 s on the 2M-doc corpus). See the q51 sig note.
+    // 925 s vs 51 s on the 2M-doc corpus). See the Lsh.Word3 note.
     val base = graft.Scratch.scoped(t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)

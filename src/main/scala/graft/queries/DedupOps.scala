@@ -23,25 +23,33 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
+  import Lsh.{AllDocs, Keep, Tag, oCap, oClosure, oClusters, oCte, oJaccard,
+    oSelfJoin, oSym}
+
   private def toks(c: Column): Column = split(trim(c), " +")
 
-  /** Distinct word 3-gram shingle set over an ALREADY-SPLIT token
-    * array column. Callers must materialize the split in a separate
-    * projection first: `transform` lambdas are interpreted, so an
-    * inlined split() would re-evaluate once per element access. */
-  private def shingles3FromToks(tk: Column): Column =
-    array_distinct(transform(sequence(lit(1), size(tk) - 2),
-      i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
-        element_at(tk, i + 2))))
+  /** The documents matching `pred`, round-robin repartitioned for the
+    * signature build (a deterministic filter is pushed below the
+    * repartition, so its position does not change the plan). */
+  private def docs(s: org.apache.spark.sql.SparkSession, dir: String,
+      pred: Option[Column] = None): DataFrame = {
+    val d = t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
+    pred.fold(d)(d.where)
+  }
 
-  /** Distinct word 3-gram shingle set (same shingling as q34). */
-  private def shingles3(c: Column): Column = shingles3FromToks(toks(c))
+  /** The deterministic 10 % ingest batch (and its DuckDB text) that the
+    * gates, the index merges and the cluster merge split on. */
+  private[graft] def ingest(id: String): Column =
+    h60(concat(lit("ingest:"), col(id))) % 10 === 0
+  private def oIngest(id: String): String =
+    s"${oH60(s"'ingest:' || CAST($id AS VARCHAR)")} % 10 = 0"
 
-  private val oShingles3 =
-    """SELECT doc_id, list_distinct(list_transform(range(1, len(toks) - 1),
-      |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-      |  FROM (SELECT doc_id, string_split_regex(trim(text), ' +') AS toks FROM documents)
-      |  WHERE len(toks) >= 3""".stripMargin
+  /** The deterministic 10 % takedown batch (and the DuckDB text of the
+    * documents it leaves) that the removals share. */
+  private def removed(id: String): Column =
+    h60(concat(lit("remove:"), col(id))) % 10 === 0
+  private def oKept(id: String): String =
+    s"${oH60(s"'remove:' || CAST($id AS VARCHAR)")} % 10 <> 0"
 
   /** Exact dedupe: md5 fingerprint of alnum-normalized text, groupBy
     * fingerprint, keep min doc_id. Output is the per-source dedup
@@ -68,33 +76,15 @@ object DedupOps {
       FROM (SELECT source, md5(lower(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g'))) AS fp FROM documents)
       GROUP BY source ORDER BY source"""))
 
-  // MinHash parameters: 12 hash functions = 4 bands × 3 rows. With the
-  // verify threshold j ≥ 0.8 the LSH S-curve gives high recall at 4
-  // bands while keeping candidate volume tiny. Each shingle is md5'd
-  // ONCE; the 12 minhash functions are universal-hash permutations
-  // h_i = (a_i·h + b_i) mod P over that base hash, so the per-shingle
-  // cost is one digest + 12 integer mults — all inside codegen'd
-  // hash-aggregate, no interpreted higher-order functions.
-  private val NumHashes = 12
-  private val Bands = 4
-  private val RowsPerBand = 3
-  private val P = 2147483647L // 2^31 - 1 (prime); products stay < 2^62
-  private val AB: Seq[(Long, Long)] = (0 until NumHashes).map { i =>
-    ((2654435761L * (2 * i + 1)) % P, (40503L * (i + 7) * (i + 7) + 2654435769L * i) % P)
-  }
+  /** q51's signature, shared by the text near-dup family: word-3
+    * MinHash with 12 hash functions = 4 bands × 3 rows. With the verify
+    * threshold j ≥ 0.8 the LSH S-curve gives high recall at 4 bands
+    * while keeping candidate volume tiny. Each shingle is md5'd ONCE;
+    * the 12 minhash functions are universal-hash permutations over that
+    * base hash, so the per-shingle cost is one digest + 12 integer
+    * mults — all inside codegen'd hash-aggregate. */
+  private[graft] val Text = Lsh.MinHash(Lsh.Word3, bands = 4, rows = 3)
 
-  /** MinHash + LSH near-dup pairs, exact-Jaccard-verified.
-    *
-    * Plan: split tokens ONCE in their own projection (a higher-order
-    * `transform` lambda is interpreted, so any expression it references
-    * re-evaluates per element — an inlined split() turned the shingle
-    * build O(tokens²·len)); shingle strings explode through a generator
-    * and md5 in codegen; then ONE groupBy(doc) computes all 12 min()
-    * signatures AND the distinct-hash set for the verify step (single
-    * shuffle, map-side partial agg). Band keys stack from the signature
-    * row; the band self-join emits candidates; verify is exact Jaccard
-    * over the per-doc hash sets (collisions map both engines
-    * identically, so counts agree). */
   /** Shared MinHash signature + band-key stage: returns (sig, banded).
     * sig(doc_id, m0..m11, hs) is Scratch-scoped (compressed columnar
     * cache shared by its consumers, released by the harness after the
@@ -104,28 +94,8 @@ object DedupOps {
     * (doc, band). */
   private[graft] def sigBanded(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val tk = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .where(size(col("tk")) >= 3)
-    // Shingle hashes via the JIT n-gram h60 kernel (shingleH60Udf):
-    // bit-identical to h60(shingle) per position, oracle untouched —
-    // the interpreted transform-lambda + md5-per-shingle form was the
-    // dominant cost of this signature stage (same lesson as q77/q80).
-    val hashed = tk
-      .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.sized(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
-    val banded = sig.select(col("doc_id"), expr(
-      (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-    (sig, banded)
+    val sig = graft.Scratch.sized(Text.sigOf(docs(s, dir), sets = true))
+    (sig, Text.banded(sig))
   }
 
   /** round(|A∩B| / |A∪B|, 4) over two sorted duplicate-free hash-set
@@ -145,17 +115,12 @@ object DedupOps {
     * signature sets (collisions map both engines identically, so
     * counts agree with the oracle). */
   private[graft] def verifiedPairs(sig: DataFrame, cand: DataFrame): DataFrame =
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        jaccardSorted(col("hs_a"), col("hs_b")).as("jaccard"))
-      .where(col("jaccard") >= 0.8)
+    Lsh.Jaccard(0.8).pairs(sig, cand)
 
   /** MinHash-LSH verified near-dup pairs (doc_a, doc_b, jaccard) —
     * shared by q51 (pair listing) and q73 (cluster rollup).
     *
-    * ADAPTIVE verify-set strategy (round 9, promoting the ProfQ51
+    * ADAPTIVE verify-set strategy (round 9, promoting a profiled
     * finding): the one-pass plan builds the exact-verify hash set (hs)
     * for EVERY document inside the signature aggregation, but verify
     * only reads hs for documents that appear in candidate pairs — a
@@ -167,7 +132,7 @@ object DedupOps {
     *
     *   - sparse (count ≤ [[DeferredBroadcastIdCap]]): re-shingle just
     *     the candidate docs via a broadcast semi-join and verify
-    *     against that subset table — the deferred plan ProfQ51
+    *     against that subset table — the deferred plan the round-9 A/B
     *     measured 1.4× better cold even at 19% candidate density,
     *     and strictly better below ~1%.
     *   - dense (count above the cap): fall back to the one-pass verify
@@ -203,19 +168,13 @@ object DedupOps {
     * ASSUMPTION (r10 ADVICE): a directory's corpus is immutable for
     * the JVM's lifetime. Both plan branches compute the same result,
     * so a stale count after an in-process rewrite costs plan choice
-    * only, never correctness — but tools that regenerate a corpus
-    * in-process (bench ladders reusing a temp dir) should call
-    * [[clearDocCountMemo]] between generations. */
+    * only, never correctness. */
   private val docCountMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def documentsCount(s: org.apache.spark.sql.SparkSession, dir: String): Long =
     docCountMemo.computeIfAbsent(
       java.nio.file.Paths.get(dir).normalize.toString,
       d => java.lang.Long.valueOf(t(s, d, "documents").count())).longValue()
-
-  /** Drop all memoized corpus counts — for tools that rewrite a
-    * corpus directory within one JVM (see [[docCountMemo]]). */
-  private[graft] def clearDocCountMemo(): Unit = docCountMemo.clear()
 
   // Prepared-artifact handoff helpers (prepPut/prepTake) live in the
   // queries package object — shared by every standing-artifact query's
@@ -239,63 +198,27 @@ object DedupOps {
     * forces the deferred branch. */
   private[graft] def minhashPairsAdaptive(s: org.apache.spark.sql.SparkSession,
       dir: String, broadcastIdCap: Long): DataFrame = {
-    val tk = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .where(size(col("tk")) >= 3)
-    def hashed = tk
-      .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig0 = graft.Scratch.scoped(
-      hashed.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*))
-    val banded = sig0.select(col("doc_id"), expr(
-      (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-    val cand = graft.Scratch.scoped(banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct())
+    val tk = Lsh.Word3.units(docs(s, dir))
+    val sig0 = graft.Scratch.scoped(Text.sig(Text.hashed(tk), sets = false))
+    val cand = graft.Scratch.scoped(Lsh.selfJoin(Text.banded(sig0)))
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     // The probe: one count job, which also materializes the cand cache
     // that verify reuses below.
     val nCandDocs = candDocs.count()
-    val hsTab =
-      if (nCandDocs <= broadcastIdCap)
-        tk.join(broadcast(candDocs), "doc_id")
-          .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-          .select(col("doc_id"), (col("h0") % P).as("h"))
-          .groupBy(col("doc_id")).agg(sort_array(collect_set(col("h"))).as("hs"))
-      else
-        hashed.groupBy(col("doc_id"))
-          .agg(sort_array(collect_set(col("h"))).as("hs"))
-    verifiedPairs(hsTab, cand)
+    val hashes = Text.hashed(
+      if (nCandDocs <= broadcastIdCap) tk.join(broadcast(candDocs), "doc_id") else tk)
+    verifiedPairs(Text.sig(hashes, sets = true, mins = false), cand)
   }
 
-  /** The pre-round-9 one-pass plan (hs aggregated for every document
-    * alongside the signatures) — kept as the ProfQ51 A/B reference and
-    * the Q51AdaptiveSpec truth device. */
+  /** The one-pass plan (hs aggregated for every document alongside the
+    * signatures): the live q51/q73/q100/q117 plan for every corpus under
+    * [[DeferredMinDocs]] documents — every sf the oracle and the bench
+    * use — and the Q51AdaptiveSpec truth device for the deferred one. */
   private[graft] def minhashPairsOnePass(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val (sig, banded) = sigBanded(s, dir)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    verifiedPairs(sig, cand)
-  }
-
-  private val bucketPairsUdf = udf { (ids: Seq[Long]) =>
-    for { i <- ids.indices; j <- (i + 1) until ids.size } yield (ids(i), ids(j))
+    verifiedPairs(sig, Lsh.selfJoin(banded))
   }
 
 
@@ -317,61 +240,49 @@ object DedupOps {
   def minhashPairsCapped(s: org.apache.spark.sql.SparkSession, dir: String,
       cap: Int): DataFrame = {
     val (sig, banded) = sigBanded(s, dir)
-    val kept = banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("doc_id")).as("ids"))
-      .where(size(col("ids")) >= 2) // drops over-cap empties AND singletons
-    val cand = kept
-      .select(explode(bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"))
-      .distinct()
-    verifiedPairs(sig, cand)
+    verifiedPairs(sig, Lsh.cappedPairs(banded, cap))
   }
 
-  private def oMins: String = AB.zipWithIndex.map { case ((a, b), i) =>
-    s"min(($a * h + $b) % $P) AS m$i" }.mkString(",\n          ")
+  /** DuckDB twin of the text pair chain over `split`: signatures, bands,
+    * the optional bucket cap, band-join candidates, and the verified
+    * `pairs(doc_a, doc_b[, jaccard])` relation — shared by the q51, q73,
+    * q88, q100 and q117 oracles and the capped-takedown rebuild. */
+  private def oMinhashPairs(split: Lsh.Split, cap: Option[Int] = None,
+      withScore: Boolean = true): String =
+    (Seq(Text.oSig(split, sets = true)) ++ cap.map(oCap("kept", "doc_id", _)) ++ Seq(
+      oSelfJoin("cand", if (cap.isDefined) "kept" else "banded"),
+      oCte("pairs", oJaccard("cand", "doc_a", "doc_b", 0.8, withScore), materialized = true)))
+      .mkString("WITH ", ",\n      ", "")
 
-  private def oBandRows: String = (0 until Bands).map { bnd =>
-    val key = (0 until RowsPerBand).map(r => s"CAST(m${bnd * RowsPerBand + r} AS VARCHAR)")
-      .mkString(" || ',' || ")
-    s"SELECT doc_id, $bnd AS band, $key AS key FROM sig"
-  }.mkString("\n        UNION ALL ")
-
-  /** DuckDB CTE chain computing the same verified pair set, ending in a
-    * `pairs(doc_a, doc_b, jaccard)` relation — shared by the q51/q73
-    * oracles. */
-  private def oMinhashPairsCtes: String = {
-    val mins = oMins
-    val bandRows = oBandRows
-    s"""WITH sh AS ($oShingles3),
-      hashed AS (
-        SELECT doc_id, ${oH60("shingle")} % $P AS h
-        FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh)),
-      sig AS (
-        SELECT doc_id,
-          $mins,
-          list_sort(list(DISTINCT h)) AS hs
-        FROM hashed GROUP BY doc_id),
-      banded AS (
-        $bandRows),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-      pairs AS MATERIALIZED (
-        SELECT doc_a, doc_b, jaccard FROM (
-          SELECT doc_a, doc_b,
-            round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                  CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-          FROM cand JOIN sig sa ON cand.doc_a = sa.doc_id
-                    JOIN sig sb ON cand.doc_b = sb.doc_id)
-        WHERE jaccard >= 0.8)"""
+  /** The near-dup cluster rows of a component assignment (id, comp):
+    * canonical (min) id, size, and sorted members per component — with
+    * `incoming`, also how many members the ingest batch brought. */
+  private[graft] def clusterRows(comps: DataFrame, id: String = "canonical_id",
+      n: String = "n_docs", incoming: Boolean = false): DataFrame = {
+    val inc = if (incoming) Seq("n_incoming") else Nil
+    comps.groupBy(col("comp"))
+      .agg(min(col("id")).as(id), (count(lit(1)).as(n) +:
+        inc.map(_ => sum(ingest("id").cast("long")).as("n_incoming"))) :+
+        concat_ws(",", transform(sort_array(collect_list(col("id"))),
+          x => x.cast("string"))).as("members"): _*)
+      .select((Seq(id, n) ++ inc :+ "members").map(col): _*)
   }
+
+  /** [[clusterRows]] ordered by the canonical id: the cluster table. */
+  private[graft] def clusters(comps: DataFrame, id: String = "canonical_id",
+      n: String = "n_docs", incoming: Boolean = false): DataFrame =
+    clusterRows(comps, id, n, incoming).orderBy(col(id))
+
+  /** Components of a (src, dst) pair relation — the pairs plan-fenced
+    * first, so the CC's several actions each plan one RDD leaf. */
+  private def fencedComponents(pairs: DataFrame, a: String, b: String): DataFrame =
+    componentsOf(graft.Scratch.fenced(pairs.select(col(a).as("src"), col(b).as("dst"))))
 
   val q51 = Q(
     "q51_minhash_lsh",
     "MinHash(12)/LSH(4x3) candidate pairs verified at Jaccard >= 0.8",
     (s, dir) => minhashPairs(s, dir).orderBy(col("doc_a"), col("doc_b")),
-    Some(s"""$oMinhashPairsCtes
+    Some(s"""${oMinhashPairs(AllDocs)}
       SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b"""))
 
   /** Near-dup CLUSTERS: the canonical-selection step every dedupe
@@ -387,62 +298,19 @@ object DedupOps {
   val q73 = Q(
     "q73_neardup_clusters",
     "MinHash-LSH pairs -> connected components -> canonical doc per cluster",
-    (s, dir) => {
-      import s.implicits._
-      // Plan-fenced like q117's standing relations: the CC below
-      // issues several actions and each re-analyzed the minhash
-      // pipeline's plan. Deferred in r14 as window noise; the r15
-      // same-window A/B (ProfFence3: registered 2.97/2.10 s vs
-      // fenced 2.19/1.72 s at sf0.1, both iterations in favor)
-      // settled it as a real ~15-25 % win.
-      val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .as[graft.etl.Pipeline.Edge]
-      val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
-        .distinct().as[java.lang.Long]
-      val comps = graft.etl.Pipeline.connectedComponents(verts, pairs)
-      comps.groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("members"))
-        .orderBy(col("canonical_id"))
-    },
-    Some {
-      // Min-label closure over the pair graph, same chained
-      // MATERIALIZED-CTE device as the q64 oracle (DuckDB inlines
-      // plain CTEs — the chain would re-evaluate exponentially).
-      // Near-dup clusters are near-cliques, so 10 rounds is far past
-      // the worst-case diameter at oracle scale — and an 11th round
-      // ASSERTS convergence (l11 == l10 label-wise): a corpus whose
-      // pair graph had diameter > 10 makes the oracle error() loudly
-      // instead of silently producing wrong clusters that would then
-      // read as a spurious engine/oracle mismatch.
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""$oMinhashPairsCtes,
-      sym AS MATERIALIZED (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
-      l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-      $steps,
-      conv AS (
-        SELECT count(*) AS viol
-        FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
-      SELECT CASE WHEN (SELECT viol FROM conv) > 0
-               THEN error('q73 oracle: label propagation not converged in 10 rounds')
-               ELSE min(k) END AS canonical_id,
-        count(*) AS n_docs,
-        string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
-      FROM l11 GROUP BY lab ORDER BY canonical_id"""
-    })
+    // Plan-fenced like q117's standing relations: the CC issues
+    // several actions and each re-analyzed the minhash pipeline's
+    // plan. The r15 same-window A/B (registered 2.97/2.10 s vs fenced
+    // 2.19/1.72 s at sf0.1, both iterations in favor) settled it as a
+    // real ~15-25 % win.
+    (s, dir) => clusters(fencedComponents(minhashPairs(s, dir), "doc_a", "doc_b")),
+    // Min-label closure over the pair graph (Lsh.oClosure), asserting
+    // convergence: a corpus whose pair graph had diameter > 10 makes
+    // the oracle error() loudly instead of reading as a spurious
+    // engine/oracle mismatch.
+    Some(s"""${oMinhashPairs(AllDocs)},
+      ${oClosure(oSym("doc_a", "doc_b"))}
+      ${oClusters("q73")}"""))
 
   /** Default band-bucket cap for the REGISTERED q88 instance: chosen
     * so the drop path is actually exercised by the oracle-checked
@@ -452,46 +320,14 @@ object DedupOps {
     * THROUGHPUT tape-corpus run uses 64. */
   private val Q88Cap = 3
 
-  /** q88 oracle: q51's CTE chain with the band-bucket cap applied
-    * between banding and candidate generation — the same relation the
-    * Spark side computes via the bounded collector. */
-  private def oMinhashPairsCappedCtes(cap: Int): String = {
-    val mins = oMins
-    val bandRows = oBandRows
-    s"""WITH sh AS ($oShingles3),
-      hashed AS (
-        SELECT doc_id, ${oH60("shingle")} % $P AS h
-        FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh)),
-      sig AS (
-        SELECT doc_id,
-          $mins,
-          list_sort(list(DISTINCT h)) AS hs
-        FROM hashed GROUP BY doc_id),
-      banded AS (
-        $bandRows),
-      kept AS (
-        SELECT doc_id, band, key FROM banded
-        QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-      pairs AS MATERIALIZED (
-        SELECT doc_a, doc_b, jaccard FROM (
-          SELECT doc_a, doc_b,
-            round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                  CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-          FROM cand JOIN sig sa ON cand.doc_a = sa.doc_id
-                    JOIN sig sb ON cand.doc_b = sb.doc_id)
-        WHERE jaccard >= 0.8)"""
-  }
-
   val q88 = Q(
     "q88_minhash_lsh_capped",
     s"q51's LSH pairs with band buckets capped at $Q88Cap docs (skew guard)",
     (s, dir) => minhashPairsCapped(s, dir, Q88Cap)
       .orderBy(col("doc_a"), col("doc_b")),
-    Some(s"""${oMinhashPairsCappedCtes(Q88Cap)}
+    // q51's chain with the band-bucket cap applied between banding and
+    // candidate generation — the relation the bounded collector keeps.
+    Some(s"""${oMinhashPairs(AllDocs, Some(Q88Cap))}
       SELECT doc_a, doc_b, jaccard FROM pairs ORDER BY doc_a, doc_b"""))
 
   /** 32-bit SimHash near-dup pairs.
@@ -663,7 +499,7 @@ object DedupOps {
       .where(length(col("t")) >= 4)
       .select(col("doc_id"),
         array_distinct(transform(sequence(lit(1), length(col("t")) - 3),
-          i => col("t").substr(i, lit(4)))).as("grams"))) // see q51 sig note
+          i => col("t").substr(i, lit(4)))).as("grams"))) // see the Lsh.Word3 note
     val dict = docGrams.select(explode(col("grams")).as("tok")).distinct()
     // toIntExact: a maxVocab >= Int.MaxValue would wrap `.toInt + 1`
     // into a wrong/negative limit and silently break the probe (the
@@ -859,7 +695,7 @@ object DedupOps {
         array_sort(transform(col("gdf"), x => x("tok"))).as("g"),
         expr("slice(transform(gdf, x -> x.tok), 1, size(gdf) DIV 2 + 1)").as("pref"),
         size(col("gdf")).as("n"))
-    val grams = graft.Scratch.scoped(grams0) // see q51 sig note
+    val grams = graft.Scratch.scoped(grams0) // see the sigBanded note
     val pref = grams.select(col("doc_id"), col("n"), explode(col("pref")).as("tok"))
     val cand = pref.as("a").join(pref.as("b"),
         col("a.tok") === col("b.tok") &&
@@ -915,12 +751,15 @@ object DedupOps {
       .where(col("cosine") >= 0.35)
   }
 
+  /** DuckDB text of an embedding's norm (the sequential double fold). */
+  private val oNorm = """sqrt(list_aggregate(list_transform(range(1, len(embedding) + 1),
+            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), 'sum')) AS norm"""
+
   /** DuckDB CTE chain ending in `pairs(vec_a, vec_b, cosine)` —
     * shared by the q54/q90 oracles. */
-  private val oCosinePairsCtes = """WITH e AS (
+  private val oCosinePairsCtes = s"""WITH e AS (
         SELECT vec_id, embedding AS v,
-          sqrt(list_aggregate(list_transform(range(1, len(embedding) + 1),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), 'sum')) AS norm,
+          $oNorm,
           (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END ||
            CASE WHEN embedding[17] >= 0 THEN '1' ELSE '0' END ||
            CASE WHEN embedding[33] >= 0 THEN '1' ELSE '0' END ||
@@ -954,107 +793,19 @@ object DedupOps {
   val q90 = Q(
     "q90_embedding_neardup_clusters",
     "cosine pairs -> CC -> canonical vector per cluster (fixed-instance demo - production instance is q93)",
-    (s, dir) => {
-      import s.implicits._
-      val pairs = cosinePairs(s, dir)
-        .select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .as[graft.etl.Pipeline.Edge]
-      val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
-        .distinct().as[java.lang.Long]
-      val comps = graft.etl.Pipeline.connectedComponents(verts, pairs)
-      comps.groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_vec_id"),
-          count(lit(1)).as("n_vecs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_vec_id"), col("n_vecs"), col("members"))
-        .orderBy(col("canonical_vec_id"))
-    },
-    Some {
-      // Same chained-MATERIALIZED min-label closure device as the
-      // q73/q64 oracles, with the 11th step asserting convergence.
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""$oCosinePairsCtes,
-      sym AS MATERIALIZED (
-        SELECT vec_a AS a, vec_b AS b FROM pairs
-        UNION ALL SELECT vec_b AS a, vec_a AS b FROM pairs),
-      l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-      $steps,
-      conv AS (
-        SELECT count(*) AS viol
-        FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
-      SELECT CASE WHEN (SELECT viol FROM conv) > 0
-               THEN error('q90 oracle: label propagation not converged in 10 rounds')
-               ELSE min(k) END AS canonical_vec_id,
-        count(*) AS n_vecs,
-        string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
-      FROM l11 GROUP BY lab ORDER BY canonical_vec_id"""
-    })
+    (s, dir) => clusters(componentsOf(cosinePairs(s, dir)
+      .select(col("vec_a").as("src"), col("vec_b").as("dst"))), "canonical_vec_id", "n_vecs"),
+    Some(s"""$oCosinePairsCtes,
+      ${oClosure(oSym("vec_a", "vec_b"))}
+      ${oClusters("q90", "canonical_vec_id", "n_vecs")}"""))
 
 
   // ---- scale-parameterized embedding sign-LSH (q91/q93) -------------
 
-  /** Deterministic Rademacher (±1) hyperplane matrix shared by the
-    * Spark kernel and the generated oracle SQL: signs(j)(i) is the
-    * sign of dim i in hyperplane j, a splitmix64 bit-mix of the flat
-    * index — no RNG state, both engines see the same literals (the
-    * SQL text is generated from this very array). Random ±1 entries
-    * are a standard sign-LSH instantiation (Charikar STOC'02 uses
-    * Gaussian hyperplanes; Rademacher entries give the same
-    * angle-concentration behavior and stay exactly representable). */
-  private[graft] def rademacherSigns(planes: Int, dim: Int): Array[Array[Int]] =
-    Array.tabulate(planes, dim) { (j, i) =>
-      var z = j.toLong * dim + i + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^= z >>> 31
-      if ((z & 1L) == 0L) 1 else -1
-    }
-
-  private val EmbDim = 64
-
-  /** JIT kernel: all `bands` keys for one vector in one pass. Each key
-    * bit r is sign(Σᵢ s·vᵢ) for hyperplane b·bits+r, accumulated in
-    * doubles in index order — the same sequential fold the generated
-    * oracle expression performs, so the signs agree bit-for-bit. */
-  private def bandKeysUdf(bands: Int, bits: Int) = {
-    val signs = rademacherSigns(bands * bits, EmbDim)
-    udf { (v: Seq[Float]) =>
-      val a = v.toArray // LinearSeq guard: indexed access below
-      // Dimension contract: the hyperplanes are drawn for exactly
-      // EmbDim components and the generated oracle SQL always sums
-      // exactly EmbDim CAST(v[i]) terms (DuckDB yields NULL -> sign
-      // bit 0 past the end of a short vector). A truncated projection
-      // here would therefore DIVERGE silently between engines on a
-      // non-64-dim corpus — fail loudly instead (r9 ADVICE).
-      require(a.length == EmbDim,
-        s"sign-LSH expects $EmbDim-dim embeddings, got ${a.length}")
-      val keys = new Array[Int](bands)
-      var b = 0
-      while (b < bands) {
-        var key = 0
-        var r = 0
-        while (r < bits) {
-          val s = signs(b * bits + r)
-          var acc = 0.0
-          var i = 0
-          while (i < EmbDim) { acc += s(i) * a(i).toDouble; i += 1 }
-          if (acc >= 0) key |= 1 << r
-          r += 1
-        }
-        keys(b) = key
-        b += 1
-      }
-      keys
-    }
-  }
+  /** `e` with each vector's norm: the native sequential-fold dot product
+    * (plans.VecDotProduct), whose doubles equal the oracle's fold. */
+  private def withNorm(e: DataFrame): DataFrame =
+    e.withColumn("norm", sqrt(graft.plans.VecDotProduct(col("v"), col("v"))))
 
   /** Scale-parameterized embedding near-dup pairs: `bands` sign-LSH
     * tables of `bits` Rademacher hyperplanes each, band buckets capped
@@ -1085,26 +836,11 @@ object DedupOps {
   private[graft] def embeddingPairsScaled(s: org.apache.spark.sql.SparkSession,
       dir: String, bands: Int, bits: Int, cap: Int,
       threshold: Double): DataFrame = {
-    val dot = (x: Column, y: Column) => graft.plans.VecDotProduct(x, y)
-    val e = graft.Scratch.scoped(t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v")))))
-    val banded = e.select(col("vec_id"),
-        posexplode(bandKeysUdf(bands, bits)(col("v"))))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("key"))
-    val kept = banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("vec_id")).as("ids"))
-      .where(size(col("ids")) >= 2) // drops over-cap empties AND singletons
-    val cand = kept
-      .select(explode(bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("vec_a"), col("p._2").as("vec_b"))
-      .distinct()
-    cand
-      .join(e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na")), "vec_a")
-      .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cosine"))
-      .where(col("cosine") >= threshold)
+    val e = graft.Scratch.scoped(withNorm(t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").as("v"))))
+    val cand = Lsh.cappedPairs(Lsh.SignLsh(bands, bits).banded(e, col("v")), cap,
+      "vec_id", "vec_a", "vec_b")
+    Lsh.Cosine(threshold).pairs(e, cand, "vec_id", "vec_a", "vec_b")
   }
 
   // Registered q91/q93 instance parameters (see embeddingPairsScaled
@@ -1113,51 +849,17 @@ object DedupOps {
   private val Q91Bits = 6
   private[graft] val Q91Cap = 56
   private val Q91Threshold = 0.35
+  private val Q91Lsh = Lsh.SignLsh(Q91Bands, Q91Bits)
 
-  /** Oracle text of the hyperplane-j projection: the same sequential
-    * signed sum of CAST(v[i] AS DOUBLE) terms the kernel folds. */
-  private def oProj(signs: Array[Int]): String =
-    signs.zipWithIndex.map { case (sg, i) =>
-      val term = s"CAST(v[${i + 1}] AS DOUBLE)"
-      if (i == 0) { if (sg > 0) term else s"-$term" }
-      else if (sg > 0) s" + $term" else s" - $term"
-    }.mkString
-
-  /** DuckDB CTE chain for [[embeddingPairsScaled]] ending in
-    * `pairs(vec_a, vec_b, cosine)` — shared by the q91/q93 oracles. */
-  private def oEmbPairsScaledCtes(bands: Int, bits: Int, cap: Int,
-      threshold: Double): String = {
-    val signs = rademacherSigns(bands * bits, EmbDim)
-    val bandRows = (0 until bands).map { b =>
-      val key = (0 until bits).map { r =>
-        s"CASE WHEN (${oProj(signs(b * bits + r))}) >= 0 THEN ${1 << r} ELSE 0 END"
-      }.mkString(" + ")
-      s"SELECT vec_id, $b AS band, $key AS key FROM e"
-    }.mkString("\n        UNION ALL ")
-    s"""WITH e AS (
-        SELECT vec_id, embedding AS v,
-          sqrt(list_aggregate(list_transform(range(1, len(embedding) + 1),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), 'sum')) AS norm
-        FROM embeddings),
-      banded AS (
-        $bandRows),
-      kept AS (
-        SELECT vec_id, band, key FROM banded
-        QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap),
-      cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM kept a JOIN kept b
-          ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id),
-      pairs AS MATERIALIZED (
-        SELECT vec_a, vec_b, cosine FROM (
-          SELECT cand.vec_a, cand.vec_b,
-            round(list_aggregate(list_transform(range(1, len(a.v) + 1),
-              i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), 'sum') /
-              (a.norm * b.norm), 4) AS cosine
-          FROM cand JOIN e a ON cand.vec_a = a.vec_id
-                    JOIN e b ON cand.vec_b = b.vec_id)
-        WHERE cosine >= $threshold)"""
-  }
+  /** DuckDB CTE chain for the registered [[embeddingPairsScaled]]
+    * instance ending in `pairs(vec_a, vec_b, cosine)` — shared by the
+    * q91/q93 oracles. */
+  private def oEmbPairsScaled: String =
+    Seq(oCte("e", s"SELECT vec_id, embedding AS v,\n          $oNorm\n        FROM embeddings"),
+      Q91Lsh.oBanded(), oCap("kept", "vec_id", Q91Cap),
+      oSelfJoin("cand", "kept", "vec_id", "vec_a", "vec_b"),
+      oCte("pairs", Lsh.oCosine("vec_a", "vec_b", Q91Threshold), materialized = true))
+      .mkString("WITH ", ",\n      ", "")
 
   /** Embedding INGEST GATE — q96's incremental shape on the vector
     * side: a deterministic 10 % incoming batch of embeddings is
@@ -1168,101 +870,42 @@ object DedupOps {
     * production semantics: a standing vector index stores its band
     * keys bucketed on (band, key); each incoming batch computes only
     * its own signatures and probes co-located buckets — the index is
-    * never self-joined and never reshuffled. */
-  /** Parameterized body of [[q97]] — EmbedDedupBench runs it at the
+    * never self-joined and never reshuffled.
+    *
+    * Parameterized body of [[q97]] — EmbedDedupBench runs it at the
     * production 6x20/cap-64 point (the q91 volume parameters). */
   private[graft] def embeddingIngestGate(s: org.apache.spark.sql.SparkSession,
       dir: String, bands: Int, bits: Int, cap: Int,
       threshold: Double): DataFrame = {
-      val dot = (x: Column, y: Column) => graft.plans.VecDotProduct(x, y)
-      val e = graft.Scratch.scoped(t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          (h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0).as("incoming"),
-          col("embedding").as("v"))
-        .withColumn("norm", sqrt(dot(col("v"), col("v")))))
-      val banded = e.select(col("vec_id"), col("incoming"),
-          posexplode(bandKeysUdf(bands, bits)(col("v"))))
-        .select(col("vec_id"), col("incoming"), col("pos").as("band"), col("col").as("key"))
-      val keptIdx = banded.where(!col("incoming"))
-        .groupBy(col("band"), col("key"))
-        .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("vec_id")).as("ids"))
-        .where(size(col("ids")) >= 1) // over-cap buckets emit empty
-        .select(col("band"), col("key"), explode(col("ids")).as("idx_vec"))
-      val cand = banded.where(col("incoming"))
-        .select(col("vec_id").as("inc_vec"), col("band"), col("key"))
-        .join(keptIdx, Seq("band", "key"))
-        .select(col("inc_vec"), col("idx_vec")).distinct()
-      val verified = cand
-        .join(e.select(col("vec_id").as("inc_vec"), col("v").as("va"), col("norm").as("na")), "inc_vec")
-        .join(e.select(col("vec_id").as("idx_vec"), col("v").as("vb"), col("norm").as("nb")), "idx_vec")
-        .select(col("inc_vec"), col("idx_vec"),
-          round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cosine"))
-        .where(col("cosine") >= threshold)
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("inc_vec"))
-      val wBest = wAll.orderBy(col("cosine").desc, col("idx_vec"))
-      verified
-        .select(col("inc_vec"), col("idx_vec"), col("cosine"),
-          count(lit(1)).over(wAll).as("n_matches"),
-          row_number().over(wBest).as("rn"))
-        .where(col("rn") === 1)
-        .select(col("inc_vec").as("vec_id"), col("n_matches"),
-          col("idx_vec").as("best_match"), col("cosine").as("best_cosine"))
-        .orderBy(col("vec_id"))
+    val e = graft.Scratch.scoped(withNorm(t(s, dir, "embeddings")
+      .select(col("vec_id"), ingest("vec_id").as("incoming"), col("embedding").as("v"))))
+    val banded = Lsh.SignLsh(bands, bits).banded(e, col("v"), inc = true)
+    val index = Lsh.indexSide(banded.where(!col("incoming")), cap, "vec_id", "idx_vec")
+    val cand = Lsh.probe(banded.where(col("incoming")), index, "vec_id", "inc_vec", "idx_vec")
+    Lsh.bestMatch(Lsh.Cosine(threshold).pairs(e, cand, "vec_id", "inc_vec", "idx_vec"),
+      "inc_vec", "idx_vec", "cosine", "vec_id")
   }
 
   val q97 = Q(
     "q97_embedding_ingest_gate",
     s"embedding ingest gate: 10% incoming vs 90% index via $Q91Bands x $Q91Bits-bit sign-LSH, index cap $Q91Cap, cosine >= $Q91Threshold",
     (s, dir) => embeddingIngestGate(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold),
-    Some {
-      val signs = rademacherSigns(Q91Bands * Q91Bits, EmbDim)
-      val bandRows = (0 until Q91Bands).map { b =>
-        val key = (0 until Q91Bits).map { r =>
-          s"CASE WHEN (${oProj(signs(b * Q91Bits + r))}) >= 0 THEN ${1 << r} ELSE 0 END"
-        }.mkString(" + ")
-        s"SELECT vec_id, incoming, $b AS band, $key AS key FROM e"
-      }.mkString("\n        UNION ALL ")
-      s"""WITH e AS (
-        SELECT vec_id, ${oH60("'ingest:' || CAST(vec_id AS VARCHAR)")} % 10 = 0 AS incoming,
+    Some(s"""WITH ${oCte("e", s"""SELECT vec_id, ${oIngest("vec_id")} AS incoming,
           embedding AS v,
-          sqrt(list_aggregate(list_transform(range(1, len(embedding) + 1),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), 'sum')) AS norm
-        FROM embeddings),
-      banded AS (
-        $bandRows),
-      keptidx AS (
-        SELECT vec_id, band, key FROM banded WHERE NOT incoming
-        QUALIFY count(*) OVER (PARTITION BY band, key) <= $Q91Cap),
-      cand AS (
-        SELECT DISTINCT i.vec_id AS inc_vec, x.vec_id AS idx_vec
-        FROM banded i JOIN keptidx x ON i.band = x.band AND i.key = x.key
-        WHERE i.incoming),
-      ver AS (
-        SELECT inc_vec, idx_vec, cosine FROM (
-          SELECT cand.inc_vec, cand.idx_vec,
-            round(list_aggregate(list_transform(range(1, len(a.v) + 1),
-              i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), 'sum') /
-              (a.norm * b.norm), 4) AS cosine
-          FROM cand JOIN e a ON cand.inc_vec = a.vec_id
-                    JOIN e b ON cand.idx_vec = b.vec_id)
-        WHERE cosine >= $Q91Threshold)
-      SELECT inc_vec AS vec_id, n_matches, idx_vec AS best_match,
-        cosine AS best_cosine
-      FROM (
-        SELECT inc_vec, idx_vec, cosine,
-          count(*) OVER (PARTITION BY inc_vec) AS n_matches,
-          row_number() OVER (PARTITION BY inc_vec
-            ORDER BY cosine DESC, idx_vec) AS rn
-        FROM ver)
-      WHERE rn = 1 ORDER BY vec_id"""
-    })
+          $oNorm
+        FROM embeddings""")},
+      ${Q91Lsh.oBanded(inc = true)},
+      ${oCap("keptidx", "vec_id", Q91Cap, " WHERE NOT incoming")},
+      ${Lsh.oProbe("vec_id", "inc_vec", "idx_vec")},
+      ${oCte("ver", Lsh.oCosine("inc_vec", "idx_vec", Q91Threshold))}
+      ${Lsh.oBestMatch("inc_vec", "idx_vec", "cosine", "vec_id")}"""))
 
   val q91 = Q(
     "q91_embedding_lsh_scaled",
     s"embedding near-dup pairs via $Q91Bands x $Q91Bits-bit Rademacher sign-LSH bands, bucket cap $Q91Cap, cosine >= $Q91Threshold",
     (s, dir) => embeddingPairsScaled(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold)
       .orderBy(col("vec_a"), col("vec_b")),
-    Some(s"""${oEmbPairsScaledCtes(Q91Bands, Q91Bits, Q91Cap, Q91Threshold)}
+    Some(s"""$oEmbPairsScaled
       SELECT vec_a, vec_b, cosine FROM pairs ORDER BY vec_a, vec_b"""))
 
   /** Embedding near-dup CLUSTERS over the scale-parameterized pair
@@ -1273,52 +916,14 @@ object DedupOps {
   val q93 = Q(
     "q93_embedding_scaled_clusters",
     "scaled sign-LSH cosine pairs -> connected components -> canonical vector",
-    (s, dir) => {
-      import s.implicits._
-      // Plan-fenced: identical pairs->CC shape to q73, whose r15
-      // same-window A/B (ProfFence3) settled the fence as a real win.
-      val pairs = graft.Scratch.fenced(
-        embeddingPairsScaled(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold)
-          .select(col("vec_a").as("src"), col("vec_b").as("dst")))
-        .as[graft.etl.Pipeline.Edge]
-      val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
-        .distinct().as[java.lang.Long]
-      val comps = graft.etl.Pipeline.connectedComponents(verts, pairs)
-      comps.groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_vec_id"),
-          count(lit(1)).as("n_vecs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_vec_id"), col("n_vecs"), col("members"))
-        .orderBy(col("canonical_vec_id"))
-    },
-    Some {
-      // Same chained-MATERIALIZED min-label closure as the q90 oracle,
-      // with the 11th step asserting convergence.
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""${oEmbPairsScaledCtes(Q91Bands, Q91Bits, Q91Cap, Q91Threshold)},
-      sym AS MATERIALIZED (
-        SELECT vec_a AS a, vec_b AS b FROM pairs
-        UNION ALL SELECT vec_b AS a, vec_a AS b FROM pairs),
-      l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-      $steps,
-      conv AS (
-        SELECT count(*) AS viol
-        FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
-      SELECT CASE WHEN (SELECT viol FROM conv) > 0
-               THEN error('q93 oracle: label propagation not converged in 10 rounds')
-               ELSE min(k) END AS canonical_vec_id,
-        count(*) AS n_vecs,
-        string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
-      FROM l11 GROUP BY lab ORDER BY canonical_vec_id"""
-    })
+    // Plan-fenced: identical pairs->CC shape to q73, whose r15
+    // same-window A/B settled the fence as a real win.
+    (s, dir) => clusters(fencedComponents(
+      embeddingPairsScaled(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold), "vec_a", "vec_b"),
+      "canonical_vec_id", "n_vecs"),
+    Some(s"""$oEmbPairsScaled,
+      ${oClosure(oSym("vec_a", "vec_b"))}
+      ${oClusters("q93", "canonical_vec_id", "n_vecs")}"""))
 
   // ---- 64-bit SimHash (q92) -----------------------------------------
 
@@ -1344,50 +949,9 @@ object DedupOps {
     * 64/bandBits bands set the hamming-recall S-curve. */
   private[graft] def simhash64Pairs(s: org.apache.spark.sql.SparkSession,
       dir: String, bandBits: Int, maxHamming: Int, cap: Int): DataFrame = {
-    require(bandBits > 0 && 32 % bandBits == 0, s"bandBits must divide 32, got $bandBits")
-    val bandsPerHalf = 32 / bandBits
-    val nBands = 2 * bandsPerHalf
-    val mask = (1L << bandBits) - 1
-    val hashed = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        explode(array_distinct(toks(col("text")))).as("tk"))
-      .select(col("doc_id"), md5(col("tk")).as("m"))
-      .select(col("doc_id"),
-        conv(substring(col("m"), 1, 8), 16, 10).cast("long").as("hhi"),
-        conv(substring(col("m"), 9, 8), 16, 10).cast("long").as("hlo"))
-    val bitSums =
-      (0 until 32).map(b =>
-        sum((shiftright(col("hhi"), b) % 2).cast("long")).as(s"hi$b")) ++
-      (0 until 32).map(b =>
-        sum((shiftright(col("hlo"), b) % 2).cast("long")).as(s"lo$b"))
-    val counted = hashed.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n"), bitSums: _*)
-    def vote(pfx: String) = (0 until 32).map(b =>
-      when(col(s"$pfx$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val base = graft.Scratch.sized(counted.select(col("doc_id"),
-      vote("hi").as("shi"), vote("lo").as("slo")))
-    val bandExprs = (0 until nBands).map { j =>
-      val src = if (j < bandsPerHalf) "shi" else "slo"
-      val sh = (j % bandsPerHalf) * bandBits
-      s"$j, shiftright($src, $sh) & $mask"
-    }
-    val banded = base.select(col("doc_id"),
-      expr(bandExprs.mkString(s"stack($nBands, ", ", ", ") as (band, key)")))
-    val kept = banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("doc_id")).as("ids"))
-      .where(size(col("ids")) >= 2)
-    val cand = kept
-      .select(explode(bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"))
-      .distinct()
-    cand
-      .join(base.select(col("doc_id").as("doc_a"), col("shi").as("ha"), col("slo").as("la")), "doc_a")
-      .join(base.select(col("doc_id").as("doc_b"), col("shi").as("hb"), col("slo").as("lb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(bit_count(ha ^ hb) + bit_count(la ^ lb) AS INT)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+    val sh = Lsh.SimHash64(bandBits)
+    val base = graft.Scratch.sized(sh.sketch(docs(s, dir)))
+    Lsh.Hamming(maxHamming).pairs(base, Lsh.cappedPairs(sh.banded(base), cap))
   }
 
   // Registered q92 instance: production band width (16 bits -> 4
@@ -1399,44 +963,10 @@ object DedupOps {
   private val Q92MaxHamming = 6
   private val Q92Cap = 256
 
-  private def oSimhash64Ctes(bandBits: Int, maxHamming: Int, cap: Int): String = {
-    val bandsPerHalf = 32 / bandBits
-    val nBands = 2 * bandsPerHalf
-    val mask = (1L << bandBits) - 1
-    val bitSums =
-      ((0 until 32).map(b => s"sum((hhi >> $b) & 1) AS hi$b") ++
-       (0 until 32).map(b => s"sum((hlo >> $b) & 1) AS lo$b"))
-        .mkString(",\n          ")
-    def vote(pfx: String) = (0 until 32).map(b =>
-      s"CASE WHEN $pfx$b * 2 > n THEN (CAST(1 AS BIGINT) << $b) ELSE 0 END")
-      .mkString(" + ")
-    val bandRows = (0 until nBands).map { j =>
-      val src = if (j < bandsPerHalf) "shi" else "slo"
-      val sh = (j % bandsPerHalf) * bandBits
-      s"SELECT doc_id, $j AS band, ($src >> $sh) & $mask AS key FROM base"
-    }.mkString("\n        UNION ALL ")
-    s"""WITH hashed AS (
-        SELECT doc_id,
-          CAST(('0x' || substring(m, 1, 8)) AS BIGINT) AS hhi,
-          CAST(('0x' || substring(m, 9, 8)) AS BIGINT) AS hlo
-        FROM (SELECT doc_id, md5(tk) AS m
-              FROM (SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), ' +'))) AS tk
-                    FROM documents))),
-      counted AS (
-        SELECT doc_id, count(*) AS n,
-          $bitSums
-        FROM hashed GROUP BY doc_id),
-      base AS (
-        SELECT doc_id, ${vote("hi")} AS shi, ${vote("lo")} AS slo FROM counted),
-      banded AS (
-        $bandRows),
-      kept AS (
-        SELECT doc_id, band, key FROM banded
-        QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
+  private def oSimhash64Ctes(bandBits: Int, maxHamming: Int, cap: Int): String =
+    s"""WITH ${Lsh.SimHash64(bandBits).oSig},
+      ${oCap("kept", "doc_id", cap)},
+      ${oSelfJoin("cand", "kept")}
       SELECT doc_a, doc_b, hamming FROM (
         SELECT doc_a, doc_b,
           CAST(bit_count(xor(sa.shi, sb.shi)) + bit_count(xor(sa.slo, sb.slo)) AS INTEGER) AS hamming
@@ -1444,7 +974,6 @@ object DedupOps {
                   JOIN base sb ON cand.doc_b = sb.doc_id)
       WHERE hamming <= $maxHamming
       ORDER BY doc_a, doc_b"""
-  }
 
   val q92 = Q(
     "q92_simhash64",
@@ -1473,12 +1002,7 @@ object DedupOps {
   // bands widen the per-pair band lottery past the hot buckets; a
   // bigger cap multiplies every hot bucket's pair count. That
   // asymmetry is the banded-LSH design argument, measured.
-  private[graft] val NumHashes94 = 32
-  private[graft] val Bands94 = 16
-  private[graft] val RowsPerBand94 = 2
-  private val AB94: Seq[(Long, Long)] = (0 until NumHashes94).map { i =>
-    ((2654435761L * (2 * i + 1)) % P, (40503L * (i + 7) * (i + 7) + 2654435769L * i) % P)
-  }
+  private[graft] val Grams94 = Lsh.MinHash(Lsh.Char4, bands = 16, rows = 2)
 
   /** Char-4-gram MinHash-LSH near-dup pairs at J ≥ 0.5 — the
     * REGISTERED at-scale relaxation of q53's exact join: where exact
@@ -1506,73 +1030,8 @@ object DedupOps {
     * training set; a latency-bound deployment re-registers 8×2. */
   private[graft] def ngramMinhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String, cap: Int): DataFrame = {
-    val hashed = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), alnumSpaceLowerUdf(col("text")).as("t"))
-      .where(length(col("t")) >= 4)
-      .select(col("doc_id"), explode(gram4H60Udf(col("t"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB94.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.sized(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
-    val banded = sig.select(col("doc_id"), expr(
-      (0 until Bands94).map { bnd =>
-        val key = (0 until RowsPerBand94).map(r => s"m${bnd * RowsPerBand94 + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands94, ", ", ", ") as (band, key)")))
-    val kept = banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("doc_id")).as("ids"))
-      .where(size(col("ids")) >= 2)
-    val cand = kept
-      .select(explode(bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"))
-      .distinct()
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        jaccardSorted(col("hs_a"), col("hs_b"))
-          .as("jaccard"))
-      .where(col("jaccard") >= 0.5)
-  }
-
-  /** q94's banding front-end WITHOUT the verify hash sets, for the
-    * Q53Bench recall attribution (classify each ground-truth pair as
-    * band-S-curve miss vs cap miss): banded(doc_id, band, key), one
-    * row per (doc, band). Duplicates the signature construction of
-    * [[ngramMinhashPairs]] minus the collect_set — the hs aggregation
-    * is the expensive half and attribution never reads it.
-    *
-    * `bands`/`rowsPerBand` default to the registered 16×2 layout;
-    * other values SIMULATE a re-parameterized sketch (the hash
-    * functions extend the same universal-hash family AB94 draws
-    * from), which is how the bands-vs-cap what-if in THROUGHPUT.md
-    * was measured before round 10 re-registered the winner. */
-  private[graft] def q94Banded(s: org.apache.spark.sql.SparkSession,
-      dir: String, bands: Int = Bands94,
-      rowsPerBand: Int = RowsPerBand94): DataFrame = {
-    val nHashes = bands * rowsPerBand
-    val ab = (0 until nHashes).map { i =>
-      ((2654435761L * (2 * i + 1)) % P,
-        (40503L * (i + 7) * (i + 7) + 2654435769L * i) % P)
-    }
-    val hashed = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), alnumSpaceLowerUdf(col("text")).as("t"))
-      .where(length(col("t")) >= 4)
-      .select(col("doc_id"), explode(gram4H60Udf(col("t"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = ab.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = hashed.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
-    sig.select(col("doc_id"), expr(
-      (0 until bands).map { bnd =>
-        val key = (0 until rowsPerBand).map(r => s"m${bnd * rowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($bands, ", ", ", ") as (band, key)")))
+    val sig = graft.Scratch.sized(Grams94.sigOf(docs(s, dir), sets = true))
+    Lsh.Jaccard(0.5).pairs(sig, Lsh.cappedPairs(Grams94.banded(sig), cap))
   }
 
   // Registered q94 cap: sized so the sf corpora exercise the drop
@@ -1583,48 +1042,16 @@ object DedupOps {
   // not just a skew nicety.)
   private[graft] val Q94Cap = 8
 
-  private def oNgramMinhashSql(cap: Int): String = {
-    val mins = AB94.zipWithIndex.map { case ((a, b), i) =>
-      s"min(($a * h + $b) % $P) AS m$i" }.mkString(",\n          ")
-    val bandRows = (0 until Bands94).map { bnd =>
-      val key = (0 until RowsPerBand94).map(r => s"CAST(m${bnd * RowsPerBand94 + r} AS VARCHAR)")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, $bnd AS band, $key AS key FROM sig"
-    }.mkString("\n        UNION ALL ")
-    s"""WITH norm AS (
-        SELECT doc_id, lower(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS t
-        FROM documents),
-      hashed AS (
-        SELECT doc_id, ${oH60("substring(t, i, 4)")} % $P AS h
-        FROM (SELECT doc_id, t, unnest(range(1, length(t) - 2)) AS i
-              FROM norm WHERE length(t) >= 4)),
-      sig AS (
-        SELECT doc_id,
-          $mins,
-          list_sort(list(DISTINCT h)) AS hs
-        FROM hashed GROUP BY doc_id),
-      banded AS (
-        $bandRows),
-      kept AS (
-        SELECT doc_id, band, key FROM banded
-        QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
-      SELECT doc_a, doc_b, jaccard FROM (
-        SELECT doc_a, doc_b,
-          round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-        FROM cand JOIN sig sa ON cand.doc_a = sa.doc_id
-                  JOIN sig sb ON cand.doc_b = sb.doc_id)
-      WHERE jaccard >= 0.5
+  private def oNgramMinhashSql(cap: Int): String =
+    s"""WITH ${Grams94.oSig(AllDocs, sets = true)},
+      ${oCap("kept", "doc_id", cap)},
+      ${oSelfJoin("cand", "kept")}
+      ${oJaccard("cand", "doc_a", "doc_b", 0.5)}
       ORDER BY doc_a, doc_b"""
-  }
 
   val q94 = Q(
     "q94_ngram_minhash",
-    s"char-4-gram MinHash($NumHashes94)/LSH(${Bands94}x$RowsPerBand94) pairs at J >= 0.5, band buckets capped at $Q94Cap",
+    s"char-4-gram MinHash(${Grams94.ab.size})/LSH(${Grams94.bands}x${Grams94.rows}) pairs at J >= 0.5, band buckets capped at $Q94Cap",
     (s, dir) => ngramMinhashPairs(s, dir, Q94Cap)
       .orderBy(col("doc_a"), col("doc_b")),
     Some(oNgramMinhashSql(Q94Cap)))
@@ -1637,12 +1064,6 @@ object DedupOps {
     * declare-vs-fire split q91/q92 document. */
   private[graft] val Q96Cap = 3
 
-  /** MinHash parameters shared with the STREAMING ingest gate (q98,
-    * StreamingOps), whose per-row signature build must be
-    * hash-identical to the batch aggregation here. */
-  private[graft] def minhashParams: (Seq[(Long, Long)], Long, Int, Int) =
-    (AB, P, Bands, RowsPerBand)
-
   /** q96's STATIC index side, standalone for the streaming gate
     * (q98): capped band buckets (band, key, idx_doc) + the exact-
     * verify hash sets (idx_doc, hs_b) for the 90 % index split. This
@@ -1651,29 +1072,10 @@ object DedupOps {
     * writes both tables bucketed by their join keys. */
   private[graft] def q96IndexSide(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val base = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .where(h60(concat(lit("ingest:"), col("doc_id"))) % 10 =!= 0)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .where(size(col("tk")) >= 3)
-    val hashed = base
-      .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
-    val banded = sig.select(col("doc_id"), expr(
-      (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-    val keptIdx = banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(Q96Cap)(col("doc_id")).as("ids"))
-      .where(size(col("ids")) >= 1)
-      .select(col("band"), col("key"), explode(col("ids")).as("idx_doc"))
-    (keptIdx, sig.select(col("doc_id").as("idx_doc"), col("hs").as("hs_b")))
+    val sig = graft.Scratch.scoped(
+      Text.sigOf(docs(s, dir, Some(!ingest("doc_id"))), sets = true))
+    (Lsh.indexSide(Text.banded(sig), Q96Cap, "doc_id", "idx_doc"),
+      Lsh.Jaccard(0.8).side(sig, "doc_id", "idx_doc", "b"))
   }
 
   /** q96's oracle SQL, exposed because the STREAMING gate (q98)
@@ -1705,25 +1107,9 @@ object DedupOps {
     * per doc), restricted to the incoming predicate. */
   private[graft] def incomingSigBanded(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val base = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .where(h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .where(size(col("tk")) >= 3)
-    val hashed = base
-      .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
-    val banded = sig.select(col("doc_id"), expr(
-      (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-    (sig, banded)
+    val sig = graft.Scratch.scoped(
+      Text.sigOf(docs(s, dir, Some(ingest("doc_id"))), sets = true))
+    (sig, Text.banded(sig))
   }
 
   /** INCREMENTAL (cross-corpus) dedup — the continuous-ingest gate: a
@@ -1748,80 +1134,20 @@ object DedupOps {
       // prepare device — a deployment reads the stored index between
       // batches; the timed body is the recurring gate: the incoming
       // batch's signatures + the co-located probe + verify). Built
-      // inline when unprepared; relations identical either way
-      // (q96IndexSide IS the old body's !incoming slice, and the
-      // incoming side's per-doc pipeline is unchanged).
+      // inline when unprepared; relations identical either way.
       val (keptIdx, idxHs) = prepTake(s, dir, "prep96")(q96Arts(s, dir))
       val (sig, banded) = incomingSigBanded(s, dir)
-      val cand = banded
-        .select(col("doc_id").as("inc_doc"), col("band"), col("key"))
-        .join(keptIdx, Seq("band", "key"))
-        .select(col("inc_doc"), col("idx_doc")).distinct()
-      val verified = cand
-        .join(sig.select(col("doc_id").as("inc_doc"), col("hs").as("hs_a")), "inc_doc")
-        .join(idxHs.select(col("idx_doc"), col("hs_b")), "idx_doc")
-        .select(col("inc_doc"), col("idx_doc"),
-          jaccardSorted(col("hs_a"), col("hs_b"))
-          .as("jaccard"))
-        .where(col("jaccard") >= 0.8)
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("inc_doc"))
-      val wBest = wAll.orderBy(col("jaccard").desc, col("idx_doc"))
-      verified
-        .select(col("inc_doc"), col("idx_doc"), col("jaccard"),
-          count(lit(1)).over(wAll).as("n_matches"),
-          row_number().over(wBest).as("rn"))
-        .where(col("rn") === 1)
-        .select(col("inc_doc").as("doc_id"), col("n_matches"),
-          col("idx_doc").as("best_match"), col("jaccard").as("best_jaccard"))
-        .orderBy(col("doc_id"))
+      val verify = Lsh.Jaccard(0.8)
+      val cand = Lsh.probe(banded, keptIdx, "doc_id", "inc_doc", "idx_doc")
+      Lsh.bestMatch(verify(cand, "inc_doc", "idx_doc",
+        verify.side(sig, "doc_id", "inc_doc", "a"), idxHs),
+        "inc_doc", "idx_doc", "jaccard", "doc_id")
     },
-    Some {
-      val mins = oMins
-      val bandRows = (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"CAST(m${bnd * RowsPerBand + r} AS VARCHAR)")
-          .mkString(" || ',' || ")
-        s"SELECT doc_id, incoming, $bnd AS band, $key AS key FROM sig"
-      }.mkString("\n        UNION ALL ")
-      s"""WITH sh AS ($oShingles3),
-        spl AS (
-          SELECT doc_id, ${oH60("'ingest:' || CAST(doc_id AS VARCHAR)")} % 10 = 0 AS incoming
-          FROM documents),
-        hashed AS (
-          SELECT s.doc_id, incoming, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh) s
-          JOIN spl ON s.doc_id = spl.doc_id),
-        sig AS (
-          SELECT doc_id, incoming,
-            $mins,
-            list_sort(list(DISTINCT h)) AS hs
-          FROM hashed GROUP BY doc_id, incoming),
-        banded AS (
-          $bandRows),
-        keptidx AS (
-          SELECT doc_id, band, key FROM banded WHERE NOT incoming
-          QUALIFY count(*) OVER (PARTITION BY band, key) <= $Q96Cap),
-        cand AS (
-          SELECT DISTINCT i.doc_id AS inc_doc, x.doc_id AS idx_doc
-          FROM banded i JOIN keptidx x ON i.band = x.band AND i.key = x.key
-          WHERE i.incoming),
-        ver AS (
-          SELECT inc_doc, idx_doc, jaccard FROM (
-            SELECT inc_doc, idx_doc,
-              round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                    CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-            FROM cand JOIN sig sa ON cand.inc_doc = sa.doc_id
-                      JOIN sig sb ON cand.idx_doc = sb.doc_id)
-          WHERE jaccard >= 0.8)
-        SELECT inc_doc AS doc_id, n_matches, idx_doc AS best_match,
-          jaccard AS best_jaccard
-        FROM (
-          SELECT inc_doc, idx_doc, jaccard,
-            count(*) OVER (PARTITION BY inc_doc) AS n_matches,
-            row_number() OVER (PARTITION BY inc_doc
-              ORDER BY jaccard DESC, idx_doc) AS rn
-          FROM ver)
-        WHERE rn = 1 ORDER BY doc_id"""
-    },
+    Some(s"""WITH ${Text.oSig(Tag(oIngest("doc_id")), sets = true)},
+        ${oCap("keptidx", "doc_id", Q96Cap, " WHERE NOT incoming")},
+        ${Lsh.oProbe("doc_id", "inc_doc", "idx_doc")},
+        ${oCte("ver", oJaccard("cand", "inc_doc", "idx_doc", 0.8))}
+        ${Lsh.oBestMatch("inc_doc", "idx_doc", "jaccard", "doc_id")}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep96", q96Arts(s, dir))))
 
   // ---- q101: index MAINTENANCE (the update half of the ingest gate) --
@@ -1837,8 +1163,16 @@ object DedupOps {
     * would resurrect the bucket with a partial id set that a batch
     * recompute over the same corpus drops. */
   private[graft] def cappedIndexBuckets(banded: DataFrame, cap: Int): DataFrame =
-    banded.groupBy(col("band"), col("key"))
-      .agg(graft.functions.BoundedCollect.boundedIdBag(cap)(col("doc_id")).as("ids"))
+    Lsh.buckets(banded, cap)
+
+  /** The published slice of a capped index: per (band, key) the
+    * tombstone flag, kept count and kept ids, ordered. */
+  private def indexSlice(idx: DataFrame): DataFrame =
+    idx.select(col("band"), col("key"),
+      (size(col("ids")) === 0).as("dropped"),
+      size(col("ids")).cast("long").as("n_kept"),
+      concat_ws(",", transform(col("ids"), x => x.cast("string"))).as("ids"))
+      .orderBy(col("band"), col("key"))
 
   /** INDEX-UPDATE operator — the maintenance half of the continuous-
     * ingest gate. q96/q97/q98 PROBE a standing capped index but never
@@ -1901,24 +1235,8 @@ object DedupOps {
     * through q51's signature family — the banding the standing ingest
     * index (q96/q98) is keyed by. */
   private[graft] def bandedFor(s: org.apache.spark.sql.SparkSession,
-      dir: String, pred: Column): DataFrame = {
-    val hashed = t(s, dir, "documents")
-      .repartition(s.sparkContext.defaultParallelism)
-      .where(pred)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .where(size(col("tk")) >= 3)
-      .select(col("doc_id"), explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-      .select(col("doc_id"), (col("h0") % P).as("h"))
-    val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-    val sig = hashed.groupBy(col("doc_id")).agg(minAggs.head, minAggs.tail: _*)
-    sig.select(col("doc_id"), expr(
-      (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-          .mkString("concat_ws(',', ", ", ", ")")
-        s"$bnd, $key"
-      }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-  }
+      dir: String, pred: Column): DataFrame =
+    Text.banded(Text.sigOf(docs(s, dir, Some(pred)), sets = false))
 
   /** The registered instance: q96's standing index (the 90 % split,
     * same deterministic h60 ingest split) absorbs the 10 % incoming
@@ -1940,7 +1258,6 @@ object DedupOps {
     * merge, not the standing index build a deployment stores). */
   private def q101Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val inc = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
     // Scoped, NOT fenced (r21 optimization, guide §2.4): the fence's
     // RDD leaf reports unknown partitioning, so mergeIndexBuckets'
     // full-outer join re-exchanged the STANDING side — the ~90 %
@@ -1951,7 +1268,7 @@ object DedupOps {
     // Single downstream consumer, shallow plan — the fence's
     // re-analysis savings don't apply here.
     val standing = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !inc), Q96Cap))
+      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap))
     standing.count()
     standing
   }
@@ -1959,41 +1276,10 @@ object DedupOps {
   val q101 = Q(
     "q101_index_merge",
     s"ingest-index maintenance: merge the 10% batch into the standing capped index (cap $Q96Cap), tombstones persist",
-    (s, dir) => {
-      val inc = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-      val standing = prepTake(s, dir, "prep101")(q101Arts(s, dir))
-      val merged = mergeIndexBuckets(standing, bandedFor(s, dir, inc), Q96Cap)
-      merged.select(col("band"), col("key"),
-        (size(col("ids")) === 0).as("dropped"),
-        size(col("ids")).cast("long").as("n_kept"),
-        concat_ws(",", transform(col("ids"), x => x.cast("string"))).as("ids"))
-        .orderBy(col("band"), col("key"))
-    },
-    Some {
-      val mins = oMins
-      val bandRows = (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"CAST(m${bnd * RowsPerBand + r} AS VARCHAR)")
-          .mkString(" || ',' || ")
-        s"SELECT doc_id, $bnd AS band, $key AS key FROM sig"
-      }.mkString("\n        UNION ALL ")
-      s"""WITH sh AS ($oShingles3),
-        hashed AS (
-          SELECT doc_id, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh)),
-        sig AS (
-          SELECT doc_id, $mins
-          FROM hashed GROUP BY doc_id),
-        banded AS (
-          $bandRows),
-        g AS (
-          SELECT band, key, count(*) AS n,
-            string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS allids
-          FROM banded GROUP BY band, key)
-        SELECT band, key, n > $Q96Cap AS dropped,
-          CASE WHEN n > $Q96Cap THEN CAST(0 AS BIGINT) ELSE n END AS n_kept,
-          CASE WHEN n > $Q96Cap THEN '' ELSE allids END AS ids
-        FROM g ORDER BY band, key"""
-    },
+    (s, dir) => indexSlice(mergeIndexBuckets(prepTake(s, dir, "prep101")(q101Arts(s, dir)),
+      bandedFor(s, dir, ingest("doc_id")), Q96Cap)),
+    Some(s"""WITH ${Text.oSig(AllDocs, sets = false)},
+        ${Lsh.oIndexSlice("doc_id", Q96Cap)}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep101", q101Arts(s, dir))))
 
   /** banded(doc_id, band, key) over the embeddings matching `pred`,
@@ -2008,11 +1294,8 @@ object DedupOps {
   private[graft] def embBandedFor(s: org.apache.spark.sql.SparkSession,
       dir: String, pred: Column,
       bands: Int = Q91Bands, bits: Int = Q91Bits): DataFrame =
-    t(s, dir, "embeddings")
-      .where(pred)
-      .select(col("vec_id").as("doc_id"),
-        posexplode(bandKeysUdf(bands, bits)(col("embedding"))))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("key"))
+    Lsh.SignLsh(bands, bits).banded(t(s, dir, "embeddings").where(pred),
+      col("embedding"), col("vec_id").as("doc_id"), "doc_id")
 
   /** EMBEDDING-index maintenance — [[mergeIndexBuckets]] applied to
     * q97's standing sign-LSH index (r10 VERDICT task 4: both ingest
@@ -2040,10 +1323,9 @@ object DedupOps {
     * 90 % split (q101Arts' shape, embedding edition). */
   private def q102Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val inc = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — q101Arts' partitioning-preservation note.
     val standing = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !inc), Q91Cap))
+      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap))
     standing.count()
     standing
   }
@@ -2051,37 +1333,11 @@ object DedupOps {
   val q102 = Q(
     "q102_embedding_index_merge",
     s"embedding-index maintenance: merge the 10% vector batch into the standing sign-LSH index (cap $Q91Cap)",
-    (s, dir) => {
-      val inc = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
-      val standing = prepTake(s, dir, "prep102")(q102Arts(s, dir))
-      val merged = mergeIndexBuckets(standing, embBandedFor(s, dir, inc), Q91Cap)
-      merged.select(col("band"), col("key"),
-        (size(col("ids")) === 0).as("dropped"),
-        size(col("ids")).cast("long").as("n_kept"),
-        concat_ws(",", transform(col("ids"), x => x.cast("string"))).as("ids"))
-        .orderBy(col("band"), col("key"))
-    },
-    Some {
-      val signs = rademacherSigns(Q91Bands * Q91Bits, EmbDim)
-      val bandRows = (0 until Q91Bands).map { b =>
-        val key = (0 until Q91Bits).map { r =>
-          s"CASE WHEN (${oProj(signs(b * Q91Bits + r))}) >= 0 THEN ${1 << r} ELSE 0 END"
-        }.mkString(" + ")
-        s"SELECT vec_id, $b AS band, $key AS key FROM e"
-      }.mkString("\n        UNION ALL ")
-      s"""WITH e AS (
-        SELECT vec_id, embedding AS v FROM embeddings),
-      banded AS (
-        $bandRows),
-      g AS (
-        SELECT band, key, count(*) AS n,
-          string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY vec_id) AS allids
-        FROM banded GROUP BY band, key)
-      SELECT band, key, n > $Q91Cap AS dropped,
-        CASE WHEN n > $Q91Cap THEN CAST(0 AS BIGINT) ELSE n END AS n_kept,
-        CASE WHEN n > $Q91Cap THEN '' ELSE allids END AS ids
-      FROM g ORDER BY band, key"""
-    },
+    (s, dir) => indexSlice(mergeIndexBuckets(prepTake(s, dir, "prep102")(q102Arts(s, dir)),
+      embBandedFor(s, dir, ingest("vec_id")), Q91Cap)),
+    Some(s"""WITH ${oCte("e", "SELECT vec_id, embedding AS v FROM embeddings")},
+      ${Q91Lsh.oBanded()},
+      ${Lsh.oIndexSlice("vec_id", Q91Cap)}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep102", q102Arts(s, dir))))
 
   // ---- q105: cluster MAINTENANCE (the merge half of near-dup clustering) --
@@ -2176,55 +1432,27 @@ object DedupOps {
     * 80/10/10 residue splits at 2M docs. */
   private[graft] def q105Pairs(s: org.apache.spark.sql.SparkSession,
       dir: String, idxPred: Column, incPred: Column): (DataFrame, DataFrame) = {
-    val base = t(s, dir, "documents")
-        .where(idxPred || incPred)
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), incPred.as("incoming"), toks(col("text")).as("tk"))
-        .where(size(col("tk")) >= 3)
-      val hashed = base
-        .select(col("doc_id"), col("incoming"),
-          explode(shingleH60Udf(3)(col("tk"))).as("h0"))
-        .select(col("doc_id"), col("incoming"), (col("h0") % P).as("h"))
-      val minAggs = AB.zipWithIndex.map { case ((a, b), i) =>
-        min((lit(a) * col("h") + lit(b)) % P).as(s"m$i") }
-      val sig = graft.Scratch.scoped(hashed.groupBy(col("doc_id"), col("incoming"))
-        .agg(minAggs.head, minAggs.tail :+ sort_array(collect_set(col("h"))).as("hs"): _*))
-      val banded = sig.select(col("doc_id"), col("incoming"), expr(
-        (0 until Bands).map { bnd =>
-          val key = (0 until RowsPerBand).map(r => s"m${bnd * RowsPerBand + r}")
-            .mkString("concat_ws(',', ", ", ", ")")
-          s"$bnd, $key"
-        }.mkString(s"stack($Bands, ", ", ", ") as (band, key)")))
-      def verify(cand: DataFrame, aCol: String, bCol: String) = cand
-        .join(sig.select(col("doc_id").as(aCol), col("hs").as("hs_a")), aCol)
-        .join(sig.select(col("doc_id").as(bCol), col("hs").as("hs_b")), bCol)
-        .select(col(aCol), col(bCol),
-          jaccardSorted(col("hs_a"), col("hs_b"))
-          .as("jaccard"))
-        .where(col("jaccard") >= 0.8)
-      // STANDING side: verified pairs among index docs -> components.
-      // Registration-instance cost only; a deployment stores (id, comp).
-      val idx = banded.where(!col("incoming"))
-      val idxCand = idx.select(col("doc_id").as("doc_a"), col("band"), col("key"))
-        .join(idx.select(col("doc_id").as("doc_b"), col("band"), col("key")),
-          Seq("band", "key"))
-        .where(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      val idxPairs = verify(idxCand, "doc_a", "doc_b")
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      // BATCH side: the gate's accepted matches (q96's relation, all
-      // matches), as (src = incoming, dst = index) edges.
-      val keptIdx = idx.groupBy(col("band"), col("key"))
-        .agg(graft.functions.BoundedCollect.boundedIdBag(Q96Cap)(col("doc_id")).as("ids"))
-        .where(size(col("ids")) >= 1)
-        .select(col("band"), col("key"), explode(col("ids")).as("idx_doc"))
-      val cand = banded.where(col("incoming"))
-        .select(col("doc_id").as("inc_doc"), col("band"), col("key"))
-        .join(keptIdx, Seq("band", "key"))
-        .select(col("inc_doc"), col("idx_doc")).distinct()
-      val matches = graft.Scratch.sized(verify(cand, "inc_doc", "idx_doc")
-        .select(col("inc_doc").as("src"), col("idx_doc").as("dst")))
-      (idxPairs, matches)
+    val sig = graft.Scratch.scoped(
+      Text.sigOf(docs(s, dir, Some(idxPred || incPred)), sets = true, Some(incPred)))
+    val banded = Text.banded(sig, inc = true)
+    val verify = Lsh.Jaccard(0.8)
+    // STANDING side: verified pairs among index docs -> components.
+    // Registration-instance cost only; a deployment stores (id, comp).
+    val idx = banded.where(!col("incoming"))
+    val idxCand = idx.select(col("doc_id").as("doc_a"), col("band"), col("key"))
+      .join(idx.select(col("doc_id").as("doc_b"), col("band"), col("key")),
+        Seq("band", "key"))
+      .where(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    val idxPairs = verify.pairs(sig, idxCand)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    // BATCH side: the gate's accepted matches (q96's relation, all
+    // matches), as (src = incoming, dst = index) edges.
+    val cand = Lsh.probe(banded.where(col("incoming")),
+      Lsh.indexSide(idx, Q96Cap, "doc_id", "idx_doc"), "doc_id", "inc_doc", "idx_doc")
+    val matches = graft.Scratch.sized(verify.pairs(sig, cand, "doc_id", "inc_doc", "idx_doc")
+      .select(col("inc_doc").as("src"), col("idx_doc").as("dst")))
+    (idxPairs, matches)
   }
 
   /** Eager connected components over a (src, dst) pair relation →
@@ -2245,8 +1473,7 @@ object DedupOps {
     * action window. */
   private[graft] def q105Relations(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val inc = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-    val (idxPairs, matches) = q105Pairs(s, dir, !inc, inc)
+    val (idxPairs, matches) = q105Pairs(s, dir, !ingest("doc_id"), ingest("doc_id"))
     (graft.Scratch.sized(componentsOf(idxPairs)), matches)
   }
 
@@ -2264,106 +1491,34 @@ object DedupOps {
   val q105 = Q(
     "q105_cluster_merge",
     s"cluster maintenance: standing 90%-split near-dup components absorb the ingest gate's accepted matches (index cap $Q96Cap, J >= 0.8)",
+    // Standing components + the gate's accepted matches from the
+    // prepare handoff (ClusterVolBench's deployment shape: the
+    // assignment is stored state, gate-match cost is q96's story);
+    // built inline when unprepared. Plan-fenced either way:
+    // mergeComponents' CC issues several actions, each otherwise
+    // re-analyzing the full gate pipeline's plan — ~1.2 s of driver
+    // planning at sf0.1.
     (s, dir) => {
-      // Standing components + the gate's accepted matches from the
-      // prepare handoff (ClusterVolBench's deployment shape: the
-      // assignment is stored state, gate-match cost is q96's story);
-      // built inline when unprepared. Plan-fenced either way:
-      // mergeComponents' CC issues several actions, each otherwise
-      // re-analyzing the full gate pipeline's plan — ~1.2 s of driver
-      // planning at sf0.1.
       val (standing, matches) = prepTake(s, dir, "prep105")(q105Arts(s, dir))
-      val merged = mergeComponents(standing, matches)
-      merged.groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          sum((h60(concat(lit("ingest:"), col("id"))) % 10 === 0)
-            .cast("long")).as("n_incoming"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("n_incoming"),
-          col("members"))
-        .orderBy(col("canonical_id"))
+      clusters(mergeComponents(standing, matches), incoming = true)
     },
-    Some {
-      val mins = oMins
-      val bandRows = (0 until Bands).map { bnd =>
-        val key = (0 until RowsPerBand).map(r => s"CAST(m${bnd * RowsPerBand + r} AS VARCHAR)")
-          .mkString(" || ',' || ")
-        s"SELECT doc_id, incoming, $bnd AS band, $key AS key FROM sig"
-      }.mkString("\n        UNION ALL ")
-      // q73's chained-MATERIALIZED min-label closure with the round-11
-      // convergence assert, over standing pairs ∪ gate matches.
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""WITH sh AS ($oShingles3),
-        spl AS (
-          SELECT doc_id, ${oH60("'ingest:' || CAST(doc_id AS VARCHAR)")} % 10 = 0 AS incoming
-          FROM documents),
-        hashed AS (
-          SELECT s.doc_id, incoming, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh) s
-          JOIN spl ON s.doc_id = spl.doc_id),
-        sig AS (
-          SELECT doc_id, incoming,
-            $mins,
-            list_sort(list(DISTINCT h)) AS hs
-          FROM hashed GROUP BY doc_id, incoming),
-        banded AS (
-          $bandRows),
-        icand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-          WHERE NOT a.incoming AND NOT b.incoming),
-        ipairs AS (
-          SELECT doc_a, doc_b FROM (
-            SELECT doc_a, doc_b,
-              round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                    CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-            FROM icand JOIN sig sa ON icand.doc_a = sa.doc_id
-                       JOIN sig sb ON icand.doc_b = sb.doc_id)
-          WHERE jaccard >= 0.8),
-        keptidx AS (
-          SELECT doc_id, band, key FROM banded WHERE NOT incoming
-          QUALIFY count(*) OVER (PARTITION BY band, key) <= $Q96Cap),
-        cand AS (
-          SELECT DISTINCT i.doc_id AS inc_doc, x.doc_id AS idx_doc
-          FROM banded i JOIN keptidx x ON i.band = x.band AND i.key = x.key
-          WHERE i.incoming),
-        ver AS (
-          SELECT inc_doc, idx_doc FROM (
-            SELECT inc_doc, idx_doc,
-              round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                    CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-            FROM cand JOIN sig sa ON cand.inc_doc = sa.doc_id
-                      JOIN sig sb ON cand.idx_doc = sb.doc_id)
-          WHERE jaccard >= 0.8),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS a, doc_b AS b FROM ipairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM ipairs
-          UNION ALL SELECT inc_doc AS a, idx_doc AS b FROM ver
-          UNION ALL SELECT idx_doc AS a, inc_doc AS b FROM ver),
-        l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-        $steps,
-        conv AS (
-          SELECT count(*) AS viol
-          FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
+    // q73's closure over standing pairs ∪ gate matches.
+    Some(s"""WITH ${Text.oSig(Tag(oIngest("doc_id")), sets = true)},
+        ${oSelfJoin("icand", "banded", where = "\n          WHERE NOT a.incoming AND NOT b.incoming")},
+        ${oCte("ipairs", oJaccard("icand", "doc_a", "doc_b", 0.8, withScore = false))},
+        ${oCap("keptidx", "doc_id", Q96Cap, " WHERE NOT incoming")},
+        ${Lsh.oProbe("doc_id", "inc_doc", "idx_doc")},
+        ${oCte("ver", oJaccard("cand", "inc_doc", "idx_doc", 0.8, withScore = false))},
+        ${oClosure(oSym("doc_a", "doc_b", "ipairs") + "\n          UNION ALL " +
+          oSym("inc_doc", "idx_doc", "ver"))}
         SELECT CASE WHEN (SELECT viol FROM conv) > 0
-                 THEN error('q105 oracle: label propagation not converged in 10 rounds')
+                 THEN ${Lsh.oNotConverged("q105")}
                  ELSE min(k) END AS canonical_id,
           count(*) AS n_docs,
           CAST(sum(CASE WHEN spl.incoming THEN 1 ELSE 0 END) AS BIGINT) AS n_incoming,
           string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
         FROM l11 JOIN spl ON l11.k = spl.doc_id
-        GROUP BY lab ORDER BY canonical_id"""
-    },
+        GROUP BY lab ORDER BY canonical_id"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep105", q105Arts(s, dir))))
 
   /** QUALITY-AWARE canonical selection — the survivor policy real
@@ -2381,15 +1536,9 @@ object DedupOps {
     "q100_quality_canonical",
     "near-dup clusters keep the highest-quality member (gate-flag score, min-id tie)",
     (s, dir) => {
-      import s.implicits._
       // Plan-fenced: identical pairs->CC shape to q73, whose r15
-      // same-window A/B (ProfFence3) settled the fence as a real win.
-      val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .as[graft.etl.Pipeline.Edge]
-      val verts = pairs.select(col("src")).union(pairs.select(col("dst")))
-        .distinct().as[java.lang.Long]
-      val comps = graft.etl.Pipeline.connectedComponents(verts, pairs)
+      // same-window A/B settled the fence as a real win.
+      val comps = fencedComponents(minhashPairs(s, dir), "doc_a", "doc_b")
       val qual = CurationOps.withGateFlags(
           t(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"),
@@ -2405,24 +1554,8 @@ object DedupOps {
           col("n_docs"), col("members"))
         .orderBy(col("canonical_id"))
     },
-    Some {
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""$oMinhashPairsCtes,
-      sym AS MATERIALIZED (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
-      l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-      $steps,
-      conv AS (
-        SELECT count(*) AS viol
-        FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab),
+    Some(s"""${oMinhashPairs(AllDocs)},
+      ${oClosure(oSym("doc_a", "doc_b"))},
       tokq AS (
         SELECT doc_id, string_split_regex(trim(text), ' +') AS toks FROM documents),
       mq AS (
@@ -2453,11 +1586,10 @@ object DedupOps {
           FROM l11 l JOIN qual ON l.k = qual.doc_id)
         WHERE rn = 1)
       SELECT CASE WHEN (SELECT viol FROM conv) > 0
-               THEN error('q100 oracle: label propagation not converged in 10 rounds')
+               THEN ${Lsh.oNotConverged("q100")}
                ELSE canonical_id END AS canonical_id,
         best_q, n_docs, members
-      FROM g JOIN b USING (lab) ORDER BY canonical_id"""
-    })
+      FROM g JOIN b USING (lab) ORDER BY canonical_id"""))
 
   // ---- q116/q117: DELETION / RETRACTION from the standing artifacts --
 
@@ -2540,43 +1672,15 @@ object DedupOps {
     "q116_index_remove",
     s"index retraction: bucket-scoped rebuild for a removed 10% batch, tombstone demotion at cap $Q96Cap",
     (s, dir) => {
-      val rem = h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0
       // Standing artifacts from the prepare handoff (a deployment
       // reads the stored index + banding; Bench pays the build
       // untimed), built inline when unprepared.
       val (banding, standing) = prepTake(s, dir, "prep116")(q116Arts(s, dir))
-      val removed = t(s, dir, "documents").where(rem).select(col("doc_id"))
-      removeFromIndexBuckets(standing, banding, removed, Q96Cap)
-        .select(col("band"), col("key"),
-          (size(col("ids")) === 0).as("dropped"),
-          size(col("ids")).cast("long").as("n_kept"),
-          concat_ws(",", transform(col("ids"), x => x.cast("string"))).as("ids"))
-        .orderBy(col("band"), col("key"))
+      val rem = t(s, dir, "documents").where(removed("doc_id")).select(col("doc_id"))
+      indexSlice(removeFromIndexBuckets(standing, banding, rem, Q96Cap))
     },
-    Some {
-      val mins = oMins
-      s"""WITH sh AS ($oShingles3),
-        keep AS (
-          SELECT doc_id FROM documents
-          WHERE ${oH60("'remove:' || CAST(doc_id AS VARCHAR)")} % 10 <> 0),
-        hashed AS (
-          SELECT s.doc_id, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh) s
-          JOIN keep USING (doc_id)),
-        sig AS (
-          SELECT doc_id, $mins
-          FROM hashed GROUP BY doc_id),
-        banded AS (
-          $oBandRows),
-        g AS (
-          SELECT band, key, count(*) AS n,
-            string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS allids
-          FROM banded GROUP BY band, key)
-        SELECT band, key, n > $Q96Cap AS dropped,
-          CASE WHEN n > $Q96Cap THEN CAST(0 AS BIGINT) ELSE n END AS n_kept,
-          CASE WHEN n > $Q96Cap THEN '' ELSE allids END AS ids
-        FROM g ORDER BY band, key"""
-    },
+    Some(s"""WITH ${Text.oSig(Keep(oKept("doc_id")), sets = false)},
+        ${Lsh.oIndexSlice("doc_id", Q96Cap)}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep116", q116Arts(s, dir))))
 
   /** CLUSTER-RETRACTION operator — [[mergeComponents]]' dual: drop a
@@ -2680,71 +1784,13 @@ object DedupOps {
     "q117_cluster_remove",
     "cluster retraction: drop removed members, split disconnected components (== from-scratch closure)",
     (s, dir) => {
-      val rem = h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0
       val (pairs, standing) = prepTake(s, dir, "prep117")(q117Arts(s, dir))
-      val removed = t(s, dir, "documents").where(rem)
-        .select(col("doc_id").as("id"))
-      removeFromComponents(standing, pairs, removed)
-        .groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("members"))
-        .orderBy(col("canonical_id"))
+      clusters(removeFromComponents(standing, pairs,
+        t(s, dir, "documents").where(removed("doc_id")).select(col("doc_id").as("id"))))
     },
-    Some {
-      val mins = oMins
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""WITH sh AS ($oShingles3),
-        keep AS (
-          SELECT doc_id FROM documents
-          WHERE ${oH60("'remove:' || CAST(doc_id AS VARCHAR)")} % 10 <> 0),
-        hashed AS (
-          SELECT s.doc_id, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh) s
-          JOIN keep USING (doc_id)),
-        sig AS (
-          SELECT doc_id,
-            $mins,
-            list_sort(list(DISTINCT h)) AS hs
-          FROM hashed GROUP BY doc_id),
-        banded AS (
-          $oBandRows),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        pairs AS MATERIALIZED (
-          SELECT doc_a, doc_b FROM (
-            SELECT doc_a, doc_b,
-              round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                    CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-            FROM cand JOIN sig sa ON cand.doc_a = sa.doc_id
-                      JOIN sig sb ON cand.doc_b = sb.doc_id)
-          WHERE jaccard >= 0.8),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS a, doc_b AS b FROM pairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
-        l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-        $steps,
-        conv AS (
-          SELECT count(*) AS viol
-          FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
-        SELECT CASE WHEN (SELECT viol FROM conv) > 0
-                 THEN error('q117 oracle: label propagation not converged in 10 rounds')
-                 ELSE min(k) END AS canonical_id,
-          count(*) AS n_docs,
-          string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
-        FROM l11 GROUP BY lab ORDER BY canonical_id"""
-    },
+    Some(s"""${oMinhashPairs(Keep(oKept("doc_id")), withScore = false)},
+        ${oClosure(oSym("doc_a", "doc_b"))}
+        ${oClusters("q117")}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep117", q117Arts(s, dir))))
 
   /** EMBEDDING-index retraction — [[removeFromIndexBuckets]] applied
@@ -2782,39 +1828,13 @@ object DedupOps {
     "q123_embedding_index_remove",
     s"embedding-index retraction: bucket-scoped rebuild for a removed 10% vector batch (cap $Q91Cap)",
     (s, dir) => {
-      val rem = h60(concat(lit("remove:"), col("vec_id"))) % 10 === 0
       val (banding, standing) = prepTake(s, dir, "prep123")(q123Arts(s, dir))
-      val removed = t(s, dir, "embeddings").where(rem)
-        .select(col("vec_id").as("doc_id"))
-      removeFromIndexBuckets(standing, banding, removed, Q91Cap)
-        .select(col("band"), col("key"),
-          (size(col("ids")) === 0).as("dropped"),
-          size(col("ids")).cast("long").as("n_kept"),
-          concat_ws(",", transform(col("ids"), x => x.cast("string"))).as("ids"))
-        .orderBy(col("band"), col("key"))
+      indexSlice(removeFromIndexBuckets(standing, banding, t(s, dir, "embeddings")
+        .where(removed("vec_id")).select(col("vec_id").as("doc_id")), Q91Cap))
     },
-    Some {
-      val signs = rademacherSigns(Q91Bands * Q91Bits, EmbDim)
-      val bandRows = (0 until Q91Bands).map { b =>
-        val key = (0 until Q91Bits).map { r =>
-          s"CASE WHEN (${oProj(signs(b * Q91Bits + r))}) >= 0 THEN ${1 << r} ELSE 0 END"
-        }.mkString(" + ")
-        s"SELECT vec_id, $b AS band, $key AS key FROM e"
-      }.mkString("\n        UNION ALL ")
-      s"""WITH e AS (
-        SELECT vec_id, embedding AS v FROM embeddings
-        WHERE ${oH60("'remove:' || CAST(vec_id AS VARCHAR)")} % 10 <> 0),
-      banded AS (
-        $bandRows),
-      g AS (
-        SELECT band, key, count(*) AS n,
-          string_agg(CAST(vec_id AS VARCHAR), ',' ORDER BY vec_id) AS allids
-        FROM banded GROUP BY band, key)
-      SELECT band, key, n > $Q91Cap AS dropped,
-        CASE WHEN n > $Q91Cap THEN CAST(0 AS BIGINT) ELSE n END AS n_kept,
-        CASE WHEN n > $Q91Cap THEN '' ELSE allids END AS ids
-      FROM g ORDER BY band, key"""
-    },
+    Some(s"""WITH ${oCte("e", s"SELECT vec_id, embedding AS v FROM embeddings\n        WHERE ${oKept("vec_id")}")},
+      ${Q91Lsh.oBanded()},
+      ${Lsh.oIndexSlice("vec_id", Q91Cap)}"""),
     prepare = Some((s, dir) => prepPut(s, dir, "prep123", q123Arts(s, dir))))
 
   /** The CAPPED pipeline's standing artifacts from one (sig, banded)
@@ -2827,10 +1847,7 @@ object DedupOps {
   private[graft] def cappedClusterArtifacts(sig: DataFrame, banded: DataFrame,
       cap: Int): (DataFrame, DataFrame, DataFrame) = {
     val idx = graft.Scratch.sized(cappedIndexBuckets(banded, cap))
-    val cand = idx.where(size(col("ids")) >= 2)
-      .select(explode(bucketPairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b")).distinct()
-    val pairs = graft.Scratch.sized(verifiedPairs(sig, cand)
+    val pairs = graft.Scratch.sized(verifiedPairs(sig, Lsh.bucketPairs(idx))
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     (idx, pairs, graft.Scratch.sized(componentsOf(pairs)))
   }
@@ -2900,10 +1917,7 @@ object DedupOps {
     // Scratch-scoped: the candidate relation feeds both the broadcast
     // probe below and the verify joins — uncached, the banding
     // semi-join + self-join would run twice.
-    val revealedCand = graft.Scratch.sized(mem.as("a").join(mem.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")).distinct())
+    val revealedCand = graft.Scratch.sized(Lsh.selfJoin(mem))
     // Prune the signature table to the candidate docs BEFORE the
     // verify joins (the q51 deferred-verify pattern): the candidate
     // set is batch-bounded (demoted buckets × ≤cap members), so the
@@ -3099,22 +2113,13 @@ object DedupOps {
     "q124_capped_cluster_remove",
     s"capped-pipeline takedown: demotion-revealed pairs folded into the cluster rebuild (cap $Q88Cap)",
     (s, dir) => {
-      val rem = h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0
       val (sig, banded, idx, pairs, standing, pidSize) =
         prepTake(s, dir, "prep124")(q124Arts(s, dir))
-      val removed = t(s, dir, "documents").where(rem).select(col("doc_id"))
-      removeFromCappedCluster(idx, banded, sig, pairs, standing, removed,
-          Q88Cap, Some(pidSize))
-        .groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("members"))
-        .orderBy(col("canonical_id"))
+      val rem = t(s, dir, "documents").where(removed("doc_id")).select(col("doc_id"))
+      clusters(removeFromCappedCluster(idx, banded, sig, pairs, standing, rem,
+        Q88Cap, Some(pidSize)))
     },
-    Some(cappedRemoveOracle(
-      s"${oH60("'remove:' || CAST(doc_id AS VARCHAR)")} % 10 <> 0")),
+    Some(cappedRemoveOracle(oKept("doc_id"))),
     prepare = Some((s, dir) => prepPut(s, dir, "prep124", q124Arts(s, dir))))
 
   /** The capped-takedown rebuild oracle, parameterized by the KEEP
@@ -3123,61 +2128,10 @@ object DedupOps {
     * pipeline — shingle, minhash, band, cap, verify, 11-round label
     * propagation — over the surviving documents. */
   private[graft] def cappedRemoveOracle(keepWhere: String,
-      cap: Int = Q88Cap): String = {
-      val mins = oMins
-      val steps = (1 to 11).map { i =>
-        s"""l$i AS MATERIALIZED (
-        SELECT v.k, least(v.lab, coalesce(min(n.lab), v.lab)) AS lab
-        FROM l${i - 1} v
-        LEFT JOIN sym e ON e.a = v.k
-        LEFT JOIN l${i - 1} n ON n.k = e.b
-        GROUP BY v.k, v.lab)"""
-      }.mkString(",\n      ")
-      s"""WITH sh AS ($oShingles3),
-        keep AS (
-          SELECT doc_id FROM documents
-          WHERE $keepWhere),
-        hashed AS (
-          SELECT s.doc_id, ${oH60("shingle")} % $P AS h
-          FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh) s
-          JOIN keep USING (doc_id)),
-        sig AS (
-          SELECT doc_id,
-            $mins,
-            list_sort(list(DISTINCT h)) AS hs
-          FROM hashed GROUP BY doc_id),
-        banded AS (
-          $oBandRows),
-        kept AS (
-          SELECT doc_id, band, key FROM banded
-          QUALIFY count(*) OVER (PARTITION BY band, key) <= $cap),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM kept a JOIN kept b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        pairs AS MATERIALIZED (
-          SELECT doc_a, doc_b FROM (
-            SELECT doc_a, doc_b,
-              round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) /
-                    CAST(len(list_distinct(sa.hs || sb.hs)) AS DOUBLE), 4) AS jaccard
-            FROM cand JOIN sig sa ON cand.doc_a = sa.doc_id
-                      JOIN sig sb ON cand.doc_b = sb.doc_id)
-          WHERE jaccard >= 0.8),
-        sym AS MATERIALIZED (
-          SELECT doc_a AS a, doc_b AS b FROM pairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
-        l0 AS MATERIALIZED (SELECT DISTINCT a AS k, a AS lab FROM sym),
-        $steps,
-        conv AS (
-          SELECT count(*) AS viol
-          FROM l11 n JOIN l10 p ON n.k = p.k WHERE n.lab <> p.lab)
-        SELECT CASE WHEN (SELECT viol FROM conv) > 0
-                 THEN error('capped-takedown oracle: label propagation not converged in 10 rounds')
-                 ELSE min(k) END AS canonical_id,
-          count(*) AS n_docs,
-          string_agg(CAST(k AS VARCHAR), ',' ORDER BY k) AS members
-        FROM l11 GROUP BY lab ORDER BY canonical_id"""
-  }
+      cap: Int = Q88Cap): String =
+    s"""${oMinhashPairs(Keep(keepWhere), Some(cap), withScore = false)},
+        ${oClosure(oSym("doc_a", "doc_b"))}
+        ${oClusters("capped-takedown")}"""
 
   /** q141's removal range: the middle fifth of the id space,
     * [2(N+1)/5, 3(N+1)/5) with N = max doc_id — contiguous, so the
@@ -3234,18 +2188,11 @@ object DedupOps {
       val (sig, banded, idx, pairs, standing, pidSize) =
         prepTake(s, dir, "prep141")(q124Arts(s, dir, Q141Cap))
       val (lo, hi) = q141Range(s, dir)
-      val removed = t(s, dir, "documents")
+      val rem = t(s, dir, "documents")
         .where(col("doc_id") >= lo && col("doc_id") < hi)
         .select(col("doc_id"))
-      removeFromCappedCluster(idx, banded, sig, pairs, standing, removed,
-          Q141Cap, Some(pidSize))
-        .groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("members"))
-        .orderBy(col("canonical_id"))
+      clusters(removeFromCappedCluster(idx, banded, sig, pairs, standing, rem,
+        Q141Cap, Some(pidSize)))
     },
     Some(cappedRemoveOracle(
       """doc_id < (SELECT ((max(doc_id) + 1) * 2) // 5 FROM documents)

@@ -560,14 +560,12 @@ object EpochOps {
   private[graft] def q144IdxArts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     import DedupOps._
-    val incD = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-    val incV = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — DedupOps.q101Arts' partitioning-
     // preservation note (the merges co-locate on the cached layout).
     val ti = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !incD), Q96Cap))
+      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap))
     val ei = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !incV), Q91Cap))
+      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap))
     ti.count(); ei.count()
     (ti, ei)
   }
@@ -576,23 +574,13 @@ object EpochOps {
       arts: (DataFrame, DataFrame),
       idxArts: (DataFrame, DataFrame)): DataFrame = {
     import DedupOps._
-    val incD = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-    val incV = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
-    def idx(merged: DataFrame, family: String): DataFrame =
-      idxSlice(merged, family)
     val (tiStanding, eiStanding) = idxArts
-    val ti = idx(mergeIndexBuckets(tiStanding,
-      bandedFor(s, dir, incD), Q96Cap), "text_index")
-    val ei = idx(mergeIndexBuckets(eiStanding,
-      embBandedFor(s, dir, incV), Q91Cap), "embedding_index")
+    val ti = idxSlice(mergeIndexBuckets(tiStanding,
+      bandedFor(s, dir, ingest("doc_id")), Q96Cap), "text_index")
+    val ei = idxSlice(mergeIndexBuckets(eiStanding,
+      embBandedFor(s, dir, ingest("vec_id")), Q91Cap), "embedding_index")
     val (standing, matches) = arts
-    val cl = mergeComponents(standing, matches).groupBy(col("comp"))
-      .agg(min(col("id")).as("canonical_id"),
-        count(lit(1)).as("n_docs"),
-        sum((h60(concat(lit("ingest:"), col("id"))) % 10 === 0)
-          .cast("long")).as("n_incoming"),
-        concat_ws(",", transform(sort_array(collect_list(col("id"))),
-          x => x.cast("string"))).as("members"))
+    val cl = clusterRows(mergeComponents(standing, matches), incoming = true)
       .select(lit("clusters").as("family"),
         col("canonical_id").as("k1"), col("n_docs").as("k2"),
         col("n_incoming").as("v1"), h60(col("members")).as("v2"))
@@ -709,7 +697,7 @@ object EpochOps {
     * split; standing = neither day. */
   private[graft] def ingest2(idCol: String): Column =
     h60(concat(lit("ingest2:"), col(idCol))) % 10 === 0 &&
-      !(h60(concat(lit("ingest:"), col(idCol))) % 10 === 0)
+      !DedupOps.ingest(idCol)
 
   /** q148's standing artifacts — the capped indexes over the
     * NEITHER-day split (q144IdxArts' shape with the chain's standing
@@ -718,14 +706,12 @@ object EpochOps {
   private def q148Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     import DedupOps._
-    val inc1D = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-    val inc1V = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
     // Scoped, not fenced — DedupOps.q101Arts' partitioning-
     // preservation note (the chained merges co-locate on the layout).
     val ti = graft.Scratch.sized(cappedIndexBuckets(
-      bandedFor(s, dir, !inc1D && !ingest2("doc_id")), Q96Cap))
+      bandedFor(s, dir, !ingest("doc_id") && !ingest2("doc_id")), Q96Cap))
     val ei = graft.Scratch.sized(cappedIndexBuckets(
-      embBandedFor(s, dir, !inc1V && !ingest2("vec_id")), Q91Cap))
+      embBandedFor(s, dir, !ingest("vec_id") && !ingest2("vec_id")), Q91Cap))
     ti.count(); ei.count()
     (ti, ei)
   }
@@ -735,14 +721,12 @@ object EpochOps {
     "chained ingest epochs: two days' accepted batches merged successively into the standing capped indexes (tombstones carried) == the one-shot recompute",
     (s, dir) => {
       import DedupOps._
-      val inc1D = h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0
-      val inc1V = h60(concat(lit("ingest:"), col("vec_id"))) % 10 === 0
       val (tiStanding, eiStanding) = prepTake(s, dir, "prep148")(q148Arts(s, dir))
       val ti = idxSlice(mergeIndexBuckets(mergeIndexBuckets(tiStanding,
-        bandedFor(s, dir, inc1D), Q96Cap),
+        bandedFor(s, dir, ingest("doc_id")), Q96Cap),
         bandedFor(s, dir, ingest2("doc_id")), Q96Cap), "text_index")
       val ei = idxSlice(mergeIndexBuckets(mergeIndexBuckets(eiStanding,
-        embBandedFor(s, dir, inc1V), Q91Cap),
+        embBandedFor(s, dir, ingest("vec_id")), Q91Cap),
         embBandedFor(s, dir, ingest2("vec_id")), Q91Cap), "embedding_index")
       ti.unionByName(ei).orderBy(col("family"), col("k1"), col("k2"))
     },
@@ -795,17 +779,7 @@ object EpochOps {
       val published = graft.Scratch.fenced(
         plainStore(s, dir, "cl_comps_ingest1")(
           DedupOps.mergeComponents(standing, day1)))
-      val merged = DedupOps.mergeComponents(published, day2)
-      merged.groupBy(col("comp"))
-        .agg(min(col("id")).as("canonical_id"),
-          count(lit(1)).as("n_docs"),
-          sum((h60(concat(lit("ingest:"), col("id"))) % 10 === 0)
-            .cast("long")).as("n_incoming"),
-          concat_ws(",", transform(sort_array(collect_list(col("id"))),
-            x => x.cast("string"))).as("members"))
-        .select(col("canonical_id"), col("n_docs"), col("n_incoming"),
-          col("members"))
-        .orderBy(col("canonical_id"))
+      DedupOps.clusters(DedupOps.mergeComponents(published, day2), incoming = true)
     },
     Some(DedupOps.q105.oracle.get),
     prepare = Some((s, dir) =>

@@ -383,18 +383,12 @@ object StreamingOps {
     // recurring cost is the incoming signatures + the stateless
     // probe). Inline build otherwise (Verify, volume benches).
     val (keptIdx, idxHs) = idxSide.getOrElse(DedupOps.q96IndexSide(s, dir))
-    val (ab, p, bands, rowsPerBand) = DedupOps.minhashParams
-    val sigd = docs
-      .where(h60(concat(lit("ingest:"), col("doc_id"))) % 10 === 0)
-      .select(col("doc_id"), split(trim(col("text")), " +").as("tk"))
-      .where(size(col("tk")) >= 3)
-      .select(col("doc_id"), minhashSigUdf(3, ab, p)(col("tk")).as("sig"))
+    // q96's signature in its per-row form: same constants and bands.
+    val mh = DedupOps.Text
+    val sigd = Lsh.Word3.units(docs.where(DedupOps.ingest("doc_id")))
+      .select(col("doc_id"), mh.rowSig(col("tk")).as("sig"))
       .select(col("doc_id"), col("sig.hs").as("hs_a"), col("sig.mins").as("mins"))
-    val banded = sigd.select(col("doc_id"), col("hs_a"),
-      posexplode(array((0 until bands).map { bnd =>
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          element_at(col("mins"), bnd * rowsPerBand + r + 1)): _*)
-      }: _*)))
+    val banded = sigd.select(col("doc_id"), col("hs_a"), posexplode(mh.rowKeys(col("mins"))))
       .select(col("doc_id"), col("hs_a"), col("pos").as("band"), col("col").as("key"))
     val verified = banded
       .join(keptIdx, Seq("band", "key")) // stream-static, stateless
@@ -1002,9 +996,10 @@ object StreamingOps {
     *     rebuilt. The store keeps no per-user memory after the wipe —
     *     rows stay erased=false and the consumer separates eras by the
     *     request log ([[sessionsCurrentByRequests]]). A call carrying
-    *     only requests neither updates the session it keeps nor sets its
-    *     flush timer; Spark drops a group's timer on every call that sets
-    *     none, so that session flushes only after its next event.
+    *     only requests keeps the session unchanged and, under
+    *     [[Retire.Flush]], sets its flush timer again — Spark drops a
+    *     group's timer on every call that sets none — at the gap's end,
+    *     or just past the watermark once that has passed.
     *   - DELIVERY CONTRACT of Control, stricter than the funnel's
     *     because nothing is remembered: a request must arrive AT its
     *     event-time position. A late one is guarded; an early one is
@@ -1061,7 +1056,12 @@ object StreamingOps {
           if (due >= 0 && !open.erased) armErase(state, due)
           else if (retire == Retire.Flush)
             state.setTimeoutTimestamp(open.end_us / 1000 + SessGapUs / 1000 + 1)
-        }
+        } else if (retire == Retire.Flush)
+          // A request-only call keeps the session as stored: set its
+          // flush timer again, just past the watermark once the gap's
+          // end has passed (Spark rejects a timer at or under it).
+          state.setTimeoutTimestamp(math.max(open.end_us / 1000 + SessGapUs / 1000 + 1,
+            state.getCurrentWatermarkMs() + 1))
         out.iterator
       }
     }

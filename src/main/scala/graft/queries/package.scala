@@ -346,26 +346,43 @@ package object queries {
     * md5 per shingle) is interpreted per element — measured 2× the
     * whole-query cost on the shingle-heavy operators (q51/q73/q77). */
   def shingleH60Udf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (toks: Seq[String]) =>
-      val arr = toks.toArray // LinearSeq guard: indexed access below
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
-      var i = 0
-      while (i + n - 1 < arr.length) {
-        val sb = new java.lang.StringBuilder(arr(i))
-        var k = 1
-        while (k < n) { sb.append(' ').append(arr(i + k)); k += 1 }
-        md.reset()
-        val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var h = 0L
-        var b = 0
-        while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-        seen.add(h)
-        i += 1
-      }
-      seen.toSeq
+    udf { (toks: Seq[String]) => firstSeen(shingleH60s(toks, n)).toSeq }
+
+  /** md5 of `bytes` folded as [[h60]] folds it: the first 15 hex digits
+    * (60 bits) as a non-negative long. */
+  private def h60Fold(md: java.security.MessageDigest, bytes: Array[Byte]): Long = {
+    md.reset()
+    val d = md.digest(bytes)
+    var h = 0L
+    var b = 0
+    while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
+    (h << 4) | ((d(7) & 0xf0L) >> 4)
+  }
+
+  /** The [[h60]] hash of every word n-gram of `toks` (tokens joined by
+    * one space), in position order, with multiplicity. */
+  private def shingleH60s(toks: Seq[String], n: Int): Array[Long] = {
+    val arr = toks.toArray // LinearSeq guard: indexed access below
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val out = new Array[Long](math.max(0, arr.length - n + 1))
+    var i = 0
+    while (i < out.length) {
+      val sb = new java.lang.StringBuilder(arr(i))
+      var k = 1
+      while (k < n) { sb.append(' ').append(arr(i + k)); k += 1 }
+      out(i) = h60Fold(md, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      i += 1
     }
+    out
+  }
+
+  /** The distinct values of `hs` in first-occurrence order. */
+  private def firstSeen(hs: Array[Long]): scala.collection.mutable.LinkedHashSet[Long] = {
+    val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
+    var i = 0
+    while (i < hs.length) { seen.add(hs(i)); i += 1 }
+    seen
+  }
 
   /** [[shingleH60Udf]] WITHOUT the distinct: every position's n-gram
     * [[h60]] hash, in order, WITH multiplicity — the occurrence bag a
@@ -375,24 +392,7 @@ package object queries {
     * md5 → 60-bit fold), so [[oH60]]-built oracles mirror it exactly. */
   def shingleH60AllUdf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (toks: Seq[String]) =>
-      val arr = toks.toArray // LinearSeq guard: indexed access below
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val out = new Array[Long](math.max(0, arr.length - n + 1))
-      var i = 0
-      while (i + n - 1 < arr.length) {
-        val sb = new java.lang.StringBuilder(arr(i))
-        var k = 1
-        while (k < n) { sb.append(' ').append(arr(i + k)); k += 1 }
-        md.reset()
-        val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var h = 0L
-        var b = 0
-        while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-        out(i) = h
-        i += 1
-      }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(shingleH60s(toks, n))
     }
 
   /** Fused PER-ROW MinHash signature kernel for the stream-side
@@ -415,23 +415,7 @@ package object queries {
     val as = ab.map(_._1).toArray
     val bs = ab.map(_._2).toArray
     udf { (toks: Seq[String]) =>
-      val arr = toks.toArray // LinearSeq guard: indexed access below
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
-      var i = 0
-      while (i + n - 1 < arr.length) {
-        val sb = new java.lang.StringBuilder(arr(i))
-        var k = 1
-        while (k < n) { sb.append(' ').append(arr(i + k)); k += 1 }
-        md.reset()
-        val d = md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var h = 0L
-        var b = 0
-        while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-        seen.add(h)
-        i += 1
-      }
+      val seen = firstSeen(shingleH60s(toks, n))
       val mins = Array.fill(as.length)(Long.MaxValue)
       val gs = new java.util.TreeSet[java.lang.Long]()
       seen.foreach { h0 =>
@@ -466,14 +450,8 @@ package object queries {
     val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
     var i = 0
     while (i + 4 <= t.length) {
-      md.reset()
-      val d = md.digest(t.substring(i, i + 4)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var h = 0L
-      var b = 0
-      while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = (h << 4) | ((d(7) & 0xf0L) >> 4)
-      seen.add(h)
+      seen.add(h60Fold(md, t.substring(i, i + 4)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       i += 1
     }
     seen.toSeq

@@ -419,7 +419,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
   }
 
   private def runSessStream(inputDir: java.nio.file.Path, dataDir: String,
-      delay: String): Unit = {
+      delay: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val chk = java.nio.file.Files.createTempDirectory("graft_cse_chk_").toString
     val in = spark.readStream
@@ -439,6 +439,7 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       }
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
+    q
   }
 
   test("q134 multi-batch: wipe + tombstone, fresh post-T session, flush, compaction") {
@@ -485,6 +486,35 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(cur == Set((s1, 1L, us(150), us(150)), (k, 1L, us(0), us(0))),
       s"unexpected current log: $cur")
+  }
+
+  test("q134: a request alone in its batch keeps the post-T session's flush timer — the session is emitted and leaves no state") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cse3_")
+    val inputDir = java.nio.file.Files.createDirectory(root.resolve("in"))
+    val dataDir = s"$root/data"
+    val base = System.currentTimeMillis() - 60000
+    val (s4, k) = (31L, 32L)
+    // s4's post-T session [120, 125] is open when its late request
+    // (T = 100) arrives alone in the next batch (a 1-hour delay keeps
+    // it on time); k's event at 800 then pushes the watermark past the
+    // session's gap. The request-only call must set the flush timer
+    // again, or Spark drops it and the session never leaves state.
+    writeSess(inputDir, Seq(sevc(s4, 120), sevc(s4, 125)), "f0.parquet", base)
+    writeSess(inputDir, Seq(sreq(s4, 100)), "f1.parquet", base + 2000)
+    writeSess(inputDir, Seq(sevc(k, 800)), "f2.parquet", base + 4000)
+    val q = runSessStream(inputDir, dataDir, "1 hour")
+    val rows = spark.read.option("recursiveFileLookup", "true")
+      .schema(implicitly[org.apache.spark.sql.Encoder[SessionOutE]].schema)
+      .parquet(dataDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getBoolean(4))).toSet
+    def us(m: Long) = (SOff + m) * MinUs
+    assert(rows.contains((s4, 0L, 0L, 0L, true)), s"the request tombstones: $rows")
+    assert(rows.contains((s4, 2L, us(120), us(125), false)),
+      s"the kept post-T session must flush once the watermark passes its gap: $rows")
+    val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    assert(stateRows == 1, s"only k's open session may stay in state, found $stateRows rows")
   }
 
   test("q134 lagging watermark: late request keeps a pure post-T open session; compaction drops handler-invisible pre-T sessions") {

@@ -12,7 +12,8 @@ import graft.queries.StreamingOps._
   * and one `TestGroupState` per call carries the state from call to
   * call. Covered are the five NoTimeout handlers — q67 sessions, q115
   * funnel, q128 retention, q130 funnel with control, q139 retention
-  * with control — each projected the way its query projects it:
+  * with control — each projected the way its query projects it, and
+  * q134's flush timers under control (below):
   *   - funnel: the q113 cascade;
   *   - sessions: the gap split minus each user's last session;
   *   - retention: the cohort cells;
@@ -144,6 +145,74 @@ object StreamStateMachineSpec extends Properties("StreamStateMachineSpec") {
         if (got != want) println(s"q67: $c -> $got, want $want")
         got == want
       }
+    }
+  }
+
+  // ---- sessions under control with flush (q134)
+
+  /** One user's time-ordered session events, cut into batches, with a
+    * request at or before the first event placed alone in a batch at
+    * `at` (0 = before every event batch, a late request after it). */
+  final case class LateCase(events: Vector[Long], cuts: Set[Int], at: Int, reqUs: Long)
+
+  private val genLate: Gen[LateCase] = for {
+    n <- Gen.choose(1, 16)
+    start <- Gen.choose(0L, 24L * 60)
+    gaps <- Gen.listOfN(n, Gen.frequency(
+      5 -> Gen.choose(1L, 30L), 1 -> Gen.const(31L), 4 -> Gen.choose(32L, 3000L)))
+    lead <- Gen.choose(0L, 100L)
+    cuts <- Gen.someOf(1 until n)
+    ts = gaps.scanLeft(Base + start * MinUs)(_ + _ * MinUs).tail.toVector
+    at <- Gen.choose(0, cuts.size + 1)
+  } yield LateCase(ts, cuts.toSet, at, ts.head - lead * MinUs)
+
+  /** Replays a [[LateCase]] through `h` the way a 0-delay watermarked
+    * stream runs it: each batch's call, then a no-data batch at the
+    * advanced watermark firing an expired timer; a call that sets no
+    * timer drops the group's timer, as Spark does. Finally another
+    * user's event pushes the watermark past everything. Returns the
+    * emissions and the state left. */
+  private def replayFlush(h: SessionHandler, c: LateCase): (Seq[SessionOutE], Boolean) = {
+    val bounds = (0 +: c.cuts.toSeq.sorted :+ c.events.size).distinct
+    val evBatches = bounds.zip(bounds.tail).map { case (a, b) =>
+      c.events.slice(a, b).map(t => CtrlSessEvent(1L, new java.sql.Timestamp(t / 1000), t, 0)) }
+    val batches = evBatches.patch(c.at, Seq(Seq(CtrlSessEvent(1L,
+      new java.sql.Timestamp(c.reqUs / 1000), c.reqUs, 1))), 0)
+    var st: Option[OpenSessionE] = None
+    var timer: Option[Long] = None
+    var wm = 0L
+    val out = Vector.newBuilder[SessionOutE]
+    def call(rows: Seq[StreamRow], timedOut: Boolean): Unit = {
+      val gs = TestGroupState.create[OpenSessionE](st.fold(Optional.empty[OpenSessionE]())(Optional.of(_)),
+        GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wm), timedOut)
+      out ++= h(1L, rows.iterator, gs)
+      st = if (gs.exists) Some(gs.get) else None
+      timer = if (gs.getTimeoutTimestampMs.isPresent) Some(gs.getTimeoutTimestampMs.get) else None
+    }
+    def fire(): Unit = if (st.isDefined && timer.exists(_ < wm)) call(Nil, timedOut = true)
+    batches.foreach { b =>
+      call(b, timedOut = false)
+      wm = math.max(wm, b.filter(_.kind == 0).map(_.ts_us / 1000).maxOption.getOrElse(0L))
+      fire()
+    }
+    wm = Long.MaxValue / 2
+    fire()
+    (out.result(), st.isDefined)
+  }
+
+  property("q134 flushes every session when a request arrives alone in its batch") = {
+    val h = SessionHandler("q134", Retire.Flush, Erase.Control)
+    forAll(genLate) { c =>
+      val (out, left) = replayFlush(h, c)
+      val got = out.filter(_.n_events > 0).map(o => (o.n_events, o.start_us, o.end_us)).sortBy(_._2)
+      val split = c.events.foldLeft(Vector.empty[Vector[Long]]) { (acc, t) =>
+        if (acc.nonEmpty && t - acc.last.last <= queries.SessGapUs) acc.init :+ (acc.last :+ t)
+        else acc :+ Vector(t)
+      }
+      val want = split.map(s => (s.size.toLong, s.head, s.last))
+      val ok = got == want && out.count(_.n_events == 0) == 1 && !left
+      if (!ok) println(s"q134: $c -> $out (state left: $left), want $want")
+      ok
     }
   }
 

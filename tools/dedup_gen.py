@@ -134,7 +134,7 @@ if __name__ == "__main__":
     # Optional third arg spaces the dup structure out: every
     # `clusterEvery`-th 4-doc group is a near-dup cluster (default 8,
     # ~19% of docs in candidate pairs; 128 gives the ~1% candidate
-    # density a production corpus shows — the ProfQ51 sparse A/B).
+    # density a production corpus shows — the q51 sparse-verify A/B).
     # Optional fourth arg plants bridge families every `bridgeEvery`
     # groups (default 0 = off, historical corpus unchanged).
     main(sys.argv[1], int(sys.argv[2]),

@@ -151,10 +151,15 @@ object Q53Bench {
       // the columnar cache build competes with the signature
       // aggregation for execution memory at 1M docs (measured: the
       // cached form AGGREGATE_OOMs even at 28g/16 threads).
-      val (nb, nr) = q94Bands.getOrElse(
-        (queries.DedupOps.Bands94, queries.DedupOps.RowsPerBand94))
+      // q94's banding front-end without the verify hash sets (the
+      // expensive half, never read here); other (bands, rows) simulate
+      // a re-parameterized sketch over the same universal-hash family.
+      val g94 = queries.DedupOps.Grams94
+      val (nb, nr) = q94Bands.getOrElse((g94.bands, g94.rows))
+      val mh = queries.Lsh.MinHash(g94.gram, nb, nr)
       val bandedPath = java.nio.file.Files.createTempDirectory("q94attrib_").toString
-      queries.DedupOps.q94Banded(spark, dir, nb, nr)
+      mh.banded(mh.sigOf(queries.t(spark, dir, "documents")
+          .repartition(spark.sparkContext.defaultParallelism), sets = false))
         .write.mode("overwrite").parquet(bandedPath)
       val banded = spark.read.parquet(bandedPath)
       val dbg = sys.env.contains("GRAFT_ATTRIB_DEBUG")
