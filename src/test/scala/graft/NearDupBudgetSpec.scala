@@ -10,12 +10,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-/** Structure budget of the near-dup family: the Spark actions (SQL
+/** Structure budget of the near-dup family and of the default census
+  * subset (the composed pipeline q87, the erasure q125, the stream
+  * q130 and the epoch queries q140, q145, q146): the Spark actions (SQL
   * executions), jobs and shuffle exchanges that each query's prepare
   * hook and body run at sf0.001, counted by listeners. The near-dup
-  * operators share one LSH core, so a change to a signature, candidate
-  * rule or verify reaches many plans at once; an extra action or
-  * shuffle anywhere in the family fails here instead of only showing
+  * operators share one LSH core and every query shares one cache
+  * primitive, so a change to either reaches many plans at once; an
+  * extra action or shuffle anywhere fails here instead of only showing
   * up as a slower benchmark.
   *
   * Each query runs once to warm the session (memos, stores, codegen),
@@ -88,9 +90,12 @@ class NearDupBudgetSpec extends AnyFunSuite {
     }
   }
 
-  /** Budgets per query, (prepare, body), as measured on the plans
-    * before the near-dup operators were rebuilt on one LSH core. A
-    * query without a prepare hook has a zero prepare cost. */
+  /** Budgets per query, (prepare, body): the near-dup queries as
+    * measured before their operators were rebuilt on one LSH core,
+    * and the composed pipeline (q87), the erasure, stream and epoch
+    * queries (q125, q130, q140, q145, q146) as measured before the
+    * cache variants were folded into one `Scratch.scoped`. A query
+    * without a prepare hook has a zero prepare cost. */
   private val Budgets: Seq[(String, Cost, Cost)] = Seq(
     ("q51_minhash_lsh", Cost(0, 0, 0), Cost(1, 12, 9)),
     ("q88_minhash_lsh_capped", Cost(0, 0, 0), Cost(1, 12, 9)),
@@ -99,7 +104,13 @@ class NearDupBudgetSpec extends AnyFunSuite {
     ("q101_index_merge", Cost(1, 5, 3), Cost(1, 7, 8)),
     ("q116_index_remove", Cost(3, 7, 4), Cost(1, 8, 4)),
     ("q124_capped_cluster_remove", Cost(11, 30, 28), Cost(5, 33, 8)),
-    ("q148_ingest_epoch_chain", Cost(2, 8, 4), Cost(1, 15, 17)))
+    ("q148_ingest_epoch_chain", Cost(2, 8, 4), Cost(1, 15, 17)),
+    ("q87_pipeline_composed", Cost(0, 0, 0), Cost(8, 32, 14)),
+    ("q125_retention_erase", Cost(4, 10, 6), Cost(1, 8, 5)),
+    ("q130_funnel_erase_requests", Cost(0, 0, 0), Cost(2, 7, 3)),
+    ("q140_maintenance_epoch", Cost(11, 30, 28), Cost(7, 71, 37)),
+    ("q145_epoch_chain", Cost(11, 30, 28), Cost(7, 70, 35)),
+    ("q146_nightly_job", Cost(19, 72, 81), Cost(9, 101, 65)))
 
   /** The budget breaches of one call, empty when it is within budget. */
   private def breaches(call: String, got: Cost, want: Cost): Seq[String] = {
