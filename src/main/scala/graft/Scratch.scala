@@ -1,96 +1,79 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftCache}
 
-/** Session-scoped registry for per-query cached intermediates.
+/** The one way a query materializes an intermediate it reads more than
+  * once: [[scoped]], freed by [[release]] or [[releaseAll]].
   *
-  * Several queries materialize mid-plan results (MinHash signatures,
-  * n-gram token tables, merged-contact outputs) that must live for the
-  * duration of ONE query's action(s) but would otherwise stay pinned in
-  * the block manager for the rest of the session — a 60-query
-  * Verify/Bench session would accumulate gigabytes of dead cache and
-  * push the driver into full GCs (ADVICE r01). Queries wrap such
-  * intermediates in [[scoped]]; the harness (Bench/Verify, tests) calls
-  * [[releaseAll]] after each query's terminal action.
+  * - **What is materialized.** `scoped(ds)` persists `ds`'s plan in the
+  *   session's shared cache and returns a Dataset whose plan is a single
+  *   leaf over that cache entry. Nothing runs at the call: the tasks of
+  *   the first action that reads the leaf store its rows as they read
+  *   them, and every later read, from any thread, reads the stored rows.
+  *   Places of one plan that read the same leaf share that fill, and no
+  *   job runs for it alone. [[fill]] stores the rows at once, for a
+  *   caller whose next step needs them stored (an accumulator it reads,
+  *   a handoff to a timed body, an input it releases) or whose next
+  *   plan should be chosen from the stored size. Analysis stops at the
+  *   leaf, so an operator that issues many actions over a deep pipeline
+  *   plans a leaf each time instead of re-analyzing the pipeline; rows
+  *   are read as Spark's internal rows (no encoder round trip), only the
+  *   columns a consumer uses. The parent session's plans that contain
+  *   `ds`'s plan read the entry too.
+  * - **What consumers see.** The leaf reports the stored plan's output
+  *   partitioning: a `repartition(col)` or an aggregate inside `ds`
+  *   hash-partitions the stored rows, and a consumer that groups or
+  *   joins on that key plans no exchange of its own. For an adaptive
+  *   entry the stored plan's own shuffles run when a plan that reads the
+  *   leaf is planned (a consumer's action, or the `scoped` of a Dataset
+  *   built on it), so its partitioning is known then. The planner sees
+  *   the stored size once the entry is filled, Spark's estimate before.
+  * - **How the partition count is chosen.** With `adaptive = true` the
+  *   entry's plan compiles with adaptive execution, so its shuffles
+  *   coalesce by the bytes they measure when they run: a batch-bounded
+  *   relation (a removal set, a cohort slice, retention cells) stops
+  *   fanning every later stage out to one near-empty task per core,
+  *   while a large relation keeps its width. With the default `false`
+  *   the entry keeps the session's fixed shuffle width; that is for
+  *   relations that are small in bytes but feed compute-dense stages
+  *   (n-gram and pair-scoring caches), which byte coalescing would
+  *   squeeze onto one task. The setting goes on a clone of the session
+  *   that builds only this entry, so the caller's session conf is never
+  *   written, however many threads cache at once.
+  * - **When blocks are freed.** The harness (Bench, Verify, the specs,
+  *   the stage mains) calls [[releaseAll]] after each query's terminal
+  *   action; [[release]] frees one entry early (a round of an iterative
+  *   operator). Freeing is non-blocking. A released leaf is still a
+  *   valid Dataset: a later read recomputes its plan once and keeps the
+  *   recomputed blocks until the leaf itself is garbage-collected.
+  *
+  * Scoping a Dataset that already is a leaf returns it unchanged. The
+  * first `scoped` on a session adds the leaf's planning strategy to that
+  * session (once); it writes no conf.
   */
 object Scratch {
-  private val live = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+  /** Live leaves and the persisted Dataset behind each. */
+  private val live = new java.util.concurrent.ConcurrentHashMap[Dataset[_], Dataset[_]]()
 
-  /** Persist `ds` (compressed columnar cache) and register it for
-    * release after the current query completes. */
-  def scoped[T](ds: Dataset[T]): Dataset[T] = {
-    val p = ds.persist()
-    live.add(p)
-    p
-  }
-
-  /** [[scoped]] with SIZE-ADAPTIVE partitioning (r21 optimization,
-    * guide §2.2 "fewer, larger partitions" / §5): the cached plan is
-    * compiled WITH AQE (Spark caches plans without AQE by default —
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`), so
-    * its internal exchanges AND its stored partitioning coalesce by
-    * measured BYTES instead of inheriting the session's CPU-count
-    * shuffle width. A batch-bounded relation (removal set, cohort
-    * slice, retention cells) stops fanning every downstream stage out
-    * to 32 near-empty tasks, while a relation that is actually large
-    * keeps its parallelism — the decision is data-driven at run time,
-    * so it scales from sf0.001 to a 100 TB corpus unchanged.
-    *
-    * Deliberately OPT-IN per call site rather than session-wide: for
-    * caches whose bytes are small but whose downstream work is
-    * CPU-dense (q53's gram tables, q64/q72's pair stages), byte-based
-    * coalescing serializes real compute (measured: q53 1.9 → 4.4 s
-    * with the conf session-wide, the round-6 regression shape), so
-    * those keep the plain [[scoped]]/[[fenced]] forms. The shared
-    * minhash and simhash signature caches (`sigBanded`,
-    * `ngramMinhashPairs`, `simhash64Pairs`) do use this form: sized,
-    * q51/q73/q88/q94 ran 5× fewer tasks at flat-to-better walls.
-    * The conf is captured at persist() time (CacheManager snapshots
-    * the session config when the cache entry is created), so the
-    * temporary set-and-restore binds only this relation. */
-  def sized[T](ds: Dataset[T]): Dataset[T] = {
-    val s = ds.sparkSession
-    val k = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val old = s.conf.getOption(k)
-    s.conf.set(k, "true")
-    try scoped(ds) finally old match {
-      case Some(v) => s.conf.set(k, v)
-      case None => s.conf.unset(k)
+  /** `ds` materialized once on first read, as a leaf over its cache
+    * entry; see the object scaladoc for the rule. */
+  def scoped[T](ds: Dataset[T], adaptive: Boolean = false): Dataset[T] =
+    GraftCache.persist(ds, adaptive) match {
+      case Some((leaf, held)) => live.put(leaf, held); leaf
+      case None => ds
     }
-  }
 
-  /** [[fenced]] over a [[sized]] cache — the plan fence (single RDD
-    * leaf, see [[fenced]]) with the size-adaptive partition count. */
-  def sizedFenced(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cached = sized(df)
-    cached.sparkSession.createDataFrame(cached.rdd, cached.schema)
-  }
+  /** Store now the rows of the leaves `ds` reads (`ds` itself, or a
+    * projection of leaves), in one job per leaf that reads no row back;
+    * a leaf already stored costs nothing. */
+  def fill(ds: Dataset[_]): Unit = GraftCache.fill(ds)
 
-  /** [[scoped]] plus a PLAN FENCE: returns a fresh DataFrame whose
-    * logical plan is a single RDD leaf over the cached result.
-    * Caching truncates EXECUTION but not ANALYSIS — an operator that
-    * issues many actions over a deep pipeline (the iterative
-    * connected-components machinery, multi-pass merges) re-analyzes
-    * the full upstream plan on every action, pure driver-side cost
-    * that grows with pipeline depth. Measured on q124's merge stage:
-    * ~12 s of planning over EMPTY cached relations at sf0.1, ~3 s
-    * fenced. The RDD executes the cached query, so each downstream
-    * action pays one cache read and a leaf-sized plan. Row-encoder
-    * round-trip applies — use only where the relation is modest
-    * (assignments, pair lists, bucket tables), not on corpus-wide hot
-    * paths. */
-  def fenced(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val cached = scoped(df)
-    cached.sparkSession.createDataFrame(cached.rdd, cached.schema)
-  }
+  /** Free the entry behind a leaf [[scoped]] returned, before the
+    * query ends. Unknown or already released leaves are ignored. */
+  def release(ds: Dataset[_]): Unit =
+    Option(live.remove(ds)).foreach(held =>
+      try held.unpersist(blocking = false) catch { case _: Throwable => () })
 
-  /** Unpersist every scoped intermediate registered since the last
-    * call. Non-blocking: block eviction proceeds asynchronously. */
-  def releaseAll(): Unit = {
-    var d = live.poll()
-    while (d != null) {
-      try d.unpersist(blocking = false) catch { case _: Throwable => () }
-      d = live.poll()
-    }
-  }
+  /** Free every entry scoped since the last call. */
+  def releaseAll(): Unit = live.keySet.forEach(release(_))
 }

@@ -24,15 +24,14 @@ object ConsolidateMain {
       gmailCsv = Some(gmailCsv).filter(_.nonEmpty),
       macVcf = Some(macVcf).filter(_.nonEmpty),
       outDir = Some(outDir)), yamlText)
-    // localCheckpoint: the parsed sources feed normalize AND the raw
-    // side of the merge join — materialize the (expensive) multi-format
-    // parse once instead of re-running it per consumer. Lazy: the first
-    // job that reads it is dedupeAndMerge's eager checkpoint of the
-    // normalized rows, which then fills both in one job, not two.
-    val raw = Sources.loadAll(spark,
+    // Scoped: the parsed sources feed normalize AND the raw side of
+    // the merge join — materialize the (expensive) multi-format parse
+    // once instead of re-running it per consumer. The first job that
+    // reads it fills it.
+    val raw = graft.Scratch.scoped(Sources.loadAll(spark,
       resolved.inputs("linkedin_csv").getOrElse(""),
       resolved.inputs("gmail_csv").getOrElse(""),
-      resolved.inputs("mac_vcf").getOrElse("")).localCheckpoint(eager = false)
+      resolved.inputs("mac_vcf").getOrElse("")), adaptive = true)
     val normalized = Pipeline.normalize(raw, resolved.normalization)
     val (merged, lineage) = Pipeline.dedupeAndMerge(normalized, raw, resolved.dedupe)
     try

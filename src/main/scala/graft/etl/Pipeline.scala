@@ -147,11 +147,11 @@ object Pipeline {
     // ---- ONE materialization for the whole pair stage -----------------
     // toMatchRec plus BOTH collapse windows (signature min for the
     // name-key representative, clique min for the chain roots)
-    // materialize in a single eager localCheckpoint: it truncates the
-    // logical plan (downstream actions stop re-analyzing the normalize
-    // lineage — at this plan size Catalyst analysis was half the
-    // stage's cold wall-clock), the accumulator probe rides the same
-    // job, and AQE's post-shuffle coalescing sizes the cached
+    // materialize in a single adaptive scoped cache, filled at once:
+    // the leaf truncates the logical plan (downstream actions stop
+    // re-analyzing the normalize lineage — at this plan size Catalyst
+    // analysis was half the stage's cold wall-clock), the accumulator
+    // probe rides the fill job, and byte coalescing sizes the cached
     // partition count to the DATA (a small corpus collapses to a
     // handful of partitions, so every downstream stage schedules
     // proportionally few tasks; a large corpus keeps full
@@ -161,14 +161,15 @@ object Pipeline {
     // second full-width shuffle for identical results.
     val wSig = org.apache.spark.sql.expressions.Window.partitionBy(sigCol)
     val wCq = org.apache.spark.sql.expressions.Window.partitionBy(cliqueKey)
-    val slimR = (if (cliquesOn)
+    val slimR = graft.Scratch.scoped(if (cliquesOn)
         slim0.toDF()
           .withColumn("__sigmin", min(col("row_id")).over(wSig))
           .withColumn("__cqroot",
             when(coreRow, min(col("row_id")).over(wCq)).otherwise(col("row_id")))
       else slim0.toDF()
         .withColumn("__sigmin", col("row_id"))
-        .withColumn("__cqroot", col("row_id"))).localCheckpoint(true)
+        .withColumn("__cqroot", col("row_id")), adaptive = true)
+    graft.Scratch.fill(slimR)
 
     // Per-row clique id: the clique key for collapsible rows, a unique
     // per-row sentinel otherwise (never equal across rows -- the rid
@@ -346,9 +347,8 @@ object Pipeline {
         // subtree (no exchange reuse across a broadcast boundary —
         // the duplicated subtree was a third of the stage's wall on a
         // warm run).
-        val gen = keyTable(concat(
-          filter(nameStructs, _ => col("__rep")), chanStructs))
-          .localCheckpoint(true)
+        val gen = graft.Scratch.scoped(keyTable(concat(
+          filter(nameStructs, _ => col("__rep")), chanStructs)), adaptive = true)
         withSides(keyJoin(gen, gen)
           .select(col("x.row_id").as("src"), col("y.row_id").as("dst"))
           .distinct())
@@ -364,8 +364,8 @@ object Pipeline {
         // already bounds any mega-key's join volume.
         // Materialized once — consumed THREE times here (the eligible
         // aggregate plus both self-join sides).
-        val keys = keyTable(concat(nameStructs, chanStructs))
-          .localCheckpoint(true)
+        val keys = graft.Scratch.scoped(
+          keyTable(concat(nameStructs, chanStructs)), adaptive = true)
         val eligible = keys.groupBy(col("block"), col("kt"), col("k"))
           .agg(count(lit(1)).as("kdf"))
           .where(col("kdf") <= cap)
@@ -376,7 +376,7 @@ object Pipeline {
           .distinct())
     }
 
-    // One cheap probe on the checkpointed slim table decides the plan
+    // One cheap probe on the filled slim table decides the plan
     // SHAPE: a corpus whose every row is native (the overwhelming
     // case) gets a single-consumer, single-branch plan — no pair-table
     // cache, no typed-remainder subtree to analyze or execute. Only
@@ -551,12 +551,13 @@ object Pipeline {
     // (measured: q93's cluster phase paid the full q91 build per
     // action until this guard, round 9).
     val preCached = edges.storageLevel != StorageLevel.NONE
-    val edgesP = if (preCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesP = if (preCached) edges else graft.Scratch.scoped(edges)
+    def releaseEdges(): Unit = if (edgesP ne edges) graft.Scratch.release(edgesP)
     val edgeCount = edgesP.count()
 
     if (edgeCount <= ContractionMinEdges) {
       val collected = edgesP.collect()
-      if (!preCached) edgesP.unpersist()
+      releaseEdges()
       val find = unionFind(collected.iterator.map(e => (e.src, e.dst)))
       val labels = collected.iterator.flatMap(e => Iterator(e.src, e.dst))
         .toSet.iterator.map((v: Long) => v -> find(v)).toSeq
@@ -572,7 +573,7 @@ object Pipeline {
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
     try contractionComponents(vertexIds, edgesP)
-    finally { if (!preCached) edgesP.unpersist() }
+    finally releaseEdges()
   }
 
   /** Driver union-find with path compression over an edge iterator. */
@@ -591,16 +592,6 @@ object Pipeline {
     }
     find
   }
-
-  /** Release the materialized RDD blocks behind a `localCheckpoint`ed
-    * plan. `Dataset.unpersist` only clears CacheManager entries, not
-    * checkpoint blocks — those normally live until the plan is GC'd. */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** When a contraction round shrinks the quotient edge count by less
     * than this factor, the graph is shrink-resistant (a long path: the
@@ -633,15 +624,15 @@ object Pipeline {
     * The final labeling composes the per-round maps outward from the
     * original vertex ids (each map is vertex-scale of a strictly
     * smaller graph), is materialized once, and every intermediate
-    * checkpoint is released before returning — nothing stays pinned
-    * for the caller's session. */
+    * cache is released before returning — nothing stays pinned for
+    * the caller's session. */
   private[graft] def contractionComponents(vertexIds: Dataset[java.lang.Long],
       edges: Dataset[Edge],
       maxDriverEdges: Long = DriverUnionFindMaxEdges): DataFrame = {
     val spark = vertexIds.sparkSession
     import spark.implicits._
     var g: DataFrame = edges.select(col("src"), col("dst"))
-    var gOwned: Option[DataFrame] = None // checkpointed quotient we created
+    var gOwned: Option[DataFrame] = None // cached quotient we created
     var prevEdges = Long.MaxValue
     var maps = List.empty[DataFrame] // innermost (latest) first: (id, lab)
     var done = false
@@ -649,27 +640,27 @@ object Pipeline {
     while (!done && rounds < 50) {
       val sym = g.select(col("src").as("id"), col("dst").as("nb"))
         .union(g.select(col("dst").as("id"), col("src").as("nb")))
-      val l = sym.groupBy(col("id"))
+      val l = graft.Scratch.scoped(sym.groupBy(col("id"))
         .agg(min(col("nb")).as("nmin"))
-        .select(col("id"), least(col("id"), col("nmin")).as("lab"))
-        .localCheckpoint(true)
+        .select(col("id"), least(col("id"), col("nmin")).as("lab")), adaptive = true)
       maps ::= l
-      val q = g
+      val q = graft.Scratch.scoped(g
         .join(l.select(col("id").as("src"), col("lab").as("ls")), "src")
         .join(l.select(col("id").as("dst"), col("lab").as("ld")), "dst")
         .select(least(col("ls"), col("ld")).as("src"),
           greatest(col("ls"), col("ld")).as("dst"))
         .where(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), adaptive = true)
+      // The count fills q (and l, which q reads), so the previous
+      // round's quotient can go.
       val qc = q.count()
-      gOwned.foreach(releaseLocalCheckpoint)
+      gOwned.foreach(graft.Scratch.release)
       if (qc == 0) {
-        releaseLocalCheckpoint(q)
+        graft.Scratch.release(q)
         done = true
       } else if (qc <= maxDriverEdges) {
         val quotient = q.as[(Long, Long)].collect()
-        releaseLocalCheckpoint(q)
+        graft.Scratch.release(q)
         val find = unionFind(quotient.iterator)
         val roots = quotient.iterator.flatMap(e => Iterator(e._1, e._2))
           .toSet.iterator.map((lb: Long) => (lb, find(lb))).toSeq
@@ -686,7 +677,7 @@ object Pipeline {
         val jumped = distributedComponents(qVerts, q.as[Edge])
           .select(col("id"), col("comp").as("lab"))
         maps ::= jumped
-        releaseLocalCheckpoint(q)
+        graft.Scratch.release(q)
         done = true
       } else {
         g = q
@@ -704,8 +695,9 @@ object Pipeline {
       out = out.join(mm, out("comp") === mm("mid"), "left")
         .select(out("id"), coalesce(col("mlab"), out("comp")).as("comp"))
     }
-    val result = out.localCheckpoint(true)
-    maps.foreach(releaseLocalCheckpoint)
+    val result = graft.Scratch.scoped(out, adaptive = true)
+    graft.Scratch.fill(result)
+    maps.foreach(graft.Scratch.release)
     result
   }
 
@@ -747,8 +739,8 @@ object Pipeline {
     * A round chains TWO large-stars (re-symmetrized in-pass via
     * explode, so nothing re-executes) into one small-star and
     * materializes once: three exchanges per round for a 4× depth
-    * reduction on path graphs. Change detection rides the checkpoint
-    * materialization as accumulators — over-count on task retry is
+    * reduction on path graphs. Change detection rides the cache fill
+    * as accumulators — over-count on task retry is
     * harmless in the == 0 direction, and the flag UDFs are
     * nondeterministic so Catalyst cannot collapse or duplicate the
     * side effect. Measured on 64×15.6k-hop chains (1M edges,
@@ -768,10 +760,9 @@ object Pipeline {
     // duplicate input edges for free (collect_set), so a dedicated
     // distinct exchange here would only lower round 1's input volume
     // at the price of a full extra shuffle of the whole edge set.
-    var g = edges.select(least(col("src"), col("dst")).as("src"),
+    var g = graft.Scratch.scoped(edges.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+      .where(col("src") =!= col("dst")), adaptive = true)
     var converged = false
     var rounds = 0
     val debug = sys.env.contains("GRAFT_CC_DEBUG")
@@ -783,7 +774,7 @@ object Pipeline {
       // output is canonical by construction and never a self-loop.
       // NOT materialized — it feeds straight into small-star below,
       // so the whole round is ONE Spark job (the per-round fixed
-      // cost of an extra checkpoint job dominated the data cost on
+      // cost of an extra fill job dominated the data cost on
       // high-diameter graphs, where O(log d) rounds stack up).
       // One large-star application over a SYMMETRIC (u, v) edge view:
       // emits the canonical (m, v) per original edge. Chainable
@@ -822,14 +813,15 @@ object Pipeline {
       // own, so a full round is exactly TWO exchanges (window by u,
       // group by dst). Per-group state mirrors the Kiveris small-star
       // reducer's input (the smaller-neighbor set, degree-bounded).
-      val ss = ls.groupBy(col("dst"))
+      val ss = graft.Scratch.scoped(ls.groupBy(col("dst"))
         .agg(min(col("src")).as("m"), collect_set(col("src")).as("srcs"))
         .select(col("m"), col("dst"), explode(col("srcs")).as("s"))
         .select(col("m").as("src"),
           when(col("s") === col("m"), col("dst"))
-            .otherwise(ssFlag(col("s"))).as("dst"))
-        .localCheckpoint(true)
-      releaseLocalCheckpoint(g)
+            .otherwise(ssFlag(col("s"))).as("dst")), adaptive = true)
+      // The fill runs the round and updates both accumulators.
+      graft.Scratch.fill(ss)
+      graft.Scratch.release(g)
       g = ss
       converged = lsAcc.value == 0L && ssAcc.value == 0L
       rounds += 1
@@ -842,11 +834,11 @@ object Pipeline {
     // Star forest → labels: leaves take their center, centers and
     // isolated vertices keep their own id.
     val stars = g.select(col("dst").as("id"), col("src").as("comp"))
-    val result = vertexIds.toDF("id")
+    val result = graft.Scratch.scoped(vertexIds.toDF("id")
       .join(stars, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      .localCheckpoint(true)
-    releaseLocalCheckpoint(g)
+      .select(col("id"), coalesce(col("comp"), col("id")).as("comp")), adaptive = true)
+    graft.Scratch.fill(result)
+    graft.Scratch.release(g)
     result
   }
 
@@ -857,13 +849,9 @@ object Pipeline {
       : (Dataset[MergedContact], Dataset[Lineage]) = {
     val spark = normalized.sparkSession
     import spark.implicits._
-    // See the localCheckpoint note in acceptedPairs: materialize +
-    // truncate lineage once; three downstream consumers. Skip when the
-    // caller already handed us a checkpointed/materialized plan.
-    val normPersisted = normalized.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => normalized
-      case _ => normalized.localCheckpoint(true)
-    }
+    // Materialize + truncate lineage once (the acceptedPairs note);
+    // three downstream consumers. A caller's scoped leaf is used as it is.
+    val normPersisted = graft.Scratch.scoped(normalized, adaptive = true)
     val edges = acceptedPairs(normPersisted, cfg)
     val comps = connectedComponents(
       normPersisted.select(col("row_id").as[java.lang.Long]), edges)
@@ -931,17 +919,14 @@ object Pipeline {
     splitMerged(graft.Scratch.scoped(tupled))
   }
 
-  /** Shared dedupe front half: normalize-side checkpoint, accepted
+  /** Shared dedupe front half: normalize-side cache, accepted
     * pairs, connected components, members grouped by component. */
   private def dedupedClusters(normalized: Dataset[Contact],
       cfg: ContactLogic.DedupeConfig)
       : org.apache.spark.sql.KeyValueGroupedDataset[Long, (Contact, Long)] = {
     val spark = normalized.sparkSession
     import spark.implicits._
-    val normPersisted = normalized.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => normalized
-      case _ => normalized.localCheckpoint(true)
-    }
+    val normPersisted = graft.Scratch.scoped(normalized, adaptive = true)
     val edges = acceptedPairs(normPersisted, cfg)
     val comps = connectedComponents(
       normPersisted.select(col("row_id").as[java.lang.Long]), edges)

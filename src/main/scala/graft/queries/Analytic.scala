@@ -713,7 +713,7 @@ object Analytic {
     * progression, pre-anchor click discarded on both paths, batch-only
     * user, out-of-order batch) on crafted event logs. */
   /** q119's standing artifact — the pre-cutoff per-user funnel states,
-    * fenced and materialized for the prepare handoff (a deployment
+    * materialized for the prepare handoff (a deployment
     * reads the stored state table; the timed body is the batch
     * merge). Built inline when unprepared. */
   private def q119Arts(s: org.apache.spark.sql.SparkSession,
@@ -721,7 +721,7 @@ object Analytic {
     // Persisted user-bucketed STORE (r16 VERDICT task 4): the merge's
     // full-outer joins key on user_id, so the standing side's scan
     // carries the hash distribution and contributes zero exchange —
-    // the fold shuffles only the batch aggregates (ExplainR17 audit).
+    // the fold shuffles only the batch aggregates (r17 plan audit).
     bucketedStore(s, dir, "funstates_pre", "user_id")(funnelStates(
       t(s, dir, "events").where(col("ts") < lit(AnalyticCutoff).cast("timestamp"))))
 
@@ -776,7 +776,7 @@ object Analytic {
     * days²-bounded, broadcast onto the batch's distinct pairs, and a
     * violating row raise_error()s in-plan — no extra action. */
   private[graft] def mergeRetention(f: DataFrame, cells: DataFrame,
-      batch: DataFrame, eagerNd: Boolean = false): (DataFrame, DataFrame) = {
+      batch: DataFrame): (DataFrame, DataFrame) = {
     val maxDay = cells.agg(
       max(date_add(col("cohort_day"), col("day_offset").cast("int"))).as("_max_day"))
     // Scratch-scoped (r20 optimization): nd feeds BOTH the first-seen
@@ -794,7 +794,7 @@ object Analytic {
     // each consumer re-exchanged the cached batch. Per-user day
     // counts are bounded by the window's day span, so the narrower
     // key cannot skew. Rows are unchanged.
-    val nd = graft.Scratch.sized(
+    val nd = graft.Scratch.scoped(
       batch.select(col("user_id"), to_date(col("ts")).as("day"))
       .repartition(col("user_id")).distinct()
       .crossJoin(broadcast(maxDay))
@@ -804,16 +804,7 @@ object Analytic {
           col("day").cast("string"),
           lit(" does not postdate the standing activity (max day "),
           col("_max_day").cast("string"), lit(")"))))
-          .otherwise(col("day")).as("day")))
-    // Eager materialization on request (r21 — behavioralEpoch's cohort
-    // note: an unmaterialized AQE cache reports UnknownPartitioning,
-    // so both consumers re-exchange; built, they elide — measured −4
-    // jobs on q140's composed plan). Default lazy: q120/q142's flat
-    // two-consumer shape showed no change (13 jobs / 44 tasks either
-    // way), and a caller whose fold may go unconsumed (q145 epoch 1
-    // recurring) must not force it. The guard evaluates at
-    // materialization on both paths; only WHEN the build runs moves.
-    if (eagerNd) nd.count(): Unit
+          .otherwise(col("day")).as("day")), adaptive = true)
     val fNew = f.join(
         nd.groupBy(col("user_id")).agg(min(col("day")).as("bday")),
         Seq("user_id"), "full")
@@ -1042,9 +1033,9 @@ object Analytic {
   private def q125Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (f0, c0) = retentionState(t(s, dir, "events"))
-    val f = graft.Scratch.sizedFenced(f0)
-    val cells = graft.Scratch.sizedFenced(c0)
-    f.count(); cells.count()
+    val f = graft.Scratch.scoped(f0, adaptive = true)
+    val cells = graft.Scratch.scoped(c0, adaptive = true)
+    graft.Scratch.fill(f); graft.Scratch.fill(cells)
     (f, cells)
   }
 
@@ -1085,8 +1076,8 @@ object Analytic {
     * (q125's prepare note applies). */
   private def q126Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val st = graft.Scratch.sizedFenced(funnelStates(t(s, dir, "events")))
-    st.count()
+    val st = graft.Scratch.scoped(funnelStates(t(s, dir, "events")), adaptive = true)
+    graft.Scratch.fill(st)
     st
   }
 
@@ -1335,14 +1326,14 @@ object Analytic {
     * pattern, so the gate costs no extra pass. */
   private[graft] def dedupBatchGated(batch: DataFrame,
       standingIds: DataFrame, broadcastIdCap: Long): DataFrame = {
-    val uniq = graft.Scratch.sized(batch.dropDuplicates("event_id"))
+    val uniq = graft.Scratch.scoped(batch.dropDuplicates("event_id"), adaptive = true)
     // The RESULT is Scratch-scoped too (r20 optimization): the fold a
     // deduped batch feeds reads it more than once (mergeSessions'
     // touched-split, the funnel windows), and every unmaterialized
     // reference re-ran this device — including its corpus-sized
     // standing-store scan, the one pass the scaladoc promises is paid
     // once. Batch-bounded (it is a subset of `uniq`).
-    graft.Scratch.sized(
+    graft.Scratch.scoped(
       if (uniq.count() <= broadcastIdCap) {
         val seen = standingIds.join(broadcast(uniq.select(col("event_id"))),
           Seq("event_id"), "left_semi")
@@ -1354,7 +1345,7 @@ object Analytic {
         // shuffle, which is the batch's write amplification floor
         // anyway.
         uniq.join(standingIds, Seq("event_id"), "left_anti")
-      })
+      }, adaptive = true)
   }
 
   /** The registered q133 redelivery: every event whose
@@ -1508,7 +1499,7 @@ object Analytic {
       // inline cost the body a corpus scan per reference, and the
       // feed is broadcast into two joins here). The oracle keeps
       // the events-derived DEFINITION inline.
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
       eraseSessionsBeforeT(
         prepTake(s, dir, "prep136")(q136Arts(s, dir)), e, requests)
         .orderBy(col("user_id"), col("start_us"))
@@ -1621,12 +1612,12 @@ object Analytic {
       val (f, cells) = prepTake(s, dir, "prep137")(q137Arts(s, dir))
       // Privacy feed from its bounded store (r20 — see q136's note);
       // the oracle keeps the events-derived definition inline.
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
       // Both activity relations derive from one cohort slice (r20:
       // the [[cohortEvents]] refactor — the semi-join the old
       // fullActivity branch paid was subsumed by the inner join),
       // Scratch-scoped because fullActivity and postT both read it.
-      val cohort = graft.Scratch.sized(cohortEvents(e, requests))
+      val cohort = graft.Scratch.scoped(cohortEvents(e, requests), adaptive = true)
       val fullActivity = cohort
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val postT = cohort.where(unix_micros(col("ts")) >= col("req_us"))
@@ -1839,7 +1830,7 @@ object Analytic {
       val e = t(s, dir, "events")
       val states = prepTake(s, dir, "prep143")(q143Arts(s, dir))
       // Privacy feed from its bounded store (r20 — see q136's note).
-      val requests = graft.Scratch.sized(EpochOps.requestStore(s, dir))
+      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
       funnelReport(eraseFunnelBeforeT(states, e, requests))
     },
     // q130's VERBATIM rebuild, via the package object rather than

@@ -23,10 +23,10 @@ object ContactOps {
     * and shared by every downstream stage query — mirroring the
     * reference pipeline, where consolidate writes its artifact once
     * and validate/confidence/tag re-read it instead of recomputing
-    * (validate_quality.py:133, tag_contacts.py:119). localCheckpoint
-    * truncates the lineage so consumers stop re-analyzing (and
-    * re-running) the normalize map; blocks are cleaner-released when
-    * the session drops the reference. */
+    * (validate_quality.py:133, tag_contacts.py:119). The memo holds a
+    * Scratch leaf, so consumers stop re-analyzing (and re-running) the
+    * normalize map; after the first query's release its next read
+    * recomputes it once, and the blocks live until the memo drops it. */
   private val normMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Dataset[Contact]]()
   registerMemo(normMemo) // evicted when the owning session's context ends
@@ -40,8 +40,8 @@ object ContactOps {
     // would otherwise run as ONE task (measured 6×; the tiny-row
     // shuffle is ~free — see Pipeline.normalize's contract).
     normMemo.computeIfAbsent(s"${sessionKey(s)}:$dir",
-      _ => Pipeline.normalize(Synth.contacts(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)).localCheckpoint(true))
+      _ => graft.Scratch.scoped(Pipeline.normalize(Synth.contacts(s, dir)
+        .repartition(s.sparkContext.defaultParallelism)), adaptive = true))
 
   /** Default-config dedupe+merge output (merged contacts + lineage),
     * materialized once per (session, dir) — the same consolidate-
@@ -50,7 +50,9 @@ object ContactOps {
     * its artifacts (Makefile:55), so the engine-side equivalents
     * (q45's projection, q87's composed validate→confidence→tag) share
     * one materialization instead of re-running blocking + pair
-    * scoring + CC + cluster merge per query. Non-default configs
+    * scoring + CC + cluster merge per query: both Datasets are
+    * projections of the one scoped table
+    * [[Pipeline.dedupeContactsWithLineage]] builds. Non-default configs
     * (q72's stop-key cap) never consult the memo. */
   private val mergedMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (org.apache.spark.sql.Dataset[MergedContact],
@@ -59,8 +61,9 @@ object ContactOps {
 
   private def mergedDefault(s: SparkSession, dir: String) =
     mergedMemo.computeIfAbsent(s"${sessionKey(s)}:$dir", _ => {
-      val (m, l) = Pipeline.dedupeContactsWithLineage(normalized(s, dir))
-      (m.localCheckpoint(true), l.localCheckpoint(true))
+      val ml = Pipeline.dedupeContactsWithLineage(normalized(s, dir))
+      graft.Scratch.fill(ml._1) // the stages downstream are planned from its size
+      ml
     })
 
   // -- q40: name grammar ------------------------------------------------
@@ -305,7 +308,7 @@ object ContactOps {
       import s.implicits._
       // repartition BEFORE the regex/validation-heavy projections: the
       // corpus parquet is a single split, so the narrow map would
-      // otherwise run (and checkpoint) as ONE task — measured ~0.45 s
+      // otherwise run (and materialize) as ONE task — measured ~0.45 s
       // serial vs ~0.05 s spread across the cluster; the tiny-row
       // shuffle is ~free (same contract as Pipeline.normalize).
       val base = Synth.contacts(s, dir).toDF()
@@ -323,7 +326,7 @@ object ContactOps {
             element_at(col("addresses"), 1).getField("state"),
             element_at(col("addresses"), 1).getField("postal_code")))
             .otherwise("").as("addr_key"))
-      val withNorm = base
+      val withNorm = graft.Scratch.scoped(base
         .withColumn("last_name",
           when(col("raw_last") === "Jr", element_at(split(col("full_name_raw"), " "), -2))
             .otherwise(col("raw_last")))
@@ -337,8 +340,7 @@ object ContactOps {
             .otherwise(trim(col("email_raw"))))
         .withColumn("phone_val",
           when(phoneValidCol(e164Col(col("phone_raw"))), e164Col(col("phone_raw")))
-            .otherwise(trim(col("phone_raw"))))
-        .localCheckpoint(true)
+            .otherwise(trim(col("phone_raw")))), adaptive = true)
       val sim = lit(1.0) - levenshtein(lower(col("a_first_name")), lower(col("b_first_name")))
         .cast("double") / greatest(length(col("a_first_name")), length(col("b_first_name")))
         .cast("double")

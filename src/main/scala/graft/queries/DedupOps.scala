@@ -94,7 +94,7 @@ object DedupOps {
     * (doc, band). */
   private[graft] def sigBanded(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val sig = graft.Scratch.sized(Text.sigOf(docs(s, dir), sets = true))
+    val sig = graft.Scratch.scoped(Text.sigOf(docs(s, dir), sets = true), adaptive = true)
     (sig, Text.banded(sig))
   }
 
@@ -273,10 +273,10 @@ object DedupOps {
       n: String = "n_docs", incoming: Boolean = false): DataFrame =
     clusterRows(comps, id, n, incoming).orderBy(col(id))
 
-  /** Components of a (src, dst) pair relation — the pairs plan-fenced
-    * first, so the CC's several actions each plan one RDD leaf. */
-  private def fencedComponents(pairs: DataFrame, a: String, b: String): DataFrame =
-    componentsOf(graft.Scratch.fenced(pairs.select(col(a).as("src"), col(b).as("dst"))))
+  /** Components of a (src, dst) pair relation — the pairs scoped
+    * first, so the CC's several actions each plan one leaf. */
+  private def scopedComponents(pairs: DataFrame, a: String, b: String): DataFrame =
+    componentsOf(graft.Scratch.scoped(pairs.select(col(a).as("src"), col(b).as("dst"))))
 
   val q51 = Q(
     "q51_minhash_lsh",
@@ -298,12 +298,12 @@ object DedupOps {
   val q73 = Q(
     "q73_neardup_clusters",
     "MinHash-LSH pairs -> connected components -> canonical doc per cluster",
-    // Plan-fenced like q117's standing relations: the CC issues
+    // Scoped pairs, like q117's standing relations: the CC issues
     // several actions and each re-analyzed the minhash pipeline's
-    // plan. The r15 same-window A/B (registered 2.97/2.10 s vs fenced
-    // 2.19/1.72 s at sf0.1, both iterations in favor) settled it as a
-    // real ~15-25 % win.
-    (s, dir) => clusters(fencedComponents(minhashPairs(s, dir), "doc_a", "doc_b")),
+    // plan. The r15 same-window A/B (2.97/2.10 s unscoped vs 2.19/1.72 s
+    // behind a leaf at sf0.1, both iterations in favor) settled it as
+    // a real ~15-25 % win.
+    (s, dir) => clusters(scopedComponents(minhashPairs(s, dir), "doc_a", "doc_b")),
     // Min-label closure over the pair graph (Lsh.oClosure), asserting
     // convergence: a corpus whose pair graph had diameter > 10 makes
     // the oracle error() loudly instead of reading as a spurious
@@ -916,9 +916,8 @@ object DedupOps {
   val q93 = Q(
     "q93_embedding_scaled_clusters",
     "scaled sign-LSH cosine pairs -> connected components -> canonical vector",
-    // Plan-fenced: identical pairs->CC shape to q73, whose r15
-    // same-window A/B settled the fence as a real win.
-    (s, dir) => clusters(fencedComponents(
+    // Scoped pairs: identical pairs->CC shape to q73.
+    (s, dir) => clusters(scopedComponents(
       embeddingPairsScaled(s, dir, Q91Bands, Q91Bits, Q91Cap, Q91Threshold), "vec_a", "vec_b"),
       "canonical_vec_id", "n_vecs"),
     Some(s"""$oEmbPairsScaled,
@@ -950,7 +949,7 @@ object DedupOps {
   private[graft] def simhash64Pairs(s: org.apache.spark.sql.SparkSession,
       dir: String, bandBits: Int, maxHamming: Int, cap: Int): DataFrame = {
     val sh = Lsh.SimHash64(bandBits)
-    val base = graft.Scratch.sized(sh.sketch(docs(s, dir)))
+    val base = graft.Scratch.scoped(sh.sketch(docs(s, dir)), adaptive = true)
     Lsh.Hamming(maxHamming).pairs(base, Lsh.cappedPairs(sh.banded(base), cap))
   }
 
@@ -1030,7 +1029,7 @@ object DedupOps {
     * training set; a latency-bound deployment re-registers 8×2. */
   private[graft] def ngramMinhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String, cap: Int): DataFrame = {
-    val sig = graft.Scratch.sized(Grams94.sigOf(docs(s, dir), sets = true))
+    val sig = graft.Scratch.scoped(Grams94.sigOf(docs(s, dir), sets = true), adaptive = true)
     Lsh.Jaccard(0.5).pairs(sig, Lsh.cappedPairs(Grams94.banded(sig), cap))
   }
 
@@ -1085,7 +1084,7 @@ object DedupOps {
 
   /** The gates' standing INDEX side as a prepared artifact (r20
     * optimization — the r14 prepare device applied to the ingest-gate
-    * family): [[q96IndexSide]]'s two relations, plan-fenced and
+    * family): [[q96IndexSide]]'s two relations, scoped and
     * MATERIALIZED, so a prepared run's timed body is the RECURRING
     * gate cost — the incoming batch's signatures plus the probe —
     * not the 90 % standing index build a deployment stores between
@@ -1095,9 +1094,9 @@ object DedupOps {
   private[graft] def q96Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (keptIdx0, idxHs0) = q96IndexSide(s, dir)
-    val keptIdx = graft.Scratch.sizedFenced(keptIdx0)
-    val idxHs = graft.Scratch.sizedFenced(idxHs0)
-    keptIdx.count(); idxHs.count()
+    val keptIdx = graft.Scratch.scoped(keptIdx0, adaptive = true)
+    val idxHs = graft.Scratch.scoped(idxHs0, adaptive = true)
+    graft.Scratch.fill(keptIdx); graft.Scratch.fill(idxHs)
     (keptIdx, idxHs)
   }
 
@@ -1253,23 +1252,19 @@ object DedupOps {
     * run fires it at production density — ~90k tombstone decisions
     * across the two 2M-doc merges (THROUGHPUT.md round 11). */
   /** q101's standing artifact — the capped text index over the 90 %
-    * split, fenced and materialized (r20: the r14 prepare device; the
+    * split, scoped and materialized (r20: the r14 prepare device; the
     * timed body is the recurring batch banding + co-partitioned
     * merge, not the standing index build a deployment stores). */
   private def q101Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    // Scoped, NOT fenced (r21 optimization, guide §2.4): the fence's
-    // RDD leaf reports unknown partitioning, so mergeIndexBuckets'
-    // full-outer join re-exchanged the STANDING side — the ~90 %
-    // relation whose exchange the capped-index groupBy had already
-    // paid. The plain cache preserves HashPartitioning(band, key), so
-    // the merge co-locates on the cached layout and shuffles only the
-    // batch's banded rows (the operator's own documented scale shape).
-    // Single downstream consumer, shallow plan — the fence's
-    // re-analysis savings don't apply here.
-    val standing = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap))
-    standing.count()
+    // The cache keeps the capped-index groupBy's
+    // HashPartitioning(band, key) (r21 optimization, guide §2.4), so
+    // mergeIndexBuckets' full-outer join co-locates on the cached
+    // layout and shuffles only the batch's banded rows (the operator's
+    // own documented scale shape), not the ~90 % standing relation.
+    val standing = graft.Scratch.scoped(
+      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap), adaptive = true)
+    graft.Scratch.fill(standing)
     standing
   }
 
@@ -1323,10 +1318,10 @@ object DedupOps {
     * 90 % split (q101Arts' shape, embedding edition). */
   private def q102Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    // Scoped, not fenced — q101Arts' partitioning-preservation note.
-    val standing = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap))
-    standing.count()
+    // Scoped — q101Arts' partitioning note.
+    val standing = graft.Scratch.scoped(
+      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap), adaptive = true)
+    graft.Scratch.fill(standing)
     standing
   }
 
@@ -1450,8 +1445,8 @@ object DedupOps {
     // matches), as (src = incoming, dst = index) edges.
     val cand = Lsh.probe(banded.where(col("incoming")),
       Lsh.indexSide(idx, Q96Cap, "doc_id", "idx_doc"), "doc_id", "inc_doc", "idx_doc")
-    val matches = graft.Scratch.sized(verify.pairs(sig, cand, "doc_id", "inc_doc", "idx_doc")
-      .select(col("inc_doc").as("src"), col("idx_doc").as("dst")))
+    val matches = graft.Scratch.scoped(verify.pairs(sig, cand, "doc_id", "inc_doc", "idx_doc")
+      .select(col("inc_doc").as("src"), col("idx_doc").as("dst")), adaptive = true)
     (idxPairs, matches)
   }
 
@@ -1474,17 +1469,15 @@ object DedupOps {
   private[graft] def q105Relations(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val (idxPairs, matches) = q105Pairs(s, dir, !ingest("doc_id"), ingest("doc_id"))
-    (graft.Scratch.sized(componentsOf(idxPairs)), matches)
+    (graft.Scratch.scoped(componentsOf(idxPairs), adaptive = true), matches)
   }
 
   /** q105's standing artifacts — the stored component assignment and
-    * the ingest gate's accepted matches, fenced and materialized. */
+    * the ingest gate's accepted matches, scoped and materialized. */
   private[graft] def q105Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val (standing0, matches0) = q105Relations(s, dir)
-    val standing = graft.Scratch.sizedFenced(standing0)
-    val matches = graft.Scratch.sizedFenced(matches0)
-    standing.count(); matches.count()
+    val (standing, matches) = q105Relations(s, dir)
+    graft.Scratch.fill(standing); graft.Scratch.fill(matches)
     (standing, matches)
   }
 
@@ -1494,10 +1487,9 @@ object DedupOps {
     // Standing components + the gate's accepted matches from the
     // prepare handoff (ClusterVolBench's deployment shape: the
     // assignment is stored state, gate-match cost is q96's story);
-    // built inline when unprepared. Plan-fenced either way:
-    // mergeComponents' CC issues several actions, each otherwise
-    // re-analyzing the full gate pipeline's plan — ~1.2 s of driver
-    // planning at sf0.1.
+    // built inline when unprepared. Scoped either way: mergeComponents'
+    // CC issues several actions, each otherwise re-analyzing the full
+    // gate pipeline's plan — ~1.2 s of driver planning at sf0.1.
     (s, dir) => {
       val (standing, matches) = prepTake(s, dir, "prep105")(q105Arts(s, dir))
       clusters(mergeComponents(standing, matches), incoming = true)
@@ -1536,9 +1528,8 @@ object DedupOps {
     "q100_quality_canonical",
     "near-dup clusters keep the highest-quality member (gate-flag score, min-id tie)",
     (s, dir) => {
-      // Plan-fenced: identical pairs->CC shape to q73, whose r15
-      // same-window A/B settled the fence as a real win.
-      val comps = fencedComponents(minhashPairs(s, dir), "doc_a", "doc_b")
+      // Scoped pairs: identical pairs->CC shape to q73.
+      val comps = scopedComponents(minhashPairs(s, dir), "doc_a", "doc_b")
       val qual = CurationOps.withGateFlags(
           t(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"),
@@ -1657,14 +1648,14 @@ object DedupOps {
     * tightened caps / removal fractions where each branch provably
     * fires (census in the ProbeRemove tool). */
   /** q116's standing artifacts — the persisted banding reverse
-    * relation and the capped index built from it — fenced and
+    * relation and the capped index built from it — scoped and
     * MATERIALIZED (the count pays both caches), so a prepared run's
     * timed body is the takedown alone. */
   private def q116Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val banding = graft.Scratch.sizedFenced(bandedFor(s, dir, lit(true)))
-    val standing = graft.Scratch.sizedFenced(cappedIndexBuckets(banding, Q96Cap))
-    standing.count()
+    val banding = graft.Scratch.scoped(bandedFor(s, dir, lit(true)), adaptive = true)
+    val standing = graft.Scratch.scoped(cappedIndexBuckets(banding, Q96Cap), adaptive = true)
+    graft.Scratch.fill(standing)
     (banding, standing)
   }
 
@@ -1730,16 +1721,16 @@ object DedupOps {
     // removal batch's source scan) per consumer. All three are
     // batch/touched-bounded: the removal ids, the touched component
     // ids, and the touched components' surviving edges.
-    val rem = graft.Scratch.sized(removed.select(col("id")))
-    val touched = graft.Scratch.sized(
+    val rem = graft.Scratch.scoped(removed.select(col("id")), adaptive = true)
+    val touched = graft.Scratch.scoped(
       standing.join(rem, Seq("id"), "left_semi")
-        .select(col("comp")).distinct())
-    val survEdges = graft.Scratch.sized(pairs
+        .select(col("comp")).distinct(), adaptive = true)
+    val survEdges = graft.Scratch.scoped(pairs
       .join(standing.select(col("id").as("src"), col("comp")), Seq("src"))
       .join(touched, Seq("comp"), "left_semi")
       .join(rem.select(col("id").as("src")), Seq("src"), "left_anti")
       .join(rem.select(col("id").as("dst")), Seq("dst"), "left_anti")
-      .select(col("src"), col("dst")))
+      .select(col("src"), col("dst")), adaptive = true)
     val verts = survEdges.select(col("src")).union(survEdges.select(col("dst")))
       .distinct().as[java.lang.Long]
     val relabeled = graft.etl.Pipeline.connectedComponents(
@@ -1766,17 +1757,17 @@ object DedupOps {
     * 1,122 times at 2M docs (removing a barbell family's hub
     * disconnects its two pair-components) with zero mismatches. */
   /** q117's standing artifacts — the stored pair relation and the
-    * component assignment over it. Plan-fenced, not just cached:
-    * removeFromComponents' CC issues several actions over these
-    * relations and each re-analyzed the minhash pipeline's full
-    * plan — ~0.8 s of driver planning at sf0.1 (see Scratch.fenced).
+    * component assignment over it, scoped: removeFromComponents' CC
+    * issues several actions over these relations, and each plans a
+    * leaf instead of re-analyzing the minhash pipeline's full plan
+    * (~0.8 s of driver planning at sf0.1).
     * The count materializes both caches for the prepare handoff. */
   private def q117Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val pairs = graft.Scratch.fenced(minhashPairs(s, dir)
+    val pairs = graft.Scratch.scoped(minhashPairs(s, dir)
       .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    val standing = graft.Scratch.fenced(componentsOf(pairs))
-    standing.count()
+    val standing = graft.Scratch.scoped(componentsOf(pairs))
+    graft.Scratch.fill(standing)
     (pairs, standing)
   }
 
@@ -1818,9 +1809,9 @@ object DedupOps {
     * sign-LSH banding. */
   private def q123Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val banding = graft.Scratch.sizedFenced(embBandedFor(s, dir, lit(true)))
-    val standing = graft.Scratch.sizedFenced(cappedIndexBuckets(banding, Q91Cap))
-    standing.count()
+    val banding = graft.Scratch.scoped(embBandedFor(s, dir, lit(true)), adaptive = true)
+    val standing = graft.Scratch.scoped(cappedIndexBuckets(banding, Q91Cap), adaptive = true)
+    graft.Scratch.fill(standing)
     (banding, standing)
   }
 
@@ -1846,10 +1837,10 @@ object DedupOps {
     * recurring takedown body. */
   private[graft] def cappedClusterArtifacts(sig: DataFrame, banded: DataFrame,
       cap: Int): (DataFrame, DataFrame, DataFrame) = {
-    val idx = graft.Scratch.sized(cappedIndexBuckets(banded, cap))
-    val pairs = graft.Scratch.sized(verifiedPairs(sig, Lsh.bucketPairs(idx))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    (idx, pairs, graft.Scratch.sized(componentsOf(pairs)))
+    val idx = graft.Scratch.scoped(cappedIndexBuckets(banded, cap), adaptive = true)
+    val pairs = graft.Scratch.scoped(verifiedPairs(sig, Lsh.bucketPairs(idx))
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")), adaptive = true)
+    (idx, pairs, graft.Scratch.scoped(componentsOf(pairs), adaptive = true))
   }
 
   /** CAPPED-pipeline takedown — the composition [[q117]] documents as
@@ -1917,7 +1908,7 @@ object DedupOps {
     // Scratch-scoped: the candidate relation feeds both the broadcast
     // probe below and the verify joins — uncached, the banding
     // semi-join + self-join would run twice.
-    val revealedCand = graft.Scratch.sized(Lsh.selfJoin(mem))
+    val revealedCand = graft.Scratch.scoped(Lsh.selfJoin(mem), adaptive = true)
     // Prune the signature table to the candidate docs BEFORE the
     // verify joins (the q51 deferred-verify pattern): the candidate
     // set is batch-bounded (demoted buckets × ≤cap members), so the
@@ -1925,14 +1916,14 @@ object DedupOps {
     // the exchange — measured at 2M docs (CappedClusterVolBench,
     // THROUGHPUT r14): this prune alone cut the takedown's shuffle
     // 4.72 -> 1.9 GB; the committed 0.92 GB final row includes the
-    // plan fence below on top of it.
+    // scoped revealed pairs below on top of it.
     // Scratch-scoped (r16 ADVICE): the probe feeds BOTH the pid
     // collect below and the broadcast semi-join — uncached, the pid
     // collect evaluated the union+distinct a second time inside the
     // timed takedown body.
-    val probeIds = graft.Scratch.sized(
+    val probeIds = graft.Scratch.scoped(
       revealedCand.select(col("doc_a").as("doc_id"))
-        .union(revealedCand.select(col("doc_b").as("doc_id"))).distinct())
+        .union(revealedCand.select(col("doc_b").as("doc_id"))).distinct(), adaptive = true)
     // Scratch-scoped: verifiedPairs joins this twice (the doc_a and
     // doc_b sides), and each join re-ran the corpus-sized store scan
     // that produces it — measured at 2M docs via the r15 partitioned-
@@ -1947,7 +1938,7 @@ object DedupOps {
     // a constant-size planning action (the AQE-stats class, not a data
     // collect), and the literal IN-list becomes a static
     // PartitionFilter — a takedown whose batch has id locality reads
-    // only its neighborhood's FILES (ExplainR16 census), where the
+    // only its neighborhood's FILES (r16 census), where the
     // broadcast semi-join alone still scanned every file. A
     // hash-spread batch (the registered instance's) touches every
     // partition of any layout; its floor is the one full scan. DPP
@@ -1962,8 +1953,8 @@ object DedupOps {
     // two sides' action latencies at every register scale). The join
     // back is the Await below, before the merge consumes both.
     val rmF = scala.concurrent.Future {
-      graft.Scratch.sizedFenced(removeFromComponents(standing, pairs,
-        removed.select(col("doc_id").as("id"))))
+      graft.Scratch.scoped(removeFromComponents(standing, pairs,
+        removed.select(col("doc_id").as("id"))), adaptive = true)
     }(scala.concurrent.ExecutionContext.global)
     val pidsOpt = sigPidSize.map { w =>
       probeIds.select(floor(col("doc_id") / w).as("pid"))
@@ -1980,7 +1971,7 @@ object DedupOps {
       // is empty, i.e. this batch demoted no bucket with ≥2 survivors.
       // Then the revealed (verified ⊆ candidate) pair set is empty by
       // construction, so the verify pipeline (signature-store scan,
-      // prune, two verify joins, the fence) AND the final
+      // prune, two verify joins, the revealed cache) AND the final
       // mergeComponents would all run over provably empty relations:
       // mergeComponents(rm, ∅) contracts no edges, computes an empty
       // remap, and returns rm's rows unchanged (its left joins against
@@ -1999,17 +1990,15 @@ object DedupOps {
         case Some(pids) => sig.where(col("pid").isin(pids: _*)).drop("pid")
         case None => sig
       }
-      val sigPruned = graft.Scratch.sized(
-        sigScan.join(broadcast(probeIds), Seq("doc_id"), "left_semi"))
-      // Both inputs to the final merge are cached AND plan-fenced
-      // (Scratch.fenced): the connected-components machinery inside
-      // mergeComponents issues many actions over a deep pipeline, and
-      // with the full takedown lineage attached each action would
-      // re-ANALYZE the whole pipeline's plan — measured 12.8 s of pure
-      // driver planning over empty relations at sf0.1; fenced, each
-      // action plans a single RDD leaf.
-      val revealed = graft.Scratch.sizedFenced(verifiedPairs(sigPruned, revealedCand)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      val sigPruned = graft.Scratch.scoped(
+        sigScan.join(broadcast(probeIds), Seq("doc_id"), "left_semi"), adaptive = true)
+      // Both inputs to the final merge are scoped leaves: the
+      // connected-components machinery inside mergeComponents issues
+      // many actions, and with the full takedown lineage attached each
+      // action would re-ANALYZE the whole pipeline's plan — measured
+      // 12.8 s of pure driver planning over empty relations at sf0.1.
+      val revealed = graft.Scratch.scoped(verifiedPairs(sigPruned, revealedCand)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")), adaptive = true)
       val rm = scala.concurrent.Await.result(rmF,
         scala.concurrent.duration.Duration.Inf)
       (postIdx, survPairs.unionByName(revealed), mergeComponents(rm, revealed))
@@ -2032,11 +2021,11 @@ object DedupOps {
     * the doc_id-range-partitioned on-disk store ([[q124SigStore]], the
     * r15 CCVBPART layout made the registered layout — r15 VERDICT
     * task 3), so a range-local takedown prunes its scan to the
-    * touched partitions' files; the rest are plan-fenced caches: the
+    * touched partitions' files; the rest are scoped leaves: the
     * takedown body issues many actions (index pass, reveal probe, two
     * CC phases), and each would otherwise re-analyze the signature
-    * pipeline's full plan (see Scratch.fenced). The cascading counts
-    * materialize the caches for the prepare handoff. */
+    * pipeline's full plan. The counts materialize the caches for the
+    * prepare handoff. */
   /** Partition-count target for the q124 signature store: the CCVBPART
     * layout (r15's doc_id-range partitioning evidence), now the
     * REGISTERED prepare artifact's layout. */
@@ -2058,7 +2047,7 @@ object DedupOps {
     * q141's range derivation, so the recurring takedown bodies never
     * pay the scan — without this, q141's registered body READ MORE
     * than q124's (the max scan cost more rows than the prune saved,
-    * measured by ExplainR17's first census). */
+    * measured by the first r17 census). */
   private val maxDocIdMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   registerMemo(maxDocIdMemo)
@@ -2094,16 +2083,15 @@ object DedupOps {
   private[graft] def q124Arts(s: org.apache.spark.sql.SparkSession, dir: String,
       cap: Int = Q88Cap)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Long) = {
-    val (sig0, banded0) = sigBanded(s, dir)
-    val sig = graft.Scratch.fenced(sig0)
-    val banded = graft.Scratch.fenced(banded0)
+    val (sig, banded0) = sigBanded(s, dir)
+    val banded = graft.Scratch.scoped(banded0)
     val (idx0, pairs0, standing0) = cappedClusterArtifacts(sig, banded, cap)
-    val idx = graft.Scratch.sizedFenced(idx0)
-    val pairs = graft.Scratch.sizedFenced(pairs0)
-    val standing = graft.Scratch.sizedFenced(standing0)
-    sig.count(); banded.count(); idx.count(); pairs.count(); standing.count()
+    val idx = graft.Scratch.scoped(idx0, adaptive = true)
+    val pairs = graft.Scratch.scoped(pairs0, adaptive = true)
+    val standing = graft.Scratch.scoped(standing0, adaptive = true)
+    Seq(sig, banded, idx, pairs, standing).foreach(graft.Scratch.fill)
     // The takedown's signature relation is the PARTITIONED STORE (read
-    // back from disk, unfenced — the point is the prunable file scan),
+    // back from disk, not a cache — the point is the prunable file scan),
     // written from the already-materialized cache.
     val (store, partSize) = q124SigStore(s, dir, sig)
     (store, banded, idx, pairs, standing, partSize)
@@ -2159,7 +2147,7 @@ object DedupOps {
   }
 
   /** q141's bucket cap: tightened from q124's $Q88Cap to 2 (the
-    * CappedRemoveSpec / ExplainR16 device) so the demote→reveal→prune
+    * CappedRemoveSpec / PlanAuditSpec device) so the demote→reveal→prune
     * cascade fires NON-VACUOUSLY inside the driver-gated body at the
     * gate's sf — at cap 3 no sf bucket caps out, the probe set is
     * empty, and the store scan short-circuits on any layout (q124's
@@ -2175,7 +2163,7 @@ object DedupOps {
     * that the signature store's partition prune FIRES inside the
     * driver-gated body: demotions fire at this cap (3 at sf0.01), the
     * probe set's pids cover only the range's neighborhood, and the
-    * store scan reads a partition subset (ExplainR17 censuses
+    * store scan reads a partition subset (r17 censuses
     * recordsRead on this registered body), where q124's hash-spread
     * batch touches every partition (its documented floor). The oracle
     * is the same capped rebuild over the survivors — outside-range

@@ -124,8 +124,7 @@ object EpochOps {
     * retention cells). */
   private[graft] def behavioralEpoch(sessSt: DataFrame, funSt: DataFrame,
       retF: DataFrame, retC: DataFrame, batch: DataFrame,
-      eventStore: DataFrame, requests: DataFrame,
-      eagerCohort: Boolean = true)
+      eventStore: DataFrame, requests: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val sess1 = Analytic.mergeSessions(sessSt, batch)
     val fun1 = Analytic.mergeFunnelStates(funSt, batch)
@@ -136,10 +135,13 @@ object EpochOps {
     // re-derived the whole fold. Both relations are the family's own
     // bounded state (first-seen: one row per user; cells: days²),
     // exactly what q145 publishes as stores between epochs anyway.
-    val (retF1m, retC1m) =
-      Analytic.mergeRetention(retF, retC, batch, eagerNd = eagerCohort)
-    val retF1 = graft.Scratch.sized(retF1m)
-    val retC1 = graft.Scratch.sized(retC1m)
+    val (retF1m, retC1m) = Analytic.mergeRetention(retF, retC, batch)
+    // Fills the batch's distinct (user, day) slice both retention
+    // relations read, so they are planned from its stored size; its
+    // ingest-contract guard raises here.
+    graft.Scratch.fill(retF1m)
+    val retF1 = graft.Scratch.scoped(retF1m, adaptive = true)
+    val retC1 = graft.Scratch.scoped(retC1m, adaptive = true)
     // ONE cohort slice (r20 optimization, guide §2.4): the session
     // erase, funnel erase, and both retention activity relations all
     // consume the requested users' events — previously each derived
@@ -157,27 +159,15 @@ object EpochOps {
     // (user_id, day) grouping is clustered by user_id alone) — so
     // hashing the slice ONCE at materialization lets all four elide
     // their own exchange: 4 post-cache exchanges become 1 pre-cache
-    // exchange per epoch. Cached-plan partitioning is pinned (AQE
-    // does not re-partition cached plans), so the elision holds on
-    // every consumer. Rows are unchanged.
-    val cohort = graft.Scratch.sized(
+    // exchange per epoch. The scoped leaf reports the stored user_id
+    // partitioning, so the elision holds on every consumer. Rows are
+    // unchanged.
+    val cohort = graft.Scratch.scoped(
       Analytic.cohortEvents(eventStore, requests)
-        .repartition(col("user_id")))
-    // MATERIALIZED EAGERLY (r21, probed by ProbeCachePart): an
-    // AQE-compiled cache reports UnknownPartitioning while
-    // unmaterialized — consumers planned before the build re-exchange,
-    // silently undoing the shared-exchange device above. Once built,
-    // the InMemoryRelation exposes the final plan's (coalesced) hash
-    // partitioning and all four consumers elide their user_id
-    // exchange (q140: −5 ENSURE_REQUIREMENTS exchanges, jobs 105→101).
-    // One count over the batch-bounded slice, paid where the first
-    // consumer would have paid it anyway — EXCEPT for an epoch whose
-    // outputs may go entirely unconsumed (q145's epoch 1 on a
-    // recurring run: the publishes skip their builds, so forcing the
-    // slice would re-introduce the compute-and-discard cost the lazy
-    // e1Take device removed); such callers pass eagerCohort = false
-    // and keep the lazy form.
-    if (eagerCohort) cohort.count(): Unit
+        .repartition(col("user_id")), adaptive = true)
+    // Filled before its four consumers are planned, so their joins are
+    // chosen from its stored size.
+    graft.Scratch.fill(cohort)
     val sess2 = Analytic.eraseSessionsBeforeTFrom(sess1, cohort, requests)
     val fun2 = Analytic.eraseFunnelBeforeTFrom(fun1, cohort, requests)
     val fullAct = cohort
@@ -285,10 +275,10 @@ object EpochOps {
       (sig, banded, idx, pairs, standing, pidSize)) = arts
     // ONE batch scan (cached; all three folds consume it) and ONE
     // privacy feed (the bounded store; broadcast into every erase).
-    val batch = graft.Scratch.sized(e.where(col("ts") >= cut))
-    val requests = graft.Scratch.sized(requestStore(s, dir))
-    // The behavioral side's eager work (the cohort/nd materializing
-    // counts plus its plan analysis) and the takedown's eager CC
+    val batch = graft.Scratch.scoped(e.where(col("ts") >= cut), adaptive = true)
+    val requests = graft.Scratch.scoped(requestStore(s, dir), adaptive = true)
+    // The behavioral side's eager work (the cohort and nd fills plus
+    // its plan analysis) and the takedown's eager CC
     // action chain are data-independent until taggedEpoch, yet both
     // serialize driver-action latency — so they compose on separate
     // threads (guide §2.6, the q146 side-overlap device applied
@@ -416,22 +406,18 @@ object EpochOps {
       val (sessSt, funSt, retF, retC,
         (sig, banded, idx, pairs, standing, pidSize)) =
         prepTake(s, dir, "prep145")(q145Arts(s, dir))
-      val requests = graft.Scratch.sized(requestStore(s, dir))
+      val requests = graft.Scratch.scoped(requestStore(s, dir), adaptive = true)
       // ---- EPOCH 1: fold day 1 against the pre-cutoff stores, erase
       // the epoch-1 half of the feed (rebuilds see only the events
       // ingested so far), run the range-A takedown.
-      val day1 = graft.Scratch.sized(
-        e.where(col("ts") >= cut1 && col("ts") < cut2))
+      val day1 = graft.Scratch.scoped(
+        e.where(col("ts") >= cut1 && col("ts") < cut2), adaptive = true)
       val soFar = e.where(col("ts") < cut2)
       val req1 = requests.where(epoch1Req)
-      // eagerCohort = false: on a recurring run the publishes below
-      // skip their builds and epoch 1's outputs are never consumed —
-      // forcing its cohort slice would compute-and-discard (the lazy
-      // e1Take note); the first run's consumers pay one re-exchange
-      // each over the batch-bounded slice instead.
-      val (sessE1, funE1, retFE1, retCE1) =
-        behavioralEpoch(sessSt, funSt, retF, retC, day1, soFar, req1,
-          eagerCohort = false)
+      // Lazy like e1Take below: a recurring run's publishes skip their
+      // builds, so it never builds (or fills) epoch 1's fold.
+      lazy val (sessE1, funE1, retFE1, retCE1) =
+        behavioralEpoch(sessSt, funSt, retF, retC, day1, soFar, req1)
       val (loA, hiA) = DedupOps.q141Range(s, dir)
       val remA = t(s, dir, "documents")
         .where(col("doc_id") >= loA && col("doc_id") < hiA)
@@ -477,8 +463,8 @@ object EpochOps {
       // contract the compaction relies on, then fold-then-erase
       // against the PUBLISHED state with the epoch-2 half of the
       // feed, the full event store now visible to the rebuilds.
-      val day2 = graft.Scratch.sized(
-        registerFrontEnd(e.where(col("ts") >= cut2), regP, cut2Us))
+      val day2 = graft.Scratch.scoped(
+        registerFrontEnd(e.where(col("ts") >= cut2), regP, cut2Us), adaptive = true)
       val req2 = requests.where(!epoch1Req)
       // Epoch 2's behavioral side and its takedown overlap on separate
       // threads (guide §2.6 — the q140 body's device; the publishes
@@ -552,7 +538,7 @@ object EpochOps {
        FROM ($oracle) ${family.take(4)}"""
 
   /** The ingest epoch's standing INDEX sides — the capped text and
-    * embedding indexes over the 90 % split, fenced and materialized
+    * embedding indexes over the 90 % split, scoped and materialized
     * (r20: the r14 prepare device, applied here as q101/q102's
     * prepares are; the timed epoch body is the day's batch banding +
     * the two co-partitioned merges, not the standing index builds a
@@ -560,13 +546,13 @@ object EpochOps {
   private[graft] def q144IdxArts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     import DedupOps._
-    // Scoped, not fenced — DedupOps.q101Arts' partitioning-
-    // preservation note (the merges co-locate on the cached layout).
-    val ti = graft.Scratch.sized(
-      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap))
-    val ei = graft.Scratch.sized(
-      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap))
-    ti.count(); ei.count()
+    // DedupOps.q101Arts' partitioning note: the merges co-locate on
+    // the cached layout.
+    val ti = graft.Scratch.scoped(
+      cappedIndexBuckets(bandedFor(s, dir, !ingest("doc_id")), Q96Cap), adaptive = true)
+    val ei = graft.Scratch.scoped(
+      cappedIndexBuckets(embBandedFor(s, dir, !ingest("vec_id")), Q91Cap), adaptive = true)
+    graft.Scratch.fill(ti); graft.Scratch.fill(ei)
     (ti, ei)
   }
 
@@ -701,18 +687,18 @@ object EpochOps {
 
   /** q148's standing artifacts — the capped indexes over the
     * NEITHER-day split (q144IdxArts' shape with the chain's standing
-    * predicate), fenced and materialized untimed so the timed chain
+    * predicate), scoped and materialized untimed so the timed chain
     * body is the two days' banding + merges. */
   private def q148Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     import DedupOps._
-    // Scoped, not fenced — DedupOps.q101Arts' partitioning-
-    // preservation note (the chained merges co-locate on the layout).
-    val ti = graft.Scratch.sized(cappedIndexBuckets(
-      bandedFor(s, dir, !ingest("doc_id") && !ingest2("doc_id")), Q96Cap))
-    val ei = graft.Scratch.sized(cappedIndexBuckets(
-      embBandedFor(s, dir, !ingest("vec_id") && !ingest2("vec_id")), Q91Cap))
-    ti.count(); ei.count()
+    // DedupOps.q101Arts' partitioning note: the chained merges
+    // co-locate on the layout.
+    val ti = graft.Scratch.scoped(cappedIndexBuckets(
+      bandedFor(s, dir, !ingest("doc_id") && !ingest2("doc_id")), Q96Cap), adaptive = true)
+    val ei = graft.Scratch.scoped(cappedIndexBuckets(
+      embBandedFor(s, dir, !ingest("vec_id") && !ingest2("vec_id")), Q91Cap), adaptive = true)
+    graft.Scratch.fill(ti); graft.Scratch.fill(ei)
     (ti, ei)
   }
 
@@ -774,9 +760,9 @@ object EpochOps {
       // as a real store (r19 VERDICT task 2: the chain now runs
       // through the written-back artifact, q145's
       // chain-through-published-store shape, not an in-memory
-      // fence). The fence stays around the read-back for plan
-      // hygiene: epoch 2's closure issues several actions over it.
-      val published = graft.Scratch.fenced(
+      // cache). The read-back is scoped for plan hygiene: epoch 2's
+      // closure issues several actions over it.
+      val published = graft.Scratch.scoped(
         plainStore(s, dir, "cl_comps_ingest1")(
           DedupOps.mergeComponents(standing, day1)))
       DedupOps.clusters(DedupOps.mergeComponents(published, day2), incoming = true)

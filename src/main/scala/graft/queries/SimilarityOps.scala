@@ -386,8 +386,8 @@ object SimilarityOps {
       // plan, and concurrent broadcast jobs race past a lazy persist
       // (both sides recompute the whole Lloyd training before either
       // fills the cache — measured as a full second training pass at
-      // 2M vectors). One 16-row count() fills the cache first.
-      trained.count()
+      // 2M vectors). One fill of the 16-row cache comes first.
+      graft.Scratch.fill(trained)
       val assigned = assignedWithVec(e, trained)
         .select(col("vec_id"), col("v"), col("norm"), col("cell"))
       val probes = probeRanked(e, trained)

@@ -575,16 +575,17 @@ object StreamingOps {
   }
 
   /** A stateful query's input: the events projected by `view` (`ts`
-    * kept when `watermark`), unioned kind-tagged with the erase
-    * `requests` when given. The watermark goes on the EVENT branch
-    * only, before the union: request rows carry their instant as event
+    * kept when `watermark`, then watermarked `delay` behind), unioned
+    * kind-tagged with the erase `requests` when given. Registered
+    * queries use a 0-second delay. The watermark goes on the EVENT
+    * branch only, before the union: request rows carry their instant as event
     * time, and a privacy feed delivers requests early relative to the
     * event replay, so letting them advance the watermark would drop
     * on-time events as late. The union keeps the left branch's
     * watermark, so requests neither advance it nor get dropped by it.
     * The volume benches replay the same relation from their own paths. */
   private[graft] def streamRows[T: Encoder](events: DataFrame, requests: Option[DataFrame],
-      view: EventView, watermark: Boolean): Dataset[T] = {
+      view: EventView, watermark: Boolean, delay: String = "0 seconds"): Dataset[T] = {
     def branch(df: DataFrame, ts: Column, tsUs: Column, eventType: Column, kind: Int) =
       df.select(Seq(col("user_id")) ++ Option.when(watermark)(ts) ++ Seq(tsUs) ++
         Option.when(view != EventView.Untyped)(eventType) ++
@@ -593,7 +594,7 @@ object StreamingOps {
       else events.where(col("event_type").isin("view", "click", "purchase"))
     val ev = branch(typed, col("ts"), unix_micros(col("ts")).as("ts_us"),
       if (view == EventView.Activity) lit("activity").as("event_type") else col("event_type"), 0)
-    val marked = if (watermark) ev.withWatermark("ts", "0 seconds") else ev
+    val marked = if (watermark) ev.withWatermark("ts", delay) else ev
     requests.fold(marked)(r => marked.unionByName(branch(r,
       timestamp_micros(col("req_us")).as("ts"), col("req_us").as("ts_us"),
       lit("erase_request").as("event_type"), 1))).as[T]

@@ -524,7 +524,7 @@ class EpochSpec extends AnyFunSuite {
     def parts(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         .groupBy(_._2).values.map(_.map(_._1).sorted).toSet
-    val pub = graft.Scratch.fenced(
+    val pub = graft.Scratch.scoped(
       graft.queries.DedupOps.mergeComponents(standing, m1))
     assert(parts(pub) == Set(Seq(1L, 2L, 5L), Seq(3L, 4L, 7L)),
       "day 1 must extend both standing components (the bridge's precondition)")

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 /** Structure budget of the near-dup family and of the default census
   * subset (the composed pipeline q87, the erasure q125, the stream
@@ -24,9 +20,11 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
   * then again — prepare, then body and a `collect()` — under the
   * counters, the recurring run the benchmark times. Actions are exact;
   * jobs get one of headroom, because AQE runs each query stage as its
-  * own job and the count can move by one with stage timing; shuffle
-  * exchanges are counted over the final adaptive plans, the plans of
-  * the caches they read included, and may only fall.
+  * own job and the count can move by one with stage timing; shuffles
+  * are the shuffle map stages that ran (skipped stages excluded), and
+  * may only fall. A shuffle counts in the call whose action runs it: a
+  * cache's shuffles run once, in the action that fills it, however many
+  * plans read the cache afterwards.
   */
 class NearDupBudgetSpec extends AnyFunSuite {
   import NearDupBudgetSpec.Cost
@@ -48,13 +46,13 @@ class NearDupBudgetSpec extends AnyFunSuite {
   private val CallKey = "graft.budget.call"
   private val Marker = "marker"
 
-  /** Every job and every successful SQL execution's final plan since
-    * the last [[take]]. Jobs from the query's own worker threads (the
-    * takedown's Future) are counted too: only the marker is excluded. */
-  private class Counter extends SparkListener with QueryExecutionListener
-      with AdaptiveSparkPlanHelper {
+  /** Every job and every shuffle map stage (a stage that ran shuffle
+    * map tasks) since the last [[take]].
+    * Jobs from the query's own worker threads (the takedown's Future)
+    * are counted too: only the marker is excluded. */
+  private class Counter extends SparkListener {
     private val jobs = new ConcurrentLinkedQueue[String]()
-    private val shuffles = new ConcurrentLinkedQueue[Integer]()
+    private val shuffleStages = ConcurrentHashMap.newKeySet[Integer]()
     @volatile var drained = new CountDownLatch(1)
     @volatile private var markerJob = -1
     override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -64,16 +62,10 @@ class NearDupBudgetSpec extends AnyFunSuite {
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       if (e.jobId == markerJob) drained.countDown()
-    override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
-      shuffles.add(exchanges(qe.executedPlan))
-    /** Shuffle exchanges in `plan`, and in the plans of the caches it
-      * reads: a cache's exchanges run in the action that fills it. */
-    private def exchanges(plan: SparkPlan): Int =
-      collectWithSubqueries(plan) {
-        case _: ShuffleExchangeLike => 1
-        case c: InMemoryTableScanExec => exchanges(c.relation.cachedPlan)
-      }.sum
-    override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskType == "ShuffleMapTask" && e.stageAttemptId == 0) {
+        shuffleStages.add(e.stageId); ()
+      }
 
     /** Waits until every event before this call is delivered (a
       * marker job runs last, and the bus delivers in order), then
@@ -85,32 +77,33 @@ class NearDupBudgetSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(CallKey, null)
       assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
       val js = Iterator.continually(jobs.poll()).takeWhile(_ != null).toSeq
-      val sh = Iterator.continually(shuffles.poll()).takeWhile(_ != null).map(_.intValue).toSeq
-      Cost(js.filter(_ != "-").distinct.size, js.size, sh.sum)
+      val sh = shuffleStages.size
+      shuffleStages.clear()
+      Cost(js.filter(_ != "-").distinct.size, js.size, sh)
     }
   }
 
-  /** Budgets per query, (prepare, body): the near-dup queries as
-    * measured before their operators were rebuilt on one LSH core,
-    * and the composed pipeline (q87), the erasure, stream and epoch
-    * queries (q125, q130, q140, q145, q146) as measured before the
-    * cache variants were folded into one `Scratch.scoped`. A query
-    * without a prepare hook has a zero prepare cost. */
+  /** Budgets per query, (prepare, body), as measured once every cache
+    * variant was folded into one `Scratch.scoped`. Each count is at or
+    * below the parent's under the same counters: the near-dup queries
+    * as rebuilt on one LSH core, and the composed pipeline (q87), the
+    * erasure, stream and epoch queries (q125, q130, q140, q145, q146).
+    * A query without a prepare hook has a zero prepare cost. */
   private val Budgets: Seq[(String, Cost, Cost)] = Seq(
-    ("q51_minhash_lsh", Cost(0, 0, 0), Cost(1, 12, 9)),
-    ("q88_minhash_lsh_capped", Cost(0, 0, 0), Cost(1, 12, 9)),
-    ("q94_ngram_minhash", Cost(0, 0, 0), Cost(1, 12, 9)),
-    ("q96_incremental_dedup", Cost(4, 10, 7), Cost(1, 13, 8)),
-    ("q101_index_merge", Cost(1, 5, 3), Cost(1, 7, 8)),
-    ("q116_index_remove", Cost(3, 7, 4), Cost(1, 8, 4)),
-    ("q124_capped_cluster_remove", Cost(11, 30, 28), Cost(5, 33, 8)),
-    ("q148_ingest_epoch_chain", Cost(2, 8, 4), Cost(1, 15, 17)),
-    ("q87_pipeline_composed", Cost(0, 0, 0), Cost(8, 32, 14)),
-    ("q125_retention_erase", Cost(4, 10, 6), Cost(1, 8, 5)),
-    ("q130_funnel_erase_requests", Cost(0, 0, 0), Cost(2, 7, 3)),
-    ("q140_maintenance_epoch", Cost(11, 30, 28), Cost(7, 71, 37)),
-    ("q145_epoch_chain", Cost(11, 30, 28), Cost(7, 70, 35)),
-    ("q146_nightly_job", Cost(19, 72, 81), Cost(9, 101, 65)))
+    ("q51_minhash_lsh", Cost(0, 0, 0), Cost(1, 7, 3)),
+    ("q88_minhash_lsh_capped", Cost(0, 0, 0), Cost(1, 8, 5)),
+    ("q94_ngram_minhash", Cost(0, 0, 0), Cost(1, 8, 5)),
+    ("q96_incremental_dedup", Cost(2, 5, 3), Cost(1, 8, 3)),
+    ("q101_index_merge", Cost(1, 4, 3), Cost(1, 7, 5)),
+    ("q116_index_remove", Cost(1, 4, 3), Cost(1, 7, 3)),
+    ("q124_capped_cluster_remove", Cost(4, 13, 6), Cost(3, 19, 6)),
+    ("q148_ingest_epoch_chain", Cost(2, 6, 4), Cost(1, 15, 13)),
+    ("q87_pipeline_composed", Cost(0, 0, 0), Cost(5, 27, 12)),
+    ("q125_retention_erase", Cost(2, 6, 3), Cost(1, 8, 5)),
+    ("q130_funnel_erase_requests", Cost(0, 0, 0), Cost(2, 7, 4)),
+    ("q140_maintenance_epoch", Cost(4, 13, 6), Cost(5, 47, 22)),
+    ("q145_epoch_chain", Cost(4, 13, 6), Cost(5, 49, 23)),
+    ("q146_nightly_job", Cost(10, 38, 18), Cost(7, 73, 38)))
 
   /** The budget breaches of one call, empty when it is within budget. */
   private def breaches(call: String, got: Cost, want: Cost): Seq[String] = {
@@ -119,13 +112,12 @@ class NearDupBudgetSpec extends AnyFunSuite {
       Option.when(got.actions != want.actions)(s"$call ran ${got.actions} actions, budget ${want.actions}"),
       Option.when(got.jobs > want.jobs + 1)(s"$call ran ${got.jobs} jobs, budget ${want.jobs} + 1"),
       Option.when(got.shuffles > want.shuffles)(
-        s"$call planned ${got.shuffles} shuffle exchanges, budget ${want.shuffles}")).flatten
+        s"$call ran ${got.shuffles} shuffle stages, budget ${want.shuffles}")).flatten
   }
 
   test("the near-dup queries stay within their action, job and shuffle budgets") {
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
-    spark.listenerManager.register(counter)
     try {
       val prepares = Registry.preparesMap
       val over = Budgets.flatMap { case (name, prepBudget, bodyBudget) =>
@@ -147,15 +139,12 @@ class NearDupBudgetSpec extends AnyFunSuite {
           breaches(s"$name body", run, bodyBudget)
       }
       assert(over.isEmpty, over.mkString("; "))
-    } finally {
-      spark.listenerManager.unregister(counter)
-      spark.sparkContext.removeSparkListener(counter)
-    }
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
 
 object NearDupBudgetSpec {
-  /** (actions, jobs, shuffle exchanges) of one counted call. */
+  /** (actions, jobs, shuffle map stages) of one counted call. */
   final case class Cost(actions: Int, jobs: Int, shuffles: Int) {
     override def toString = s"$actions actions, $jobs jobs, $shuffles shuffles"
   }

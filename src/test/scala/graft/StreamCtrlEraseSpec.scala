@@ -422,12 +422,17 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
       delay: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     val chk = java.nio.file.Files.createTempDirectory("graft_cse_chk_").toString
-    val in = spark.readStream
+    val crafted = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[CtrlSessEvent]].schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(inputDir.toString)
-      .withWatermark("ts", delay)
-      .as[CtrlSessEvent]
+    // The crafted files carry both kinds; split them into the events and
+    // the request feed and rebuild the input as registered q134 does, so
+    // the watermark goes on the events only and a request is never late.
+    val in = StreamingOps.streamRows[CtrlSessEvent](
+      crafted.where(col("kind") === 0),
+      Some(crafted.where(col("kind") === 1).select(col("user_id"), col("ts_us").as("req_us"))),
+      StreamingOps.EventView.Untyped, watermark = true, delay)
     val q = in.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update(),
         org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
@@ -496,14 +501,14 @@ class StreamCtrlEraseSpec extends AnyFunSuite {
     val base = System.currentTimeMillis() - 60000
     val (s4, k) = (31L, 32L)
     // s4's post-T session [120, 125] is open when its late request
-    // (T = 100) arrives alone in the next batch (a 1-hour delay keeps
-    // it on time); k's event at 800 then pushes the watermark past the
+    // (T = 100) arrives alone in the next batch (requests are never
+    // watermarked); k's event at 800 then pushes the watermark past the
     // session's gap. The request-only call must set the flush timer
     // again, or Spark drops it and the session never leaves state.
     writeSess(inputDir, Seq(sevc(s4, 120), sevc(s4, 125)), "f0.parquet", base)
     writeSess(inputDir, Seq(sreq(s4, 100)), "f1.parquet", base + 2000)
     writeSess(inputDir, Seq(sevc(k, 800)), "f2.parquet", base + 4000)
-    val q = runSessStream(inputDir, dataDir, "1 hour")
+    val q = runSessStream(inputDir, dataDir, "0 seconds")
     val rows = spark.read.option("recursiveFileLookup", "true")
       .schema(implicitly[org.apache.spark.sql.Encoder[SessionOutE]].schema)
       .parquet(dataDir).collect()
