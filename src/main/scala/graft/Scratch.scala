@@ -7,9 +7,10 @@ import org.apache.spark.sql.{Dataset, GraftCache}
   *
   * - **What is materialized.** `scoped(ds)` persists `ds`'s plan in the
   *   session's shared cache and returns a Dataset whose plan is a single
-  *   leaf over that cache entry. Nothing runs at the call: the tasks of
-  *   the first action that reads the leaf store its rows as they read
-  *   them, and every later read, from any thread, reads the stored rows.
+  *   leaf over that cache entry. The entry's own rows are not computed
+  *   at the call: the tasks of the first action that reads the leaf
+  *   store them as they read them, and every later read, from any
+  *   thread, reads the stored rows.
   *   Places of one plan that read the same leaf share that fill, and no
   *   job runs for it alone. [[fill]] stores the rows at once, for a
   *   caller whose next step needs them stored (an accumulator it reads,
@@ -24,10 +25,12 @@ import org.apache.spark.sql.{Dataset, GraftCache}
   *   partitioning: a `repartition(col)` or an aggregate inside `ds`
   *   hash-partitions the stored rows, and a consumer that groups or
   *   joins on that key plans no exchange of its own. For an adaptive
-  *   entry the stored plan's own shuffles run when a plan that reads the
-  *   leaf is planned (a consumer's action, or the `scoped` of a Dataset
-  *   built on it), so its partitioning is known then. The planner sees
-  *   the stored size once the entry is filled, Spark's estimate before.
+  *   entry that partitioning is only known once the stored plan's own
+  *   shuffles ran, so they run when a plan that reads the leaf is
+  *   planned: a consumer's action, its `explain` or `executedPlan`, or
+  *   the `scoped` of a Dataset built on the leaf. Those are Spark jobs,
+  *   run on the planning thread. The planner sees the stored size once
+  *   the entry is filled, Spark's estimate before.
   * - **How the partition count is chosen.** With `adaptive = true` the
   *   entry's plan compiles with adaptive execution, so its shuffles
   *   coalesce by the bytes they measure when they run: a batch-bounded
@@ -37,9 +40,13 @@ import org.apache.spark.sql.{Dataset, GraftCache}
   *   the entry keeps the session's fixed shuffle width; that is for
   *   relations that are small in bytes but feed compute-dense stages
   *   (n-gram and pair-scoring caches), which byte coalescing would
-  *   squeeze onto one task. The setting goes on a clone of the session
-  *   that builds only this entry, so the caller's session conf is never
-  *   written, however many threads cache at once.
+  *   squeeze onto one task. Bytes alone cannot tell the two apart, and
+  *   a coalescing floor at the default parallelism (the one rule tried
+  *   that could) forbids the coalescing wherever the shuffle width
+  *   equals the parallelism, so the caller chooses. The setting goes on
+  *   a clone of the session that builds only this entry, so the
+  *   caller's session conf is never written, however many threads
+  *   cache at once.
   * - **When blocks are freed.** The harness (Bench, Verify, the specs,
   *   the stage mains) calls [[releaseAll]] after each query's terminal
   *   action; [[release]] frees one entry early (a round of an iterative

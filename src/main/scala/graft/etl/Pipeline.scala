@@ -349,6 +349,7 @@ object Pipeline {
         // warm run).
         val gen = graft.Scratch.scoped(keyTable(concat(
           filter(nameStructs, _ => col("__rep")), chanStructs)), adaptive = true)
+        graft.Scratch.fill(gen) // the self-join is planned from its stored size
         withSides(keyJoin(gen, gen)
           .select(col("x.row_id").as("src"), col("y.row_id").as("dst"))
           .distinct())
@@ -366,6 +367,7 @@ object Pipeline {
         // aggregate plus both self-join sides).
         val keys = graft.Scratch.scoped(
           keyTable(concat(nameStructs, chanStructs)), adaptive = true)
+        graft.Scratch.fill(keys) // its three consumers are planned from its stored size
         val eligible = keys.groupBy(col("block"), col("kt"), col("k"))
           .agg(count(lit(1)).as("kdf"))
           .where(col("kdf") <= cap)
@@ -763,6 +765,7 @@ object Pipeline {
     var g = graft.Scratch.scoped(edges.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst")), adaptive = true)
+    graft.Scratch.fill(g) // round 1 is planned from its stored size
     var converged = false
     var rounds = 0
     val debug = sys.env.contains("GRAFT_CC_DEBUG")
@@ -850,8 +853,10 @@ object Pipeline {
     val spark = normalized.sparkSession
     import spark.implicits._
     // Materialize + truncate lineage once (the acceptedPairs note);
-    // three downstream consumers. A caller's scoped leaf is used as it is.
+    // three downstream consumers, planned from the stored size. A
+    // caller's scoped leaf is used as it is.
     val normPersisted = graft.Scratch.scoped(normalized, adaptive = true)
+    graft.Scratch.fill(normPersisted)
     val edges = acceptedPairs(normPersisted, cfg)
     val comps = connectedComponents(
       normPersisted.select(col("row_id").as[java.lang.Long]), edges)
@@ -927,6 +932,7 @@ object Pipeline {
     val spark = normalized.sparkSession
     import spark.implicits._
     val normPersisted = graft.Scratch.scoped(normalized, adaptive = true)
+    graft.Scratch.fill(normPersisted)
     val edges = acceptedPairs(normPersisted, cfg)
     val comps = connectedComponents(
       normPersisted.select(col("row_id").as[java.lang.Long]), edges)

@@ -54,8 +54,13 @@ object GraftCache {
         cm.cacheQuery(held, Some(Table), parent.sessionState.conf.defaultCacheStorageLevel)
         val entry = cm.lookupCachedData(held)
           .getOrElse(throw new IllegalStateException("persisted plan has no cache entry"))
-        val leaf = classic.Dataset[T](parent,
-          entry.cachedRepresentation.withOutput(plan.output))(d.encoder)
+        // The leaf states no logical ordering: a self-join gives one
+        // side a new instance of the relation, and `newInstance` keeps
+        // the ordering's old attributes, which breaks canonicalizing it.
+        // The scan still reports the stored plan's physical ordering.
+        val stored = entry.cachedRepresentation
+        val leaf = classic.Dataset[T](parent, InMemoryRelation(plan.output,
+          stored.cacheBuilder, Nil, stored.statsOfPlanToCache))(d.encoder)
         Some((leaf, held))
     }
   }
@@ -106,10 +111,15 @@ private[sql] object ScratchScans {
   * gives a bare `InMemoryTableScanExec` a query stage of its own, which
   * runs one job to fill the cache for every place a plan reads it;
   * behind this node the reading tasks fill the blocks themselves, and
-  * places that read the same entry share them. The stored plan is
-  * finalized (its own shuffles run) before the partitioning is
-  * reported, so consumers see the stored partitioning, not an unknown
-  * one. */
+  * places that read the same entry share them.
+  *
+  * The stored plan is finalized before the partitioning is reported,
+  * so consumers see the stored partitioning, not an unknown one. For an
+  * adaptive entry that means running its shuffle stages: they run while
+  * a plan that reads the entry is planned (`explain`, `executedPlan`, or
+  * the `scoped` of a Dataset built on the leaf run them too), on the
+  * planning thread. The partition count such an entry reports before
+  * they ran could differ from the count it stores, so it is not used. */
 case class ScratchScanExec(scan: InMemoryTableScanExec) extends LeafExecNode {
   @transient private lazy val finalized: InMemoryTableScanExec = {
     scan.relation.cacheBuilder.cachedColumnBuffers

@@ -98,7 +98,7 @@ class NearDupBudgetSpec extends AnyFunSuite {
     ("q116_index_remove", Cost(1, 4, 3), Cost(1, 7, 3)),
     ("q124_capped_cluster_remove", Cost(4, 13, 6), Cost(3, 19, 6)),
     ("q148_ingest_epoch_chain", Cost(2, 6, 4), Cost(1, 15, 13)),
-    ("q87_pipeline_composed", Cost(0, 0, 0), Cost(5, 27, 12)),
+    ("q87_pipeline_composed", Cost(0, 0, 0), Cost(7, 29, 12)),
     ("q125_retention_erase", Cost(2, 6, 3), Cost(1, 8, 5)),
     ("q130_funnel_erase_requests", Cost(0, 0, 0), Cost(2, 7, 4)),
     ("q140_maintenance_epoch", Cost(4, 13, 6), Cost(5, 47, 22)),

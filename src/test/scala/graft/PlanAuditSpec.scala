@@ -68,9 +68,12 @@ class PlanAuditSpec extends AnyFunSuite {
           queries.h60(concat(lit("remove:"), col("doc_id"))) % 2 === 0)
         .select(col("doc_id"))
       def census(sigRel: DataFrame, pid: Option[Long]): (Seq[(Long, Long)], Long) = {
-        // Fill the standing artifacts first, so only the takedown's
-        // own reads land in the census.
-        Seq(idx, banded, pairs, standing).foreach(_.count())
+        // Both runs start from the same state: every cache an earlier
+        // takedown filled is dropped (so no read of this one is served
+        // from it), and the standing artifacts are filled again before
+        // the count starts, so only the takedown's own reads land in it.
+        Scratch.releaseAll()
+        Seq(idx, banded, pairs, standing).foreach(Scratch.fill)
         Thread.sleep(300)
         recordsRead.set(0)
         val out = DedupOps.removeFromCappedCluster(
@@ -93,6 +96,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(flatAsg == prunedAsg,
         "pruned-store assignments differ from the flat run — pruning is unsound")
       val delta = flatRead - prunedRead
+      info(s"store $nSig rows; flat takedown read $flatRead, pruned $prunedRead")
       assert(delta > (nSig * 5) / 10,
         s"store pruning skipped only $delta rows of a $nSig-row store")
     } finally {

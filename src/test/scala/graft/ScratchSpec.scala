@@ -73,6 +73,17 @@ class ScratchSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a leaf over an ordered relation joins with itself") {
+    for (adaptive <- Seq(false, true)) {
+      // A range is ordered by id: the self-join gives one side a new
+      // instance of the leaf, which must still canonicalize.
+      val c = Scratch.scoped(spark.range(200).select(col("id"), (col("id") % 7).as("m")), adaptive)
+      val joined = c.as("a").join(c.as("b"), col("a.id") === col("b.m"))
+      assert(joined.count() == 200)
+      Scratch.releaseAll()
+    }
+  }
+
   test("release(ds) and releaseAll() free the cached blocks") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
