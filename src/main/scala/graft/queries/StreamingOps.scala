@@ -67,22 +67,40 @@ object StreamingOps {
     else df
   }
 
-  /** Stateful-stream shuffle width: every micro-batch commits one
-    * state-store delta file PER partition PER stateful operator (a
-    * stream-stream join keeps four stores per partition), so the batch
-    * session's CPU-count default multiplies small-file I/O without
-    * adding useful parallelism at this state volume. A live deployment
-    * sizes the streaming shuffle independently of the batch one. */
-  private val StreamPartitions = "8"
+  /** Cap of the stateful-stream shuffle width. A stream's width is
+    * `min(StreamPartitions, session width)` ([[streamWidth]]). Every
+    * micro-batch's task per state partition pays a state-store provider
+    * init, a delta-file commit and a sink part file, so below the cap a
+    * stream runs as wide as the session runs its batch shuffles: one
+    * wave of tasks, not 8 partitions in 8 / width waves on a box with
+    * fewer task slots. It is a cap and not a floor because above 8 the
+    * batch session's CPU-count width multiplies that small-file I/O
+    * without adding useful parallelism at this state volume. A
+    * narrower width measured no gain on a 32-core session; the rule
+    * gives 8 there, so it changes nothing where that was measured and
+    * lowers the width only where a session has fewer than 8 task
+    * slots. A live deployment sizes the streaming shuffle
+    * independently of the batch one. */
+  private val StreamPartitions = 8
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The session's shuffle width, capped at `cap`. */
+  private def streamWidth(s: SparkSession, cap: Int): String =
+    math.min(cap, s.conf.get(ShufflePartitions).toInt).toString
 
   /** Run `f` with the streaming shuffle width plus any per-query
-    * streaming confs, restoring the session conf afterwards (all are
-    * picked up when the streaming query STARTS). */
+    * streaming confs (all are picked up when the streaming query
+    * STARTS). Like [[graft.Tables.parquet]] it writes only the keys
+    * whose value differs from the session's, and restores them
+    * afterwards, so at a session width of 8 or less a stream without
+    * per-query confs writes no session conf. */
   private def withStreamPartitions[A](s: SparkSession,
       confs: Map[String, String] = Map.empty)(f: => A): A = {
-    val all = Map("spark.sql.shuffle.partitions" -> StreamPartitions) ++ confs
-    val olds = all.keys.map(k => k -> s.conf.getOption(k)).toMap
-    all.foreach { case (k, v) => s.conf.set(k, v) }
+    val all = Map(ShufflePartitions -> streamWidth(s, StreamPartitions)) ++ confs
+    val olds = all.keys.map(k => k -> s.conf.getOption(k))
+      .filterNot { case (k, old) => old.contains(all(k)) }.toMap
+    olds.keys.foreach(k => s.conf.set(k, all(k)))
     try f finally olds.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
@@ -95,11 +113,12 @@ object StreamingOps {
     * onto a previous run's commits. Prefers tmpfs (/dev/shm) when
     * present: a run-to-completion AvailableNow capture's checkpoint
     * has no recovery value past the run (the job either finishes or
-    * reruns whole), so its many small WAL/state fsyncs are pure
-    * fixed cost on a disk-backed tmpdir. A live deployment points
-    * sink + checkpoint at durable shared storage instead (see the
-    * object doc); the recovery tests manage their own durable
-    * checkpoint dirs. */
+    * reruns whole). tmpfs does not remove the fixed cost per atomic
+    * checkpoint file, though: Hadoop's local file system forks shell
+    * processes (`readlink`, `chmod`) to create and rename each one. A
+    * live deployment points sink + checkpoint at durable shared
+    * storage instead (see the object doc); the recovery tests manage
+    * their own durable checkpoint dirs. */
   private def scratch(): (String, String) = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val useShm =
@@ -252,13 +271,13 @@ object StreamingOps {
       // watermark and evict state, which a run-to-completion job never
       // reuses, yet it commits one delta per store (4 stores/partition
       // for a stream-stream join). Skipping it and halving the join's
-      // state width (4 partitions at this state volume) halves the
+      // state width (capped at 4 at this state volume) halves the
       // state-store commit count, the fixed cost that dominates a
       // single-batch job. q67's timeout semantics keep their no-data
       // batches — the conf is scoped to this query's start.
       runToParquet(s, joined, Map(
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> "4"))
+        ShufflePartitions -> streamWidth(s, 4)))
         .groupBy((col("p_us") - pmod(col("p_us"), lit(3600000000L))).as("hour_us"))
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("p_id")).as("n_purchases"),
@@ -806,16 +825,25 @@ object StreamingOps {
       .orderBy(col("user_id"))
   }
 
+  /** The rows of each user's current era in an erasing emission log:
+    * if any row for a user carries erased=true, the erasure happened
+    * and only flagged rows are current, otherwise all are. Order-free,
+    * because the flag disambiguates eras. One window over user_id, so a
+    * view that windows by user again shares its exchange. Filters on
+    * the result apply after the era is chosen: a tombstone still marks
+    * its user's era. */
+  private def currentEra(raw: DataFrame): DataFrame = {
+    val he = max(col("erased").cast("int"))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy(col("user_id")))
+    raw.withColumn("he", he).where(col("erased").cast("int") === col("he")).drop("he")
+  }
+
   /** CURRENT-state projection over an erasing funnel's emission log —
-    * the log-compaction rule a deletion-aware consumer applies,
-    * order-free because the flag disambiguates eras: if any row for a
-    * user carries erased=true, the erasure happened and only flagged
-    * progress rows (the post-T restart, whose reached_step grows
-    * monotonically like q115's) are current — none means the user is
-    * fully forgotten; otherwise q115's max-reached rule applies. */
+    * the log-compaction rule a deletion-aware consumer applies: the
+    * [[currentEra]]'s progress rows (the post-T restart, whose
+    * reached_step grows monotonically like q115's) — none means the
+    * user is fully forgotten — under q115's max-reached rule. */
   private[graft] def funnelCurrent(raw: DataFrame): DataFrame = {
-    val he = raw.groupBy(col("user_id"))
-      .agg(max(col("erased").cast("int")).as("he"))
     // Deterministic tiebreak: two same-era rows can share the max
     // reached_step only after a retire-on-complete restart across
     // micro-batches; ordering the latencies makes which row survives
@@ -823,8 +851,7 @@ object StreamingOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("reached_step").desc,
         col("v2c_micros").asc_nulls_last, col("c2p_micros").asc_nulls_last)
-    raw.join(he, "user_id")
-      .where(col("erased").cast("int") === col("he") && col("reached_step") > 0)
+    currentEra(raw).where(col("reached_step") > 0)
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("user_id"), col("reached_step"),
         col("v2c_micros"), col("c2p_micros"))
@@ -1074,15 +1101,11 @@ object StreamingOps {
       .orderBy(col("user_id"), col("start_us"))
 
   /** Current session log over an AtInstant-erasing emission log — the
-    * deletion-aware consumer's view, order-free via the flag: an erased
-    * user's rows are their flagged (post-T) sessions only; everyone
-    * else keeps their full log. Tombstones never surface. */
-  private[graft] def sessionsCurrent(raw: DataFrame): DataFrame = {
-    val he = raw.groupBy(col("user_id"))
-      .agg(max(col("erased").cast("int")).as("he"))
-    sessionLog(raw.join(he, "user_id")
-      .where(col("erased").cast("int") === col("he") && col("n_events") > 0))
-  }
+    * deletion-aware consumer's view, the [[currentEra]]'s sessions: an
+    * erased user's rows are their flagged (post-T) sessions only;
+    * everyone else keeps their full log. Tombstones never surface. */
+  private[graft] def sessionsCurrent(raw: DataFrame): DataFrame =
+    sessionLog(currentEra(raw).where(col("n_events") > 0))
 
   /** The consumer's compaction for Control-erased sessions: tombstones
     * drop, and a requested user's sessions survive iff they start
@@ -1374,14 +1397,10 @@ object StreamingOps {
   }
 
   /** q128's rollup over an erasing emission log: per user keep the rows
-    * of their LATEST era (the flag disambiguates, order-free) and drop
-    * tombstones — each surviving pair was emitted once in its era. */
-  private[graft] def retentionCurrent(raw: DataFrame): DataFrame = {
-    val he = raw.groupBy(col("user_id"))
-      .agg(max(col("erased").cast("int")).as("he"))
-    retentionCells(raw.join(he, "user_id")
-      .where(col("erased").cast("int") === col("he") && col("day") >= 0))
-  }
+    * of their [[currentEra]] and drop tombstones — each surviving pair
+    * was emitted once in its era. */
+  private[graft] def retentionCurrent(raw: DataFrame): DataFrame =
+    retentionCells(currentEra(raw).where(col("day") >= 0))
 
   /** q114's stream twin: the per-(user, day) emission log rolls up into
     * the cohort matrix, so the oracle is q114's verbatim and the hash
