@@ -74,9 +74,11 @@ object Bench {
     // session-scoped stage memos are evicted between passes so pass 2
     // re-pays exactly what pass 1 did (otherwise the stage query that
     // funds the shared dedupe+merge would report a near-zero min).
-    // A pass returns each query's seconds, or None if its body threw:
-    // a failure is never recorded as a (fast) timing.
-    def timedPass(): Map[String, Option[Double]] = benched.map { case (name, fn) =>
+    // A pass returns, per query, its seconds, or None if its body threw
+    // (a failure is never recorded as a (fast) timing), and the meter's
+    // counts of what the body ran (prepare excluded).
+    val meter = new Meter(spark)
+    def timedPass(): Map[String, (Option[Double], Measure)] = benched.map { case (name, fn) =>
       // One-time layout setup (bucketed tables etc.) runs untimed: a
       // deployment pays it once and amortizes it over every subsequent
       // query, so timing it per-run would misrepresent the device.
@@ -95,6 +97,7 @@ object Bench {
       // UI-based attribution of a multi-hundred-job session is
       // readable. Thread-local; cleared after the body.
       spark.sparkContext.setJobDescription(name)
+      meter.take()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable => System.err.println(
@@ -103,9 +106,10 @@ object Bench {
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9
+      val counts = meter.take()
       spark.sparkContext.setJobDescription(null)
       Scratch.releaseAll() // drop per-query cached intermediates
-      name -> Option.when(ok)(dt)
+      name -> (Option.when(ok)(dt), counts)
     }
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -129,8 +133,8 @@ object Bench {
     val load1 = loadAvg()
     // A query that failed in either pass has no timing: it is left out
     // of `queries` and `total` and listed under "failed".
-    val results = pass1.toSeq.flatMap { case (name, v1) =>
-      for (a <- v1; b <- pass2(name)) yield name -> math.min(a, b)
+    val results = pass1.toSeq.flatMap { case (name, (v1, _)) =>
+      for (a <- v1; b <- pass2(name)._1) yield name -> math.min(a, b)
     }.toMap
     val failed = benched.keys.filterNot(results.contains).toSeq.sorted
     def names(ns: Seq[String]) = ns.map(n => "\"" + n + "\"").mkString("[", ",", "]")
@@ -142,10 +146,13 @@ object Bench {
     // record.
     def full(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def timed(pass: Map[String, Option[Double]]) =
-      full(pass.collect { case (k, Some(v)) => k -> v })
+    def timed(pass: Map[String, (Option[Double], Measure)]) =
+      full(pass.collect { case (k, (Some(v), _)) => k -> v })
+    def counted(pass: Map[String, (Option[Double], Measure)]) = pass.map { case (k, (_, m)) =>
+      s"\"$k\":" + m.counters.map { case (c, v) => s"\"$c\":$v" }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val qs = full(results)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"failed":${names(failed)},"pass1":${timed(pass1)},"pass2":${timed(pass2)},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2","load_avg_start":$load0,"load_avg_end":$load1,"mem_avail_gb_start":$mem0,"mem_avail_gb_end":${memAvailGb()},"queries":$qs,"failed":${names(failed)},"pass1":${timed(pass1)},"pass2":${timed(pass2)},"counts1":${counted(pass1)},"counts2":${counted(pass2)},"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     catch { case _: Throwable => () }
     // The stdout line the driver parses is kept compact enough to fit

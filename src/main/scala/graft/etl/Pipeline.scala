@@ -768,9 +768,7 @@ object Pipeline {
     graft.Scratch.fill(g) // round 1 is planned from its stored size
     var converged = false
     var rounds = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && rounds < 50) {
-      val tR = System.nanoTime()
       lsAcc.reset(); ssAcc.reset()
       // Large-star: symmetrize, per-u min via window (one exchange),
       // emit (m, v) for the larger neighbors. m ≤ u < v, so the
@@ -828,8 +826,6 @@ object Pipeline {
       g = ss
       converged = lsAcc.value == 0L && ssAcc.value == 0L
       rounds += 1
-      if (debug) System.err.println(
-        f"CC round $rounds%2d ${(System.nanoTime() - tR) / 1e9}%6.2f s  ls=${lsAcc.value} ss=${ssAcc.value}")
     }
     // Masked non-convergence would silently mislabel components.
     require(converged,

@@ -1646,7 +1646,7 @@ object DedupOps {
     * tombstone persistence on crafted fixtures AND replays
     * removal == from-scratch on the real sf bandings under
     * tightened caps / removal fractions where each branch provably
-    * fires (census in the ProbeRemove tool). */
+    * fires (census by the ProbeRemove tool, since deleted). */
   /** q116's standing artifacts — the persisted banding reverse
     * relation and the capped index built from it — scoped and
     * MATERIALIZED (the count pays both caches), so a prepared run's
@@ -1943,7 +1943,8 @@ object DedupOps {
     // hash-spread batch (the registered instance's) touches every
     // partition of any layout; its floor is the one full scan. DPP
     // does not fire for this broadcast-semi-join shape (probed
-    // empirically — ProbeDpp), hence the explicit filter.
+    // empirically by the ProbeDpp tool, since deleted), hence the
+    // explicit filter.
     // The DROP side's split-CC is INDEPENDENT of the reveal side's
     // probe/verify chain (it reads only standing/pairs/removed), yet
     // both issue sequential driver actions (CC's count+collect vs the

@@ -121,43 +121,14 @@ object StreamingOps {
     * their own durable checkpoint dirs. */
   private def scratch(): (String, String) = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    val useShm =
-      java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)
-    sweepStale(if (useShm) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
-    val root =
-      if (useShm) java.nio.file.Files.createTempDirectory(shm, "graft_stream_")
-      else java.nio.file.Files.createTempDirectory("graft_stream_")
-    root.toFile.deleteOnExit()
+    val base =
+      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
+      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    // Named like localScratch's fixtures, with the owning pid, so one
+    // sweep removes what dead JVMs left and never a live one's dirs.
+    sweepDeadFixtures(base.toFile)
+    val root = java.nio.file.Files.createTempDirectory(base, s"graft_fix_p${pidSelf}_stream_")
     (s"$root/data", s"$root/chk")
-  }
-
-  /** Best-effort removal of stale STREAM scratch roots from PREVIOUS
-    * JVMs: File.deleteOnExit cannot remove non-empty directories, so
-    * each session would otherwise leak a few MB of tmpfs per streaming
-    * query, unbounded across sessions. Scoped to the `graft_stream_`
-    * prefix only — localScratch fixture dirs (queries/package.scala)
-    * are created once per application and then lazily RE-READ for the
-    * session's whole lifetime without their mtime advancing, so an
-    * age gate alone would delete a live >2h session's fixtures out
-    * from under it (those dirs carry their owner's pid and are swept
-    * by localScratch itself on liveness, not age). Still age-gated
-    * (≥ 2 h by mtime) so a concurrently-running session's stream
-    * scratch is never touched; any I/O error is swallowed — this is
-    * hygiene, not correctness. */
-  private def sweepStale(base: java.nio.file.Path): Unit =
-    try {
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      val kids = base.toFile.listFiles()
-      if (kids != null) kids.iterator
-        .filter(f => f.getName.startsWith("graft_stream_") && f.lastModified() < cutoff)
-        .foreach(deleteRecursively)
-    } catch { case _: Throwable => () }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** Run an append-mode streaming DF to completion into a scratch

@@ -217,8 +217,6 @@ package object queries {
   /** Oracle-side equivalents as SQL text builders. */
   def oSum(col: String, as: String, scale: Int = 2): String =
     s"round(CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE), $scale) AS $as"
-  def oAvg(col: String, as: String, scale: Int = 4): String =
-    s"round(CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE) / CAST(count($col) AS DOUBLE), $scale) AS $as"
 
   /** Cross-engine deterministic 60-bit hash: both Spark and DuckDB md5 a
     * UTF-8 string to the same hex; the first 15 hex digits parse into a
@@ -469,7 +467,8 @@ package object queries {
     * Exists because java.util.regex inside many-way codegen hits a
     * scalability WALL, not just a constant: ~137 us/doc wall on
     * ~950-char docs whether 4 or 32 threads run (CPU/doc grows
-    * 0.5→4.4 ms with thread count — see ProfRegex2/THROUGHPUT.md),
+    * 0.5→4.4 ms with thread count — see THROUGHPUT.md; the ProfRegex2
+    * tool that measured it is deleted),
     * while this kernel is ~1-2 us/doc and scales. Pinned against the
     * regex form by FunctionProps. */
   def alnumLower(s: String, keepSpace: Boolean = false): String = {
@@ -555,10 +554,10 @@ package object queries {
     s"$base/graft_fix_p${pidSelf}_${tag}_${safeDir}_$safeApp"
   }
 
-  private val pidSelf: Long = ProcessHandle.current().pid()
+  private[queries] val pidSelf: Long = ProcessHandle.current().pid()
   private val FixturePat = "graft_fix_p(\\d+)_.*".r
 
-  private def sweepDeadFixtures(base: java.io.File): Unit =
+  private[queries] def sweepDeadFixtures(base: java.io.File): Unit =
     try {
       val kids = base.listFiles()
       if (kids != null) kids.foreach { f =>

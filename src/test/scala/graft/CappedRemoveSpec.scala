@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * RESURRECTED by a revealed edge — all on one crafted corpus whose
   * similarity structure is spelled out in hs sets, then replayed on
   * the real sf corpora at tightened caps where demotion provably
-  * fires (ProbeRemove census). */
+  * fires (census by the ProbeRemove tool, since deleted). */
 class CappedRemoveSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()

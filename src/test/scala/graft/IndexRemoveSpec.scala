@@ -123,8 +123,8 @@ class IndexRemoveSpec extends AnyFunSuite {
 
   // sf replays under tightened caps and removal fractions picked so
   // the interesting branches actually fire on the real banding (bucket
-  // census via the ProbeRemove tool: at the registered cap 3 / 10 %
-  // batch neither corpus reaches demotion — sf0.01's max bucket IS 3 —
+  // census via the ProbeRemove tool, since deleted: at the registered
+  // cap 3 / 10 % batch neither corpus reaches demotion — sf0.01's max bucket IS 3 —
   // so cap 2 with a 1-in-3 batch is where tombstones both demote and,
   // on sf0.001, persist). The same h60 "remove:" split family as
   // registered q116, applied to the banding's own doc ids

@@ -1,16 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 /** Structure budget of the near-dup family and of the default census
   * subset (the composed pipeline q87, the erasure q125, the stream
   * q130 and the epoch queries q140, q145, q146): the Spark actions (SQL
   * executions), jobs and shuffle exchanges that each query's prepare
-  * hook and body run at sf0.001, counted by listeners. The near-dup
+  * hook and body run at sf0.001, counted by a [[Meter]]. The near-dup
   * operators share one LSH core and every query shares one cache
   * primitive, so a change to either reaches many plans at once; an
   * extra action or shuffle anywhere fails here instead of only showing
@@ -43,46 +40,6 @@ class NearDupBudgetSpec extends AnyFunSuite {
   }
 
   private val Dir = "/root/testdata/sf0.001"
-  private val CallKey = "graft.budget.call"
-  private val Marker = "marker"
-
-  /** Every job and every shuffle map stage (a stage that ran shuffle
-    * map tasks) since the last [[take]].
-    * Jobs from the query's own worker threads (the takedown's Future)
-    * are counted too: only the marker is excluded. */
-  private class Counter extends SparkListener {
-    private val jobs = new ConcurrentLinkedQueue[String]()
-    private val shuffleStages = ConcurrentHashMap.newKeySet[Integer]()
-    @volatile var drained = new CountDownLatch(1)
-    @volatile private var markerJob = -1
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val p = Option(e.properties)
-      if (p.flatMap(x => Option(x.getProperty(CallKey))).contains(Marker)) markerJob = e.jobId
-      else jobs.add(p.map(_.getProperty("spark.sql.execution.id", "-")).getOrElse("-"))
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (e.jobId == markerJob) drained.countDown()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskType == "ShuffleMapTask" && e.stageAttemptId == 0) {
-        shuffleStages.add(e.stageId); ()
-      }
-
-    /** Waits until every event before this call is delivered (a
-      * marker job runs last, and the bus delivers in order), then
-      * hands out what arrived since the previous call. */
-    def take(): Cost = {
-      val sc = spark.sparkContext
-      drained = new CountDownLatch(1)
-      sc.setLocalProperty(CallKey, Marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(CallKey, null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      val js = Iterator.continually(jobs.poll()).takeWhile(_ != null).toSeq
-      val sh = shuffleStages.size
-      shuffleStages.clear()
-      Cost(js.filter(_ != "-").distinct.size, js.size, sh)
-    }
-  }
-
   /** Budgets per query, (prepare, body), as measured once every cache
     * variant was folded into one `Scratch.scoped`. Each count is at or
     * below the parent's under the same counters: the near-dup queries
@@ -116,19 +73,22 @@ class NearDupBudgetSpec extends AnyFunSuite {
   }
 
   test("the near-dup queries stay within their action, job and shuffle budgets") {
-    val counter = new Counter
-    spark.sparkContext.addSparkListener(counter)
+    val meter = new Meter(spark)
+    def take(): Cost = {
+      val m = meter.take()
+      Cost(m.actions.toInt, m.jobs.toInt, m.shuffleStages.toInt)
+    }
     try {
       val prepares = Registry.preparesMap
       val over = Budgets.flatMap { case (name, prepBudget, bodyBudget) =>
         val prepare = prepares.get(name)
         val body = SparkEntry.queries(name)
         def pass(): (Cost, Cost) = {
-          counter.take()
+          take()
           prepare.foreach(_(spark, Dir))
-          val prep = counter.take()
+          val prep = take()
           body(spark, Dir).collect()
-          val run = counter.take()
+          val run = take()
           queries.evictMemos(spark)
           Scratch.releaseAll()
           (prep, run)
@@ -139,7 +99,7 @@ class NearDupBudgetSpec extends AnyFunSuite {
           breaches(s"$name body", run, bodyBudget)
       }
       assert(over.isEmpty, over.mkString("; "))
-    } finally spark.sparkContext.removeSparkListener(counter)
+    } finally meter.close()
   }
 }
 

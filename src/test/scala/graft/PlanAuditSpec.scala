@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,13 +38,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * empty on any layout). */
   test("r16 audit: q124 store pruning sound + partition-subset reads; operator exchange census", SlowReplay) {
     import queries.DedupOps
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        recordsRead.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val meter = new Meter(spark)
     try {
       val (sig0, banded0) = DedupOps.sigBanded(spark, dir)
       val sig = Scratch.scoped(sig0)
@@ -74,14 +67,12 @@ class PlanAuditSpec extends AnyFunSuite {
         // the count starts, so only the takedown's own reads land in it.
         Scratch.releaseAll()
         Seq(idx, banded, pairs, standing).foreach(Scratch.fill)
-        Thread.sleep(300)
-        recordsRead.set(0)
+        meter.take()
         val out = DedupOps.removeFromCappedCluster(
             idx, banded, sigRel, pairs, standing, removed, cap, pid)
           .select(col("id"), col("comp"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-        Thread.sleep(300)
-        (out, recordsRead.get)
+        (out, meter.take().inputRecords)
       }
       // Both runs read the ON-DISK store; the flat one just doesn't
       // prune — so the delta isolates the partition filter itself.
@@ -100,7 +91,7 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(delta > (nSig * 5) / 10,
         s"store pruning skipped only $delta rows of a $nSig-row store")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      meter.close()
       graft.Scratch.releaseAll()
     }
   }

@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * stream start without writing the session's conf when the session
   * is at most 8 wide, and the rows do not depend on the width. Each
   * session is a `newSession()` with its width set before any query
-  * runs in it. */
+  * runs in it. A stream's scratch dir carries its owner's pid, and
+  * only dead owners' dirs are swept. */
 class StreamWidthSpec extends AnyFunSuite {
 
   private lazy val base: SparkSession = SparkSession.builder()
@@ -34,22 +33,11 @@ class StreamWidthSpec extends AnyFunSuite {
   /** `q`'s rows in `s`, and the state width of the first stateful
     * operator in each of the stream's micro-batches. */
   private def run(s: SparkSession, q: String): (Seq[Seq[Any]], Seq[Long]) = {
-    val widths = new ConcurrentLinkedQueue[Long]()
-    val done = new CountDownLatch(1)
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.headOption.foreach(o => widths.add(o.numShufflePartitions))
-      // Progress events precede the query's termination on the bus.
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        done.countDown()
-    }
-    s.streams.addListener(listener)
+    val meter = new Meter(s)
     try {
       val rows = Registry.queriesMap(q)(s, Dir).collect().map(_.toSeq).toSeq
-      assert(done.await(60, TimeUnit.SECONDS), s"$q: no termination event")
-      (rows, widths.asScala.toSeq)
-    } finally s.streams.removeListener(listener)
+      (rows, meter.take().progress.flatMap(_.stateOperators.headOption.map(_.numShufflePartitions)))
+    } finally meter.close()
   }
 
   test("sf0.001: q130/q127/q129/q132 rows do not depend on the session width; state width is min(8, width)") {
@@ -90,5 +78,25 @@ class StreamWidthSpec extends AnyFunSuite {
       s"spark.sql.shuffle.partitions changed while q130 ran: saw $seen")
     assert(rows.nonEmpty)
     assert(widths.nonEmpty && widths.forall(_ == 4), s"q130 state widths $widths")
+  }
+
+  test("sf0.001: q130's scratch dirs carry the JVM's pid; a dead owner's dir is swept, a live one's kept") {
+    val shm = new java.io.File("/dev/shm")
+    val base =
+      if (shm.isDirectory && shm.canWrite) shm else new java.io.File(System.getProperty("java.io.tmpdir"))
+    val own = s"graft_fix_p${ProcessHandle.current().pid()}_"
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = new java.io.File(base, s"graft_fix_p${child.pid()}_stream_spec")
+    val live = new java.io.File(base, s"${own}stream_spec")
+    Seq(dead, live).foreach(d => assert(new java.io.File(d, "chk").mkdirs(), d))
+    try {
+      val before = base.list().toSet
+      run(session(2), Q130)
+      val added = base.list().toSet.filter(_.startsWith("graft_")) -- before
+      assert(added.nonEmpty && added.forall(_.startsWith(own)), s"new scratch entries $added")
+      assert(!dead.exists, s"$dead outlived its owner")
+      assert(live.exists, s"$live was swept while its owner runs")
+    } finally Seq(dead, live).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -34,35 +31,10 @@ class TablesSpec extends AnyFunSuite {
     s
   }
 
-  private val TagKey = "graft.tables.tag"
-
-  /** Jobs started while `body` runs on this thread. A marker job run
-    * after it drains the listener bus, which delivers events in order. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new AtomicInteger()
-    val markerIds = ConcurrentHashMap.newKeySet[Int]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(TagKey)).foreach {
-          case `tag` => started.incrementAndGet()
-          case m if m == tag + ":marker" => markerIds.add(e.jobId)
-          case _ => ()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerIds.contains(e.jobId)) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(TagKey, tag)
-      try body finally sc.setLocalProperty(TagKey, null)
-      sc.setLocalProperty(TagKey, tag + ":marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(TagKey, null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      started.get()
-    } finally sc.removeSparkListener(listener)
+  /** Jobs started while `body` runs. */
+  private def jobsIn(body: => Unit): Long = {
+    val meter = new Meter(spark)
+    try { meter.take(); body; meter.take().jobs } finally meter.close()
   }
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =

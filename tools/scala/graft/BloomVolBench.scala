@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -43,11 +42,7 @@ object BloomVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val ev = queries.h60(concat(lit("split:"), col("doc_id"))) % 1000 >= 998
     val tr = queries.h60(concat(lit("split:"), col("doc_id"))) % 1000 < 998
@@ -64,7 +59,7 @@ object BloomVolBench {
 
     for ((mBits, k, label) <- Seq((26, 8, "production"), (26, 2, "fp-regime"))) {
       val m = 1L << mBits
-      shufWrite.set(0)
+      meter.take()
       val tB = System.nanoTime()
       val out = queries.TextOps.bloomGateFor(spark, dir, m, k, ev, tr)
       val buildS = (System.nanoTime() - tB) / 1e9 // bitset collect is eager
@@ -75,14 +70,14 @@ object BloomVolBench {
         sum(col("n_bloom")).as("bloom_hits")).collect()(0)
       val probeS = (System.nanoTime() - tP) / 1e9
       println(f"BVBGATE   $label%-10s m=2^$mBits k=$k  build=$buildS%5.1f s  " +
-        f"gate=$probeS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+        f"gate=$probeS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
       println(f"BVBGATE   $label%-10s flagged=${r.getLong(0)}%,d  " +
         f"contaminated=${r.getLong(2)}%,d  fp_docs=${r.getLong(1)}%,d  " +
         f"bloom_hit_shingles=${r.getLong(3)}%,d")
     }
 
     // ---- reference exact join (q77's shape), timed + equality -----
-    shufWrite.set(0)
+    meter.take()
     val tE = System.nanoTime()
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), ev.as("ev"), tr.as("tr"),
@@ -98,7 +93,7 @@ object BloomVolBench {
     val nExact = exact.count()
     val exactS = (System.nanoTime() - tE) / 1e9
     println(f"BVBEXACT  exact-join reference: $nExact%,d contaminated docs in " +
-      f"$exactS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$exactS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // No false negatives at volume: the gate's n_exact>0 relation must
     // equal the exact join, doc for doc and count for count.

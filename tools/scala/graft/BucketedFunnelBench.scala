@@ -42,12 +42,7 @@ object BucketedFunnelBench extends AdaptiveSparkPlanHelper {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     // q113's projection WITHOUT the presentation orderBy: the final
     // sort exists for oracle determinism and costs a range exchange
@@ -62,12 +57,12 @@ object BucketedFunnelBench extends AdaptiveSparkPlanHelper {
         (unix_micros(col("t3")) - unix_micros(col("t2"))).as("c2p_micros"))
 
     // ---- plain flat-parquet run (timed) ---------------------------
-    shufWrite.set(0)
+    meter.take()
     val t0 = System.nanoTime()
     val plainDf = funnel(Tables.load(spark, dir, "events"))
     val plain = plainDf.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     val plainS = (System.nanoTime() - t0) / 1e9
-    val plainShuf = shufWrite.get
+    val plainShuf = meter.take().shuffleWriteBytes
     println(f"BFBPLAIN  ${plain.length}%,d funnel users in $plainS%5.1f s  " +
       f"shufWrite=${plainShuf / 1e9}%.3f GB  " +
       f"shuffleExchanges=${countShuffles(plainDf)}%d")
@@ -82,14 +77,14 @@ object BucketedFunnelBench extends AdaptiveSparkPlanHelper {
       f"${(System.nanoTime() - t1) / 1e9}%5.1f s")
 
     // ---- bucketed run (timed) -------------------------------------
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     val bucketedDf = funnel(spark.table("events_bucketed"))
     val bucketed = bucketedDf.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     val bucketedS = (System.nanoTime() - t2) / 1e9
     val nShuffles = countShuffles(bucketedDf)
     println(f"BFBBUCKET ${bucketed.length}%,d funnel users in $bucketedS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB  " +
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB  " +
       f"shuffleExchanges=$nShuffles%d")
 
     require(plain.toSeq == bucketed.toSeq,

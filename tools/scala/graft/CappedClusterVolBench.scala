@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,11 +33,7 @@ object CappedClusterVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_ccvb_").toString
 
@@ -74,14 +69,14 @@ object CappedClusterVolBench {
     val removed = spark.read.parquet(s"$dir/documents.parquet")
       .where(queries.h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0)
       .select(col("doc_id"))
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     queries.DedupOps.removeFromCappedCluster(
         idx, banded, sig, pairs, comps, removed, cap)
       .write.mode("overwrite").parquet(s"$scratch/after")
     val dt = (System.nanoTime() - t1) / 1e9
     println(f"CCVBRM    10%% takedown (${removed.count()}%,d docs) applied in " +
-      f"$dt%6.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$dt%6.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val after = spark.read.parquet(s"$scratch/after")
     stats("after_rm", after)
     // Branch census: demoted buckets and the pairs they revealed.
@@ -135,11 +130,6 @@ object CappedClusterVolBench {
     // files. A uniformly random global batch (the registered q124
     // instance) touches every partition of ANY layout — its floor is
     // the one full scan the broadcast prune already pays.
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        recordsRead.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
-    })
     val nParts = 128
     val partSize = math.max(1L, (nDocs + nParts - 1) / nParts)
     sig.withColumn("pid", floor(col("doc_id") / partSize))
@@ -150,19 +140,20 @@ object CappedClusterVolBench {
       .where(col("doc_id") < cut &&
         queries.h60(concat(lit("remove:"), col("doc_id"))) % 2 === 0)
       .select(col("doc_id"))
-    def takedown(label: String, sigRel: DataFrame): DataFrame = {
+    def takedown(label: String, sigRel: DataFrame): (DataFrame, Long) = {
       Scratch.releaseAll()
-      recordsRead.set(0); shufWrite.set(0)
+      meter.take()
       val t = System.nanoTime()
       queries.DedupOps.removeFromCappedCluster(
           idx, banded, sigRel, pairs, comps, removedC, cap)
         .write.mode("overwrite").parquet(s"$scratch/after_$label")
+      val m = meter.take()
       println(f"CCVBPART  $label%-9s range takedown in " +
-        f"${(System.nanoTime() - t) / 1e9}%6.1f s  recordsRead=${recordsRead.get}%,d  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
-      spark.read.parquet(s"$scratch/after_$label")
+        f"${(System.nanoTime() - t) / 1e9}%6.1f s  recordsRead=${m.inputRecords}%,d  " +
+        f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB")
+      (spark.read.parquet(s"$scratch/after_$label"), m.inputRecords)
     }
-    val flatRead = { val a = takedown("flat", sig); (a, recordsRead.get) }
+    val flatRead = takedown("flat", sig)
     // The neighborhood filter is what a deployment derives from the
     // takedown request's id range (+ the family-adjacency slack the
     // index build recorded); the partition column makes it a
@@ -173,8 +164,8 @@ object CappedClusterVolBench {
     val maxPid = (cut + 4) / partSize
     val sigPruned = sigPart.where(col("pid") <= maxPid)
       .select(sig.columns.map(col): _*)
-    val prunedAfter = takedown("pruned", sigPruned)
-    val readDelta = flatRead._2 - recordsRead.get
+    val (prunedAfter, prunedRead) = takedown("pruned", sigPruned)
+    val readDelta = flatRead._2 - prunedRead
     // Non-vacuity: the range batch must demote buckets (else neither
     // layout reads signatures at all), and the pruned layout must
     // actually skip the out-of-range partitions' rows.
@@ -207,7 +198,7 @@ object CappedClusterVolBench {
     // tombstone interaction EpochSpec pins crafted, here at 2M docs.
     // Verify: chain == from-scratch capped rebuild over BOTH
     // removals' survivors.
-    shufWrite.set(0)
+    meter.take()
     val tC1 = System.nanoTime()
     val (idxP1, pairsP1, compsP1) = queries.DedupOps.removeFromCappedClusterFull(
       idx, banded, sig, pairs, comps, removedC, cap)
@@ -216,14 +207,14 @@ object CappedClusterVolBench {
     compsP1.write.mode("overwrite").parquet(s"$scratch/comps_p1")
     println(f"CHAINRM1  epoch-1 takedown (${removedC.count()}%,d docs) applied " +
       f"and post-state PUBLISHED in ${(System.nanoTime() - tC1) / 1e9}%6.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     Scratch.releaseAll()
     val removedC2 = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("doc_id") >= cut && col("doc_id") < 2 * cut &&
         queries.h60(concat(lit("remove:"), col("doc_id"))) % 2 === 0)
       .select(col("doc_id"))
     val banded1 = banded.join(removedC, Seq("doc_id"), "left_anti")
-    shufWrite.set(0)
+    meter.take()
     val tC2 = System.nanoTime()
     queries.DedupOps.removeFromCappedCluster(
         spark.read.parquet(s"$scratch/idx_p1"), banded1, sig,
@@ -232,7 +223,7 @@ object CappedClusterVolBench {
       .write.mode("overwrite").parquet(s"$scratch/after_chain")
     println(f"CHAINRM2  epoch-2 takedown (${removedC2.count()}%,d docs) applied " +
       f"against the published post-state in ${(System.nanoTime() - tC2) / 1e9}%6.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     Scratch.releaseAll()
     // Epoch-2 demotions against the PUBLISHED index (non-vacuity).
     val demotedC2 = spark.read.parquet(s"$scratch/idx_p1")

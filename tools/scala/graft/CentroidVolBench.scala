@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q110's centroid/drift matrix at 2M vectors (128M
@@ -25,19 +24,15 @@ object CentroidVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val got = Registry.queriesMap("q110_embedding_centroids")(spark, dir)
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(4))).toMap
     val wallS = (System.nanoTime() - t1) / 1e9
     println(f"CENTRUN   ${got.size}%,d drift pairs over 2M vectors in $wallS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
 
     // Independent recompute: per-partition double accumulation.
     val t2 = System.nanoTime()

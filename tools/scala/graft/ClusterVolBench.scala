@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,11 +59,7 @@ object ClusterVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_cvb_").toString
     val m = queries.h60(concat(lit("ingest:"), col("doc_id"))) % 10
@@ -97,7 +92,7 @@ object ClusterVolBench {
     // ---- merge batches A then B (timed) --------------------------
     var prev = s"$scratch/asg0"
     for (tag <- Seq("A", "B")) {
-      shufWrite.set(0)
+      meter.take()
       val t1 = System.nanoTime()
       val merged = queries.DedupOps.mergeComponents(
         spark.read.parquet(prev), spark.read.parquet(s"$scratch/m$tag"))
@@ -105,7 +100,7 @@ object ClusterVolBench {
       merged.write.mode("overwrite").parquet(next)
       val dt = (System.nanoTime() - t1) / 1e9
       println(f"CVBMERGE  batch $tag merged in $dt%6.1f s  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+        f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
       // Bridges: post-merge groups holding >= 2 pre-merge standing comps.
       val bridged = spark.read.parquet(next)
         .join(spark.read.parquet(prev).select(col("id"), col("comp").as("oc")), "id")
@@ -166,13 +161,13 @@ object ClusterVolBench {
     // crafted cut-vertex graphs.
     val removed = fin.select(col("id"))
       .where(queries.h60(concat(lit("remove:"), col("id"))) % 10 === 0)
-    shufWrite.set(0)
+    meter.take()
     val t5 = System.nanoTime()
     queries.DedupOps.removeFromComponents(fin, scratchEdges, removed)
       .write.mode("overwrite").parquet(s"$scratch/asgR")
     val dtR = (System.nanoTime() - t5) / 1e9
     println(f"CVBREMOVE 10%% takedown (${removed.count()}%,d assigned ids) applied in " +
-      f"$dtR%6.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$dtR%6.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val post = spark.read.parquet(s"$scratch/asgR")
     stats("after_rm", post)
     // Branch census over pre-removal components: split (>= 2 surviving

@@ -2,7 +2,6 @@ package graft
 
 import graft.etl._
 import graft.sources.Sources
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -51,35 +50,29 @@ object ComposedBench {
     val gm = s"$corpus/gmail.csv"
     val vcf = s"$corpus/contacts.vcf"
 
-    val shufRead = new java.util.concurrent.atomic.AtomicLong()
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val meter = new Meter(spark)
+    def shuffled(): (Long, Long) = {
+      val m = meter.take()
+      (m.shuffleReadBytes, m.shuffleWriteBytes)
+    }
 
     def gb(b: Long) = f"${b / 1e9}%.2f GB"
 
     // ---- staged: the four CLI bodies over CSV interchange ------------
     val stagedDir = s"$outBase/staged"
-    shufRead.set(0); shufWrite.set(0)
+    meter.take()
     val t0 = System.nanoTime()
     ConsolidateMain.run(spark, li, gm, vcf, stagedDir, yamlText)
     ValidateMain.run(spark, stagedDir)
     ConfidenceMain.run(spark, stagedDir)
     TagMain.run(spark, stagedDir, gm, vcf)
     val stagedWall = (System.nanoTime() - t0) / 1e9
-    val stagedShuf = (shufRead.get(), shufWrite.get())
+    val stagedShuf = shuffled()
     Scratch.releaseAll()
 
     // ---- composed: one lazy plan, final deliverables only ------------
     val composedDir = s"$outBase/composed"
-    shufRead.set(0); shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val cfg = Config.load(Config.Cli(outDir = Some(composedDir)), yamlText)
     val raw = Sources.loadAll(spark, li, gm, vcf).localCheckpoint(true)
@@ -116,7 +109,7 @@ object ComposedBench {
       sortCols = Seq(col("referral_priority_score").desc,
         col("confidence_score").desc, col("contact_id")))
     val composedWall = (System.nanoTime() - t1) / 1e9
-    val composedShuf = (shufRead.get(), shufWrite.get())
+    val composedShuf = shuffled()
     Scratch.releaseAll()
 
     // Deliverable parity: same ranked rows in both paths' final artifact.

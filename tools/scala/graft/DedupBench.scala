@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -38,17 +37,7 @@ object DedupBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        taskCount.addAndGet(sc.stageInfo.numTasks.toLong)
-      }
-    })
+    val meter = new Meter(spark)
 
     val names = Seq("q50_exact_dedup", "q51_minhash_lsh", "q52_simhash",
       "q73_neardup_clusters", "q92_simhash64", "q96_incremental_dedup")
@@ -59,14 +48,15 @@ object DedupBench {
         .queryExecution.toRdd.count(); Scratch.releaseAll()
     }
     for (name <- names) {
-      shufWrite.set(0); shufRead.set(0); taskCount.set(0)
+      meter.take()
       val t0 = System.nanoTime()
       val n = Registry.queriesMap(name)(spark, dir).queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
+      val m = meter.take()
       Scratch.releaseAll()
       println(f"DEDUPBENCH $name%-22s $dt%8.2f s  rows=$n%,d  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  shufRead=${shufRead.get / 1e9}%.2f GB  " +
-        f"tasks=${taskCount.get}%,d")
+        f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB  shufRead=${m.shuffleReadBytes / 1e9}%.2f GB  " +
+        f"tasks=${m.tasks}%,d")
     }
 
     // ---- ground-truth verification (untimed) --------------------------

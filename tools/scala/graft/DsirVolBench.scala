@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q108's DSIR importance weighting at 2M docs, on the
@@ -37,20 +36,16 @@ object DsirVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val top = queries.CurationOps.dsirScores(spark, dir,
         col("lang") === "es", topK)
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
     val wallS = (System.nanoTime() - t1) / 1e9
     println(f"DSVRUN    top-$topK%,d of 2M docs scored in $wallS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     val planted = top.count(_._1 % 100 == 99)
     println(f"DSVTOP    planted in top-$topK%,d: $planted%,d  " +

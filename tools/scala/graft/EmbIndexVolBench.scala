@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,11 +53,7 @@ object EmbIndexVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_eivb_").toString
     val m = queries.h60(concat(lit("ingest:"), col("vec_id"))) % 10
@@ -86,7 +81,7 @@ object EmbIndexVolBench {
     // ---- merge batches A (residue 0) and B (residue 1) --------------
     var prev = s"$scratch/idx0"
     for ((res, tag) <- Seq((0, "A"), (1, "B"))) {
-      shufWrite.set(0)
+      meter.take()
       val t1 = System.nanoTime()
       val merged = queries.DedupOps.mergeIndexBuckets(
         spark.read.parquet(prev), banded(m === res), Cap)
@@ -94,7 +89,7 @@ object EmbIndexVolBench {
       merged.write.mode("overwrite").parquet(next)
       val dt = (System.nanoTime() - t1) / 1e9
       println(f"EIVBMERGE batch $tag (residue $res, 10%%) merged in $dt%6.1f s  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+        f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
       stats(s"after_$tag", spark.read.parquet(next))
       prev = next
     }
@@ -127,14 +122,14 @@ object EmbIndexVolBench {
     val removed = spark.read.parquet(s"$dir/embeddings.parquet")
       .where(queries.h60(concat(lit("remove:"), col("vec_id"))) % 10 === 0)
       .select(col("vec_id").as("doc_id"))
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     queries.DedupOps.removeFromIndexBuckets(
         spark.read.parquet(prev), bandingDf, removed, Cap)
       .write.mode("overwrite").parquet(s"$scratch/idxR")
     val dtR = (System.nanoTime() - t3) / 1e9
     println(f"EIVBREMOVE 10%% takedown (${removed.count()}%,d vecs) applied in " +
-      f"$dtR%6.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$dtR%6.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val post = spark.read.parquet(s"$scratch/idxR")
     stats("after_rm", post)
     val census = spark.read.parquet(prev)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -51,15 +50,7 @@ object EmbedDedupBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
+    val meter = new Meter(spark)
 
     // Codegen warmup at unit scale.
     queries.DedupOps.embeddingPairsScaled(spark, "/root/testdata/sf0.001",
@@ -67,15 +58,16 @@ object EmbedDedupBench {
     Scratch.releaseAll()
 
     // ---- timed: scaled+capped pair generation -------------------------
-    shufWrite.set(0); shufRead.set(0)
+    meter.take()
     var t0 = System.nanoTime()
     val pairs = queries.DedupOps.embeddingPairsScaled(
       spark, dir, Bands, Bits, Cap, Threshold)
       .select(col("vec_a"), col("vec_b")).cache()
     val nPairs = pairs.count()
     val dtPairs = (System.nanoTime() - t0) / 1e9
+    val m = meter.take()
     println(f"EMBEDBENCH q91(${Bands}x$Bits,cap=$Cap)   $dtPairs%8.2f s  pairs=$nPairs%,d  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB  shufRead=${shufRead.get / 1e9}%.2f GB")
+      f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB  shufRead=${m.shuffleReadBytes / 1e9}%.2f GB")
 
     // ---- timed: cluster rollup on the same pair source ----------------
     t0 = System.nanoTime()
@@ -159,14 +151,14 @@ object EmbedDedupBench {
     require(recallExact == 1.0, f"exact-dup recall $recallExact%.4f below 1.0")
 
     // ---- q97 ingest gate at the same production parameters ------------
-    shufWrite.set(0); shufRead.set(0)
+    meter.take()
     t0 = System.nanoTime()
     val gate = queries.DedupOps.embeddingIngestGate(
       spark, dir, Bands, Bits, Cap, Threshold).cache()
     val nGate = gate.count()
     val dtGate = (System.nanoTime() - t0) / 1e9
     println(f"EMBEDBENCH q97(${Bands}x$Bits,cap=$Cap)   $dtGate%8.2f s  matches=$nGate%,d  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     // Soundness: a match is blob-blob or same-(cluster/exact)-group.
     val badGate = gate.where(
       !((col("vec_id") < HotN && col("best_match") < HotN) ||

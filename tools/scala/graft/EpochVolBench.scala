@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q140's unified maintenance epoch at 28.7M events /
@@ -30,11 +29,7 @@ object EpochVolBench {
     spark.sparkContext.setLogLevel("ERROR")
     import queries.Analytic
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("epoch_").toString
     val e = Tables.load(spark, dir, "events")
@@ -66,7 +61,7 @@ object EpochVolBench {
 
     // ---- timed: the epoch body — one batch scan, one request
     // relation, three folds, three erases (fold-then-erase).
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val batch = Scratch.scoped(e.where(col("ts") >= cut))
     val requests = Scratch.scoped(
@@ -92,7 +87,7 @@ object EpochVolBench {
     val nBatch = batch.count()
     println(f"EPOCHBODY  $nBatch%,d-event batch + $nReq%,d-request privacy feed " +
       f"applied across 3 families in $wallS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     Scratch.releaseAll()
 
     // ---- verify: every family == its per-user-T filtered recompute.
@@ -154,7 +149,7 @@ object EpochVolBench {
     val req2 = requestsAll.where(!epoch1)
 
     // Epoch 1 (timed): fold day 1, erase req1, publish.
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     val day1 = Scratch.scoped(e.where(col("ts") >= cut1c && col("ts") < cut2c))
     val soFar = e.where(col("ts") < cut2c)
@@ -176,7 +171,7 @@ object EpochVolBench {
     val wallE1 = (System.nanoTime() - t3) / 1e9
     val nDay1 = day1.count()
     println(f"CHAINEPOCH1 $nDay1%,d-event day-1 batch folded+erased+PUBLISHED " +
-      f"in $wallE1%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"in $wallE1%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val nRegFull = req1.count()
     val nRegKept = spark.read.parquet(s"$scratch/regP1").count()
     require(nRegKept > 0 && nRegKept < nRegFull,
@@ -188,7 +183,7 @@ object EpochVolBench {
 
     // Epoch 2 (timed): the register front-end (compacted register +
     // in-order guard), then fold+erase against the PUBLISHED stores.
-    shufWrite.set(0)
+    meter.take()
     val t4 = System.nanoTime()
     val regP = spark.read.parquet(s"$scratch/regP1")
     val day2 = Scratch.scoped(
@@ -211,7 +206,7 @@ object EpochVolBench {
     require(nDropped > 0, "register drop class vacuous at volume")
     println(f"CHAINEPOCH2 $nDay2%,d-event day-2 batch folded through the " +
       f"published register ($nDropped%,d pre-T rows dropped) + erased in " +
-      f"$wallE2%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$wallE2%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     Scratch.releaseAll()
 
     // Chain == one-shot (path independence), family by family.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q125/q126's user erasure at 28.7M events / 240k
@@ -29,11 +28,7 @@ object EraseVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
@@ -57,7 +52,7 @@ object EraseVolBench {
     // ---- the erasure batch: deterministic 10 % of users.
     val removed = e.where(queries.Analytic.erasedUsers)
       .select(col("user_id")).distinct()
-    shufWrite.set(0)
+    meter.take()
     val (removedActivity, recoverS) = timed {
       val ra = e.where(queries.Analytic.erasedUsers)
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
@@ -67,11 +62,11 @@ object EraseVolBench {
     val nRm = removed.count()
     val nRa = removedActivity.count()
     println(f"EVBRECOVER removed-user activity recovered: $nRm%,d users / " +
-      f"$nRa%,d user-days in $recoverS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB" +
+      f"$nRa%,d user-days in $recoverS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB" +
       " (pruned scan on a user-bucketed store; filter scan here)")
 
     // ---- q125: retention erasure over the STORED state.
-    shufWrite.set(0)
+    meter.take()
     val ((fAfter, cAfter), eraseRetS) = timed {
       val (fA, cA) = queries.Analytic.eraseRetention(
         spark.read.parquet(s"$scratch/f"), spark.read.parquet(s"$scratch/c"),
@@ -81,10 +76,10 @@ object EraseVolBench {
       (spark.read.parquet(s"$scratch/f_after"), spark.read.parquet(s"$scratch/c_after"))
     }
     println(f"EVBERASE  q125 retention erasure applied in $eraseRetS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- q126: funnel erasure over the STORED states.
-    shufWrite.set(0)
+    meter.take()
     val (fsAfter, eraseFunS) = timed {
       queries.Analytic.eraseFunnelUsers(
           spark.read.parquet(s"$scratch/fs"), removed)
@@ -92,7 +87,7 @@ object EraseVolBench {
       spark.read.parquet(s"$scratch/fs_after")
     }
     println(f"EVBERASE  q126 funnel erasure applied in $eraseFunS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- branch counters + verify vs from-scratch over survivors.
     val surv = e.join(removed, Seq("user_id"), "left_anti")
@@ -140,7 +135,7 @@ object EraseVolBench {
       .select(col("user_id"))
     val ra2 = e.join(cohortUsers, Seq("user_id"), "left_semi")
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    shufWrite.set(0)
+    meter.take()
     val ((f2, c2), erase2S) = timed {
       val (fA, cA) = queries.Analytic.eraseRetention(
         fStand, spark.read.parquet(s"$scratch/c"), ra2)
@@ -158,7 +153,7 @@ object EraseVolBench {
     require(dropped2.nonEmpty && cohortsGone.nonEmpty,
       "trailing-cohort erasure dropped no cells; branch still unfired at volume")
     println(f"EVBERASE  cohort-$lastCohort erasure (${cohortUsers.count()}%,d users) " +
-      f"applied in $erase2S%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"applied in $erase2S%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     println(f"EVBVERIFY cohort erasure == survivor recompute: ${dropped2.size}%,d cells " +
       f"dropped, ${cohortsGone.size}%,d cohort(s) gone, first-seen -> ${f2.count()}%,d")
 
@@ -172,7 +167,7 @@ object EraseVolBench {
     val reqT = lit(baseUs) +
       (queries.h60(concat(lit("reqday:"), col("user_id"))) % 5) * lit(86400000000L)
     val requests = removed.select(col("user_id"), reqT.as("req_us"))
-    shufWrite.set(0)
+    meter.take()
     val ((f3, c3), erase3S) = timed {
       val postT = e.join(broadcast(requests), Seq("user_id"))
         .where(unix_micros(col("ts")) >= col("req_us"))
@@ -185,7 +180,7 @@ object EraseVolBench {
       (spark.read.parquet(s"$scratch/f_after3"), spark.read.parquet(s"$scratch/c_after3"))
     }
     println(f"EVBPARTIAL q137 per-user-T partial erasure applied in $erase3S%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val filtered = e.join(broadcast(requests), Seq("user_id"), "left")
       .where(col("req_us").isNull || unix_micros(col("ts")) >= col("req_us"))
     val (fWant3, cWant3) = queries.Analytic.retentionState(

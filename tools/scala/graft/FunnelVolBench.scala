@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q113's funnel at 24M events / 200k users
@@ -32,13 +31,9 @@ object FunnelVolBench {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val cascade = Registry.queriesMap("q113_funnel")(spark, dir)
       .collect().map(r => r.getLong(0) ->
@@ -48,11 +43,11 @@ object FunnelVolBench {
     val casS = (System.nanoTime() - t1) / 1e9
     val reached = cascade.values.groupBy(_._1).view.mapValues(_.size).toMap
     println(f"FNVCASCADE ${cascade.size}%,d funnel users in $casS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB  " +
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB  " +
       f"reached 1/2/3 = ${reached.getOrElse(1, 0)}%,d/${reached.getOrElse(2, 0)}%,d/${reached.getOrElse(3, 0)}%,d")
 
     // Independent per-user imperative walk.
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     val walked = Tables.load(spark, dir, "events")
       .where(col("event_type").isin("view", "click", "purchase"))
@@ -80,7 +75,7 @@ object FunnelVolBench {
       .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val walkS = (System.nanoTime() - t2) / 1e9
     println(f"FNVWALK    independent mapGroups walk in $walkS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     require(cascade == walked, {
       val diff = (cascade.keySet ++ walked.keySet)
@@ -111,7 +106,7 @@ object FunnelVolBench {
     for ((lo, hi, tag) <- Seq(
         ("2025-01-06", "2025-01-07", "day6"),
         ("2025-01-07", "2025-01-09", "day7"))) {
-      shufWrite.set(0)
+      meter.take()
       val t4 = System.nanoTime()
       val batch = ev.where(col("ts") >= lit(lo).cast("timestamp") &&
         col("ts") < lit(hi).cast("timestamp"))
@@ -119,7 +114,7 @@ object FunnelVolBench {
       queries.Analytic.mergeFunnelStates(spark.read.parquet(prev), batch)
         .write.mode("overwrite").parquet(next)
       println(f"FNVMERGE   $tag batch merged in ${(System.nanoTime() - t4) / 1e9}%5.1f s  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  " +
+        f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB  " +
         f"(${batch.count()}%,d events)")
       prev = next
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Crossover measurement for [[queries.Analytic.DedupBroadcastIdCap]]
@@ -27,11 +26,7 @@ object GateCrossBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("gatecross_").toString
     val e = Tables.load(spark, dir, "events")
@@ -54,10 +49,10 @@ object GateCrossBench {
       val nUniq = e.where(samp).count()
       def timeBranch(cap: Long, label: String): (Long, Double, Double) = {
         Scratch.releaseAll()
-        shufWrite.set(0)
+        meter.take()
         val t0 = System.nanoTime()
         val n = queries.Analytic.dedupBatchGated(dirty, ids, cap).count()
-        (n, (System.nanoTime() - t0) / 1e9, shufWrite.get / 1e9)
+        (n, (System.nanoTime() - t0) / 1e9, meter.take().shuffleWriteBytes / 1e9)
       }
       val (nB, sB, shB) = timeBranch(Long.MaxValue, "broadcast")
       val (nS, sS, shS) = timeBranch(0L, "shuffle")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q106's Misra-Gries heavy-hitter sketch at 2M docs,
@@ -46,11 +45,7 @@ object HeavyVolBench {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     def shingles = Tables.load(spark, dir, "documents")
       .select(split(trim(col("text")), " +").as("toks"))
@@ -59,33 +54,33 @@ object HeavyVolBench {
       .as[String]
 
     // ---- pass 1: MG candidates (timed) ---------------------------
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val (cands, n) = queries.CurationOps.mgCandidates(shingles, cap)
     val mgS = (System.nanoTime() - t1) / 1e9
     println(f"HVBMG     cap=$cap  stream=$n%,d occurrences  " +
       f"candidates=${cands.length}%,d  pass1=$mgS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- pass 2: exact trim (timed) ------------------------------
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     val heavy = queries.CurationOps.heavyFromShingles(shingles, cap)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val trimS = (System.nanoTime() - t2) / 1e9
     println(f"HVBHEAVY  heavy=${heavy.length}%,d shingles  " +
       f"end_to_end=$trimS%5.1f s (incl. its own pass 1)  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- reference: full groupBy (timed) -------------------------
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     val exact = shingles.toDF("shingle").groupBy(col("shingle"))
       .agg(count(lit(1)).as("c")).where(col("c") * (cap + 1) > n)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val fullS = (System.nanoTime() - t3) / 1e9
     println(f"HVBFULL   full-groupBy reference: ${exact.length}%,d heavy in " +
-      f"$fullS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$fullS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- verification --------------------------------------------
     require(heavy.toMap == exact.toMap,

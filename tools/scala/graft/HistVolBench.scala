@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q112's incremental quantile maintenance at 2M docs:
@@ -28,33 +27,29 @@ object HistVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
     val inc = queries.h60(concat(lit("qtile:"), col("doc_id"))) % 10 === 0
     val standingPath = java.nio.file.Files.createTempDirectory("histvol").toString
 
     // One-time: build + store the standing 90% histogram.
-    shufWrite.set(0)
+    meter.take()
     val t0 = System.nanoTime()
     queries.CurationOps.tokenHistFor(spark, dir, !inc)
       .write.mode("overwrite").parquet(s"$standingPath/hist.parquet")
     val buildS = (System.nanoTime() - t0) / 1e9
     val standing = spark.read.parquet(s"$standingPath/hist.parquet")
     println(f"HISTSETUP standing 90%% histogram built+stored in $buildS%5.1f s  " +
-      f"rows=${standing.count()}%,d  shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"rows=${standing.count()}%,d  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
 
     // Per-batch: scan the 10% batch, merge, read quantiles.
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val merged = queries.CurationOps.quantilesOf(queries.CurationOps.mergeHist(
         standing, queries.CurationOps.tokenHistFor(spark, dir, inc)))
       .collect().map(_.toSeq).toSeq
     val mergeS = (System.nanoTime() - t1) / 1e9
     println(f"HISTMERGE batch merged + quantiles read in $mergeS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
 
     val direct = Registry.queriesMap("q107_exact_quantiles")(spark, dir)
       .collect().map(_.toSeq).toSeq
@@ -67,14 +62,14 @@ object HistVolBench {
     // it is the running monitor state). Timed body: scan the removed
     // batch, histogram it, subtract, read quantiles — the batch's own
     // scan plus a domain-bounded join, like the merge phase.
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     queries.CurationOps.tokenHistFor(spark, dir, lit(true))
       .write.mode("overwrite").parquet(s"$standingPath/histFull.parquet")
     println(f"HISTSETUP standing full histogram stored in " +
       f"${(System.nanoTime() - t2) / 1e9}%5.1f s")
     val rem = queries.h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     val removedQ = queries.CurationOps.quantilesOf(queries.CurationOps.removeFromHist(
         spark.read.parquet(s"$standingPath/histFull.parquet"),
@@ -82,7 +77,7 @@ object HistVolBench {
       .collect().map(_.toSeq).toSeq
     val remS = (System.nanoTime() - t3) / 1e9
     println(f"HISTRM    takedown batch subtracted + quantiles read in $remS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
     val directRm = queries.CurationOps.quantilesOf(
         queries.CurationOps.tokenHistFor(spark, dir, !rem))
       .collect().map(_.toSeq).toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume row for the q149/q150/q151 sketch family at 28.7M events /
@@ -35,23 +34,18 @@ object HllVolBench {
     spark.sparkContext.setLogLevel("ERROR")
     import queries.CurationOps
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("hll_").toString
     val e = Tables.load(spark, dir, "events")
     val nEvents = e.count()
 
     // ---- the REGISTERED build: daySketch, no pre-distinct.
-    shufWrite.set(0)
+    meter.take()
     val t0 = System.nanoTime()
     CurationOps.daySketch(e).write.mode("overwrite").parquet(s"$scratch/days")
     val wallA = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // stage-completion events post asynchronously
-    val bytesA = shufWrite.get
+    val bytesA = meter.take().shuffleWriteBytes
     val store = spark.read.parquet(s"$scratch/days")
     val nStore = store.count()
     // The claim is "effectively zero at any scale": the exchange
@@ -65,7 +59,7 @@ object HllVolBench {
       f"shufWrite=${bytesA / 1e6}%.1f MB (map-side combined)")
 
     // ---- the r18 shape, for contrast: pre-distinct on (day, user).
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val (reg, rho) = CurationOps.hllRegRho(col("user_id"))
     e.select(to_date(col("ts")).as("day"), col("user_id")).distinct()
@@ -74,8 +68,7 @@ object HllVolBench {
       .agg(max(col("rho")).as("max_rho"))
       .write.mode("overwrite").parquet(s"$scratch/days_distinct")
     val wallB = (System.nanoTime() - t1) / 1e9
-    Thread.sleep(2000) // drain async stage events before reading
-    val bytesB = shufWrite.get
+    val bytesB = meter.take().shuffleWriteBytes
     println(f"HLLDISTINCT r18 pre-distinct build: $wallB%5.1f s  " +
       f"shufWrite=${bytesB / 1e6}%.1f MB — identical exchange: Catalyst's " +
       f"RemoveRedundantAggregates already elided the distinct under the " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,11 +46,7 @@ object IndexVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("graft_ivb_").toString
     val m = queries.h60(concat(lit("ingest:"), col("doc_id"))) % 10
@@ -77,7 +72,7 @@ object IndexVolBench {
     // ---- merge batches A (residue 0) and B (residue 1) --------------
     var prev = s"$scratch/idx0"
     for ((res, tag) <- Seq((0, "A"), (1, "B"))) {
-      shufWrite.set(0)
+      meter.take()
       val t1 = System.nanoTime()
       val merged = queries.DedupOps.mergeIndexBuckets(
         spark.read.parquet(prev),
@@ -86,7 +81,7 @@ object IndexVolBench {
       merged.write.mode("overwrite").parquet(next)
       val dt = (System.nanoTime() - t1) / 1e9
       println(f"IVBMERGE  batch $tag (residue $res, 10%%) merged in $dt%6.1f s  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+        f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
       stats(s"after_$tag", spark.read.parquet(next))
       prev = next
     }
@@ -125,14 +120,14 @@ object IndexVolBench {
     val removed = spark.read.parquet(s"$dir/documents.parquet")
       .where(queries.h60(concat(lit("remove:"), col("doc_id"))) % 10 === 0)
       .select(col("doc_id"))
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     queries.DedupOps.removeFromIndexBuckets(
         spark.read.parquet(prev), banding, removed, cap)
       .write.mode("overwrite").parquet(s"$scratch/idxR")
     val dtR = (System.nanoTime() - t3) / 1e9
     println(f"IVBREMOVE 10%% takedown (${removed.count()}%,d docs) applied in " +
-      f"$dtR%6.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$dtR%6.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
     val post = spark.read.parquet(s"$scratch/idxR")
     stats("after_rm", post)
     // Branch census: what happened to each pre-removal bucket.

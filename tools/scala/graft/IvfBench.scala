@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Volume exercise for the trained-IVF operators (q79 probe, q85
@@ -27,27 +26,18 @@ object IvfBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        taskCount.addAndGet(sc.stageInfo.numTasks.toLong)
-      }
-    })
+    val meter = new Meter(spark)
 
     for (name <- Seq("q79_ann_ivf_trained", "q85_ivf_diversity_sample")) {
-      shufWrite.set(0); shufRead.set(0); taskCount.set(0)
+      meter.take()
       val t0 = System.nanoTime()
       val n = Registry.queriesMap(name)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       Scratch.releaseAll()
+      val m = meter.take()
       println(f"IVFBENCH $name%-26s ${dt}%8.2f s  rows=$n%,d  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  shufRead=${shufRead.get / 1e9}%.2f GB  " +
-        f"tasks=${taskCount.get}%,d")
+        f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB  shufRead=${m.shuffleReadBytes / 1e9}%.2f GB  " +
+        f"tasks=${m.tasks}%,d")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q109's pair mining at 2M vectors, on the
@@ -47,14 +46,10 @@ object PairVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     // Production candidate generation: capped banded buckets probed by
     // the anchors' own band keys (the q97 ingest-gate probe shape).
@@ -90,7 +85,7 @@ object PairVolBench {
         r.getLong(3), r.getDouble(4)))
     val wallS = (System.nanoTime() - t1) / 1e9
     println(f"PVBRUN    ${pairs.length}%,d pairs mined from 1,000 anchors over 2M vectors " +
-      f"in $wallS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"in $wallS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // Ground truth: anchors are ids % 2000 == 0; among them the
     // cluster ROOTS are those with (id/4) % 8 == 0 outside the blob.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -56,15 +55,7 @@ object Q53Bench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
+    val meter = new Meter(spark)
 
     // Warm the PREFIX plan's codegen explicitly (maxVocab = 0 forces
     // it): the sf corpus would otherwise warm the bitset plan only.
@@ -73,7 +64,7 @@ object Q53Bench {
     Scratch.releaseAll()
 
     for (dir <- dirs if !flags("noexact")) {
-      shufWrite.set(0); shufRead.set(0)
+      meter.take()
       val t0 = System.nanoTime()
       // 16384 = the registered q53 bound: the probe must OVERFLOW on
       // this corpus and choose the prefix path on its own.
@@ -82,8 +73,9 @@ object Q53Bench {
       val nPairs = pairs.count()
       val dt = (System.nanoTime() - t0) / 1e9
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val m = meter.take()
       println(f"Q53BENCH $dir%-18s docs=$nDocs%,9d $dt%8.2f s  pairs=$nPairs%,d  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  shufRead=${shufRead.get / 1e9}%.2f GB")
+        f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB  shufRead=${m.shuffleReadBytes / 1e9}%.2f GB")
 
       // ---- exactness vs ground truth (untimed) ------------------------
       val badPairs = pairs.where(
@@ -102,7 +94,7 @@ object Q53Bench {
     }
 
     if (flags("q94")) for (dir <- dirs) {
-      shufWrite.set(0); shufRead.set(0)
+      meter.take()
       val t0 = System.nanoTime()
       val pairs = q94Cap.map(c => queries.DedupOps.ngramMinhashPairs(spark, dir, c))
         .getOrElse(Registry.queriesMap("q94_ngram_minhash")(spark, dir))
@@ -110,8 +102,9 @@ object Q53Bench {
       val nPairs = pairs.count()
       val dt = (System.nanoTime() - t0) / 1e9
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val m = meter.take()
       println(f"Q94BENCH $dir%-18s docs=$nDocs%,9d $dt%8.2f s  pairs=$nPairs%,d  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  shufRead=${shufRead.get / 1e9}%.2f GB")
+        f"shufWrite=${m.shuffleWriteBytes / 1e9}%.2f GB  shufRead=${m.shuffleReadBytes / 1e9}%.2f GB")
       val badPairs = pairs.where(
         !(floor(col("doc_a") / 4) === floor(col("doc_b") / 4) &&
           ((floor(col("doc_a") / 4) % 8 === 0) ||

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,14 +33,10 @@ object QuantVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     // ---- canonical exact plan: per-lang sort + row_number (timed) -
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     val rows = Tables.load(spark, dir, "documents")
       .select(col("lang"), size(split(trim(col("text")), " +")).cast("long").as("n"))
@@ -58,17 +53,17 @@ object QuantVolBench {
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     val sortS = (System.nanoTime() - t2) / 1e9
     println(f"QVSORT    full-sort plan: ${sorted.size}%d langs in $sortS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
 
     // ---- q107's registered plan (timed) --------------------------
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val hist = Registry.queriesMap("q107_exact_quantiles")(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     val histS = (System.nanoTime() - t1) / 1e9
     println(f"QVHIST    histogram plan: ${hist.size}%d langs in $histS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.3f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.3f GB")
 
     require(hist == sorted, s"plans disagree: $hist vs $sorted")
     println(f"QVVERIFY  histogram == full-sort, all langs " +

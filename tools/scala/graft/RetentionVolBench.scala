@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q114's retention matrix at 28.7M events / 240k
@@ -29,20 +28,16 @@ object RetentionVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val cells = Registry.queriesMap("q114_retention")(spark, dir)
       .collect().map(r => (r.getDate(0).toString, r.getInt(1),
         r.getLong(2), r.getDouble(3)))
     val wallS = (System.nanoTime() - t1) / 1e9
     println(f"RETRUN    ${cells.length}%,d retention cells over 28.7M events in " +
-      f"$wallS%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"$wallS%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     val e = Tables.load(spark, dir, "events")
     val userDays = e.select(col("user_id"), to_date(col("ts")).as("day"))
@@ -78,7 +73,7 @@ object RetentionVolBench {
     for ((lo, hi, tag) <- Seq(
         ("2025-01-06", "2025-01-07", "day6"),
         ("2025-01-07", "2025-01-09", "day7"))) {
-      shufWrite.set(0)
+      meter.take()
       val t3 = System.nanoTime()
       val batch = e.where(col("ts") >= lit(lo).cast("timestamp") &&
         col("ts") < lit(hi).cast("timestamp"))
@@ -87,7 +82,7 @@ object RetentionVolBench {
       fN.write.mode("overwrite").parquet(s"$scratch/f_$tag")
       cN.write.mode("overwrite").parquet(s"$scratch/c_$tag")
       println(f"RETMERGE  $tag batch folded in ${(System.nanoTime() - t3) / 1e9}%5.1f s  " +
-        f"shufWrite=${shufWrite.get / 1e9}%.2f GB  (${batch.count()}%,d events)")
+        f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB  (${batch.count()}%,d events)")
       fPrev = s"$scratch/f_$tag"; cPrev = s"$scratch/c_$tag"
     }
     val mergedCells = spark.read.parquet(cPrev)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Volume run for q131's incremental batch sessionization at 28.7M
@@ -25,11 +24,7 @@ object SessionMergeVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("sessmerge_").toString
     val e = Tables.load(spark, dir, "events")
@@ -47,7 +42,7 @@ object SessionMergeVolBench {
     // ---- timed: the recurring fold.
     val batch = e.where(isBatch)
     val nBatch = batch.count()
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     queries.Analytic.mergeSessions(standing, batch)
       .write.mode("overwrite").parquet(s"$scratch/merged")
@@ -56,7 +51,7 @@ object SessionMergeVolBench {
     val nMerged = merged.count()
     println(f"SMVMERGE  $nBatch%,d-event batch folded into $nStanding%,d standing " +
       f"sessions in $wallS%5.1f s  -> $nMerged%,d sessions  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- verify: merge == event-level recompute, row for row.
     val recompute = queries.Analytic.sessionTable(e)
@@ -98,7 +93,7 @@ object SessionMergeVolBench {
       queries.h60(concat(lit("redeliver:"), col("event_id"))) % 4 === 0)
     val dirty = batch.unionByName(redelivered)
     val nDirty = dirty.count()
-    shufWrite.set(0)
+    meter.take()
     val t2 = System.nanoTime()
     queries.Analytic.mergeSessions(standing,
         queries.Analytic.dedupBatch(dirty, ids))
@@ -112,13 +107,13 @@ object SessionMergeVolBench {
       s"$bad133 session rows differ from the recompute under redelivery")
     println(f"SMVREDEL  $nDirty%,d-row dirty batch (${nDirty - nBatch}%,d redelivered " +
       f"dupes) deduped against the $nIds%,d-id store and folded in $wall133%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB; fold == recompute, 0 mismatches")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB; fold == recompute, 0 mismatches")
 
     // ---- q133 GATED phase (r16 VERDICT task 2): the same dirty batch
     // with the broadcast cap forced BELOW it, so the size gate takes
     // the shuffle anti-join branch — the plan an over-broadcast-budget
     // batch gets at 100×. Must equal the same recompute.
-    shufWrite.set(0)
+    meter.take()
     val t2b = System.nanoTime()
     queries.Analytic.mergeSessions(standing,
         queries.Analytic.dedupBatchGated(dirty, ids, 0L))
@@ -131,7 +126,7 @@ object SessionMergeVolBench {
       s"$bad133s session rows differ from the recompute (shuffle dedup branch)")
     println(f"SMVGATE   same dirty batch above the broadcast gate (cap forced 0, " +
       f"shuffle anti-join dedup): folded in $wall133s%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB; fold == recompute, 0 mismatches")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB; fold == recompute, 0 mismatches")
     graft.Scratch.releaseAll()
 
     // ---- q147 AGED phase (r17 VERDICT task 6): the same dirty fold
@@ -151,7 +146,7 @@ object SessionMergeVolBench {
       .unionByName(e.where(col("ts") >= hcut &&
         queries.h60(concat(lit("redeliver:"), col("event_id"))) % 4 === 0))
     val nDirtyAged = dirtyAged.count()
-    shufWrite.set(0)
+    meter.take()
     val t2c = System.nanoTime()
     queries.Analytic.mergeSessions(standing,
         queries.Analytic.dedupBatchAged(dirtyAged, agedIds, horizon))
@@ -167,7 +162,7 @@ object SessionMergeVolBench {
     println(f"SMVAGED   $nDirtyAged%,d-row horizon-respecting dirty batch deduped " +
       f"against the $nAged%,d-id AGED store (vs $nIds%,d full — " +
       f"${100.0 * nAged / nIds}%.0f%%) and folded in $wall147%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB; fold == recompute, 0 mismatches")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB; fold == recompute, 0 mismatches")
     Scratch.releaseAll()
 
     // ---- q135/q136 phases: the session table's erase halves. The
@@ -185,7 +180,7 @@ object SessionMergeVolBench {
     val nReq = requests.count()
 
     // q135: whole-user delete.
-    shufWrite.set(0)
+    meter.take()
     val t3 = System.nanoTime()
     standingFull.join(broadcast(requests.select(col("user_id"))),
         Seq("user_id"), "left_anti")
@@ -199,10 +194,10 @@ object SessionMergeVolBench {
     require(bad135 == 0, s"$bad135 rows differ after whole-user erase")
     println(f"SMVERASE  $nReq%,d users' sessions deleted from the " +
       f"${nMerged}%,d-session table in $wall135%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB; == survivor recompute")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB; == survivor recompute")
 
     // q136: partial erasure at per-user T (straddling sessions split).
-    shufWrite.set(0)
+    meter.take()
     val t4 = System.nanoTime()
     queries.Analytic.eraseSessionsBeforeT(standingFull, e, requests)
       .write.mode("overwrite").parquet(s"$scratch/erased136")
@@ -222,7 +217,7 @@ object SessionMergeVolBench {
       .count()
     require(splits > 0, "no standing session straddles its user's T — split branch vacuous")
     println(f"SMVPARTIAL per-user-T partial erase of $nReq%,d users in " +
-      f"$wall136%5.1f s  shufWrite=${shufWrite.get / 1e9}%.2f GB; " +
+      f"$wall136%5.1f s  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB; " +
       f"== filtered recompute; $splits%,d straddling sessions split at T")
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Volume run for q111's source-overlap matrix at 2M docs, on the
   * `curation_gen` corpus whose CROSS-source sharing is provable:
@@ -37,20 +36,16 @@ object SourceOverlapVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
-    shufWrite.set(0)
+    meter.take()
     val t1 = System.nanoTime()
     val rows = Registry.queriesMap("q111_source_overlap")(spark, dir)
       .collect().map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4))))
     val wallS = (System.nanoTime() - t1) / 1e9
     println(f"SOVRUN    ${rows.length}%,d source pairs over 2M docs in $wallS%5.1f s  " +
-      f"shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     val got = rows.map { case (k, (sh, _, _)) => k -> sh }.toMap
     val expected = Map(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Volume exercise for the streaming curation gate (q86's dataflow):
   * stream the 2M-document curation corpus through the quality-gate
@@ -42,23 +42,7 @@ object StreamBench {
         .write.mode("overwrite").parquet(streamSrc)
     val schema = spark.read.parquet(streamSrc).schema
 
-    val batches = new java.util.concurrent.atomic.AtomicInteger()
-    val rowsIn = new java.util.concurrent.atomic.AtomicLong()
-    val maxStateRows = new java.util.concurrent.atomic.AtomicLong()
-    val maxStateMem = new java.util.concurrent.atomic.AtomicLong()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) batches.incrementAndGet()
-        rowsIn.addAndGet(p.numInputRows)
-        p.stateOperators.foreach { so =>
-          maxStateRows.accumulateAndGet(so.numRowsTotal, math.max)
-          maxStateMem.accumulateAndGet(so.memoryUsedBytes, math.max)
-        }
-      }
-    })
+    val meter = new Meter(spark)
 
     val out = java.nio.file.Files.createTempDirectory("graft_stream_bench_").toString
     val gated = queries.CurationOps.withGateFlags(
@@ -82,14 +66,16 @@ object StreamBench {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
-    // Give the async listener bus a moment to drain the last progress.
-    Thread.sleep(2000)
+    val progress = meter.take().progress
+    val rowsIn = progress.map(_.numInputRows).sum
+    val states = progress.flatMap(_.stateOperators)
     val result = spark.read.parquet(s"$out/data")
       .orderBy(col("source")).collect()
     val total = result.map(_.getLong(1)).sum
-    println(f"STREAMBENCH wall=$wall%7.1f s  rows=${rowsIn.get}%,d (agg total=$total%,d)  " +
-      f"docs/sec=${rowsIn.get / wall}%,.0f  batches=${batches.get}  " +
-      f"stateRowsMax=${maxStateRows.get}  stateMemMax=${maxStateMem.get / 1024}%,d KiB")
+    println(f"STREAMBENCH wall=$wall%7.1f s  rows=$rowsIn%,d (agg total=$total%,d)  " +
+      f"docs/sec=${rowsIn / wall}%,.0f  batches=${progress.count(_.numInputRows > 0)}  " +
+      f"stateRowsMax=${states.map(_.numRowsTotal).maxOption.getOrElse(0L)}  " +
+      f"stateMemMax=${states.map(_.memoryUsedBytes).maxOption.getOrElse(0L) / 1024}%,d KiB")
     result.foreach(r => println(s"STREAMBENCH   $r"))
     spark.stop()
   }

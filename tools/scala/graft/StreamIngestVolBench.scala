@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Volume run for q98's stream-static ingest gate (r9 VERDICT task 3 /
   * r10 task 2): the registered instance streams the sf corpus in ONE
@@ -47,17 +47,7 @@ object StreamIngestVolBench {
     println(f"SIVBSETUP incoming=$nIncoming%,d docs in $parts part files, " +
       f"$filesPerTrigger files/trigger")
 
-    final case class BatchRow(batch: Long, rows: Long, stateRows: Long)
-    val curve = new java.util.concurrent.ConcurrentLinkedQueue[BatchRow]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        curve.add(BatchRow(p.batchId, p.numInputRows,
-          p.stateOperators.map(_.numRowsTotal).sum))
-      }
-    })
+    val meter = new Meter(spark)
 
     // ---- the stream: identical dataflow to the registered q98 ------
     val schema = spark.read.parquet(src).schema
@@ -74,12 +64,11 @@ object StreamIngestVolBench {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(2000) // listener bus drain
     println(f"SIVBRUN   $dir docs=$nIncoming%,d streamed in $wall%6.1f s  " +
       f"(${nIncoming / wall}%,.0f docs/s end-to-end incl. static index build)")
-    import scala.jdk.CollectionConverters._
-    curve.asScala.toSeq.sortBy(_.batch).foreach { b =>
-      println(f"SIVBBATCH batch=${b.batch}%2d rows=${b.rows}%,8d stateRows=${b.stateRows}%,8d")
+    meter.take().progress.sortBy(_.batchId).foreach { p =>
+      println(f"SIVBBATCH batch=${p.batchId}%2d rows=${p.numInputRows}%,8d " +
+        f"stateRows=${p.stateOperators.map(_.numRowsTotal).sum}%,8d")
     }
 
     // ---- stream == batch at volume (untimed) -----------------------

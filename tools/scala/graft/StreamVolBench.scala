@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 
 /** Volume exercise for the four event-stream operators (q65-q68's
   * dataflows) on a multi-million-event corpus replayed as a
@@ -60,17 +60,7 @@ object StreamVolBench {
     val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "16")
 
     final case class BatchRow(batch: Long, rows: Long, stateRows: Long, stateMemMB: Double)
-    val curve = new java.util.concurrent.ConcurrentLinkedQueue[BatchRow]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val sr = p.stateOperators.map(_.numRowsTotal).sum
-        val sm = p.stateOperators.map(_.memoryUsedBytes).sum
-        curve.add(BatchRow(p.batchId, p.numInputRows, sr, sm / 1e6))
-      }
-    })
+    val meter = new Meter(spark)
 
     val out = java.nio.file.Files.createTempDirectory("graft_svb_").toString
     def stream(): DataFrame = spark.readStream.schema(schema)
@@ -85,7 +75,6 @@ object StreamVolBench {
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      Thread.sleep(2000) // listener bus drain
       wall
     }
     def sinkToParquet(df: DataFrame): Double = run(chk =>
@@ -99,7 +88,10 @@ object StreamVolBench {
         }.trigger(Trigger.AvailableNow()).start())
 
     def report(wall: Double, streamAgg: Seq[(String, Long)], batchAgg: Seq[(String, Long)]): Unit = {
-      val rows = curve.toArray(Array.empty[BatchRow])
+      val rows = meter.take().progress.map { p =>
+        BatchRow(p.batchId, p.numInputRows, p.stateOperators.map(_.numRowsTotal).sum,
+          p.stateOperators.map(_.memoryUsedBytes).sum / 1e6)
+      }
       val totalIn = rows.map(_.rows).sum
       val maxState = if (rows.isEmpty) 0L else rows.map(_.stateRows).max
       val maxMem = if (rows.isEmpty) 0.0 else rows.map(_.stateMemMB).max

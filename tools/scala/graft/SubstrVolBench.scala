@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -40,11 +39,7 @@ object SubstrVolBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shufWrite.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Meter(spark)
 
     // Warm codegen on the sf corpus (untimed), as the other benches do.
     Registry.queriesMap("q103_substr_dedup")(spark, "/root/testdata/sf0.001")
@@ -65,7 +60,7 @@ object SubstrVolBench {
       sum(when(col("n_kept") < col("n_tokens"), 1L).otherwise(0L)).as("touched")).collect()(0)
     println(f"SUBSTRVOL $dir docs=$nDocs%,d  $dt%7.1f s  " +
       f"tokens=${agg.getLong(0)}%,d kept=${agg.getLong(1)}%,d " +
-      f"touched_docs=${agg.getLong(2)}%,d  shufWrite=${shufWrite.get / 1e9}%.2f GB")
+      f"touched_docs=${agg.getLong(2)}%,d  shufWrite=${meter.take().shuffleWriteBytes / 1e9}%.2f GB")
 
     // ---- ground-truth class invariants (untimed) --------------------
     val g = (col("doc_id") / 4).cast("long")
