@@ -15,13 +15,15 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   * those: `actions`, the distinct SQL executions the started jobs belong
   * to (a job outside any SQL execution is no action); `shuffleStages`,
   * the stages that ran shuffle map tasks in their first attempt (a
-  * skipped stage runs none); `inputRecords`; and the progress events of
-  * the session's streaming queries. */
+  * skipped stage runs none); `inputRecords`; `jobLabels`, the started
+  * jobs per job description (`""` for a job without one); and the
+  * progress events of the session's streaming queries. */
 final case class Measure(actions: Long = 0, jobs: Long = 0, stages: Long = 0,
     shuffleStages: Long = 0, tasks: Long = 0, executorCpuNs: Long = 0,
     executorRunMs: Long = 0, shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,
     spillBytes: Long = 0, inputBytes: Long = 0, inputRecords: Long = 0,
-    outputBytes: Long = 0, progress: Vector[StreamingQueryProgress] = Vector.empty) {
+    outputBytes: Long = 0, jobLabels: Map[String, Long] = Map.empty,
+    progress: Vector[StreamingQueryProgress] = Vector.empty) {
 
   /** Every count, under the harness meter's names where it has one. */
   def counters: Seq[(String, Long)] = Seq("actions" -> actions, "jobs" -> jobs,
@@ -38,7 +40,7 @@ final case class Measure(actions: Long = 0, jobs: Long = 0, stages: Long = 0,
   *
   * The scheduler events of every thread and session on the context
   * count, so a window measures everything that ran in it: a body's
-  * `Future`s too, and anything else running at the same time. Events
+  * [[Par]] sides too, and anything else running at the same time. Events
   * are delivered asynchronously; [[take]] drains the listener bus
   * first, so a window ends exactly where the call is. */
 final class Meter(spark: SparkSession) extends SparkListener with AutoCloseable {
@@ -47,8 +49,11 @@ final class Meter(spark: SparkSession) extends SparkListener with AutoCloseable 
   private var shuffleMapStages = Set.empty[Int]
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    acc = acc.copy(jobs = acc.jobs + 1)
-    Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+    val props = Option(e.properties)
+    val label = props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+    acc = acc.copy(jobs = acc.jobs + 1,
+      jobLabels = acc.jobLabels.updated(label, acc.jobLabels.getOrElse(label, 0L) + 1))
+    props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
       .foreach(executions += _)
   }
 

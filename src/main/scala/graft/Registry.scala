@@ -14,12 +14,43 @@ final case class Q(
     doc: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    /** Optional one-time setup (e.g. bucketed-table layout) that a
-      * deployment pays once and reuses across many queries. `run` must
-      * stay self-sufficient — it triggers the same (memoized) setup if
-      * it was not prepared — but the bench runs this untimed so the
-      * timed body measures the recurring query, not the layout build. */
+    /** The untimed build of the query's standing artifacts, derived by
+      * [[Q.staged]] and never written by hand; see there. */
     prepare: Option[(SparkSession, String) => Unit] = None)
+
+object Q {
+  /** A query over standing artifacts: state a deployment builds once
+    * and reads on every run (bucketed layouts, stored indexes, the
+    * pre-cutoff behavioral stores). `arts` builds them; `body` is the
+    * recurring query over them.
+    *
+    * `prepare` builds the artifacts and parks them under the query's
+    * name; the next `run` in that session and directory takes them
+    * (the entry is removed), so the bench times only the body. A run
+    * with nothing parked (Verify, the specs, the driver's correctness
+    * gate) builds them inline, so every run is self-sufficient and
+    * both paths compute the same rows. Parked entries are a pass-
+    * lifetime memo: `queries.evictMemos` drops them, and so does the
+    * end of their session's context. */
+  def staged[A](name: String, doc: String, oracle: Option[String])(
+      arts: (SparkSession, String) => A)(
+      body: (SparkSession, String, A) => DataFrame): Q =
+    Q(name, doc,
+      (s, dir) => body(s, dir, Option(parked(s).remove(dir -> name))
+        .fold(arts(s, dir))(_.asInstanceOf[A])),
+      oracle,
+      prepare = Some((s, dir) => { parked(s).put(dir -> name, arts(s, dir)); () }))
+
+  private val Parked = queries.Memo("parked")
+
+  /** The session's parked artifacts, keyed by (dir, query name). */
+  private def parked(s: SparkSession) =
+    queries.sessionMemo(s, Parked, "")(
+      new java.util.concurrent.ConcurrentHashMap[(String, String), Any]())
+
+  /** How many artifacts `s` has parked and no run has taken yet. */
+  private[graft] def parkedCount(s: SparkSession): Int = parked(s).size
+}
 
 object Registry {
   /** All query modules, merged. Order is stable for reporting. */

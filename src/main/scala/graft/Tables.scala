@@ -66,14 +66,14 @@ object Tables {
     * stale schema, at the cost of one driver-side file listing per
     * read. The schema is file metadata, the same thing a catalog table
     * keeps, not a per-session result: it holds no session or plan, and
-    * it is deliberately not a [[queries.registerMemo]] memo, so
-    * `evictMemos` between bench passes does not make each pass re-pay
-    * the inference.
+    * it is deliberately not a [[queries.sessionMemo]] entry, so it
+    * outlives sessions, and `evictMemos` between bench passes does not
+    * make each pass re-pay the inference.
     *
     * The read confs ([[ReadConfs]]) are written only when the session
     * does not already hold their values, so a session's conf is
     * written at most once, not on every read (and not from every
-    * `Future` thread that reads a table). Inference always runs under
+    * [[Par]] side that reads a table). Inference always runs under
     * them, so a schema cached by one session is valid in any other. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     ReadConfs.foreach { case (k, v) =>

@@ -725,17 +725,14 @@ object Analytic {
     bucketedStore(s, dir, "funstates_pre", "user_id")(funnelStates(
       t(s, dir, "events").where(col("ts") < lit(AnalyticCutoff).cast("timestamp"))))
 
-  val q119 = Q(
+  val q119 = Q.staged(
     "q119_funnel_merge",
     "incremental funnel maintenance: final-window batch merged into standing per-user states == full recompute",
-    (s, dir) => {
-      val cut = lit(AnalyticCutoff).cast("timestamp")
-      val e = t(s, dir, "events")
-      funnelReport(mergeFunnelStates(
-        prepTake(s, dir, "prep119")(q119Arts(s, dir)), e.where(col("ts") >= cut)))
-    },
-    Some(oFunnelSql),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep119", q119Arts(s, dir))))
+    Some(oFunnelSql))(q119Arts) { (s, dir, standing) =>
+    val cut = lit(AnalyticCutoff).cast("timestamp")
+    val e = t(s, dir, "events")
+    funnelReport(mergeFunnelStates(standing, e.where(col("ts") >= cut)))
+  }
 
   /** Retention standing artifacts over an event relation: the
     * first-seen table (user_id, cohort_day) and the ADDITIVE cells
@@ -867,18 +864,15 @@ object Analytic {
     (f, cells)
   }
 
-  val q120 = Q(
+  val q120 = Q.staged(
     "q120_retention_merge",
     "incremental retention maintenance: final-window batch folded into first-seen + cells == full recompute",
-    (s, dir) => {
-      val cut = lit(AnalyticCutoff).cast("timestamp")
-      val e = t(s, dir, "events")
-      val (f, cells) = prepTake(s, dir, "prep120")(q120Arts(s, dir))
-      val (_, merged) = mergeRetention(f, cells, e.where(col("ts") >= cut))
-      retentionReport(merged)
-    },
-    Some(oRetentionSql),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep120", q120Arts(s, dir))))
+    Some(oRetentionSql))(q120Arts) { case (s, dir, (f, cells)) =>
+    val cut = lit(AnalyticCutoff).cast("timestamp")
+    val e = t(s, dir, "events")
+    val (_, merged) = mergeRetention(f, cells, e.where(col("ts") >= cut))
+    retentionReport(merged)
+  }
 
   // ---- q125/q126: USER ERASURE from the behavioral standing
   // artifacts — the remove half of q119/q120's add half, completing
@@ -1039,17 +1033,9 @@ object Analytic {
     (f, cells)
   }
 
-  val q125 = Q(
+  val q125 = Q.staged(
     "q125_retention_erase",
     "user erasure from retention state: first-seen rows deleted, cells decremented == recompute over survivors",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      val (f, cells) = prepTake(s, dir, "prep125")(q125Arts(s, dir))
-      val removedActivity = e.where(erasedUsers)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val (_, after) = eraseRetention(f, cells, removedActivity)
-      retentionReport(after)
-    },
     Some(s"""WITH d AS (
         SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
         WHERE ${oH60("'erase:' || CAST(user_id AS VARCHAR)")} % 10 <> 0),
@@ -1063,8 +1049,13 @@ object Analytic {
       SELECT c.cohort_day, CAST(c.day_offset AS INTEGER) AS day_offset, c.n_users,
         round(CAST(c.n_users AS DOUBLE) / sz.cohort_size, 4) AS retention
       FROM cells c JOIN sz ON c.cohort_day = sz.cohort_day
-      ORDER BY c.cohort_day, c.day_offset"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep125", q125Arts(s, dir))))
+      ORDER BY c.cohort_day, c.day_offset"""))(q125Arts) { case (s, dir, (f, cells)) =>
+    val e = t(s, dir, "events")
+    val removedActivity = e.where(erasedUsers)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+    val (_, after) = eraseRetention(f, cells, removedActivity)
+    retentionReport(after)
+  }
 
   /** The registered funnel-erasure instance: state-row delete over
     * the standing q113 states, reported through the shared
@@ -1081,15 +1072,9 @@ object Analytic {
     st
   }
 
-  val q126 = Q(
+  val q126 = Q.staged(
     "q126_funnel_erase",
     "user erasure from funnel state: removed users' state rows deleted == recompute over survivors",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      val removed = e.where(erasedUsers).select(col("user_id")).distinct()
-      funnelReport(eraseFunnelUsers(
-        prepTake(s, dir, "prep126")(q126Arts(s, dir)), removed))
-    },
     Some(s"""WITH ev AS (
         SELECT user_id, event_type, ts FROM events
         WHERE ${oH60("'erase:' || CAST(user_id AS VARCHAR)")} % 10 <> 0),
@@ -1111,8 +1096,11 @@ object Analytic {
         date_diff('microsecond', c.t2, p.t3) AS c2p_micros
       FROM v LEFT JOIN c ON v.user_id = c.user_id
              LEFT JOIN p ON v.user_id = p.user_id
-      ORDER BY v.user_id"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep126", q126Arts(s, dir))))
+      ORDER BY v.user_id"""))(q126Arts) { (s, dir, standing) =>
+    val e = t(s, dir, "events")
+    val removed = e.where(erasedUsers).select(col("user_id")).distinct()
+    funnelReport(eraseFunnelUsers(standing, removed))
+  }
 
   // ---- q131: INCREMENTAL BATCH SESSIONIZATION — the session family's
   // missing batch add half (r15 VERDICT task 2). The family had live
@@ -1247,15 +1235,9 @@ object Analytic {
     * (extend forward/backward, open, two-session bridge, chain
     * bridge, interior count) on crafted tables and proves the sf
     * split fires the bridge branch non-vacuously. */
-  val q131 = Q(
+  val q131 = Q.staged(
     "q131_session_table_merge",
     "incremental batch sessionization: event batch folded into the standing session table (extend/open/bridge) == recompute",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      mergeSessions(
-        prepTake(s, dir, "prep131")(q131Arts(s, dir)), e.where(sessBatchEvents))
-        .orderBy(col("user_id"), col("start_us"))
-    },
     Some(s"""WITH x AS (
         SELECT user_id, epoch_us(ts) AS ts_us FROM events),
       b AS (
@@ -1271,8 +1253,11 @@ object Analytic {
       SELECT user_id, count(*) AS n_events,
         min(ts_us) AS start_us, max(ts_us) AS end_us
       FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, start_us"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep131", q131Arts(s, dir))))
+      ORDER BY user_id, start_us"""))(q131Arts) { (s, dir, standing) =>
+    val e = t(s, dir, "events")
+    mergeSessions(standing, e.where(sessBatchEvents))
+      .orderBy(col("user_id"), col("start_us"))
+  }
 
   // ---- q133: REDELIVERY-TOLERANT session fold — the registered
   // witness for q131's one input contract. q131 documents exactly-once
@@ -1378,18 +1363,15 @@ object Analytic {
     * the whole point of the witness. SessionMergeSpec's redelivery
     * cases pin both duplicate classes and the sf replay asserts the
     * duplicate pressure is real (non-vacuous). */
-  val q133 = Q(
+  val q133 = Q.staged(
     "q133_session_merge_redelivery",
     "redelivery-tolerant session fold: duplicate batch rows dropped against the standing id store == recompute",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      val (standing, ids) = prepTake(s, dir, "prep133")(q133Arts(s, dir))
-      val batch = e.where(sessBatchEvents).unionByName(e.where(redelivered))
-      mergeSessions(standing, dedupBatch(batch, ids))
-        .orderBy(col("user_id"), col("start_us"))
-    },
-    q131.oracle,
-    prepare = Some((s, dir) => prepPut(s, dir, "prep133", q133Arts(s, dir))))
+    q131.oracle)(q133Arts) { case (s, dir, (standing, ids)) =>
+    val e = t(s, dir, "events")
+    val batch = e.where(sessBatchEvents).unionByName(e.where(redelivered))
+    mergeSessions(standing, dedupBatch(batch, ids))
+      .orderBy(col("user_id"), col("start_us"))
+  }
 
   // ---- q135/q136: the session table's ERASE halves — the matrix
   // rule (every standing artifact gets add, remove, and user-erase
@@ -1413,16 +1395,9 @@ object Analytic {
     * oracle recomputes the gap-split over the survivors' events, so
     * the driver re-proves delete == rebuild cross-engine every
     * round. */
-  val q135 = Q(
+  val q135 = Q.staged(
     "q135_session_table_user_erase",
     "user erasure from the standing session table: broadcast anti-join row delete == recompute over survivors",
-    (s, dir) => {
-      val removed = t(s, dir, "events").where(erasedUsers)
-        .select(col("user_id")).distinct()
-      prepTake(s, dir, "prep135")(q135Arts(s, dir))
-        .join(broadcast(removed), Seq("user_id"), "left_anti")
-        .orderBy(col("user_id"), col("start_us"))
-    },
     Some(s"""WITH x AS (
         SELECT user_id, epoch_us(ts) AS ts_us FROM events
         WHERE ${oH60("'erase:' || CAST(user_id AS VARCHAR)")} % 10 <> 0),
@@ -1439,23 +1414,18 @@ object Analytic {
       SELECT user_id, count(*) AS n_events,
         min(ts_us) AS start_us, max(ts_us) AS end_us
       FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, start_us"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep135", q135Arts(s, dir))))
+      ORDER BY user_id, start_us"""))(q135Arts) { (s, dir, standing) =>
+    val removed = t(s, dir, "events").where(erasedUsers)
+      .select(col("user_id")).distinct()
+    standing
+      .join(broadcast(removed), Seq("user_id"), "left_anti")
+      .orderBy(col("user_id"), col("start_us"))
+  }
 
   /** The q130/q134 per-user request instants, batch-side: T(u) =
     * base + (h60("reqday:"+u) % range) days over the [[erasedUsers]]
     * cohort — ONE privacy feed across the stream and batch halves. */
   private[graft] val reqInstantUs: Column = privacyInstantUs
-
-  /** q136's standing artifact — the same full-corpus table under its
-    * own prepare tag (prepTake consumes entries, so sharing q135's
-    * would leave whichever query runs second building inline). */
-  private def q136Arts(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    // Shares q135's full-corpus store (bucketedStore is idempotent
-    // per (dir, tag); prepTake tags stay per-query).
-    bucketedStore(s, dir, "sess_full", "user_id")(
-      sessionTable(t(s, dir, "events")))
 
   /** PARTIAL session-table erasure at per-user instants — forget each
     * requested user's history BEFORE their own T while keeping their
@@ -1488,22 +1458,20 @@ object Analytic {
       .unionByName(sessionTable(postT))
   }
 
-  val q136 = Q(
+  /** The standing artifacts of q136, q137 and q143: the privacy
+    * feed's bounded store and the family's full-corpus state. The
+    * feed reads its store (r20 — the r17 q140 accounting applied to
+    * the single-family erases: a deployment's request log IS its own
+    * table; deriving it inline cost the body a corpus scan per
+    * reference). The oracles keep the events-derived DEFINITION
+    * inline. */
+  private def withRequests[A](arts: (org.apache.spark.sql.SparkSession, String) => A)
+      : (org.apache.spark.sql.SparkSession, String) => (DataFrame, A) =
+    (s, dir) => (EpochOps.requestStore(s, dir), arts(s, dir))
+
+  val q136 = Q.staged(
     "q136_session_table_erase_before_t",
     "partial session-table erasure at per-user T: touched rows rebuilt from post-T events (straddling sessions split) == recompute",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      // The privacy feed reads its bounded store (r20 — the r17
-      // q140 accounting applied to the single-family erases: a
-      // deployment's request log IS its own table; deriving it
-      // inline cost the body a corpus scan per reference, and the
-      // feed is broadcast into two joins here). The oracle keeps
-      // the events-derived DEFINITION inline.
-      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
-      eraseSessionsBeforeT(
-        prepTake(s, dir, "prep136")(q136Arts(s, dir)), e, requests)
-        .orderBy(col("user_id"), col("start_us"))
-    },
     Some(s"""WITH req AS (
         SELECT user_id, ${oPrivacyInstantUs("user_id")} AS t_us
         FROM (SELECT DISTINCT user_id FROM events)
@@ -1525,9 +1493,13 @@ object Analytic {
       SELECT user_id, count(*) AS n_events,
         min(ts_us) AS start_us, max(ts_us) AS end_us
       FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, start_us"""),
-    prepare = Some((s, dir) => { EpochOps.requestStore(s, dir)
-      prepPut(s, dir, "prep136", q136Arts(s, dir)) }))
+      ORDER BY user_id, start_us"""))(withRequests(q135Arts)) {
+    case (s, dir, (feed, standing)) =>
+      // The feed is broadcast into two joins here.
+      val requests = graft.Scratch.scoped(feed, adaptive = true)
+      eraseSessionsBeforeT(standing, t(s, dir, "events"), requests)
+        .orderBy(col("user_id"), col("start_us"))
+  }
 
   // ---- q137: PARTIAL RETENTION ERASURE at per-user instants — the
   // cohort-move shape, and the batch half of q132 (as q136 is of
@@ -1585,8 +1557,8 @@ object Analytic {
     (f1.unionByName(fNew), merged)
   }
 
-  /** q137's standing artifacts — the full-corpus retention state
-    * (q125Arts' shape under its own prepare tag). */
+  /** q137's standing artifacts — the full-corpus retention state as
+    * stores. */
   private def q137Arts(s: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) = {
     val f = bucketedStore(s, dir, "retfirst_full", "user_id")(
@@ -1604,15 +1576,16 @@ object Analytic {
     * AnalyticEraseSpec pins cohort-move / vanish / straddle-day /
     * same-cohort-rejoin; EraseVolBench's partial phase runs it at
     * 28.7M events. */
-  val q137 = Q(
+  val q137 = Q.staged(
     "q137_retention_erase_before_t",
     "partial retention erasure at per-user T: full decrement + post-T re-cohort (cohort move) == filtered recompute",
-    (s, dir) => {
+    // The per-user-T filtered rebuild, hoisted to the package object
+    // (r17 ADVICE) — q139 and the epochs share it without touching
+    // this object during their init.
+    Some(oRetentionEraseBeforeTSql))(withRequests(q137Arts)) {
+    case (s, dir, (feed, (f, cells))) =>
       val e = t(s, dir, "events")
-      val (f, cells) = prepTake(s, dir, "prep137")(q137Arts(s, dir))
-      // Privacy feed from its bounded store (r20 — see q136's note);
-      // the oracle keeps the events-derived definition inline.
-      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
+      val requests = graft.Scratch.scoped(feed, adaptive = true)
       // Both activity relations derive from one cohort slice (r20:
       // the [[cohortEvents]] refactor — the semi-join the old
       // fullActivity branch paid was subsumed by the inner join),
@@ -1624,13 +1597,7 @@ object Analytic {
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val (_, after) = eraseRetentionBeforeT(f, cells, fullActivity, postT)
       retentionReport(after)
-    },
-    // The per-user-T filtered rebuild, hoisted to the package object
-    // (r17 ADVICE) — q139 and the epochs share it without touching
-    // this object during their init.
-    Some(oRetentionEraseBeforeTSql),
-    prepare = Some((s, dir) => { EpochOps.requestStore(s, dir)
-      prepPut(s, dir, "prep137", q137Arts(s, dir)) }))
+  }
 
   // ---- q142: REDELIVERY-TOLERANT retention fold — q133's recipe
   // applied to the analytic family (r16 VERDICT task 5). The two
@@ -1678,19 +1645,16 @@ object Analytic {
     * hash gate re-proves that redelivery changes NOTHING once the
     * front-end runs. AnalyticMergeSpec pins the guard raising
     * WITHOUT the front-end on the same dirty batch. */
-  val q142 = Q(
+  val q142 = Q.staged(
     "q142_retention_merge_redelivery",
     "redelivery-tolerant retention fold: dirty suffix batch deduped against the standing id store == recompute",
-    (s, dir) => {
-      val cut = lit(AnalyticCutoff).cast("timestamp")
-      val e = t(s, dir, "events")
-      val (f, cells, ids) = prepTake(s, dir, "prep142")(q142Arts(s, dir))
-      val dirty = e.where(col("ts") >= cut).unionByName(e.where(redelivered))
-      val (_, merged) = mergeRetention(f, cells, dedupBatch(dirty, ids))
-      retentionReport(merged)
-    },
-    q120.oracle,
-    prepare = Some((s, dir) => prepPut(s, dir, "prep142", q142Arts(s, dir))))
+    q120.oracle)(q142Arts) { case (s, dir, (f, cells, ids)) =>
+    val cut = lit(AnalyticCutoff).cast("timestamp")
+    val e = t(s, dir, "events")
+    val dirty = e.where(col("ts") >= cut).unionByName(e.where(redelivered))
+    val (_, merged) = mergeRetention(f, cells, dedupBatch(dirty, ids))
+    retentionReport(merged)
+  }
 
   // ---- q147: the HORIZON-AGED id store (r17 VERDICT task 6) —
   // q133/q142's standing event-id store keeps EVERY id ever folded,
@@ -1772,18 +1736,9 @@ object Analytic {
     * SessionMergeSpec pins equality with the FULL store on a
     * horizon-respecting batch, the loud raise on a violating one,
     * and the sf census that both aged classes are non-vacuous. */
-  val q147 = Q(
+  val q147 = Q.staged(
     "q147_session_merge_aged_ids",
     s"redelivery-tolerant session fold with a horizon-aged id store (ids >= $RedeliveryHorizon): bounded store == recompute, pre-horizon batches refused loudly",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      val hcut = lit(RedeliveryHorizon).cast("timestamp")
-      val (standing, agedIds) = prepTake(s, dir, "prep147")(q147Arts(s, dir))
-      val batch = e.where(sessBatchEvents && col("ts") >= hcut)
-        .unionByName(e.where(redelivered && col("ts") >= hcut))
-      mergeSessions(standing, dedupBatchAged(batch, agedIds, RedeliveryHorizon))
-        .orderBy(col("user_id"), col("start_us"))
-    },
     Some(s"""WITH x AS (
         SELECT user_id, epoch_us(ts) AS ts_us FROM events
         WHERE ${oH60("'sessbatch:' || CAST(event_id AS VARCHAR)")} % 8 <> 0
@@ -1801,8 +1756,14 @@ object Analytic {
       SELECT user_id, count(*) AS n_events,
         min(ts_us) AS start_us, max(ts_us) AS end_us
       FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, start_us"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep147", q147Arts(s, dir))))
+      ORDER BY user_id, start_us"""))(q147Arts) { case (s, dir, (standing, agedIds)) =>
+    val e = t(s, dir, "events")
+    val hcut = lit(RedeliveryHorizon).cast("timestamp")
+    val batch = e.where(sessBatchEvents && col("ts") >= hcut)
+      .unionByName(e.where(redelivered && col("ts") >= hcut))
+    mergeSessions(standing, dedupBatchAged(batch, agedIds, RedeliveryHorizon))
+      .orderBy(col("user_id"), col("start_us"))
+  }
 
   // ---- q143: PARTIAL FUNNEL ERASURE at per-user T — the batch
   // matrix cell [[eraseFunnelBeforeT]] filled for the q140 epoch,
@@ -1823,22 +1784,17 @@ object Analytic {
     * so the driver re-proves rebuild-from-post-T == filtered
     * recompute cross-engine every round. EpochSpec pins the crafted
     * branches (post-T rebuild, vanish, untouched passthrough). */
-  val q143 = Q(
+  val q143 = Q.staged(
     "q143_funnel_erase_before_t",
     "partial funnel erasure at per-user T: touched cascades rebuilt from post-T events == filtered recompute",
-    (s, dir) => {
-      val e = t(s, dir, "events")
-      val states = prepTake(s, dir, "prep143")(q143Arts(s, dir))
-      // Privacy feed from its bounded store (r20 — see q136's note).
-      val requests = graft.Scratch.scoped(EpochOps.requestStore(s, dir), adaptive = true)
-      funnelReport(eraseFunnelBeforeT(states, e, requests))
-    },
     // q130's VERBATIM rebuild, via the package object rather than
     // StreamingOps.q130.oracle (r17 ADVICE: that cross-object
     // reference was half of a circular init dependency with q139).
-    Some(oFunnelEraseBeforeTSql),
-    prepare = Some((s, dir) => { EpochOps.requestStore(s, dir)
-      prepPut(s, dir, "prep143", q143Arts(s, dir)) }))
+    Some(oFunnelEraseBeforeTSql))(withRequests(q143Arts)) {
+    case (s, dir, (feed, states)) =>
+      val requests = graft.Scratch.scoped(feed, adaptive = true)
+      funnelReport(eraseFunnelBeforeT(states, t(s, dir, "events"), requests))
+  }
 
   val all: Seq[Q] = Seq(q15, q16, q17, q18, q19, q20, q21, q22, q23, q24,
     q25, q26, q29, q39, q70)

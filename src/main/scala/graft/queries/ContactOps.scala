@@ -27,25 +27,20 @@ object ContactOps {
     * Scratch leaf, so consumers stop re-analyzing (and re-running) the
     * normalize map; after the first query's release its next read
     * recomputes it once, and the blocks live until the memo drops it. */
-  private val normMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Dataset[Contact]]()
-  registerMemo(normMemo) // evicted when the owning session's context ends
+  private val Normalized = Memo("norm")
 
   private def normalized(s: SparkSession, dir: String) =
-    // Keyed on sessionUUID (stable + unique), not identityHashCode: an
-    // identity hash can be reused by a new session after the old one is
-    // GC'd, which would hand it a Dataset bound to a dead session.
     // The repartition spreads the CPU-heavy normalize map across the
     // cluster: the corpus parquet is a single split, so the narrow map
     // would otherwise run as ONE task (measured 6×; the tiny-row
     // shuffle is ~free — see Pipeline.normalize's contract).
-    normMemo.computeIfAbsent(s"${sessionKey(s)}:$dir",
-      _ => graft.Scratch.scoped(Pipeline.normalize(Synth.contacts(s, dir)
+    sessionMemo(s, Normalized, dir)(
+      graft.Scratch.scoped(Pipeline.normalize(Synth.contacts(s, dir)
         .repartition(s.sparkContext.defaultParallelism)), adaptive = true))
 
   /** Default-config dedupe+merge output (merged contacts + lineage),
     * materialized once per (session, dir) — the same consolidate-
-    * writes-once argument as [[normMemo]]: the reference runs the
+    * writes-once argument as [[Normalized]]: the reference runs the
     * expensive consolidate stage ONCE and every later stage re-reads
     * its artifacts (Makefile:55), so the engine-side equivalents
     * (q45's projection, q87's composed validate→confidence→tag) share
@@ -54,17 +49,14 @@ object ContactOps {
     * projections of the one scoped table
     * [[Pipeline.dedupeContactsWithLineage]] builds. Non-default configs
     * (q72's stop-key cap) never consult the memo. */
-  private val mergedMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.Dataset[MergedContact],
-      org.apache.spark.sql.Dataset[Lineage])]()
-  registerMemo(mergedMemo) // evicted when the owning session's context ends
+  private val MergedDefault = Memo("merged")
 
   private def mergedDefault(s: SparkSession, dir: String) =
-    mergedMemo.computeIfAbsent(s"${sessionKey(s)}:$dir", _ => {
+    sessionMemo(s, MergedDefault, dir) {
       val ml = Pipeline.dedupeContactsWithLineage(normalized(s, dir))
       graft.Scratch.fill(ml._1) // the stages downstream are planned from its size
       ml
-    })
+    }
 
   // -- q40: name grammar ------------------------------------------------
 

@@ -984,19 +984,18 @@ object CurationOps {
     * cross-engine every round. Per-USER erasure is out of scope BY
     * CONSTRUCTION (lossy sketch — see the family scaladoc): that
     * request routes to the exact artifacts or a filtered rebuild. */
-  val q150 = Q(
+  val q150 = Q.staged(
     "q150_hll_retention_drop",
     s"sketch day-retention: expire days before $HllRetainFrom by re-merging the surviving per-day sketches == direct sketch over the surviving window",
-    (s, dir) => {
-      val merged = prepTake(s, dir, "prep150")(q150Arts(s, dir))
+    Some(oHll(s"""SELECT DISTINCT user_id AS k FROM events
+      WHERE CAST(ts AS DATE) >= DATE '$HllRetainFrom'""")))(q150Arts) {
+    (s, _, days) =>
+      val merged = days
         .where(col("day") >= lit(HllRetainFrom).cast("date"))
         .groupBy(col("register_id"))
         .agg(max(col("max_rho")).as("max_rho"))
       hllDense(s, merged)
-    },
-    Some(oHll(s"""SELECT DISTINCT user_id AS k FROM events
-      WHERE CAST(ts AS DATE) >= DATE '$HllRetainFrom'""")),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep150", q150Arts(s, dir))))
+  }
 
   /** q151's standing artifact — the per-day sketch store as of the
     * epoch boundary ([[Analytic.AnalyticCutoff]], the nightly job's
@@ -1025,17 +1024,15 @@ object CurationOps {
     * pass (days × 2^p partial rows — see [[daySketch]]); the standing
     * store is days × 2^p rows read back, never events; no
     * corpus-keyed exchange anywhere (HllSpec pins the plan). */
-  val q151 = Q(
+  val q151 = Q.staged(
     "q151_hll_add_fold",
     s"sketch add half: the day's batch sketched per day and folded into the standing per-day store (days < ${Analytic.AnalyticCutoff}) by register max == the direct sketch over all days",
-    (s, dir) => {
-      val standing = prepTake(s, dir, "prep151")(q151Arts(s, dir))
+    Some(oHll("SELECT DISTINCT user_id AS k FROM events")))(q151Arts) {
+    (s, dir, standing) =>
       val folded = foldDaySketch(standing, epochBatch(s, dir))
       hllDense(s, folded.groupBy(col("register_id"))
         .agg(max(col("max_rho")).as("max_rho")))
-    },
-    Some(oHll("SELECT DISTINCT user_id AS k FROM events")),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep151", q151Arts(s, dir))))
+  }
 
   /** The nightly batch slice the sketch family folds
     * ([[Analytic.AnalyticCutoff]] on — the q140 epoch's batch). */
@@ -1130,11 +1127,11 @@ object CurationOps {
     * intermediate is days × 2^p rows written once and read back, so
     * the chain never rescans an earlier epoch's events and carries
     * no corpus-keyed exchange. */
-  val q153 = Q(
+  val q153 = Q.staged(
     "q153_sketch_epoch_chain",
     "chained sketch epochs: epoch 1 folds day 1 into the standing per-day store and publishes it; epoch 2 folds day 2 through the published store == the direct sketch over all days",
-    (s, dir) => {
-      val standing = prepTake(s, dir, "prep153")(q151Arts(s, dir))
+    Some(oHll("SELECT DISTINCT user_id AS k FROM events")))(q151Arts) {
+    (s, dir, standing) =>
       val e = t(s, dir, "events")
       val cut1 = lit(Analytic.AnalyticCutoff).cast("timestamp")
       val cut2 = lit(EpochOps.Cut2).cast("timestamp")
@@ -1144,9 +1141,7 @@ object CurationOps {
       val folded = foldDaySketch(published, e.where(col("ts") >= cut2))
       hllDense(s, folded.groupBy(col("register_id"))
         .agg(max(col("max_rho")).as("max_rho")))
-    },
-    Some(oHll("SELECT DISTINCT user_id AS k FROM events")),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep153", q151Arts(s, dir))))
+  }
 
   /** Test seam for HllSpec's crafted chain: the q153 dataflow over
     * explicit standing/day-1/day-2 event relations (the registered

@@ -283,31 +283,25 @@ object EpochOps {
     // serialize driver-action latency — so they compose on separate
     // threads (guide §2.6, the q146 side-overlap device applied
     // INSIDE the epoch body).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val behF = Future {
-      behavioralEpoch(sessSt, funSt, retF, retC, batch, e, requests)
+    val ((sess2, fun2, _, retC2), comps) = graft.Par.both(s)(
+      behavioralEpoch(sessSt, funSt, retF, retC, batch, e, requests)) {
+      // The day's TAKEDOWN through the capped artifacts (q141's range
+      // batch; the store scan prunes to the range's partitions).
+      val (lo, hi) = DedupOps.q141Range(s, dir)
+      val removedDocs = t(s, dir, "documents")
+        .where(col("doc_id") >= lo && col("doc_id") < hi)
+        .select(col("doc_id"))
+      DedupOps.removeFromCappedCluster(idx, banded, sig,
+        pairs, standing, removedDocs, DedupOps.Q141Cap, Some(pidSize))
     }
-    // The day's TAKEDOWN through the capped artifacts (q141's range
-    // batch; the store scan prunes to the range's partitions).
-    val (lo, hi) = DedupOps.q141Range(s, dir)
-    val removedDocs = t(s, dir, "documents")
-      .where(col("doc_id") >= lo && col("doc_id") < hi)
-      .select(col("doc_id"))
-    val comps = DedupOps.removeFromCappedCluster(idx, banded, sig,
-      pairs, standing, removedDocs, DedupOps.Q141Cap, Some(pidSize))
-    val (sess2, fun2, _, retC2) =
-      Await.result(behF, scala.concurrent.duration.Duration.Inf)
     taggedEpoch(sess2, fun2, retC2, comps)
   }
 
-  val q140 = Q(
+  val q140 = Q.staged(
     "q140_maintenance_epoch",
     "unified maintenance epoch: one dataflow folds the day's batch into sessions/funnel/retention, applies the privacy feed at per-user T (fold-then-erase), and runs the range takedown — every family == its rebuild oracle",
-    (s, dir) => q140Body(s, dir, prepTake(s, dir, "prep140")(q140Arts(s, dir))),
     Some(taggedEpochOracle(Analytic.q136.oracle.get, oFunnelEraseBeforeTSql,
-      oRetentionEraseBeforeTSql, DedupOps.q141.oracle.get)),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep140", q140Arts(s, dir))))
+      oRetentionEraseBeforeTSql, DedupOps.q141.oracle.get)))(q140Arts)(q140Body)
 
   // ---- q145: the EPOCH CHAIN (r17 VERDICT task 1) — see the object
   // scaladoc. Day 1 is [AnalyticCutoff, Cut2); day 2 is everything
@@ -387,25 +381,30 @@ object EpochOps {
       .where(col("req_us").isNull || unix_micros(col("ts")) >= col("req_us"))
       .drop("req_us")
 
-  /** q145's standing artifacts — q140's recipe verbatim (the
-    * pre-[[Analytic.AnalyticCutoff]] behavioral stores, the capped
-    * cluster artifacts at [[DedupOps.Q141Cap]], the request store)
-    * under q145's own prepare tag. */
-  private def q145Arts(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame,
-         (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Long)) =
-    q140Arts(s, dir)
-
-  val q145 = Q(
+  // q145's standing artifacts are q140's recipe verbatim (the
+  // pre-`AnalyticCutoff` behavioral stores, the capped cluster
+  // artifacts at `Q141Cap`, the request store).
+  val q145 = Q.staged(
     "q145_epoch_chain",
     "chained maintenance epochs: epoch 1 folds day 1, erases its requests, runs its takedown, and PUBLISHES the post-epoch stores (incl. the erase register); epoch 2 folds day 2 against the published state through the register and chains a second takedown — == the one-shot filtered rebuild over both days",
-    (s, dir) => {
+    // The one-shot rebuild over BOTH days' filtered relation: the
+    // behavioral families' oracles are the same per-user-T rebuilds
+    // (req1 ∪ req2 is the whole cohort — path independence is the
+    // claim); the cluster slice rebuilds over the survivors of BOTH
+    // ranges.
+    Some(taggedEpochOracle(Analytic.q136.oracle.get, oFunnelEraseBeforeTSql,
+      oRetentionEraseBeforeTSql,
+      DedupOps.cappedRemoveOracle(
+        """(doc_id < (SELECT ((max(doc_id) + 1) * 2) // 5 FROM documents)
+             OR doc_id >= (SELECT ((max(doc_id) + 1) * 3) // 5 FROM documents))
+           AND (doc_id < (SELECT ((max(doc_id) + 1) * 7) // 10 FROM documents)
+             OR doc_id >= (SELECT ((max(doc_id) + 1) * 8) // 10 FROM documents))""",
+        DedupOps.Q141Cap))))(q140Arts) {
+    case (s, dir, (sessSt, funSt, retF, retC,
+        (sig, banded, idx, pairs, standing, pidSize))) =>
       val e = t(s, dir, "events")
       val cut1 = lit(Analytic.AnalyticCutoff).cast("timestamp")
       val cut2 = lit(Cut2).cast("timestamp")
-      val (sessSt, funSt, retF, retC,
-        (sig, banded, idx, pairs, standing, pidSize)) =
-        prepTake(s, dir, "prep145")(q145Arts(s, dir))
       val requests = graft.Scratch.scoped(requestStore(s, dir), adaptive = true)
       // ---- EPOCH 1: fold day 1 against the pre-cutoff stores, erase
       // the epoch-1 half of the feed (rebuilds see only the events
@@ -470,40 +469,22 @@ object EpochOps {
       // threads (guide §2.6 — the q140 body's device; the publishes
       // above are complete by here, so day2's register read and the
       // takedown's published-store reads are both safe).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val behF = Future {
-        behavioralEpoch(sessP, funP, retFP, retCP, day2, e, req2)
+      val ((sessE2, funE2, _, retCE2), compsE2) = graft.Par.both(s)(
+        behavioralEpoch(sessP, funP, retFP, retCP, day2, e, req2)) {
+        // Epoch 2's takedown chains through epoch 1's published cluster
+        // state; the banding store is immutable, so epoch 1's removal
+        // restricts it by predicate (range A is contiguous — no
+        // materialized copy needed).
+        val banded1 = banded.where(!(col("doc_id") >= loA && col("doc_id") < hiA))
+        val (loB, hiB) = DedupOps.q145Range2(s, dir)
+        val remB = t(s, dir, "documents")
+          .where(col("doc_id") >= loB && col("doc_id") < hiB)
+          .select(col("doc_id"))
+        DedupOps.removeFromCappedCluster(idxP, banded1, sig,
+          pairsP, compsP, remB, DedupOps.Q141Cap, Some(pidSize))
       }
-      // Epoch 2's takedown chains through epoch 1's published cluster
-      // state; the banding store is immutable, so epoch 1's removal
-      // restricts it by predicate (range A is contiguous — no
-      // materialized copy needed).
-      val banded1 = banded.where(!(col("doc_id") >= loA && col("doc_id") < hiA))
-      val (loB, hiB) = DedupOps.q145Range2(s, dir)
-      val remB = t(s, dir, "documents")
-        .where(col("doc_id") >= loB && col("doc_id") < hiB)
-        .select(col("doc_id"))
-      val compsE2 = DedupOps.removeFromCappedCluster(idxP, banded1, sig,
-        pairsP, compsP, remB, DedupOps.Q141Cap, Some(pidSize))
-      val (sessE2, funE2, _, retCE2) =
-        Await.result(behF, scala.concurrent.duration.Duration.Inf)
       taggedEpoch(sessE2, funE2, retCE2, compsE2)
-    },
-    // The one-shot rebuild over BOTH days' filtered relation: the
-    // behavioral families' oracles are the same per-user-T rebuilds
-    // (req1 ∪ req2 is the whole cohort — path independence is the
-    // claim); the cluster slice rebuilds over the survivors of BOTH
-    // ranges.
-    Some(taggedEpochOracle(Analytic.q136.oracle.get, oFunnelEraseBeforeTSql,
-      oRetentionEraseBeforeTSql,
-      DedupOps.cappedRemoveOracle(
-        """(doc_id < (SELECT ((max(doc_id) + 1) * 2) // 5 FROM documents)
-             OR doc_id >= (SELECT ((max(doc_id) + 1) * 3) // 5 FROM documents))
-           AND (doc_id < (SELECT ((max(doc_id) + 1) * 7) // 10 FROM documents)
-             OR doc_id >= (SELECT ((max(doc_id) + 1) * 8) // 10 FROM documents))""",
-        DedupOps.Q141Cap))),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep145", q145Arts(s, dir))))
+  }
 
   // ---- q144: the INGEST epoch — q140's sibling on the document side
   // of the nightly job ("merge the day's accepted docs into the
@@ -556,16 +537,20 @@ object EpochOps {
     (ti, ei)
   }
 
+  /** The ingest epoch's standing artifacts: q105's clusters and the
+    * two index sides. */
+  private def q144Arts(s: org.apache.spark.sql.SparkSession, dir: String)
+      : ((DataFrame, DataFrame), (DataFrame, DataFrame)) =
+    (DedupOps.q105Arts(s, dir), q144IdxArts(s, dir))
+
   private def q144Body(s: org.apache.spark.sql.SparkSession, dir: String,
-      arts: (DataFrame, DataFrame),
-      idxArts: (DataFrame, DataFrame)): DataFrame = {
+      arts: ((DataFrame, DataFrame), (DataFrame, DataFrame))): DataFrame = {
     import DedupOps._
-    val (tiStanding, eiStanding) = idxArts
+    val ((standing, matches), (tiStanding, eiStanding)) = arts
     val ti = idxSlice(mergeIndexBuckets(tiStanding,
       bandedFor(s, dir, ingest("doc_id")), Q96Cap), "text_index")
     val ei = idxSlice(mergeIndexBuckets(eiStanding,
       embBandedFor(s, dir, ingest("vec_id")), Q91Cap), "embedding_index")
-    val (standing, matches) = arts
     val cl = clusterRows(mergeComponents(standing, matches), incoming = true)
       .select(lit("clusters").as("family"),
         col("canonical_id").as("k1"), col("n_docs").as("k2"),
@@ -585,17 +570,10 @@ object EpochOps {
       FROM (${DedupOps.q105.oracle.get}) c105
     ) ORDER BY family, k1, k2"""
 
-  val q144 = Q(
+  val q144 = Q.staged(
     "q144_ingest_epoch",
     "ingest epoch: the day's accepted docs merged into the text index, embedding index, and clusters in one dataflow — every family == its merge oracle",
-    (s, dir) => q144Body(s, dir,
-      prepTake(s, dir, "prep144")(DedupOps.q105Arts(s, dir)),
-      prepTake(s, dir, "prep144x")(q144IdxArts(s, dir))),
-    Some(q144Oracle),
-    prepare = Some((s, dir) => {
-      prepPut(s, dir, "prep144", DedupOps.q105Arts(s, dir))
-      prepPut(s, dir, "prep144x", q144IdxArts(s, dir))
-    }))
+    Some(q144Oracle))(q144Arts)(q144Body)
 
   // ---- q146: the WHOLE NIGHTLY JOB (r17 VERDICT task 4) — the
   // events side (q140's maintenance epoch) and the document side
@@ -605,29 +583,30 @@ object EpochOps {
   // Nothing new is computed — the value is the driver gating the two
   // sides TOGETHER, the shape the scheduler actually runs.
 
-  val q146 = Q(
+  val q146 = Q.staged(
     "q146_nightly_job",
     "the full nightly job: the events maintenance epoch (q140), the document ingest epoch (q144), and the per-day sketch store update (q151 fold + q150 expiry) in one dataflow, side-tagged — each side == its composite rebuild oracle",
-    (s, dir) => {
+    Some(s"""SELECT side, family, k1, k2, v1, v2 FROM (
+      SELECT 'events' AS side, * FROM (${q140.oracle.get}) ev
+      UNION ALL
+      SELECT 'ingest' AS side, * FROM (${q144Oracle}) ing
+      UNION ALL
+      SELECT 'sketch' AS side, 'hll_days' AS family,
+        CAST(day - DATE '1970-01-01' AS BIGINT) AS k1,
+        register_id AS k2, max_rho AS v1, CAST(NULL AS BIGINT) AS v2
+      FROM (${CurationOps.oHllDaysSurviving}) sk
+    ) ORDER BY side, family, k1, k2"""))(
+    // The sketch side's standing store is built too; the side reads
+    // it back through nightlySketchStore.
+    (s, dir) => (q140Arts(s, dir), q144Arts(s, dir), CurationOps.q151Arts(s, dir))) {
+    case (s, dir, (evArts, inArts, _)) =>
       // The two sides' bodies run EAGER driver work while composing
       // their plans (the takedown's and the cluster merge's connected
       // components both collect at call time), and the sides are data-
       // independent until the union — so they compose on separate
       // threads (guide §2.6: overlap independent jobs) instead of
-      // paying CC-latency-after-CC-latency. prepTake consumes each
-      // side's own tag; the handoff map is concurrent.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val evF = Future {
-        q140Body(s, dir, prepTake(s, dir, "prep146e")(q140Arts(s, dir)))
-      }
-      val inF = Future {
-        q144Body(s, dir,
-          prepTake(s, dir, "prep146i")(DedupOps.q105Arts(s, dir)),
-          prepTake(s, dir, "prep146x")(q144IdxArts(s, dir)))
-      }
-      val ev = Await.result(evF, scala.concurrent.duration.Duration.Inf)
-      val in = Await.result(inF, scala.concurrent.duration.Duration.Inf)
+      // paying CC-latency-after-CC-latency.
+      val (ev, in) = graft.Par.both(s)(q140Body(s, dir, evArts))(q144Body(s, dir, inArts))
       // The SKETCH side (r18 VERDICT task 2): the epoch folds the
       // day's per-day sketches into the standing store and expires
       // the aged days in the same dataflow; the slice gates the whole
@@ -645,24 +624,7 @@ object EpochOps {
         .unionByName(sk.select(lit("sketch").as("side"), col("family"),
           col("k1"), col("k2"), col("v1"), col("v2")))
         .orderBy(col("side"), col("family"), col("k1"), col("k2"))
-    },
-    Some(s"""SELECT side, family, k1, k2, v1, v2 FROM (
-      SELECT 'events' AS side, * FROM (${q140.oracle.get}) ev
-      UNION ALL
-      SELECT 'ingest' AS side, * FROM (${q144Oracle}) ing
-      UNION ALL
-      SELECT 'sketch' AS side, 'hll_days' AS family,
-        CAST(day - DATE '1970-01-01' AS BIGINT) AS k1,
-        register_id AS k2, max_rho AS v1, CAST(NULL AS BIGINT) AS v2
-      FROM (${CurationOps.oHllDaysSurviving}) sk
-    ) ORDER BY side, family, k1, k2"""),
-    prepare = Some((s, dir) => {
-      prepPut(s, dir, "prep146e", q140Arts(s, dir))
-      prepPut(s, dir, "prep146i", DedupOps.q105Arts(s, dir))
-      prepPut(s, dir, "prep146x", q144IdxArts(s, dir))
-      CurationOps.q151Arts(s, dir) // force the standing sketch store
-      ()
-    }))
+  }
 
   // ---- q148: the INGEST epoch CHAIN — q145's sibling on the
   // document side (the symmetry q145 closed for the events side).
@@ -702,12 +664,16 @@ object EpochOps {
     (ti, ei)
   }
 
-  val q148 = Q(
+  val q148 = Q.staged(
     "q148_ingest_epoch_chain",
     "chained ingest epochs: two days' accepted batches merged successively into the standing capped indexes (tombstones carried) == the one-shot recompute",
-    (s, dir) => {
+    Some(s"""SELECT family, k1, k2, v1, v2 FROM (
+      ${oIdxSlice(DedupOps.q101.oracle.get, "text_index")}
+      UNION ALL
+      ${oIdxSlice(DedupOps.q102.oracle.get, "embedding_index")}
+    ) ORDER BY family, k1, k2"""))(q148Arts) {
+    case (s, dir, (tiStanding, eiStanding)) =>
       import DedupOps._
-      val (tiStanding, eiStanding) = prepTake(s, dir, "prep148")(q148Arts(s, dir))
       val ti = idxSlice(mergeIndexBuckets(mergeIndexBuckets(tiStanding,
         bandedFor(s, dir, ingest("doc_id")), Q96Cap),
         bandedFor(s, dir, ingest2("doc_id")), Q96Cap), "text_index")
@@ -715,13 +681,7 @@ object EpochOps {
         embBandedFor(s, dir, ingest("vec_id")), Q91Cap),
         embBandedFor(s, dir, ingest2("vec_id")), Q91Cap), "embedding_index")
       ti.unionByName(ei).orderBy(col("family"), col("k1"), col("k2"))
-    },
-    Some(s"""SELECT family, k1, k2, v1, v2 FROM (
-      ${oIdxSlice(DedupOps.q101.oracle.get, "text_index")}
-      UNION ALL
-      ${oIdxSlice(DedupOps.q102.oracle.get, "embedding_index")}
-    ) ORDER BY family, k1, k2"""),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep148", q148Arts(s, dir))))
+  }
 
   // ---- q152: the CLUSTER family's ingest chain — the third family
   // q148's scaladoc argued by closure algebra instead of registering
@@ -748,12 +708,11 @@ object EpochOps {
   private[graft] def clusterDay1(incDoc: Column): Column =
     h60(concat(lit("ingd:"), incDoc)) % 2 === 0
 
-  val q152 = Q(
+  val q152 = Q.staged(
     "q152_cluster_ingest_chain",
     "chained cluster ingest: two days' accepted match batches merged successively through the published component store (day 2 against post-day-1 state) == the one-shot merge",
-    (s, dir) => {
-      val (standing, matches) =
-        prepTake(s, dir, "prep152")(DedupOps.q105Arts(s, dir))
+    Some(DedupOps.q105.oracle.get))(DedupOps.q105Arts) {
+    case (s, dir, (standing, matches)) =>
       val day1 = matches.where(clusterDay1(col("src")))
       val day2 = matches.where(!clusterDay1(col("src")))
       // Epoch 1 merges day 1's matches and PUBLISHES the assignment
@@ -766,8 +725,5 @@ object EpochOps {
         plainStore(s, dir, "cl_comps_ingest1")(
           DedupOps.mergeComponents(standing, day1)))
       DedupOps.clusters(DedupOps.mergeComponents(published, day2), incoming = true)
-    },
-    Some(DedupOps.q105.oracle.get),
-    prepare = Some((s, dir) =>
-      prepPut(s, dir, "prep152", DedupOps.q105Arts(s, dir))))
+  }
 }

@@ -348,13 +348,11 @@ object Relational {
     * whole point of bucketing is pay-once/reuse-many, so the layout
     * write must not repeat on every query execution. Table names carry
     * the dir so two scale factors in one session don't collide. */
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  registerMemo(bucketMemo) // evicted when the owning session's context ends
+  private val BucketTables = Memo("bucket")
 
   private def bucketTables(s: org.apache.spark.sql.SparkSession, dir: String)
       : (String, String) =
-    bucketMemo.computeIfAbsent(s"${sessionKey(s)}:$dir", _ => {
+    sessionMemo(s, BucketTables, dir) {
       val base = localScratch(s, "buckets", dir)
       val safe = dir.replaceAll("[^a-zA-Z0-9]+", "_")
       val (ot, ct) = (s"b_orders_$safe", s"b_customer_$safe")
@@ -367,24 +365,22 @@ object Relational {
         .write.format("parquet").bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$base/customer").mode("overwrite").saveAsTable(ct)
       (ot, ct)
-    })
+    }
 
-  val q28 = Q(
+  val q28 = Q.staged(
     "q28_bucketed_colocated_join",
     "8-bucket bucketed tables joined shuffle-free (MERGE hint)",
-    (s, dir) => {
-      val (ot, ct) = bucketTables(s, dir)
+    Some(s"""SELECT c_mktsegment, count(*) AS n_orders,
+        ${oSum("o_totalprice", "sum_price")}
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""))(bucketTables) {
+    case (s, _, (ot, ct)) =>
       s.table(ot).hint("MERGE")
         .join(s.table(ct), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("sum_price"))
         .orderBy(col("c_mktsegment"))
-    },
-    Some(s"""SELECT c_mktsegment, count(*) AS n_orders,
-        ${oSum("o_totalprice", "sum_price")}
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
-    prepare = Some((s, dir) => { bucketTables(s, dir); () }))
+  }
 
   val all: Seq[Q] = Seq(q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11,
     q12, q13, q14, q27, q28)

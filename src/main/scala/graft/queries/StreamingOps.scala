@@ -404,16 +404,13 @@ object StreamingOps {
         col("best.jaccard").as("best_jaccard"))
       .orderBy(col("doc_id"))
 
-  val q98 = Q(
+  val q98 = Q.staged(
     "q98_stream_ingest_gate",
     "stream-static ingest gate: streamed incoming docs probed against the static capped q96 index",
-    (s, dir) => {
-      val side = prepTake(s, dir, "prep98")(DedupOps.q96Arts(s, dir))
-      val gated = ingestGateStream(s, dir, documentsStream(s, dir), Some(side))
-      ingestGateOutput(runBatchesToParquet(s, gated, OutputMode.Complete(), "overwrite"))
-    },
-    Some(DedupOps.oIngestGateSql),
-    prepare = Some((s, dir) => prepPut(s, dir, "prep98", DedupOps.q96Arts(s, dir))))
+    Some(DedupOps.oIngestGateSql))(DedupOps.q96Arts) { (s, dir, side) =>
+    val gated = ingestGateStream(s, dir, documentsStream(s, dir), Some(side))
+    ingestGateOutput(runBatchesToParquet(s, gated, OutputMode.Complete(), "overwrite"))
+  }
 
   // ---- Stateful streams: one state machine per family ----------------
 
